@@ -10,15 +10,15 @@ harnesses bank value-checked rows before paying streaming fixed costs.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import functions as F
 
 from arangodb_java_parquet_spark.operators.multimodal import (
     attach_binary_payload, extract_image_features, frame_sample_stub)
-from arangodb_java_parquet_spark.queries.common import (ORACLES, query,
+from arangodb_java_parquet_spark.queries.common import (ORACLES, drain,
+                                                        query, raw_table,
                                                         scratch_dir,
-                                                        sql_dsum, t)
+                                                        sql_dsum,
+                                                        stream_table, t)
 from arangodb_java_parquet_spark.streaming.ingest import windowed_event_counts
 
 
@@ -34,7 +34,7 @@ def loader_roundtrip(spark, sf_dir):
     from arangodb_java_parquet_spark.sources import (LocalCollection,
                                                      ParquetLoader)
     from arangodb_java_parquet_spark.sources.readers import read_collection
-    src = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    src = raw_table(spark, sf_dir, "nation")
     col = LocalCollection(scratch_dir("ajps_rt_"), "nation_rt")
     ParquetLoader(spark).load(f"{sf_dir}/nation.parquet", col,
                               overwrite=True, batch_size=7)
@@ -233,34 +233,12 @@ def stream_stateful_user_totals(spark, sf_dir):
     batch twin plus tests/test_streaming.py."""
     from arangodb_java_parquet_spark.streaming.ingest import (
         stateful_user_counters)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (spark.readStream.schema(raw_schema)
-              .option("pathGlobFilter", "events.parquet").parquet(sf_dir)
+    stream = (stream_table(spark, sf_dir, "events")
               .filter(F.col("user_id") < 40))
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)"))
-    out = stateful_user_counters(stream)
-    name = f"stateful_out_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir("ajps_ck_")
-    # state-store count == shuffle partitions at query start; 40 users do
-    # not need 32 state stores' worth of per-task setup. A real deployment
-    # sizes this to key cardinality / executor count instead.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (out.writeStream.outputMode("update").format("memory")
-             .queryName(name).option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    tbl = drain(stateful_user_counters(stream), "update")
     # update mode emits one row per (user, batch); the final totals are
     # the ones with the highest event count (monotone), not max(sum) —
     # sums can decrease with negative values
-    tbl = spark.table(name)
     return (tbl.groupBy("user_id")
             .agg(F.max("n_events").alias("n_events"),
                  F.expr("max_by(sum_value, n_events)").alias("sum_value")))
@@ -276,37 +254,16 @@ GROUP BY 1, 2
 """)
 def stream_windowed_counts(spark, sf_dir):
     """Drive the watermarked tumbling-window agg as a REAL streaming query:
-    readStream over the events parquet -> memory sink -> drain -> result.
+    stream_table(events) -> memory sink -> drain -> result.
 
     Fully value-checked against the batch SQL: an availableNow drive over a
     static source is one micro-batch, so the watermark drops nothing and
     the complete-mode output must equal the batch aggregation — counts plus
     exact-decimal sums make that bit-stable.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # file streams need a directory source; glob-filter to the events table
-    stream = (spark.readStream.schema(raw_schema)
-              .option("pathGlobFilter", "events.parquet")
-              .parquet(sf_dir))
-    # watermarks require TIMESTAMP (not NTZ); session TZ is pinned UTC above
-    # so collected values still equal the batch NTZ variant
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)"))
-    agg = windowed_event_counts(stream, window="1 hour")
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (agg.writeStream.outputMode("complete")
-             .format("memory").queryName(name)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name)
+    agg = windowed_event_counts(stream_table(spark, sf_dir, "events"),
+                                window="1 hour")
+    return drain(agg, "complete")
 
 
 _HOPPING_SQL = """
@@ -323,35 +280,19 @@ GROUP BY 1, 2
 @query("stream_hopping_counts", _HOPPING_SQL)
 def stream_hopping_counts(spark, sf_dir):
     """Drive the HOPPING (sliding) window aggregation as a real streaming
-    query: readStream -> F.window(size=1h, slide=30m) -> complete-mode
+    query: stream_table -> F.window(size=1h, slide=30m) -> complete-mode
     memory sink. Each event lands in exactly 2 overlapping windows; under
     an availableNow drive the complete-mode output must equal the batch
     hopping aggregation (window_hopping_agg), so this carries the same
     full value oracle — counts + exact-decimal sums."""
-    from arangodb_java_parquet_spark.streaming.ingest import event_time_ltz
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = event_time_ltz(
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet").parquet(sf_dir))
+    stream = stream_table(spark, sf_dir, "events")
     agg = (stream.groupBy(
         F.window("ts", "1 hour", "30 minutes").start.alias("win_start"),
         "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"),
              F.sum(F.col("value").cast("decimal(30,8)")).cast("double")
              .alias("sum_value")))
-    name = f"hop_out_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (agg.writeStream.outputMode("complete")
-             .format("memory").queryName(name)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 @query("sim_topk_ivf")
@@ -489,7 +430,7 @@ def multimodal_video_decode(spark, sf_dir):
 SELECT DISTINCT user_id, event_type FROM events
 """)
 def stream_dedup_exact(spark, sf_dir):
-    """Streaming exact dedup: readStream over events ->
+    """Streaming exact dedup: stream_table(events) ->
     watermark + dropDuplicates on (user_id, event_type) -> memory sink.
     The watermark bounds the dedup state store (keys older than the delay
     are evicted — the only way streaming dedup survives an unbounded
@@ -497,29 +438,11 @@ def stream_dedup_exact(spark, sf_dir):
     (WHICH physical row survives per key is arrival-order dependent, the
     key set is not). availableNow over a static source is one micro-batch,
     so the emitted key set equals batch SELECT DISTINCT."""
-    import uuid as _uuid
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (spark.readStream.schema(raw_schema)
-              .option("pathGlobFilter", "events.parquet").parquet(sf_dir))
-    from arangodb_java_parquet_spark.streaming.ingest import event_time_ltz
-    stream = event_time_ltz(stream)
-    dedup = (stream.withWatermark("ts", "1 day")
+    dedup = (stream_table(spark, sf_dir, "events")
+             .withWatermark("ts", "1 day")
              .dropDuplicates(["user_id", "event_type"])
              .select("user_id", "event_type"))
-    name = f"dedup_out_{_uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir("ajps_ck_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (dedup.writeStream.outputMode("append").format("memory")
-             .queryName(name).option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name)
+    return drain(dedup, "append")
 
 
 _STREAM_ETL_SQL = """
@@ -534,7 +457,7 @@ WHERE n_chars >= 100 AND lang = 'en'
 
 @query("stream_etl_clean", _STREAM_ETL_SQL)
 def stream_etl_clean(spark, sf_dir):
-    """Streaming ETL transform: readStream over the documents table ->
+    """Streaming ETL transform: stream_table(documents) ->
     stateless filter + tokenize-count + number normalization -> memory
     sink. Stateless streaming transforms are batch-equivalent under an
     availableNow drive (one micro-batch, no state, no watermark), so this
@@ -542,27 +465,13 @@ def stream_etl_clean(spark, sf_dir):
     batch clean-corpus pipeline, and the shape of a continuous ingest
     scrubber (the filter and projection are pushed into the file-stream
     source exactly as in batch)."""
-    import uuid as _uuid
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = (spark.readStream.schema(raw_schema)
-              .option("pathGlobFilter", "documents.parquet").parquet(sf_dir))
-    out = (stream
+    out = (stream_table(spark, sf_dir, "documents")
            .filter((F.col("n_chars") >= 100) & (F.col("lang") == "en"))
            .select("doc_id", "lang", "source", "n_chars",
                    F.size(F.split("text", " ")).alias("n_tokens"),
                    F.regexp_replace("text", "[0-9]+", "<NUM>")
                    .alias("normalized")))
-    name = f"etl_out_{_uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (out.writeStream.outputMode("append").format("memory")
-             .queryName(name).trigger(availableNow=True).start())
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name)
+    return drain(out, "append")
 
 
 _B3 = _BYTE.format(p1=7, p2=8)
@@ -668,7 +577,7 @@ GROUP BY c.c_mktsegment, e.event_type
 
 @query("stream_static_enrich", _ENRICH_SQL)
 def stream_static_enrich(spark, sf_dir):
-    """STREAM-STATIC join driven as a real streaming query: readStream
+    """STREAM-STATIC join driven as a real streaming query: a stream
     over events ⋈ broadcast static customer dim -> segment×type
     aggregation -> complete-mode memory sink. The static side is re-read
     per micro-batch (dimension updates flow in automatically) and joins
@@ -676,49 +585,26 @@ def stream_static_enrich(spark, sf_dir):
     over a static source = one micro-batch, so the complete-mode output
     equals the batch enrichment (events_enriched_by_segment) and this
     entry carries its FULL value oracle."""
-    from arangodb_java_parquet_spark.streaming.ingest import event_time_ltz
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = event_time_ltz(
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet").parquet(sf_dir))
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet") \
-        .select("c_custkey", "c_mktsegment")
+    stream = stream_table(spark, sf_dir, "events")
+    cust = t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     agg = (stream.join(F.broadcast(cust),
                        F.col("user_id") == F.col("c_custkey"))
            .groupBy(F.col("c_mktsegment").alias("segment"), "event_type")
            .agg(F.count(F.lit(1)).alias("n_events"),
                 F.sum(F.col("value").cast("decimal(30,8)")).cast("double")
                 .alias("sum_value")))
-    name = f"enrich_out_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (agg.writeStream.outputMode("complete")
-             .format("memory").queryName(name)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 @query("stream_session_windows", None)
 def stream_session_windows(spark, sf_dir):
-    """Native SESSION windows under Structured Streaming: readStream ->
+    """Native SESSION windows under Structured Streaming: stream_table ->
     watermark -> F.session_window(ts, 30 min) per user -> complete-mode
     memory sink. Under an availableNow drive (one micro-batch, nothing
     late) the emitted sessions equal the batch gaps-and-islands
     formulation, so this entry carries the batch twin's FULL value
     oracle (window_session_native's SQL, wired in below)."""
-    from arangodb_java_parquet_spark.streaming.ingest import event_time_ltz
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = event_time_ltz(
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet").parquet(sf_dir))
+    stream = stream_table(spark, sf_dir, "events")
     agg = (stream.withWatermark("ts", "1 day")
            .groupBy(F.session_window("ts", "30 minutes"), "user_id")
            .agg(F.count(F.lit(1)).alias("n_events"),
@@ -728,17 +614,7 @@ def stream_session_windows(spark, sf_dir):
                    F.col("session_window.start").alias("session_start"),
                    F.col("session_window.end").alias("session_end"),
                    "n_events", "sum_value"))
-    name = f"sess_out_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (agg.writeStream.outputMode("complete")
-             .format("memory").queryName(name)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 # wire the batch twin's full oracle onto the streaming drive
@@ -765,16 +641,10 @@ def stream_stream_interval_join(spark, sf_dir):
     and VALUE-CHECKED against the batch join SQL: an availableNow drive
     is one micro-batch with nothing late, so the append-mode output must
     equal the batch result row-for-row."""
-    from arangodb_java_parquet_spark.streaming.ingest import event_time_ltz
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    events = stream_table(spark, sf_dir, "events")
 
     def side(etype, pref):
-        s = (event_time_ltz(
-                spark.readStream.schema(raw_schema)
-                .option("pathGlobFilter", "events.parquet").parquet(sf_dir))
-             .filter(F.col("event_type") == etype)
+        s = (events.filter(F.col("event_type") == etype)
              .withWatermark("ts", "1 hour"))
         return s.select(F.col("user_id").alias(f"{pref}_user"),
                         F.col("ts").alias(f"{pref}_ts"),
@@ -790,18 +660,7 @@ def stream_stream_interval_join(spark, sf_dir):
                 F.col("p_id").alias("purchase_id"),
                 F.col("c_ts").cast("timestamp_ntz").alias("click_ts"),
                 F.col("p_ts").cast("timestamp_ntz").alias("purchase_ts")))
-    name = f"ssj_out_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir("ajps_ck_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (joined.writeStream.outputMode("append").format("memory")
-             .queryName(name).option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name)
+    return drain(joined, "append")
 
 
 @query("multimodal_image_dedup", f"""
@@ -848,17 +707,11 @@ GROUP BY 1
 """)
 def stream_error_monitor(spark, sf_dir):
     """The hourly error-rate SLA monitor as a LIVE streaming query
-    (readStream -> windowed conditional counts -> complete-mode sink) —
+    (stream_table -> windowed conditional counts -> complete-mode sink) —
     the ops dashboard runs exactly this incrementally; under availableNow
     the complete-mode output equals the batch monitor
     (error_rate_sla_hourly), so the drive carries a full value oracle."""
-    from arangodb_java_parquet_spark.streaming.ingest import event_time_ltz
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = event_time_ltz(
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet").parquet(sf_dir))
+    stream = stream_table(spark, sf_dir, "events")
     errs = F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
     agg = (stream.groupBy(F.window("ts", "1 hour").start
                           .alias("hour_start"))
@@ -866,17 +719,7 @@ def stream_error_monitor(spark, sf_dir):
                 errs.alias("n_errors"),
                 F.round(errs / F.count(F.lit(1)).cast("double"), 9)
                 .alias("error_rate")))
-    name = f"errmon_out_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (agg.writeStream.outputMode("complete")
-             .format("memory").queryName(name)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 @query("multimodal_audio_codec_profile", f"""
@@ -914,7 +757,7 @@ GROUP BY user_id
 """)
 def stream_sink_collection_roundtrip(spark, sf_dir):
     """The async loader's TRUE Spark analog, value-checked end to end:
-    readStream over the events directory -> foreachBatch into the
+    a file stream over the events directory -> foreachBatch into the
     document-collection sink (each micro-batch reuses the exact batch
     loader: JSON encode + partition-parallel batched insert) -> read the
     collection back through the Python DataSource -> aggregate. The
@@ -932,8 +775,7 @@ def stream_sink_collection_roundtrip(spark, sf_dir):
 
     import os
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    raw = raw_table(spark, sf_dir, "events")
     root = scratch_dir("ajps_ssink_")
     # the helper streams a DIRECTORY; give it one containing only the
     # events file (symlink — no data copy) so the glob can't slurp the
@@ -985,25 +827,9 @@ def stream_cms_maintenance(spark, sf_dir):
     CANNOT grow, needing no watermark at all."""
     from arangodb_java_parquet_spark.operators.sketches import cms_build
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (spark.readStream.schema(raw_schema)
-              .option("pathGlobFilter", "events.parquet")
-              .parquet(sf_dir))
-    sketch = cms_build(stream.select(F.col("event_type").alias("tok")),
-                       "tok").withColumnRenamed("cnt", "cnt")
-    name = f"stream_cms_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (sketch.writeStream.outputMode("complete")
-             .format("memory").queryName(name)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name)
+    toks = stream_table(spark, sf_dir, "events").select(
+        F.col("event_type").alias("tok"))
+    return drain(cms_build(toks, "tok"), "complete")
 
 
 def _stream_hll_sql() -> str:
@@ -1025,24 +851,9 @@ def stream_hll_maintenance(spark, sf_dir):
     from arangodb_java_parquet_spark.operators.sketches import (
         hll_registers)
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (spark.readStream.schema(raw_schema)
-              .option("pathGlobFilter", "events.parquet")
-              .parquet(sf_dir))
-    regs = hll_registers(stream, "user_id", ["event_type"])
-    name = f"stream_hll_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (regs.writeStream.outputMode("complete")
-             .format("memory").queryName(name)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name)
+    regs = hll_registers(stream_table(spark, sf_dir, "events"), "user_id",
+                         ["event_type"])
+    return drain(regs, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -1076,31 +887,13 @@ def stream_topk_event_types(spark, sf_dir):
     the standard two-tier serving pattern (incremental state + cheap
     read-side rank). Under availableNow the result equals the batch
     top-k, so this carries a full value oracle."""
-    import uuid
-    from arangodb_java_parquet_spark.streaming.ingest import event_time_ltz
     from pyspark.sql import Window as W
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = event_time_ltz(
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet").parquet(sf_dir))
-    agg = (stream.groupBy(
+    agg = (stream_table(spark, sf_dir, "events").groupBy(
         F.window("ts", "1 hour").start.alias("win_start"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events")))
-    name = f"stk_out_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (agg.writeStream.outputMode("complete")
-             .format("memory").queryName(name)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     wr = W.partitionBy("win_start").orderBy(F.desc("n_events"),
                                             "event_type")
-    return (spark.table(name)
+    return (drain(agg, "complete")
             .withColumn("n_events", F.col("n_events").cast("bigint"))
             .withColumn("rnk", F.row_number().over(wr))
             .filter(F.col("rnk") <= 3))

@@ -12,7 +12,9 @@ from pyspark.sql import functions as F
 
 from arangodb_java_parquet_spark.materialize import (
     materialize, materialize_iter)
-from arangodb_java_parquet_spark.queries.common import query, scratch_dir, t
+from arangodb_java_parquet_spark.queries.common import (drain, query,
+                                                        raw_table,
+                                                        scratch_dir, t)
 
 # ---------------------------------------------------------------------------
 # streaming MERGE upsert (last-write-wins keyed table)
@@ -42,10 +44,9 @@ def stream_upsert_merge(spark, sf_dir):
     redelivery a no-op, so the result still hash-matches the ONE-copy
     oracle — the at-least-once idempotence property checked end to end,
     not asserted."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     from arangodb_java_parquet_spark.streaming.ingest import (
         stream_upsert_keyed)
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    raw = raw_table(spark, sf_dir, "events")
     root = scratch_dir("ajps_upsert_")
     stream_dir = os.path.join(root, "in")
     os.makedirs(stream_dir)
@@ -255,54 +256,13 @@ def stream_stream_left_outer_join(spark, sf_dir):
     import shutil as _shutil
 
     from arangodb_java_parquet_spark.streaming.ingest import (
-        event_time_ltz, stream_interval_join)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+        event_time_ltz, ordered_file_stream, stream_interval_join)
+    raw = raw_table(spark, sf_dir, "events")
     root = scratch_dir("ajps_sslo_")
     src = os.path.join(root, "in")
     os.makedirs(src)
     os.symlink(os.path.realpath(f"{sf_dir}/events.parquet"),
                os.path.join(src, "aa_events.parquet"))
-    out = os.path.join(root, "out")
-    ck = os.path.join(root, "ckpt")
-
-    def drive():
-        stream = (spark.readStream.schema(raw.schema)
-                  .option("maxFilesPerTrigger", 1).parquet(src))
-        sides = []
-        for etype, pref in (("click", "c"), ("purchase", "p")):
-            s = (event_time_ltz(stream)
-                 .filter(F.col("event_type") == etype)
-                 .withWatermark("ts", "1 hour")
-                 .select(F.col("user_id").alias(f"{pref}_user"),
-                         F.col("ts").alias(f"{pref}_ts"),
-                         F.col("event_id").alias(f"{pref}_id")))
-            sides.append(s)
-        # NB: do NOT filter the sentinels here — a c_user >= 0 predicate
-        # gets pushed through the join into the parquet scan, whose
-        # row-group stats then prune the whole sentinel file BEFORE it
-        # can advance the watermark (cost a debugging cycle; the filter
-        # happens on the sink read-back below instead)
-        joined = (stream_interval_join(
-            sides[0], sides[1], left_key="c_user", right_key="p_user",
-            left_time="c_ts", right_time="p_ts",
-            within="30 minutes", how="left_outer")
-            .select(F.col("c_user").alias("user_id"),
-                    F.col("c_id").alias("click_id"),
-                    F.col("p_id").alias("purchase_id"),
-                    F.col("c_ts").cast("timestamp_ntz").alias("click_ts"),
-                    F.col("p_ts").cast("timestamp_ntz")
-                    .alias("purchase_ts")))
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
-            q = (joined.writeStream.outputMode("append").format("parquet")
-                 .option("path", out).option("checkpointLocation", ck)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     # sentinels: one click + one purchase per round, 10/20 days past the
     # max event time on user -1. TWO sentinel rounds because eviction in
@@ -334,8 +294,30 @@ def stream_stream_left_outer_join(spark, sf_dir):
         dst = os.path.join(src, f"zz_sentinel{rnd}.parquet")
         _shutil.copy(part, dst)
         os.utime(dst, (base_mtime + 3600 * rnd, base_mtime + 3600 * rnd))
-    drive()
-    return spark.read.parquet(out).filter(F.col("user_id") >= 0)
+
+    stream = event_time_ltz(ordered_file_stream(spark, src, raw.schema))
+    sides = []
+    for etype, pref in (("click", "c"), ("purchase", "p")):
+        sides.append(stream.filter(F.col("event_type") == etype)
+                     .withWatermark("ts", "1 hour")
+                     .select(F.col("user_id").alias(f"{pref}_user"),
+                             F.col("ts").alias(f"{pref}_ts"),
+                             F.col("event_id").alias(f"{pref}_id")))
+    # NB: do NOT filter the sentinels here — a c_user >= 0 predicate gets
+    # pushed through the join into the parquet scan, whose row-group stats
+    # then prune the whole sentinel file BEFORE it can advance the
+    # watermark (cost a debugging cycle; the filter happens on the sink
+    # read-back below instead)
+    joined = (stream_interval_join(
+        sides[0], sides[1], left_key="c_user", right_key="p_user",
+        left_time="c_ts", right_time="p_ts",
+        within="30 minutes", how="left_outer")
+        .select(F.col("c_user").alias("user_id"),
+                F.col("c_id").alias("click_id"),
+                F.col("p_id").alias("purchase_id"),
+                F.col("c_ts").cast("timestamp_ntz").alias("click_ts"),
+                F.col("p_ts").cast("timestamp_ntz").alias("purchase_ts")))
+    return drain(joined, "append").filter(F.col("user_id") >= 0)
 
 
 # ---------------------------------------------------------------------------
@@ -359,12 +341,9 @@ def stream_incremental_daily_rollup(spark, sf_dir):
     rollup from the full table, so the hash match proves algebraic merge
     == full recompute, the property that lets a 100 TB lake maintain its
     aggregates by reading only new files."""
-    import os
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     from arangodb_java_parquet_spark.streaming.ingest import (
-        event_time_ltz, stream_incremental_rollup)
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+        stream_incremental_rollup)
+    raw = raw_table(spark, sf_dir, "events")
     root = scratch_dir("ajps_incroll_")
     stream_dir = os.path.join(root, "in")
     os.makedirs(stream_dir)

@@ -12,6 +12,7 @@ run-to-run drift in reported metrics.
 
 from __future__ import annotations
 
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -24,6 +25,7 @@ from pyspark.sql import functions as F
 from arangodb_java_parquet_spark.materialize import (  # noqa: F401
     materialize, materialize_iter, materialize_iter_eager,
     materialize_scalar)
+from arangodb_java_parquet_spark.streaming.ingest import event_time_ltz
 
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
@@ -58,28 +60,70 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
-def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one of the driver tables (parquet scan; Catalyst prunes/pushes).
-
-    Normalizations for oracle-comparable semantics regardless of the calling
-    session's defaults:
-      * session time zone pinned to UTC (DuckDB timestamps are UTC-naive);
-      * the events table is written with TIMESTAMP(NANOS) which Spark's
-        vectorized reader rejects — read nanos as long
-        (spark.sql.legacy.parquet.nanosAsLong) and convert to
-        TIMESTAMP_NTZ micros (sub-microsecond parts are zero in this corpus;
-        `div` keeps the arithmetic integer-exact).
-    """
+def raw_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The physical read of one driver table, with the session conf every
+    read of it needs: time zone pinned to UTC (DuckDB timestamps are
+    UTC-naive) and, for events, nanos read as long
+    (spark.sql.legacy.parquet.nanosAsLong — events has been written as
+    TIMESTAMP(NANOS), which Spark's vectorized reader rejects). Events
+    ``ts`` is whatever the file's generation surfaces (bigint,
+    TIMESTAMP_NTZ or TIMESTAMP); :func:`t` and :func:`stream_table`
+    normalize it."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn(
-                "ts",
-                F.expr("CAST(timestamp_micros(ts div 1000) AS TIMESTAMP_NTZ)"))
-        return df
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one of the driver tables (parquet scan; Catalyst prunes/pushes).
+
+    :func:`raw_table`, plus events ``ts`` normalized to TIMESTAMP_NTZ: a
+    nanos-as-long column converts to micros (sub-microsecond parts are
+    zero in this corpus; `div` keeps the arithmetic integer-exact).
+    """
+    df = raw_table(spark, sf_dir, name)
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn(
+            "ts",
+            F.expr("CAST(timestamp_micros(ts div 1000) AS TIMESTAMP_NTZ)"))
+    return df
+
+
+def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """A file stream over one driver table: the streaming twin of
+    :func:`t`. File streams need a directory source, so it reads
+    ``sf_dir`` glob-filtered to ``{name}.parquet`` under the table's
+    physical schema. Events ``ts`` comes out as TIMESTAMP (LTZ) — the
+    only type watermarks accept — via ``event_time_ltz``, whichever
+    generation the file is."""
+    df = (spark.readStream.schema(raw_table(spark, sf_dir, name).schema)
+          .option("pathGlobFilter", f"{name}.parquet").parquet(sf_dir))
+    return event_time_ltz(df) if name == "events" else df
+
+
+def drain(df: DataFrame, output_mode: str) -> DataFrame:
+    """Run a streaming DataFrame to completion (``availableNow``) into a
+    memory sink and return the sink table. An availableNow drive over a
+    static source is one micro-batch, so watermarks drop nothing and the
+    output equals the batch twin's — what lets streaming entries carry
+    value oracles."""
+    spark = df.sparkSession
+    name = f"drain_{uuid.uuid4().hex[:8]}"
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    # state-store count == shuffle partitions at query start; a drained
+    # driver table does not need 32 state stores' worth of per-task setup.
+    # A real deployment sizes this to key cardinality / executor count
+    # instead.
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        (df.writeStream.outputMode(output_mode).format("memory")
+         .queryName(name)
+         .option("checkpointLocation", scratch_dir("ajps_ck_"))
+         .trigger(availableNow=True).start().awaitTermination())
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    return spark.table(name)
 
 
 # -- deterministic numeric aggregation --------------------------------------

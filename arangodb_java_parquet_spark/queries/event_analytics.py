@@ -547,7 +547,7 @@ def error_rate_sla_hourly(spark, sf_dir):
     """Operational SLA monitor: hourly error share with a breach flag —
     one combinable conditional-count aggregation over the event-time
     bucket; the alerting query every ingest pipeline runs beside its
-    business load. The same expression runs under readStream for a live
+    business load. The same expression runs over stream_table for a live
     monitor (stream_windowed_counts shows the drive)."""
     e = t(spark, sf_dir, "events")
     errs = F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))

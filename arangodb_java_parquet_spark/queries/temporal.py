@@ -158,7 +158,7 @@ def window_hopping_agg(spark, sf_dir):
     """Hopping (sliding) event-time windows: 1-hour windows every 30
     minutes — each event lands in exactly 2 overlapping windows
     (``F.window(ts, size, slide)``; the streaming form is the same
-    expression under readStream). The oracle reproduces the window
+    expression over stream_table). The oracle reproduces the window
     assignment by exploding each event into its size/slide bucket
     offsets — both engines' 30-minute buckets are epoch-aligned."""
     e = t(spark, sf_dir, "events")

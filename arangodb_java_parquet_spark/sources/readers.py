@@ -1,23 +1,24 @@
 """Multi-format source readers (SURVEY.md §2.2 "Sources" row).
 
 The reference reads exactly one format — a single Parquet file
-(ParquetArangoLoader.java:139). The engine generalizes to every format the
-surrounding ecosystem uses, all through ``spark.read`` so Catalyst
-pushdown/pruning apply wherever the format supports it:
+(ParquetArangoLoader.java:139). Parquet and ORC need nothing beyond
+``spark.read.parquet`` / ``spark.read.orc`` (columnar, predicate+projection
+pushdown, schema from file metadata). This module holds the readers that
+add a policy on top of ``spark.read``:
 
-  parquet / orc        columnar, predicate+projection pushdown, schema from
-                       file metadata (dynamic, like the reference)
-  csv / json / jsonl   schema REQUIRED in production paths (inference scans
+  csv / json / xml     schema REQUIRED in production paths (inference scans
                        the data twice and types drift run-to-run; at 100 TB
                        inference is a correctness and cost bug) — pass
                        ``schema=`` or opt in with ``infer=True`` for
                        exploration
-  jdbc                 partitioned reads via (column, bounds, numPartitions)
+  avro                 try-gated on the external spark-avro jar, with an
+                       actionable error
+  binaryFile           raw bytes per file
   collection           read back a LocalCollection (JSONL parts dir) as a
                        DataFrame — closes the loader round trip
 
-Kafka / Delta / Iceberg need jars not present in this image; their readers
-raise a clear error (import-try gate) rather than failing mid-plan.
+plus the lake-layout writers (partitioned, range-sorted, Z-ordered) and
+small-files compaction.
 """
 
 from __future__ import annotations
@@ -26,14 +27,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from arangodb_java_parquet_spark.sources.collections import LocalCollection
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.orc(path)
 
 
 def read_csv(spark: SparkSession, path: str, *, schema=None,
@@ -89,27 +82,6 @@ def write_xml(df: DataFrame, path: str, *, row_tag: str = "row",
     """Native XML sink (Spark 4)."""
     (df.write.format("xml").option("rowTag", row_tag)
      .option("rootTag", root_tag).mode(mode).save(path))
-
-
-def read_jdbc(spark: SparkSession, url: str, table: str, *,
-              partition_column: str | None = None,
-              lower_bound=None, upper_bound=None,
-              num_partitions: int | None = None, **options) -> DataFrame:
-    """Partitioned JDBC read — without (column, bounds, numPartitions) a
-    JDBC source reads on ONE task, which is never right at scale."""
-    reader = (spark.read.format("jdbc")
-              .option("url", url).option("dbtable", table))
-    if partition_column is not None:
-        if lower_bound is None or upper_bound is None or num_partitions is None:
-            raise ValueError("partitioned jdbc needs lower/upper bound and "
-                             "numPartitions alongside partition_column")
-        reader = (reader.option("partitionColumn", partition_column)
-                  .option("lowerBound", str(lower_bound))
-                  .option("upperBound", str(upper_bound))
-                  .option("numPartitions", str(num_partitions)))
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load()
 
 
 def read_collection(spark: SparkSession, collection: LocalCollection, *,
@@ -241,22 +213,6 @@ def write_avro(df: DataFrame, path: str, *, mode: str = "overwrite",
                 "classpath (org.apache.spark:spark-avro_2.13; not present "
                 "in this image) — pass --packages or add the jar") from e
         raise
-
-
-def read_kafka(spark: SparkSession, bootstrap_servers: str, topic: str,
-               **options) -> DataFrame:  # pragma: no cover - needs jars
-    """Kafka streaming source (requires the spark-sql-kafka jar)."""
-    try:
-        reader = (spark.readStream.format("kafka")
-                  .option("kafka.bootstrap.servers", bootstrap_servers)
-                  .option("subscribe", topic))
-        for k, v in options.items():
-            reader = reader.option(k, v)
-        return reader.load()
-    except Exception as e:
-        raise RuntimeError(
-            "kafka source requires the spark-sql-kafka connector jar on the "
-            "classpath (not present in this image)") from e
 
 
 def zorder_key(cols: list[Column], n_bits: int = 10) -> Column:

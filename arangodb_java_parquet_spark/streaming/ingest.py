@@ -127,6 +127,15 @@ def _swap_state(state_dir: str, tmp: str, epoch_id: int,
     shutil.rmtree(old, ignore_errors=True)
 
 
+def ordered_file_stream(spark: SparkSession, path: str, schema) -> DataFrame:
+    """A parquet file stream over the directory ``path`` that takes ONE
+    file per micro-batch, in discovery order (maxFilesPerTrigger=1). The
+    multi-batch drives need it: watermarks, upserts and additive merges
+    advance between files, which one all-files batch would not show."""
+    return (spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1).parquet(path))
+
+
 def stream_load_to_collection(spark: SparkSession, path: str,
                               collection: Collection, *,
                               schema, checkpoint_dir: str,
@@ -159,8 +168,7 @@ def stream_load_to_collection(spark: SparkSession, path: str,
 def stream_upsert_keyed(spark: SparkSession, path: str, *, schema,
                         state_dir: str, checkpoint_dir: str,
                         key: str = "user_id",
-                        order_cols: tuple = ("ts", "event_id"),
-                        max_files_per_trigger: int = 1):
+                        order_cols: tuple = ("ts", "event_id")):
     """Streaming MERGE/upsert into a keyed parquet table (the Delta-style
     ``MERGE WHEN MATCHED UPDATE`` loop, built from primitives): each
     micro-batch reduces to its newest row per key, merges it
@@ -205,9 +213,7 @@ def stream_upsert_keyed(spark: SparkSession, path: str, *, schema,
         best.write.mode("overwrite").parquet(tmp)
         _swap_state(state_dir, tmp, epoch_id, qid)
 
-    return (spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(path)
+    return (ordered_file_stream(spark, path, schema)
             .writeStream.foreachBatch(merge_batch)
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True).start())
@@ -402,8 +408,7 @@ def session_window_agg(events: DataFrame, *, gap: str = "30 minutes") -> DataFra
 
 
 def stream_incremental_rollup(spark, path: str, *, schema,
-                              state_dir: str, checkpoint_dir: str,
-                              max_files_per_trigger: int = 1):
+                              state_dir: str, checkpoint_dir: str):
     """Incremental MATERIALIZED-AGGREGATE maintenance: each micro-batch's
     (day, event_type) partials — COUNT and an exact DECIMAL sum — are
     MERGED into a persistent rollup table by adding partials, never
@@ -451,9 +456,7 @@ def stream_incremental_rollup(spark, path: str, *, schema,
         part.write.mode("overwrite").parquet(tmp)
         _swap_state(state_dir, tmp, epoch_id, qid)
 
-    return (spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(path)
+    return (ordered_file_stream(spark, path, schema)
             .writeStream.foreachBatch(merge_batch)
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True).start())

@@ -41,6 +41,18 @@ def test_connected_components_deterministic_across_partitioning(spark):
     assert all(c == 1 for _, c in a)
 
 
+def test_connected_components_raises_when_unconverged(spark):
+    # an 8-node chain needs more than 2 rounds even with the shortcut;
+    # returning its round-2 labels would split the component
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 8)], ["doc_a", "doc_b"])
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        connected_components(pairs, max_iter=2)
+    got = {r["node"]: r["component"]
+           for r in connected_components(pairs).collect()}
+    assert got == {i: 1 for i in range(1, 9)}
+
+
 def test_hash_sample_deterministic_and_rate_monotone(spark):
     df = spark.createDataFrame([(i,) for i in range(2000)], ["id"])
     s30 = hash_sample(df, "id", 0.3)

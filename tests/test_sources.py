@@ -5,12 +5,12 @@ import pytest
 
 from arangodb_java_parquet_spark.sources import LocalCollection, ParquetLoader
 from arangodb_java_parquet_spark.sources.readers import (
-    read_collection, read_csv, read_json, read_orc, read_parquet)
+    read_collection, read_csv, read_json)
 
 
 @pytest.fixture(scope="module")
 def nation(spark, sf_dir):
-    return read_parquet(spark, f"{sf_dir}/nation.parquet")
+    return spark.read.parquet(f"{sf_dir}/nation.parquet")
 
 
 def rows_of(df):
@@ -21,7 +21,7 @@ def rows_of(df):
 def test_orc_roundtrip(spark, nation, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("orc") / "nation_orc")
     nation.write.orc(out)
-    assert rows_of(read_orc(spark, out)) == rows_of(nation)
+    assert rows_of(spark.read.orc(out)) == rows_of(nation)
 
 
 def test_csv_roundtrip_with_schema(spark, nation, tmp_path_factory):
@@ -126,7 +126,7 @@ def test_compact_collection(spark, sf_dir, nation, tmp_path):
     assert len(col._part_files()) > 1
     out = str(tmp_path / "compacted")
     compact_collection(spark, col, out, schema=nation.schema, partitions=1)
-    got = read_parquet(spark, out)
+    got = spark.read.parquet(out)
     assert rows_of(got) == rows_of(nation)
     import glob
     assert len(glob.glob(f"{out}/part-*.parquet")) == 1
@@ -214,14 +214,13 @@ def test_dynamic_partition_pruning(spark, sf_dir, tmp_path):
     star-schema joins from scanning the full 100 TB fact."""
     from pyspark.sql import functions as F
 
-    from arangodb_java_parquet_spark.sources.readers import (
-        read_parquet, write_partitioned)
+    from arangodb_java_parquet_spark.sources.readers import write_partitioned
     from arangodb_java_parquet_spark.plans import formatted_plan
     o = spark.read.parquet(f"{sf_dir}/orders.parquet") \
         .select("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice")
     fact_path = str(tmp_path / "orders_by_priority")
     write_partitioned(o, fact_path, ["o_orderpriority"])
-    fact = read_parquet(spark, fact_path)
+    fact = spark.read.parquet(fact_path)
     dim = (spark.createDataFrame(
         [("1-URGENT", "urgent"), ("2-HIGH", "high"), ("3-MEDIUM", "med"),
          ("4-NOT SPECIFIED", "none"), ("5-LOW", "low")],

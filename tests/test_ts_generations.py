@@ -3,10 +3,11 @@
 (round 3: events.ts went TIMESTAMP(NANOS)->TIMESTAMP(MICROS), flipping
 the parquet-read dtype from bigint to TIMESTAMP_NTZ). This test
 synthesizes every historical generation of the events table and asserts
-the two normalization funnels — queries/common.t() (batch, NTZ out) and
-streaming/ingest.event_time_ltz (LTZ out, watermark-ready) — produce
-identical instants for all of them, so a future regeneration cannot
-silently shift event-time semantics again."""
+the three normalization funnels — queries/common.t() (batch, NTZ out),
+streaming/ingest.event_time_ltz (LTZ out, watermark-ready) and
+queries/common.stream_table (file stream, LTZ out) — produce identical
+instants for all of them, so a future regeneration cannot silently shift
+event-time semantics again."""
 
 import datetime
 import os
@@ -81,3 +82,16 @@ def test_event_time_ltz_normalizes_every_generation(spark, generations):
         rows = df.orderBy("event_id").select("event_id", "ts").collect()
         seen[gen] = [(r.event_id, r.ts) for r in rows]
     assert seen["nanos"] == seen["ntz_us"] == seen["ltz_us"]
+
+
+def test_stream_table_normalizes_every_generation(spark, generations):
+    from arangodb_java_parquet_spark.queries.common import drain, stream_table
+    seen = {}
+    for gen, d in generations.items():
+        stream = stream_table(spark, d, "events")
+        assert dict(stream.dtypes)["ts"] == "timestamp"  # watermark-legal
+        rows = (drain(stream.select("event_id", "ts"), "append")
+                .orderBy("event_id").collect())
+        seen[gen] = [(r.event_id, r.ts) for r in rows]
+    assert seen["nanos"] == seen["ntz_us"] == seen["ltz_us"]
+    assert len(seen["nanos"]) == len(INSTANTS)
