@@ -1,12 +1,12 @@
 """Self-shipping: make this package importable on executor Python workers.
 
 Any operator that serializes a closure referencing package code (the loader's
-foreachPartition sink, mapInPandas decoders, the fidelity encoder) must call
-``ensure_package_shipped`` first — executors deserialize those closures by
-importing the package, which isn't on their path when the driver process runs
-from another directory, and isn't present at all on a real cluster. Zipping
-the package once per SparkContext (the --py-files pattern, automated) makes
-every Python-side operator location-independent.
+Arrow-batched mapInArrow write, mapInPandas decoders, the fidelity encoder)
+must call ``ensure_package_shipped`` first — executors deserialize those
+closures by importing the package, which isn't on their path when the driver
+process runs from another directory, and isn't present at all on a real
+cluster. Zipping the package once per SparkContext (the --py-files pattern,
+automated) makes every Python-side operator location-independent.
 """
 
 from __future__ import annotations

@@ -17,7 +17,8 @@ Two backends:
     ``import_bulk`` gated behind an import-try (the driver image has no
     ArangoDB server; on a real deployment each executor opens its own client).
 
-Both are picklable so they can travel into ``foreachPartition`` closures.
+Both are picklable so they can travel into the loader's Arrow-batched
+``mapInArrow`` write closure.
 """
 
 from __future__ import annotations
@@ -193,7 +194,10 @@ class ArangoCollectionSink(Collection):
 def batched(it: Iterable, size: int) -> Iterator[list]:
     """Group an iterator into fixed-size lists (last one partial) — the Spark
     analog of the reference's ChunkedParquetReaderIterator
-    (ChunkedParquetReaderIterator.java:10-45), used inside foreachPartition.
+    (ChunkedParquetReaderIterator.java:10-45), used inside the loader's
+    Arrow-batched ``mapInArrow`` write, where it regroups a task's documents
+    across Arrow record batches: every batch but a task's last holds
+    ``size``.
 
     Conscious divergence — error semantics: the reference's iterator
     swallows ``IOException`` in ``next()`` and yields ``null``

@@ -12,17 +12,20 @@ Spark re-expression (SURVEY.md §2.1 #1,2,6,7):
                    single-file row loop at ParquetArangoLoader.java:139-150)
   * encode      -> Column-expression ``to_json`` fast path or reference-fidelity
                    pandas-UDF path (functions/docjson.py)
-  * batch+sink  -> ``foreachPartition``: each task batches its iterator into
-                   ``batch_size`` chunks and calls ``collection.insert_many``.
+  * batch+sink  -> one Arrow-batched ``mapInArrow`` write: each task reads
+                   its partition's documents as Arrow record batches, groups
+                   them into ``batch_size`` chunks, calls
+                   ``collection.insert_many`` and returns its own count.
                    Task parallelism IS the async model: N parallel partition
                    tasks ≈ the reference's ``maxParallelBatches`` in-flight
                    requests, minus the 10 ms busy-wait poll
                    (ParquetArangoLoader.java:239-250) which Spark's scheduler
                    replaces outright.
 
-Scale posture: no driver-side collect anywhere; memory per task is
-O(batch_size); works identically on a 1000-executor cluster writing to a
-shared filesystem or a server-backed collection.
+Scale posture: the driver collects one count row per write task and no
+documents; memory per task is O(batch_size) plus one Arrow batch; works
+identically on a 1000-executor cluster writing to a shared filesystem or a
+server-backed collection.
 """
 
 from __future__ import annotations
@@ -102,17 +105,15 @@ class ParquetLoader:
                        max_parallel_batches: int | None = None) -> int:
         """Encode ``df`` rows as JSON documents and bulk-insert them.
 
-        Returns the number of documents SENT to the sink, counted by an
-        accumulator on the write action itself (no second scan of the
-        input). Contract caveat: under task retries or speculative
-        execution, a re-run partition both re-inserts its documents and
-        re-adds to the accumulator, so the return can EXCEED ``df``'s row
-        count — it is "documents delivered" (at-least-once, matching the
-        sink's contents), not "distinct rows of df". Callers needing an
-        exact row count should count ``df`` separately or reconcile
-        against a distinct-key count in the sink; key-based sinks
-        (overwrite mode) dedup on insert, so their stored count stays
-        exact either way.
+        Returns the number of documents written: each write task reports
+        how many documents it handed to ``collection.insert_many``, and the
+        driver sums those reports. Only a task attempt that succeeds
+        returns its report, so the count equals ``df``'s row count even
+        when Spark retries a task. The sink's CONTENTS stay at-least-once:
+        a failed attempt's batches that reached the sink before the failure
+        remain there, and the retry writes them again. Exactly-once
+        delivery is ROADMAP direction 4; until then, key-based sinks
+        (overwrite mode) dedup on insert, so their stored count stays exact.
 
         Validation lives here (not just in ``load``) because this is the
         public API the streaming ``foreachBatch`` path calls directly —
@@ -126,27 +127,27 @@ class ParquetLoader:
         ensure_package_shipped(self.spark)
         collection.ensure(overwrite=overwrite)
 
-        docs = self.encode(df, mode=mode)
         if max_parallel_batches is not None:
-            docs = docs.repartition(max_parallel_batches)
+            # round-robin the input rows, not the encoded JSON: the shuffle
+            # moves typed rows and the encode runs in the write tasks
+            df = df.repartition(max_parallel_batches)
+        docs = self.encode(df, mode=mode)
 
-        # foreachPartition: executor-side batched insert, O(batch_size) memory
-        # per task — the distributed analog of the reference's chunk loop
-        # (ParquetArangoLoader.java:142-154; ChunkedParquetReaderIterator.java).
-        bs = batch_size
-        sink = collection
-        # rows-loaded via accumulator: counted on the SAME action as the
-        # write (no second scan). Task retries could over-count, but a
-        # retried partition also re-inserts — the count stays truthful to
-        # documents actually sent to the sink.
-        n_loaded = self.spark.sparkContext.accumulator(0)
-
-        def write_partition(rows) -> None:
+        # mapInArrow: each write task receives its partition's documents as
+        # Arrow record batches, regroups them into exactly
+        # ``batch_size``-long inserts (last one partial) and returns ONE row
+        # holding its count — the distributed analog of the reference's
+        # chunk loop (ParquetArangoLoader.java:142-154;
+        # ChunkedParquetReaderIterator.java), O(batch_size) memory per task.
+        def write_batches(record_batches):
+            import pyarrow as pa
+            docs_iter = (d for rb in record_batches
+                         for d in rb.column(DOC_COL).to_pylist())
             n = 0
-            for batch in batched((r[DOC_COL] for r in rows), bs):
-                sink.insert_many(batch)
+            for batch in batched(docs_iter, batch_size):
+                collection.insert_many(batch)
                 n += len(batch)
-            n_loaded.add(n)
+            yield pa.RecordBatch.from_pydict({"n": [n]})
 
-        docs.foreachPartition(write_partition)
-        return n_loaded.value
+        written = docs.mapInArrow(write_batches, "n long").collect()
+        return sum(r[0] for r in written)

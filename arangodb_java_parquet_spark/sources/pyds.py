@@ -37,8 +37,8 @@ class CollectionDataSource(DataSource):
 
     Write side: ``df.write.format("ajps_collection").option("path", ...)
     .mode("append"|"overwrite").save()`` — each task writes one uniquely-
-    named part file (same layout the loader's foreachPartition sink
-    produces, so the two write paths interoperate); overwrite clears the
+    named part file (same layout the loader's Arrow-batched mapInArrow
+    write produces, so the two write paths interoperate); overwrite clears the
     directory at commit time via the standard two-phase
     write-task/commit-driver protocol."""
 

@@ -1,6 +1,6 @@
 """File-backed stand-in for the ``python-arango`` package, used by
 tests/test_arango_sink_e2e.py to drive ``ArangoCollectionSink`` through a
-REAL distributed ``ParquetLoader.load`` (pickled into foreachPartition,
+REAL distributed ``ParquetLoader.load`` (pickled into the mapInArrow write,
 per-task lazy reconnect) without an ArangoDB server.
 
 The sink's ``url`` smuggles the storage root (``stub:///tmp/...``), so

@@ -1,8 +1,9 @@
 """End-to-end ``ArangoCollectionSink`` drive WITHOUT a server: the real
-``ParquetLoader.load`` path — encode, pickle the sink into
-``foreachPartition``, per-task lazy reconnect, batched ``import_bulk`` —
-against a file-backed stub ``arango`` module (tests/fake_arango/arango.py)
-shipped to every python worker via ``addPyFile``.
+``ParquetLoader.load`` path — encode, pickle the sink into the
+Arrow-batched ``mapInArrow`` write, per-task lazy reconnect, batched
+``import_bulk`` — against a file-backed stub ``arango`` module
+(tests/fake_arango/arango.py) shipped to every python worker via
+``addPyFile``.
 
 Mirrors the reference's live-server sync matrix
 (ParquetArangoLoaderTest.java:108-134): overwrite -> numDocs, append ->

@@ -60,11 +60,67 @@ def test_batch_size_validation(spark, sf_dir, collection):
         loader.load(nation_path(sf_dir), collection, max_parallel_batches=0)
 
 
-def test_max_parallel_batches_maps_to_partitions(spark, sf_dir, collection):
+def part_sizes(collection):
+    """Documents per part file, sorted: one part file per insert_many."""
+    sizes = []
+    for fp in collection._part_files():
+        with open(fp, encoding="utf-8") as f:
+            sizes.append(sum(1 for _ in f))
+    return sorted(sizes)
+
+
+def test_max_parallel_batches_maps_to_partitions(spark, sf_dir, collection,
+                                                 tmp_path):
     loader = ParquetLoader(spark)
     n = loader.load(nation_path(sf_dir), collection, overwrite=True,
-                    max_parallel_batches=4)
+                    max_parallel_batches=4, batch_size=25)
     assert n == 25 and collection.count() == 25
+    # one write task per requested partition, each one batch
+    assert len(part_sizes(collection)) == 4
+    natural = LocalCollection(str(tmp_path), "natural")
+    loader.load(nation_path(sf_dir), natural, overwrite=True)
+    assert (sorted(collection.iter_documents())
+            == sorted(natural.iter_documents()))
+
+
+def test_batches_span_arrow_batches(spark, sf_dir, collection):
+    """Inserts are exactly ``batch_size`` long per write task, however the
+    task's rows arrive in Arrow record batches (7 rows each here), and a
+    task with no rows writes no part file."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        loader = ParquetLoader(spark)
+        one_task = spark.read.parquet(nation_path(sf_dir)).coalesce(1)
+        assert loader.load_dataframe(one_task, collection, overwrite=True,
+                                     batch_size=5) == 25
+        assert part_sizes(collection) == [5] * 5
+        assert loader.load_dataframe(one_task, collection, overwrite=True,
+                                     batch_size=10) == 25
+        assert part_sizes(collection) == [5, 10, 10]
+
+        sparse = spark.createDataFrame([(1,), (2,), (3,)],
+                                       "id long").repartition(8)
+        assert loader.load_dataframe(sparse, collection,
+                                     overwrite=True) == 3
+        sizes = part_sizes(collection)
+        assert sum(sizes) == 3 and min(sizes) > 0
+        assert sorted(d["id"] for d in collection.read_all()) == [1, 2, 3]
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_loader_writes_through_one_arrow_stage():
+    """Source-only guard (no Spark): the write is one ``mapInArrow`` stage
+    whose tasks return their counts — no per-row RDD transfer and no
+    accumulator that a retried task would inflate."""
+    import pathlib
+
+    import arangodb_java_parquet_spark.sources.loader as loader_mod
+    src = pathlib.Path(loader_mod.__file__).read_text(encoding="utf-8")
+    for banned in ("foreachPartition", ".rdd", "accumulator("):
+        assert banned not in src, banned
 
 
 def test_content_matches_pyarrow_oracle(spark, sf_dir, collection):

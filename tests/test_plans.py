@@ -207,7 +207,7 @@ def test_every_oracle_query_is_python_free(spark, sf_dir):
     skipped.add("multimodal_frame_sample")
     skipped.add("multimodal_image_dedup")     # banding over the decode leg
     skipped.add("multimodal_audio_codec_profile")  # rollup over decode leg
-    skipped.add("loader_roundtrip")           # foreachPartition sink path
+    skipped.add("loader_roundtrip")           # mapInArrow sink write
     skipped.add("loader_roundtrip_nested")
     skipped.add("udaf_geomean_pandas")        # pandas UDAF is the point
     # Arrow-Gram consumers: the canonical exemption list lives WITH the

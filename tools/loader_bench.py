@@ -4,7 +4,7 @@ The reference is a single-threaded row-at-a-time loader (scan -> JSON
 encode -> batched insert); its repo publishes no numbers (BASELINE.md), so
 this records OURS on the same task shape: load a full sf0.1 table through
 the complete pipeline (distributed parquet scan -> JSON document encode ->
-foreachPartition batched insert) into the hermetic LocalCollection sink,
+Arrow-batched mapInArrow insert) into the hermetic LocalCollection sink,
 reporting wall seconds and docs/sec for both encode modes.
 
 Usage: python tools/loader_bench.py [--sf DIR] [--table lineitem]
