@@ -11,8 +11,8 @@ Two modes (SURVEY.md §1.3, §7 "hard parts"):
   (JSON has no NaN), timestamps/dates are ISO strings (the reference emits raw
   epoch numbers unless a converter is registered).
 
-* ``mode="reference"`` (fidelity path): an Arrow-batched ``mapInArrow``
-  transform that reproduces the reference encoder's output for FULL nested
+* ``mode="reference"`` (fidelity path): one recursive Column expression
+  (``_enc``) that reproduces the reference encoder's output for FULL nested
   schemas (struct / array / map, recursively — the reference serializer's
   isRecord/isArray/isMap dispatch at GenericRecordJsonEncoder.java:54-108):
     - output field order = schema field order, ``"name": value`` pairs joined
@@ -30,40 +30,28 @@ Two modes (SURVEY.md §1.3, §7 "hard parts"):
       "-Infinity") (GenericRecordJsonEncoder.java:118-124)
     - string escaping of ", \\, \\b \\f \\n \\r \\t plus \\uXXXX
       (uppercase hex) for U+0000–U+001F, U+007F–U+009F and U+2000–U+20FF
-      (GenericRecordJsonEncoder.java:178-216)
-    - finite float/double formatting follows Java's
-      ``Double.toString``/``Float.toString`` rules (the reference's
-      ``buffer.append(datum)`` fall-through at
-      GenericRecordJsonEncoder.java:136): decimal notation for
-      1e-3 <= |v| < 1e7, otherwise computerized scientific notation
-      (``1.0E10``), shortest round-trip digits, float32 formatted from its
-      own 32-bit shortest representation (``1.1``, not
-      ``1.100000023841858``). Digit selection is Python/NumPy shortest
-      round-trip — byte-identical to Java's output except for pathological
-      values where distinct shortest representations exist (e.g. extreme
-      subnormals) or where Java's pre-19 legacy formatter carries extra
-      digits; values are always numerically round-trip-equal.
+      (GenericRecordJsonEncoder.java:178-216), field names included
+    - finite float/double text is Spark's ``CAST(... AS STRING)``, which
+      is the JVM's own ``Double.toString``/``Float.toString`` — the
+      reference's ``buffer.append(datum)`` fall-through at
+      GenericRecordJsonEncoder.java:136, digit for digit (pinned against
+      ``java.lang.Double``/``Float`` in tests/test_encoder_properties.py)
     - unconverted timestamp/date columns emit raw epoch numbers, matching the
       reference's fall-through for unregistered logical types
       (GenericRecordJsonEncoder.java:133-137): timestamps as epoch
-      microseconds, dates as days since epoch.
+      microseconds, dates as days since epoch, ``timestamp_ntz`` as the
+      epoch microseconds of its wall clock read as UTC (whatever the
+      session zone)
     - circular references (GenericRecordJsonEncoder.java:55-58) cannot occur
       in Spark data — the guard has no Spark analog.
 
-The fidelity path is Python (slow path by design, opt-in); the default path
-stays entirely JVM-side. Null-vs-NaN exactness: the fidelity path consumes
-Arrow record batches directly (``to_pylist`` honors the validity bitmap), so
-SQL NULL -> ``null`` and NaN -> ``"NaN"`` at every nesting depth with no
-pandas conflation.
+Both paths plan entirely in the JVM: the encode adds no Python stage, so a
+loader write is the only one. SQL NULL -> ``null`` and NaN -> ``"NaN"`` at
+every nesting depth.
 """
 
 from __future__ import annotations
 
-import math
-from decimal import Decimal
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -94,7 +82,7 @@ def encode_documents(df: DataFrame, mode: str = "spark",
     if mode == "spark":
         return df.select(F.to_json(F.struct(*df.columns)).alias(DOC_COL))
     if mode == "reference":
-        return _encode_reference_fidelity(df)
+        return df.select(_enc(F.struct("*"), df.schema).alias(DOC_COL))
     raise ValueError(f"unknown encode mode: {mode!r}")
 
 
@@ -157,274 +145,83 @@ def _convert_nested(col: Column, dtype, converters: dict) -> Column:
 _ESCAPES = {'"': '\\"', "\\": "\\\\", "\b": "\\b", "\f": "\\f",
             "\n": "\\n", "\r": "\\r", "\t": "\\t"}
 
-
-def _escape_string(s: str) -> str:
-    """Reference string escaping (GenericRecordJsonEncoder.java:178-216):
-    named escapes plus uppercase \\uXXXX for the three control ranges."""
-    out = []
-    for ch in s:
-        esc = _ESCAPES.get(ch)
-        if esc is not None:
-            out.append(esc)
-            continue
-        cp = ord(ch)
-        if cp <= 0x1F or 0x7F <= cp <= 0x9F or 0x2000 <= cp <= 0x20FF:
-            out.append("\\u%04X" % cp)
-        else:
-            out.append(ch)
-    return "".join(out)
+# The three \uXXXX control ranges (GenericRecordJsonEncoder.java:178-216),
+# built from chr() so the class reads as codepoints.
+_CONTROL = (chr(0x00) + "-" + chr(0x1F) + chr(0x7F) + "-" + chr(0x9F)
+            + chr(0x2000) + "-" + chr(0x20FF))
 
 
-def _java_number_str(shortest: str, negative: bool) -> str:
-    """Format shortest-round-trip decimal digits the way Java's
-    ``Double.toString`` does (the spec both legacy and Ryū implement):
-    plain decimal for 1e-3 <= v < 1e7, else ``D.DDDEk`` scientific with a
-    bare integer exponent; at least one digit on each side of the point."""
-    d = Decimal(shortest)
-    tup = d.as_tuple()
-    k = (len(tup.digits) - 1) + tup.exponent  # value = d_0.d_1d_2... * 10^k
-    digits = "".join(map(str, tup.digits)).rstrip("0") or "0"
-    sign = "-" if negative else ""
-    if -3 <= k <= 6:  # exactly the 1e-3 <= v < 1e7 band for nonzero v
-        if k >= 0:
-            ip = digits[:k + 1].ljust(k + 1, "0")
-            fp = digits[k + 1:] or "0"
-            return f"{sign}{ip}.{fp}"
-        return sign + "0." + "0" * (-k - 1) + digits
-    frac = digits[1:] or "0"
-    return f"{sign}{digits[0]}.{frac}E{k}"
+def _esc(s: Column) -> Column:
+    """Reference string escaping: named escapes plus uppercase \\uXXXX for
+    the control ranges. Strings with nothing to escape pass through; the
+    rest are split by code point (surrogate pairs survive) and mapped."""
+    named = F.create_map(*[F.lit(x) for kv in _ESCAPES.items() for x in kv])
+
+    def char(ch: Column) -> Column:
+        return F.coalesce(
+            F.try_element_at(named, ch),
+            F.when(ch.rlike(f"[{_CONTROL}]"), F.concat(
+                F.lit("\\u"), F.hex(F.encode(ch, "UTF-16BE")))),
+            ch)
+    escaped = F.array_join(F.transform(F.split(s, ""), char), "")
+    return F.when(s.rlike(f'["\\\\{_CONTROL}]'), escaped).otherwise(s)
 
 
-def _java_double_str(f: float) -> str:
-    if f == 0.0:
-        return "-0.0" if math.copysign(1.0, f) < 0 else "0.0"
-    return _java_number_str(repr(abs(f)), f < 0)
-
-
-def _java_float32_str(f: float) -> str:
-    """Java ``Float.toString``: digits are the shortest round-trip for the
-    32-bit value (numpy's dragon4 shortest), same notation bands."""
-    import numpy as np
-    v = np.float32(f)
-    if v == np.float32(0.0):
-        return "-0.0" if math.copysign(1.0, float(v)) < 0 else "0.0"
-    return _java_number_str(
-        np.format_float_positional(abs(v), unique=True, trim="-")
-        if 1e-3 <= abs(float(v)) < 1e7 else
-        np.format_float_scientific(abs(v), unique=True, trim="-"),
-        float(v) < 0)
-
-
-def _encode_scalar(v, kind: str) -> str:
-    if v is None:
-        return "null"
-    if kind == "string":
-        return '"%s"' % _escape_string(v)
-    if kind == "bytes":
+def _enc(c: Column, dt: T.DataType) -> Column:
+    """The JSON text of ``c`` (SQL NULL -> ``null``) — the Column analog of
+    the reference's isRecord/isArray/isMap dispatch
+    (GenericRecordJsonEncoder.java:53-137)."""
+    if isinstance(dt, T.StructType):
+        # field order = schema order (GenericRecordJsonEncoder.java:60-71);
+        # the guard keeps a null struct at depth null, not {"a": null, ...}
+        parts = []
+        for i, f in enumerate(dt.fields):
+            parts += [F.lit(', "' if i else '"'), _esc(F.lit(f.name)),
+                      F.lit('": '),
+                      _enc(c.getField(f.name), f.dataType)]
+        out = F.when(c.isNotNull(),
+                     F.concat(F.lit("{"), *parts, F.lit("}")))
+    elif isinstance(dt, T.ArrayType):
+        out = F.concat(F.lit("["), F.array_join(F.transform(
+            c, lambda e: _enc(e, dt.elementType)), ", "), F.lit("]"))
+    elif isinstance(dt, T.MapType):
+        # keys serialized like values (GenericRecordJsonEncoder.java:90-108)
+        out = F.concat(F.lit("{"), F.array_join(F.transform(
+            F.map_entries(c), lambda e: F.concat(
+                _enc(e.getField("key"), dt.keyType), F.lit(": "),
+                _enc(e.getField("value"), dt.valueType))), ", "),
+            F.lit("}"))
+    elif isinstance(dt, T.StringType):
+        out = F.concat(F.lit('"'), _esc(c), F.lit('"'))
+    elif isinstance(dt, T.BinaryType):
         # {"bytes": "<ISO-8859-1-decoded>"} wrapper
         # (GenericRecordJsonEncoder.java:113-117,174-176)
-        return '{"bytes": "%s"}' % _escape_string(bytes(v).decode("ISO-8859-1"))
-    if kind == "bool":
-        return "true" if v else "false"
-    if kind in ("float", "float32"):
-        f = float(v)
-        if math.isnan(f):
-            return '"NaN"'  # quoted (GenericRecordJsonEncoder.java:118-124)
-        if math.isinf(f):
-            return '"Infinity"' if f > 0 else '"-Infinity"'
-        return _java_float32_str(f) if kind == "float32" else _java_double_str(f)
-    if kind == "timestamp":  # raw epoch micros fall-through (§1.3)
-        ts = pd.Timestamp(v)
-        if ts.tzinfo is not None:
-            ts = ts.tz_convert("UTC").tz_localize(None)
-        return str(ts.value // 1000)
-    if kind == "date":  # raw epoch days fall-through (§1.3)
-        return str((pd.Timestamp(v) - pd.Timestamp("1970-01-01")).days)
-    # int/long fall-through (GenericRecordJsonEncoder.java:133-137); int(v)
-    # tolerates numeric widenings from intermediate frames.
-    return str(int(v))
-
-
-def _kind_of(dt: T.DataType) -> str:
-    if isinstance(dt, T.StringType):
-        return "string"
-    if isinstance(dt, T.BinaryType):
-        return "bytes"
-    if isinstance(dt, T.BooleanType):
-        return "bool"
-    if isinstance(dt, T.FloatType):
-        return "float32"
-    if isinstance(dt, T.DoubleType):
-        return "float"
-    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        return "timestamp"
-    if isinstance(dt, T.DateType):
-        return "date"
-    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return "int"
-    raise TypeError(
-        f"reference-fidelity encoder: unsupported scalar type {dt} "
-        "(register a type converter to pre-map it, or use mode='spark')")
-
-
-def _encode_value(v, dt: T.DataType) -> str:
-    """Recursive serializer — the Spark analog of the reference's
-    isRecord/isArray/isMap dispatch (GenericRecordJsonEncoder.java:53-108)."""
-    if v is None:
-        return "null"
-    if isinstance(dt, T.StructType):
-        # field order = schema order (GenericRecordJsonEncoder.java:60-71)
-        return "{%s}" % ", ".join(
-            '"%s": %s' % (_escape_string(f.name),
-                          _encode_value(v.get(f.name), f.dataType))
-            for f in dt.fields)
-    if isinstance(dt, T.ArrayType):
-        return "[%s]" % ", ".join(
-            _encode_value(e, dt.elementType) for e in v)
-    if isinstance(dt, T.MapType):
-        # keys serialized like values (GenericRecordJsonEncoder.java:100-103)
-        items = v.items() if isinstance(v, dict) else v
-        return "{%s}" % ", ".join(
-            "%s: %s" % (_encode_value(k, dt.keyType),
-                        _encode_value(val, dt.valueType))
-            for k, val in items)
-    return _encode_scalar(v, _kind_of(dt))
-
-
-# Characters whose presence forces the python escape fallback for a string
-# value: the named escapes plus the three \uXXXX control ranges
-# (GenericRecordJsonEncoder.java:178-216).
-# Built from chr() so the class reads as codepoints (RE2 has no
-# \uXXXX; literal characters inside a class are fine).
-_NEEDS_ESCAPE_RE = ('["\\\\'
-                    + chr(0x00) + "-" + chr(0x1F)
-                    + chr(0x7F) + "-" + chr(0x9F)
-                    + chr(0x2000) + "-" + chr(0x20FF) + "]")
-
-
-_TS_TO_MICROS = {"s": 1_000_000, "ms": 1_000, "us": 1}
-
-
-def _patch(out, mask, replacements):
-    """replace_with_mask with a plain-bool mask and python replacements."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    return pc.replace_with_mask(out, mask,
-                                pa.array(replacements, pa.string()))
-
-
-def _vec_column_strs(arr, dtype):
-    """Serialized strings for one SCALAR column of an Arrow batch, no
-    nulls in the output (SQL NULL -> the 4-char string ``null``).
-
-    Vectorization strategy: the overwhelmingly common cases run as Arrow
-    C++ kernels (integer casts, bool if_else, quote-wrapping for strings
-    with no escapable characters, numpy shortest-repr for floats inside
-    Java's plain-decimal band); only the EXCEPTIONAL values — strings
-    containing escapes, non-finite or out-of-band floats, binary — drop
-    to the per-value python formatter, patched back in with
-    ``replace_with_mask``. Output is byte-identical to the row-at-a-time
-    reference formatter (property-pinned in
-    tests/test_encoder_properties.py); the ~14× throughput gap of the
-    all-python loop closes because python now touches O(exceptional)
-    values, not O(rows)."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    kind = _kind_of(dtype)
-    if kind == "int":
-        return pc.fill_null(pc.cast(arr, pa.string()), "null")
-    if kind == "bool":
-        return pc.fill_null(
-            pc.if_else(arr, pa.scalar("true"), pa.scalar("false")), "null")
-    if kind == "date":
-        return pc.fill_null(
-            pc.cast(pc.cast(arr, pa.int32()), pa.string()), "null")
-    if kind == "timestamp":
-        unit = arr.type.unit
-        ints = pc.cast(arr, pa.int64(), safe=False)
-        if unit == "ns":
-            # FLOOR division to match the row path's `value // 1000`:
-            # pc.divide truncates toward zero, which would round pre-epoch
-            # timestamps with sub-microsecond residue the other way.
-            thousand = pa.scalar(1000, pa.int64())
-            q = pc.divide(ints, thousand)
-            r = pc.subtract(ints, pc.multiply(q, thousand))
-            ints = pc.if_else(pc.less(r, pa.scalar(0, pa.int64())),
-                              pc.subtract(q, pa.scalar(1, pa.int64())), q)
-        else:
-            ints = pc.multiply(ints, pa.scalar(_TS_TO_MICROS[unit],
-                                               pa.int64()))
-        return pc.fill_null(pc.cast(ints, pa.string()), "null")
-    if kind == "string":
-        quoted = pc.binary_join_element_wise(
-            pa.scalar('"'), arr, pa.scalar('"'), pa.scalar(""))
-        out = pc.fill_null(quoted, "null")
-        esc = pc.fill_null(
-            pc.match_substring_regex(arr, _NEEDS_ESCAPE_RE), False)
-        if pc.any(esc).as_py():
-            idx = np.nonzero(esc.to_numpy(zero_copy_only=False))[0]
-            reps = ['"%s"' % _escape_string(s)
-                    for s in arr.take(pa.array(idx)).to_pylist()]
-            out = _patch(out, esc, reps)
-        return out
-    if kind in ("float", "float32"):
-        vals = arr.to_numpy(zero_copy_only=False)  # null -> nan (masked next)
-        absv = np.abs(vals)
-        in_band = np.isfinite(vals) & (absv >= 1e-3) & (absv < 1e7)
-        # numpy's astype(str) is shortest-round-trip per element width
-        # (float32 formats from its own 32-bit shortest digits), and
-        # python/Java plain-decimal notation coincide inside the band
-        strs = vals.astype(str)
-        out = pa.array(strs, pa.string())
-        fallback = ~in_band
-        if fallback.any():
-            null_np = pc.is_null(arr).to_numpy(zero_copy_only=False)
-            reps = ["null" if null_np[i]
-                    else _encode_scalar(float(vals[i]), kind)
-                    for i in np.nonzero(fallback)[0]]
-            out = _patch(out, pa.array(fallback), reps)
-        return out
-    # bytes (and anything else scalar): per-value python for this column
-    return pa.array([_encode_scalar(v, kind) for v in arr.to_pylist()],
-                    pa.string())
-
-
-def _encode_reference_fidelity(df: DataFrame) -> DataFrame:
-    from arangodb_java_parquet_spark.shipping import ensure_package_shipped
-    ensure_package_shipped(df.sparkSession)
-    fields = [(f.name, f.dataType) for f in df.schema.fields]
-    flat = all(not isinstance(dt, (T.StructType, T.ArrayType, T.MapType))
-               for _, dt in fields)
-
-    def encode_batches(it: Iterator) -> Iterator:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        for batch in it:
-            if flat and batch.num_rows:
-                # vectorized assembly: per-column serialized strings plus
-                # literal '{"name": '/', "name": ' separators, concatenated
-                # row-wise entirely inside Arrow C++
-                pieces = []
-                for i, (name, dtype) in enumerate(fields):
-                    lead = ("{" if i == 0 else ", ") + \
-                        '"%s": ' % _escape_string(name)
-                    pieces.append(pa.scalar(lead))
-                    pieces.append(_vec_column_strs(batch.column(i), dtype))
-                docs = pc.binary_join_element_wise(
-                    *pieces, pa.scalar("}"), pa.scalar(""))
-                yield pa.RecordBatch.from_arrays([docs], [DOC_COL])
-                continue
-            docs = []
-            # nested schemas keep the recursive row path: to_pylist honors
-            # Arrow validity bitmaps (SQL NULL -> None, NaN -> nan at any
-            # depth), so no null-masking is needed.
-            for row in batch.to_pylist():
-                parts = ['"%s": %s' % (_escape_string(name),
-                                       _encode_value(row[name], dtype))
-                         for name, dtype in fields]
-                docs.append("{%s}" % ", ".join(parts))
-            yield pa.RecordBatch.from_pydict({DOC_COL: docs})
-
-    return df.mapInArrow(encode_batches, schema=f"{DOC_COL} string")
+        out = F.concat(F.lit('{"bytes": "'),
+                       _esc(F.decode(c, "ISO-8859-1")), F.lit('"}'))
+    elif isinstance(dt, (T.FloatType, T.DoubleType)):
+        # NaN/±Infinity quoted (GenericRecordJsonEncoder.java:118-124); the
+        # rest is the JVM's own Double.toString / Float.toString
+        out = (F.when(F.isnan(c), '"NaN"')
+               .when(c == float("inf"), '"Infinity"')
+               .when(c == float("-inf"), '"-Infinity"')
+               .otherwise(c.cast("string")))
+    elif isinstance(dt, (T.BooleanType, T.ByteType, T.ShortType,
+                         T.IntegerType, T.LongType)):
+        out = c.cast("string")
+    elif isinstance(dt, T.DateType):  # raw epoch days fall-through (§1.3)
+        out = F.unix_date(c).cast("string")
+    elif isinstance(dt, T.TimestampType):  # raw epoch micros (§1.3)
+        out = F.unix_micros(c).cast("string")
+    elif isinstance(dt, T.TimestampNTZType):
+        # the wall clock read as UTC, from its fields: casts to timestamp
+        # and NTZ arithmetic would consult the session zone
+        out = (F.unix_date(c.cast("date")).cast("bigint") * 86_400_000_000
+               + F.hour(c).cast("bigint") * 3_600_000_000
+               + F.minute(c).cast("bigint") * 60_000_000
+               + (F.extract(F.lit("SECOND"), c) * 1_000_000)
+               .cast("bigint")).cast("string")
+    else:
+        raise TypeError(
+            f"reference-fidelity encoder: unsupported scalar type {dt} "
+            "(register a type converter to pre-map it, or use mode='spark')")
+    return F.coalesce(out, F.lit("null"))

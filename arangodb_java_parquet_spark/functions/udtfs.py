@@ -6,8 +6,8 @@ position (``FROM t, LATERAL my_udtf(t.col)``). This is the
 table-function analog of the reference's per-value converter surface —
 user code that EXPANDS a value into rows, where scalar UDFs map 1:1.
 
-Python UDTFs are a Python-side path by construction (like the fidelity
-encoder): keep them out of large-scale hot paths — every operator in this
+Python UDTFs are a Python-side path by construction (like the loader's
+write stage): keep them out of large-scale hot paths — every operator in this
 repo that CAN be a JVM expression is one; the UDTF exists for semantics
 Spark SQL cannot express declaratively.
 """

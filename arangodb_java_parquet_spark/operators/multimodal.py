@@ -11,9 +11,9 @@ end-to-end by the ``multimodal_image_decode`` /
 ``multimodal_audio_features`` / ``multimodal_video_decode`` queries and
 tests/test_multimodal.py. Formats that genuinely need a media library
 (JPEG/PNG/WebP, FLAC/Opus/MP3, MJPEG/H.264) remain an explicit boundary;
-the md5 stubs (``decode_image_stub`` / ``decode_audio_stub`` /
-``frame_sample_stub``) stay only as SQL-expressible plumbing twins for
-the profile/batch-shape entries; everything Spark-side is real and tested either way:
+the md5 stubs (``decode_image_stub`` / ``frame_sample_stub``) stay only
+as SQL-expressible plumbing twins for the profile/batch-shape entries;
+everything Spark-side is real and tested either way:
 schema contracts, binary handling through Arrow batches, partition-parallel
 UDF plumbing.
 
@@ -116,48 +116,6 @@ def frame_sample_stub(df: DataFrame, *, every_n: int = 10,
 
     return df.mapInPandas(sample_batches,
                           schema="doc_id long, frame_idx int, frame_hash string")
-
-
-AUDIO_META_SCHEMA = ("doc_id long, n_bytes long, codec string, "
-                     "sample_rate int, duration_ms long, loudness int")
-
-
-def decode_audio_stub(payload: bytes) -> dict:
-    """Deterministic fake audio decoder (the container has no soundfile /
-    ffmpeg; a real deployment swaps this body). Pseudo-metadata derives
-    from the payload md5 + length so every value is SQL-expressible and
-    the Arrow plumbing stays fully oracle-checked."""
-    h = hashlib.md5(payload).digest()
-    return {
-        "codec": ["flac", "opus", "mp3"][h[3] % 3],
-        "sample_rate": [16000, 24000, 44100][h[4] % 3],
-        # fake: 1 "ms" of audio per payload byte
-        "duration_ms": len(payload),
-        "loudness": h[5] % 128,
-    }
-
-
-def extract_audio_features(df: DataFrame, *, payload_col: str = "payload",
-                           id_col: str = "doc_id") -> DataFrame:
-    """Audio leg of the multimodal pipeline: decode + feature-extract via
-    Arrow-batched mapInPandas (same contract as the image leg — binary
-    column in, typed metadata out, python only inside the batch)."""
-    from arangodb_java_parquet_spark.shipping import ensure_package_shipped
-    ensure_package_shipped(df.sparkSession)
-
-    def decode_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            metas = [decode_audio_stub(bytes(p)) for p in pdf[payload_col]]
-            yield pd.DataFrame({
-                "doc_id": pdf[id_col].values,
-                "n_bytes": [len(bytes(p)) for p in pdf[payload_col]],
-                "codec": [m["codec"] for m in metas],
-                "sample_rate": [m["sample_rate"] for m in metas],
-                "duration_ms": [m["duration_ms"] for m in metas],
-                "loudness": [m["loudness"] for m in metas],
-            })
-
-    return df.mapInPandas(decode_batches, schema=AUDIO_META_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -299,8 +257,7 @@ def decode_wav(payload: bytes) -> dict | None:
     sum of absolute amplitudes, peak amplitude, sum of squares, sample
     count — leaving mean/RMS derivation to the caller (same determinism
     split as decode_image). None for payloads that are not 16-bit PCM
-    WAV; callers decide whether to fall back to
-    :func:`decode_audio_stub` for synthetic corpora.
+    WAV; callers decide what a non-WAV payload means.
 
     This replaces the md5 stub as the honest audio leg: given real WAV
     bytes it reports real waveform statistics. Compressed codecs

@@ -53,6 +53,8 @@ def count_exchanges(df: DataFrame) -> int:
 
 def is_python_free(df: DataFrame) -> bool:
     """True when no Python evaluation appears anywhere in the plan (the
-    JVM-only requirement for hot-path queries)."""
+    JVM-only requirement for hot-path queries): no python UDF/UDTF
+    (``*EvalPython*``) and no pandas or Arrow map (``*InPandas``,
+    ``*InArrow``)."""
     p = formatted_plan(df)
-    return "EvalPython" not in p and "InPandas" not in p
+    return not any(op in p for op in ("EvalPython", "InPandas", "InArrow"))

@@ -57,16 +57,16 @@ def loader_roundtrip_nested(spark, sf_dir):
     (functions/docjson.py — recursive struct/array/map per
     GenericRecordJsonEncoder.java:54-108) into a document collection, read
     the JSON back with the nested schema, and flatten to scalars the oracle
-    reproduces from the source table. Value-checks Java-style double
-    formatting too (c_acctbal survives encode -> parse bit-exactly because
-    the digits are shortest-round-trip)."""
+    reproduces from the source table. Value-checks the double text too
+    (c_acctbal survives encode -> parse bit-exactly: the encoder emits
+    the JVM's own Double.toString digits, which round-trip)."""
     from pyspark.sql import types as T
 
     from arangodb_java_parquet_spark.sources import (LocalCollection,
                                                      ParquetLoader)
     from arangodb_java_parquet_spark.sources.readers import read_collection
     c = t(spark, sf_dir, "customer").filter(F.col("c_custkey") <= 400)
-    # 401 rows: a handful of Python-stage tasks, not one per core — worker
+    # 401 rows: a handful of write tasks, not one per core — Python worker
     # startup would dwarf the work (a real corpus keeps natural partitioning)
     nested = c.coalesce(2).select(
         "c_custkey",

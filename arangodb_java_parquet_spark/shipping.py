@@ -1,7 +1,7 @@
 """Self-shipping: make this package importable on executor Python workers.
 
 Any operator that serializes a closure referencing package code (the loader's
-Arrow-batched mapInArrow write, mapInPandas decoders, the fidelity encoder)
+Arrow-batched mapInArrow write, the mapInPandas decoders)
 must call ``ensure_package_shipped`` first — executors deserialize those
 closures by importing the package, which isn't on their path when the driver
 process runs from another directory, and isn't present at all on a real

@@ -10,8 +10,9 @@ Spark re-expression (SURVEY.md §2.1 #1,2,6,7):
   * scan        -> ``spark.read.parquet`` (distributed, vectorized, multi-file,
                    column-pruned — strictly more general than the reference's
                    single-file row loop at ParquetArangoLoader.java:139-150)
-  * encode      -> Column-expression ``to_json`` fast path or reference-fidelity
-                   pandas-UDF path (functions/docjson.py)
+  * encode      -> Column expressions, either way: the ``to_json`` fast path
+                   or the reference-fidelity encoder (functions/docjson.py);
+                   the write below is the load's only Python stage
   * batch+sink  -> one Arrow-batched ``mapInArrow`` write: each task reads
                    its partition's documents as Arrow record batches, groups
                    them into ``batch_size`` chunks, calls

@@ -1,106 +1,167 @@
 """Property-based tests (hypothesis) for the reference-fidelity JSON
-encoder: every generated flat row must encode to parseable JSON that
-round-trips the values under the documented reference semantics
-(GenericRecordJsonEncoder.java:42-216)."""
+encoder: every generated value must encode to parseable JSON that
+round-trips under the documented reference semantics
+(GenericRecordJsonEncoder.java:42-216). Each hypothesis example draws a
+LIST of values and encodes them in one DataFrame, so a property costs at
+most ten encodes."""
 
 import json
 import math
 
+import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import types as T
 
-from arangodb_java_parquet_spark.functions.docjson import (
-    _encode_scalar, _escape_string)
-
-# pure-python property tests for the per-value encoder (fast path for
-# hypothesis: no Spark job per example)
+from arangodb_java_parquet_spark.functions.docjson import encode_documents
 
 text = st.text(max_size=50)
+_EXAMPLES = settings(max_examples=10, deadline=None)
 
 
-@given(text)
-@settings(max_examples=200, deadline=None)
-def test_escaped_strings_parse_as_json(s):
-    encoded = '"%s"' % _escape_string(s)
-    assert json.loads(encoded) == s
+def enc(spark, values, dtype) -> list[str]:
+    """The reference encoding of each value, as column ``v`` of ``dtype``.
+    The frame is built from Arrow, which keeps map entry order and tells
+    NaN from null."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(T.StructType([T.StructField("v", dtype)]))
+    df = spark.createDataFrame(
+        pa.Table.from_pylist([{"v": v} for v in values], schema))
+    docs = [r[0] for r in encode_documents(df, mode="reference").collect()]
+    assert all(d.startswith('{"v": ') and d.endswith("}") for d in docs)
+    return [d[len('{"v": '):-1] for d in docs]
 
 
-@given(st.binary(max_size=40))
-@settings(max_examples=200, deadline=None)
-def test_bytes_wrapper_roundtrips_iso88591(b):
-    doc = json.loads(_encode_scalar(b, "bytes"))
-    # {"bytes": "<ISO-8859-1>"} wrapper; decoding is byte-preserving
-    assert doc["bytes"].encode("ISO-8859-1") == b
+@given(st.lists(text, min_size=20, max_size=20))
+@_EXAMPLES
+def test_escaped_strings_parse_as_json(spark, strings):
+    for s, encoded in zip(strings, enc(spark, strings, T.StringType())):
+        assert json.loads(encoded) == s
 
 
-@given(st.floats(allow_nan=True, allow_infinity=True))
-@settings(max_examples=200, deadline=None)
-def test_float_encoding_reference_semantics(f):
-    out = _encode_scalar(f, "float")
-    if math.isnan(f):
-        assert out == '"NaN"'
-    elif math.isinf(f):
-        assert out in ('"Infinity"', '"-Infinity"')
-    else:
-        assert json.loads(out) == f
+@given(st.lists(st.binary(max_size=40), min_size=20, max_size=20))
+@_EXAMPLES
+def test_bytes_wrapper_roundtrips_iso88591(spark, blobs):
+    for b, out in zip(blobs, enc(spark, blobs, T.BinaryType())):
+        doc = json.loads(out)
+        # {"bytes": "<ISO-8859-1>"} wrapper; decoding is byte-preserving
+        assert doc["bytes"].encode("ISO-8859-1") == b
 
 
-@given(st.floats(allow_nan=True, allow_infinity=True, width=32))
-@settings(max_examples=200, deadline=None)
-def test_float32_encoding_roundtrips_to_same_float32(f):
+@given(st.lists(st.floats(allow_nan=True, allow_infinity=True),
+                min_size=20, max_size=20))
+@_EXAMPLES
+def test_float_encoding_reference_semantics(spark, floats):
+    for f, out in zip(floats, enc(spark, floats, T.DoubleType())):
+        if math.isnan(f):
+            assert out == '"NaN"'
+        elif math.isinf(f):
+            assert out in ('"Infinity"', '"-Infinity"')
+        else:
+            assert json.loads(out) == f
+
+
+@given(st.lists(st.floats(allow_nan=True, allow_infinity=True, width=32),
+                min_size=20, max_size=20))
+@_EXAMPLES
+def test_float32_encoding_roundtrips_to_same_float32(spark, floats):
     import numpy as np
-    out = _encode_scalar(f, "float32")
-    if math.isnan(f):
-        assert out == '"NaN"'
-    elif math.isinf(f):
-        assert out in ('"Infinity"', '"-Infinity"')
-    else:
-        # shortest-for-float32 digits: parsing back as float32 is lossless
-        assert np.float32(json.loads(out)) == np.float32(f)
+    for f, out in zip(floats, enc(spark, floats, T.FloatType())):
+        if math.isnan(f):
+            assert out == '"NaN"'
+        elif math.isinf(f):
+            assert out in ('"Infinity"', '"-Infinity"')
+        else:
+            # shortest-for-float32 digits: parsing back as float32 is lossless
+            assert np.float32(json.loads(out)) == np.float32(f)
 
 
-def test_java_double_tostring_notation():
+def test_java_double_tostring_notation(spark):
     """Known Java Double.toString outputs — the notation bands and digit
     layout of GenericRecordJsonEncoder's buffer.append(double) fallback."""
-    from arangodb_java_parquet_spark.functions.docjson import (
-        _java_double_str, _java_float32_str)
     cases = {1.0: "1.0", -1.5: "-1.5", 1e7: "1.0E7",
              9999999.0: "9999999.0", 1e10: "1.0E10", 0.001: "0.001",
              1e-4: "1.0E-4", 12345.678: "12345.678", 100.0: "100.0",
              2.5e-3: "0.0025", 6.02214076e23: "6.02214076E23",
              1.23e-300: "1.23E-300"}
-    for v, expected in cases.items():
-        assert _java_double_str(v) == expected, v
-    assert _java_double_str(0.0) == "0.0"
-    assert _java_double_str(-0.0) == "-0.0"
+    got = enc(spark, [*cases, 0.0, -0.0], T.DoubleType())
+    for v, expected, out in zip(cases, cases.values(), got):
+        assert out == expected, v
+    assert got[-2] == "0.0"
+    assert got[-1] == "-0.0"
     # Float.toString: digits come from the 32-bit value, not the widened 64
     f32 = {1.1: "1.1", 3.4028235e38: "3.4028235E38", 100.5: "100.5",
-           1.17549435e-38: "1.1754944E-38", 0.001: "0.001", 1e-4: "1.0E-4"}
-    for v, expected in f32.items():
-        assert _java_float32_str(v) == expected, v
+           1.17549435e-38: "1.17549435E-38", 0.001: "0.001", 1e-4: "1.0E-4"}
+    for v, expected, out in zip(f32, f32.values(),
+                                enc(spark, list(f32), T.FloatType())):
+        assert out == expected, v
 
 
-@given(st.integers(min_value=-2**63, max_value=2**63 - 1))
-@settings(max_examples=200, deadline=None)
-def test_int_encoding(i):
-    assert json.loads(_encode_scalar(i, "int")) == i
+def test_jvm_is_the_float_oracle(spark):
+    """Every finite double/float encodes to exactly the text of the live
+    JVM's ``Double.toString``/``Float.toString`` (the reference's
+    ``buffer.append(datum)``): ~2,000 random-bit values of each width plus
+    the zeros, subnormals and the 1e-3/1e7 notation band edges, encoded in
+    one job and compared over py4j."""
+    import random
+    import re
+    import struct
+
+    rnd = random.Random(20261019)
+    edges = [0.0, -0.0, 5e-324, -5e-324, 2.2250738585072014e-308,
+             1.4e-45, 1.1754942e-38, 1.17549435e-38,
+             1e-3, math.nextafter(1e-3, 0), math.nextafter(1e-3, 1),
+             1e7, math.nextafter(1e7, 0), math.nextafter(1e7, math.inf),
+             -1e-3, -1e7]
+
+    def random_bits(fmt, n):
+        out = []
+        while len(out) < n:
+            v = struct.unpack(fmt, rnd.randbytes(struct.calcsize(fmt)))[0]
+            if math.isfinite(v):
+                out.append(v)
+        return out
+
+    doubles = edges + random_bits("<d", 2000)
+    floats = [struct.unpack("<f", struct.pack("<f", v))[0]
+              for v in edges] + random_bits("<f", 2000)
+    df = spark.createDataFrame(list(zip(doubles, floats)),
+                               "d double, f float")
+    docs = [re.fullmatch(r'\{"d": (.*), "f": (.*)\}', r[0]).groups()
+            for r in encode_documents(df, mode="reference").collect()]
+    jvm = spark.sparkContext._jvm.java.lang
+    bad = [(d, f, d_txt, f_txt)
+           for d, f, (d_txt, f_txt) in zip(doubles, floats, docs)
+           if (d_txt, f_txt) != (jvm.Double.toString(d),
+                                 jvm.Float.toString(f))]
+    assert bad == [], bad[:10]
 
 
-@given(st.text(max_size=30))
-@settings(max_examples=100, deadline=None)
-def test_control_ranges_always_escaped(s):
-    encoded = _escape_string(s)
-    for ch in encoded:
-        cp = ord(ch)
-        # after escaping, no raw control chars or U+2000-U+20FF remain
-        assert not (cp <= 0x1F or 0x7F <= cp <= 0x9F or 0x2000 <= cp <= 0x20FF)
+@given(st.lists(st.integers(min_value=-2**63, max_value=2**63 - 1),
+                min_size=20, max_size=20))
+@_EXAMPLES
+def test_int_encoding(spark, ints):
+    for i, out in zip(ints, enc(spark, ints, T.LongType())):
+        assert json.loads(out) == i
 
 
-def test_nested_struct_array_map_encoding():
+@given(st.lists(st.text(max_size=30), min_size=10, max_size=10))
+@_EXAMPLES
+def test_control_ranges_always_escaped(spark, strings):
+    for quoted in enc(spark, strings, T.StringType()):
+        encoded = quoted[1:-1]
+        for ch in encoded:
+            cp = ord(ch)
+            # after escaping, no raw control chars or U+2000-U+20FF remain
+            assert not (cp <= 0x1F or 0x7F <= cp <= 0x9F
+                        or 0x2000 <= cp <= 0x20FF)
+
+
+def test_nested_struct_array_map_encoding(spark):
     """Recursive fidelity semantics (GenericRecordJsonEncoder.java:54-108):
     schema-ordered structs, ", "-joined arrays, maps with keys serialized
     like values, bytes wrapper and NaN quoting at depth."""
-    from arangodb_java_parquet_spark.functions.docjson import _encode_value
     dt = T.StructType([
         T.StructField("name", T.StringType()),
         T.StructField("scores", T.ArrayType(T.DoubleType())),
@@ -113,24 +174,23 @@ def test_nested_struct_array_map_encoding():
     v = {"name": 'a"b', "scores": [1.5, None, float("nan")],
          "attrs": [("k1", 7), ("k2", None)], "raw": b"\x9f",
          "inner": {"x": None, "y": "z"}}
-    out = _encode_value(v, dt)
+    out, null, all_null = enc(spark, [v, None, dict.fromkeys(
+        ["name", "scores", "attrs", "raw", "inner"])], dt)
     assert out == (
         '{"name": "a\\"b", "scores": [1.5, null, "NaN"], '
         '"attrs": {"k1": 7, "k2": null}, '
         '"raw": {"bytes": "\\u009F"}, '
         '"inner": {"x": null, "y": "z"}}')
     # null struct / null array / null map at depth
-    assert _encode_value(None, dt) == "null"
-    assert _encode_value({"name": None, "scores": None, "attrs": None,
-                          "raw": None, "inner": None}, dt) == \
+    assert null == "null"
+    assert all_null == \
         ('{"name": null, "scores": null, "attrs": null, "raw": null, '
          '"inner": null}')
 
 
 def test_spark_encode_nested_rows(spark):
-    """Nested rows through the full mapInArrow path: parse as JSON, field
-    order preserved at every level, NULL vs NaN distinguished inside
-    arrays (the Arrow-validity-bitmap property pandas cannot give)."""
+    """Nested rows through the full encode: parse as JSON, field order
+    preserved at every level, NULL vs NaN distinguished inside arrays."""
     from arangodb_java_parquet_spark.functions.docjson import (
         DOC_COL, encode_documents)
     schema = T.StructType([
@@ -171,8 +231,8 @@ def test_spark_encode_float32_column(spark):
 
 
 def test_spark_encode_random_rows_parse(spark):
-    """One Spark-side sweep: random-ish rows through the full mapInArrow
-    path parse as JSON with reference field order."""
+    """One Spark-side sweep: random-ish rows through the full encode
+    parse as JSON with reference field order."""
     schema = T.StructType([
         T.StructField("s", T.StringType()),
         T.StructField("i", T.LongType()),
@@ -193,31 +253,31 @@ def test_spark_encode_random_rows_parse(spark):
         assert list(parsed.keys()) == ["s", "i", "d", "b"]
 
 
-def test_map_nonstring_keys_serialized_like_values():
+def test_map_nonstring_keys_serialized_like_values(spark):
     """Reference map dispatch serializes KEYS through the same recursive
     serializer as values (GenericRecordJsonEncoder.java:90-108: serialize(
     entry.getKey()) with no string-coercion) — so a long-keyed map emits
     unquoted numeric keys and a double-keyed map emits "NaN"-quoted keys,
     faithfully reproducing the reference's non-standard JSON."""
-    from arangodb_java_parquet_spark.functions.docjson import _encode_value
     long_map = T.MapType(T.LongType(), T.StringType())
-    assert _encode_value([(7, "a"), (None, "b")], long_map) == \
-        '{7: "a", null: "b"}'
+    assert enc(spark, [[(7, "a")]], long_map) == ['{7: "a"}']
+    # a null key never reaches the encoder: Spark maps cannot hold one
+    with pytest.raises(Exception, match="(?i)null"):
+        enc(spark, [[(7, "a"), (None, "b")]], long_map)
     dbl_map = T.MapType(T.DoubleType(), T.LongType())
-    assert _encode_value([(float("nan"), 1), (2.5, None)], dbl_map) == \
-        '{"NaN": 1, 2.5: null}'
+    assert enc(spark, [[(float("nan"), 1), (2.5, None)]], dbl_map) == \
+        ['{"NaN": 1, 2.5: null}']
     # struct-keyed map: keys recurse like any value
     skey = T.MapType(
         T.StructType([T.StructField("k", T.LongType())]), T.LongType())
-    assert _encode_value([({"k": 3}, 9)], skey) == '{{"k": 3}: 9}'
+    assert enc(spark, [[({"k": 3}, 9)]], skey) == ['{{"k": 3}: 9}']
 
 
-def test_deeply_nested_bytes_and_nan():
+def test_deeply_nested_bytes_and_nan(spark):
     """bytes wrapper ({"bytes": "<ISO-8859-1>"}) and NaN/Infinity quoting
     must survive arbitrary nesting depth (the reference dispatches per
     element recursively: GenericRecordJsonEncoder.java:72-108,113-118,
     174-176), including inside map VALUES and map KEYS."""
-    from arangodb_java_parquet_spark.functions.docjson import _encode_value
     dt = T.ArrayType(T.MapType(
         T.StringType(),
         T.StructType([
@@ -225,55 +285,42 @@ def test_deeply_nested_bytes_and_nan():
             T.StructField("scores", T.ArrayType(T.DoubleType()))])))
     v = [[("a", {"payload": b"\x00\xff", "scores": [float("-inf"), 1.0]})],
          [("b", None)]]
-    assert _encode_value(v, dt) == (
+    assert enc(spark, [v], dt) == [
         '[{"a": {"payload": {"bytes": "\\u0000\u00ff"}, '
-        '"scores": ["-Infinity", 1.0]}}, {"b": null}]')
+        '"scores": ["-Infinity", 1.0]}}, {"b": null}]']
     # binary as a map KEY gets the same wrapper treatment
     bkey = T.MapType(T.BinaryType(), T.LongType())
-    assert _encode_value([(b"\x01", 5)], bkey) == \
-        '{{"bytes": "\\u0001"}: 5}'
+    assert enc(spark, [[(b"\x01", 5)]], bkey) == \
+        ['{{"bytes": "\\u0001"}: 5}']
 
 
-@given(st.recursive(
-    st.one_of(st.none(), st.integers(min_value=-2**31, max_value=2**31),
-              st.text(max_size=8), st.binary(max_size=6),
-              st.floats(allow_nan=True, allow_infinity=True, width=32)),
-    lambda leaf: st.lists(leaf, max_size=3), max_leaves=8))
-@settings(max_examples=120, deadline=None)
-def test_recursive_array_nesting_never_crashes(v):
+_LEAVES = {
+    T.LongType(): st.integers(min_value=-2**31, max_value=2**31),
+    T.StringType(): st.text(max_size=8),
+    T.BinaryType(): st.binary(max_size=6),
+    T.FloatType(): st.floats(allow_nan=True, allow_infinity=True, width=32),
+}
+
+
+def _values_of(dt):
+    """Values conforming to ``dt``, None allowed at every level."""
+    if isinstance(dt, T.ArrayType):
+        return st.none() | st.lists(_values_of(dt.elementType), max_size=3)
+    return st.none() | _LEAVES[dt]
+
+
+@given(st.data())
+@_EXAMPLES
+def test_recursive_array_nesting_never_crashes(spark, data):
     """Any depth of array nesting over any scalar leaf must encode without
     raising, and encode null-for-None at every level."""
-    from arangodb_java_parquet_spark.functions.docjson import _encode_value
-
-    def dtype_for(x):
-        if isinstance(x, list):
-            inner = dtype_for(x[0]) if x else T.LongType()
-            return T.ArrayType(inner)
-        if isinstance(x, bool) or x is None:
-            return T.LongType()
-        if isinstance(x, int):
-            return T.LongType()
-        if isinstance(x, float):
-            return T.FloatType()
-        if isinstance(x, bytes):
-            return T.BinaryType()
-        return T.StringType()
-
-    def conform(x, dt):
-        """Only keep elements matching the sampled element dtype."""
-        if x is None:
-            return None
-        if isinstance(dt, T.ArrayType):
-            if not isinstance(x, list):
-                return None
-            return [conform(e, dt.elementType) for e in x]
-        ok = {T.LongType: int, T.FloatType: float,
-              T.BinaryType: bytes, T.StringType: str}[type(dt)]
-        return x if isinstance(x, ok) and not isinstance(x, bool) else None
-
-    dt = dtype_for(v)
-    out = _encode_value(conform(v, dt), dt)
-    assert isinstance(out, str) and out
+    dt = data.draw(st.recursive(st.sampled_from(list(_LEAVES)),
+                                lambda inner: inner.map(T.ArrayType),
+                                max_leaves=4))
+    values = data.draw(st.lists(_values_of(dt), min_size=12, max_size=12))
+    for v, out in zip(values, enc(spark, values, dt)):
+        assert isinstance(out, str) and out
+        assert (out == "null") == (v is None)
 
 
 def test_converters_top_level_only_reference_parity(spark):
@@ -342,18 +389,36 @@ def test_converters_exact_complex_match_beats_recursion(spark):
     assert out.collect()[0].xs == 3
 
 
-def test_vectorized_ns_timestamp_floor_division_matches_row_path():
-    """pc.divide truncates toward zero; the vectorized ns->us path must
-    FLOOR like the row path's `pd.Timestamp.value // 1000`, or pre-epoch
-    timestamps with sub-microsecond residue serialize differently on the
-    flat fast path vs the nested/row path (round-6 ADVICE)."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
+def test_timestamp_and_date_edges_encode_as_utc_epoch(spark):
+    """Raw epoch fall-through (GenericRecordJsonEncoder.java:133-137) at the
+    edges: years 1500 and 9999 inside arrays, one microsecond before the
+    epoch, and timestamp_ntz wall clocks inside a DST gap and a DST overlap
+    of the session zone — each one the exact epoch value of the instant
+    (or wall clock) read as UTC, whatever the session zone."""
+    import datetime as dt
 
-    from arangodb_java_parquet_spark.functions.docjson import (
-        _vec_column_strs)
-
-    ns_vals = [-1500, -1001, -1000, -999, -1, 0, 1, 999, 1000, 1500]
-    arr = pa.array(ns_vals, pa.timestamp("ns"))
-    out = _vec_column_strs(arr, T.TimestampType()).to_pylist()
-    assert out == [str(v // 1000) for v in ns_vals]
+    utc = dt.timezone.utc
+    row = ([dt.datetime(1500, 1, 1, tzinfo=utc),
+            dt.datetime(9999, 12, 31, 23, 59, 59, 999999, tzinfo=utc)],
+           [dt.date(1500, 1, 1), dt.date(9999, 12, 31)],
+           dt.datetime(1969, 12, 31, 23, 59, 59, 999999, tzinfo=utc),
+           dt.datetime(2024, 3, 10, 2, 30, 0, 7),
+           dt.datetime(2024, 11, 3, 1, 30))
+    df = spark.createDataFrame(
+        [row], "ts array<timestamp>, ds array<date>, pre timestamp, "
+               "gap timestamp_ntz, overlap timestamp_ntz")
+    key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "America/Los_Angeles")
+    try:
+        doc, = [r[0] for r in
+                encode_documents(df, mode="reference").collect()]
+    finally:
+        spark.conf.set(key, prev)
+    assert json.loads(doc) == {
+        "ts": [-14831769600000000, 253402300799999999],
+        "ds": [-171664, 2932896],
+        "pre": -1,
+        "gap": 1710037800000007,
+        "overlap": 1730597400000000,
+    }

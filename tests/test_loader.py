@@ -201,6 +201,50 @@ def test_reference_fidelity_encoding(spark):
         json.loads(d)
 
 
+def test_reference_encode_plans_without_python(spark, tmp_path,
+                                              monkeypatch):
+    """The fidelity encode is Column expressions only: on a nested frame it
+    plans python-free, and a reference-mode load runs exactly one Python
+    stage, the write — each document crosses JVM->Python once."""
+    import re
+
+    from arangodb_java_parquet_spark.functions.docjson import encode_documents
+    from arangodb_java_parquet_spark.plans.inspect import (formatted_plan,
+                                                           is_python_free)
+    df = spark.createDataFrame(
+        [(1, (2.5, "x"), [b"\x00"], {"k": [1, None]}), (2, None, None, None)],
+        "id long, st struct<d:double,s:string>, bs array<binary>, "
+        "m map<string,array<int>>")
+    assert is_python_free(encode_documents(df, mode="reference"))
+
+    writes = []
+    map_in_arrow = type(df).mapInArrow
+
+    def spy(self, *args, **kwargs):
+        writes.append(map_in_arrow(self, *args, **kwargs))
+        return writes[-1]
+    monkeypatch.setattr(type(df), "mapInArrow", spy)
+    collection = LocalCollection(str(tmp_path), "docs")
+    assert ParquetLoader(spark).load_dataframe(
+        df, collection, overwrite=True, mode="reference") == 2
+    assert len(writes) == 1
+    nodes = re.findall(r"^\(\d+\) MapInArrow", formatted_plan(writes[0]),
+                       re.M)
+    assert len(nodes) == 1, formatted_plan(writes[0])
+
+
+def test_docjson_has_no_python_stage():
+    """Source-only guard (no Spark): the encoder module builds Column
+    expressions and never runs Python over the rows."""
+    import pathlib
+
+    import arangodb_java_parquet_spark.functions.docjson as docjson
+    src = pathlib.Path(docjson.__file__).read_text(encoding="utf-8")
+    for banned in ("mapInArrow", "mapInPandas", "pyarrow", "pandas",
+                   "numpy", "udf"):
+        assert banned not in src, banned
+
+
 def test_fidelity_timestamp_epoch_fallthrough(spark, sf_dir):
     """Unconverted timestamps emit raw epoch micros, matching the reference's
     logical-type fall-through (GenericRecordJsonEncoder.java:133-137)."""

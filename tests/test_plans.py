@@ -185,17 +185,17 @@ def test_runtime_bloom_filter_join(spark, sf_dir):
             spark.conf.set(k, v)
 
 
-def test_every_oracle_query_is_python_free(spark, sf_dir):
+def test_every_oracle_query_is_python_free(oracle_entry_facts):
     """Blanket gate: EVERY value-checked (oracle-bearing) batch query must
     plan without python evaluation — BatchEvalPython / ArrowEvalPython /
     FlatMapsInPandas never belong in a hash-compared path. Streaming
-    drives are excluded (constructing them runs the stream); the known
+    drives are excluded (constructing them runs the stream; the shared
+    ``oracle_entry_facts`` sweep holds the batch entries); the known
     pandas entries are rows-only and carry no oracle. One deliberate
     exception: the UDTF entry EXISTS to exercise the python UDTF surface,
     and its tokenization is exact integer/string work, so python
     evaluation cannot perturb its hashes."""
-    from arangodb_java_parquet_spark.queries import ORACLES
-    skipped = {n for n in ORACLES if n.startswith("stream_")}
+    skipped = set()
     # deliberate python surfaces whose work is exact (hash-safe):
     skipped.add("udtf_tokenize_lateral")     # python UDTF is the point
     skipped.add("multimodal_image_features")  # mapInPandas decode plumbing
@@ -222,19 +222,18 @@ def test_every_oracle_query_is_python_free(spark, sf_dir):
     # Arrow PQ-encode consumers: same contract, pinned by
     # tests/test_similarity.py::test_pq_encode_arrow_matches_jvm (r16)
     skipped.update(ARROW_PQ_CONSUMERS)
-    from arangodb_java_parquet_spark.plans.inspect import formatted_plan
     # join_cross is a deliberate tiny cross join (region × 5 segments)
     cartesian_ok = {"join_cross"}
-    for name in ORACLES:
-        if name in skipped:
-            continue
-        df = QUERIES[name](spark, sf_dir)
-        assert is_python_free(df), name
-        # and the scale gate: a CartesianProduct (non-broadcast all-pairs
-        # join) must never appear in a value-checked plan — 1-row scalar
-        # crossJoins plan as BroadcastNestedLoopJoin, which is fine.
-        if name not in cartesian_ok:
-            assert "CartesianProduct" not in formatted_plan(df), name
+    python = [n for n, f in oracle_entry_facts.items()
+              if n not in skipped and not f.python_free]
+    assert python == [], f"python evaluation in value-checked plans: {python}"
+    # and the scale gate: a CartesianProduct (non-broadcast all-pairs
+    # join) must never appear in a value-checked plan — 1-row scalar
+    # crossJoins plan as BroadcastNestedLoopJoin, which is fine.
+    cartesian = [n for n, f in oracle_entry_facts.items()
+                 if n not in skipped | cartesian_ok and f.cartesian]
+    assert cartesian == [], f"CartesianProduct in value-checked plans: " \
+        f"{cartesian}"
 
 
 def test_rows_only_entries_plan_invariants(spark, sf_dir):

@@ -32,30 +32,17 @@ def test_registry_names_unique_and_callable():
     assert orphans == []
 
 
-def _complex_cols(schema):
-    from pyspark.sql.types import ArrayType, MapType, StructType
-    return [f.name for f in schema.fields
-            if isinstance(f.dataType, (ArrayType, MapType, StructType))]
-
-
-def test_no_complex_output_columns_batch(spark):
+def test_no_complex_output_columns_batch(oracle_entry_facts):
     """The external driver's pandas canonicalizer sort_values()/hashes every
     output column; a top-level ARRAY/MAP/STRUCT column raises
     'unhashable type: list' and burns the correctness slot as err (round-1
     agg_collect_list_sorted, round-6 ir_inverted_index). Every oracle-backed
     query must emit scalar-typed columns only — flatten lists with
     array_join/array_to_string on BOTH engines. Batch entries: lazy
-    DataFrame construction at sf0.001, schema check only (no job run for
-    the declarative ones)."""
-    from tests.conftest import SF_SMOKE
-    offenders = {}
-    for name in ORACLES:
-        if name.startswith("stream"):
-            continue  # driven separately (constructing them runs the stream)
-        df = QUERIES[name](spark, SF_SMOKE)
-        bad = _complex_cols(df.schema)
-        if bad:
-            offenders[name] = bad
+    DataFrame construction at sf0.001 (the shared ``oracle_entry_facts``
+    sweep), schema check only (no job run for the declarative ones)."""
+    offenders = {name: f.complex_cols
+                 for name, f in oracle_entry_facts.items() if f.complex_cols}
     assert offenders == {}, (
         f"oracle-backed queries with driver-unhashable complex output "
         f"columns: {offenders}")
@@ -66,13 +53,13 @@ def test_no_complex_output_columns_streaming(spark):
     drive their stream to expose the memory-sink schema, so they run at
     sf0.001 (fixed drive overhead dominates; data volume is irrelevant to
     the schema)."""
-    from tests.conftest import SF_SMOKE
+    from tests.conftest import SF_SMOKE, complex_cols
     offenders = {}
     for name in ORACLES:
         if not name.startswith("stream"):
             continue
         df = QUERIES[name](spark, SF_SMOKE)
-        bad = _complex_cols(df.schema)
+        bad = complex_cols(df.schema)
         if bad:
             offenders[name] = bad
     assert offenders == {}, (

@@ -42,7 +42,8 @@ def main() -> None:
     for mode in ("spark", "reference"):
         root = tempfile.mkdtemp(prefix="ajps_ldbench_")
         col = LocalCollection(root, "bench")
-        # warm run (JIT/codegen; reference mode also warms python workers)
+        # warm run (JIT/codegen for both encoders, python workers for the
+        # write stage both modes share)
         loader.load(path, col, overwrite=True,
                     batch_size=args.batch_size, mode=mode)
         t0 = time.time()

@@ -29,7 +29,7 @@ SIGNALS = {
     "bnl_joins": r"BroadcastNestedLoopJoin",
     "cartesian": r"CartesianProduct",
     "take_ordered": r"TakeOrderedAndProject",
-    "python_stages": r"EvalPython|InPandas",
+    "python_stages": r"EvalPython|InPandas|InArrow",
     # localCheckpoint truncates the captured plan to an RDD scan, so a
     # nonzero count here means the OTHER columns only describe the plan
     # ABOVE the checkpoint — e.g. the PCA pair reports py=0 while an
