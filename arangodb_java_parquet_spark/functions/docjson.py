@@ -80,7 +80,7 @@ def encode_documents(df: DataFrame, mode: str = "spark",
     if converters:
         df = apply_type_converters(df, converters, nested=nested_converters)
     if mode == "spark":
-        return df.select(F.to_json(F.struct(*df.columns)).alias(DOC_COL))
+        return df.select(F.to_json(F.struct("*")).alias(DOC_COL))
     if mode == "reference":
         return df.select(_enc(F.struct("*"), df.schema).alias(DOC_COL))
     raise ValueError(f"unknown encode mode: {mode!r}")
@@ -107,12 +107,18 @@ def apply_type_converters(df: DataFrame, converters: dict,
         cols: list[Column] = []
         for field in df.schema.fields:
             fn = converters.get(field.dataType.simpleString())
-            col = F.col(field.name)
+            col = _top_col(field.name)
             cols.append(fn(col).alias(field.name) if fn else col)
         return df.select(*cols)
     return df.select(*[
-        _convert_nested(F.col(f.name), f.dataType, converters)
+        _convert_nested(_top_col(f.name), f.dataType, converters)
         .alias(f.name) for f in df.schema.fields])
+
+
+def _top_col(name: str) -> Column:
+    """A top-level column by its exact name: quoted, so a ``.`` or a
+    backtick in the name is not read as a path or a quote."""
+    return F.col("`" + name.replace("`", "``") + "`")
 
 
 def _convert_nested(col: Column, dtype, converters: dict) -> Column:

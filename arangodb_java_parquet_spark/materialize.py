@@ -1,10 +1,15 @@
 """Materialization policy — the local-vs-cluster swap as CODE.
 
 Every multi-consumer / iterative subtree in this codebase used to call
-``DataFrame.localCheckpoint(eager=False)`` directly. That is strictly
-right on local[32] (plan truncation at zero extra job cost, forces one
-computation of bases Catalyst cannot ReusedExchange through lambda-HOF
-subtrees) but on a REAL multi-node cluster localCheckpoint stores the
+``DataFrame.localCheckpoint(eager=False)`` directly. That is right on
+local[32] (plan truncation, and one computation of bases Catalyst cannot
+ReusedExchange through lambda-HOF subtrees), but it is not free: under
+AQE, building the lazy checkpoint's RDD runs every upstream shuffle stage
+as its own job when the query is constructed. Turning AQE off around the
+lazy ``localCheckpoint`` cut perfbench query_iterative's jobs per pass
+from 379 to 236 but did not cut its wall time (19.4 s → 20.9 s per pass,
+in-process A/B of 4 alternating passes each; ROADMAP direction 1a), so
+the stage jobs stay. On a REAL multi-node cluster localCheckpoint stores the
 partitions in executor block managers WITHOUT lineage: lose an executor
 and the job fails instead of recomputing (Spark's documented trade-off;
 see PERF_NOTES.md "Round 13").

@@ -10,25 +10,24 @@ python stays out of hot paths, partition pruning fires.
 
 from __future__ import annotations
 
-import contextlib
-import io
-
 from pyspark.sql import DataFrame
 
 
+def _explain(df: DataFrame, mode: str) -> str:
+    """The text ``df.explain(mode)`` prints, returned instead of printed.
+    Nothing process-wide (``sys.stdout``) is touched, so threads can
+    capture plans concurrently."""
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), mode)
+
+
 def formatted_plan(df: DataFrame) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+    return _explain(df, "formatted")
 
 
 def codegen_plan(df: DataFrame) -> str:
     """Codegen view — AQE's formatted mode hides WholeStageCodegen spans."""
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("codegen")
-    return buf.getvalue()
+    return _explain(df, "codegen")
 
 
 def has_pushed_filters(df: DataFrame) -> bool:

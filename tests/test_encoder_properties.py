@@ -422,3 +422,22 @@ def test_timestamp_and_date_edges_encode_as_utc_epoch(spark):
         "gap": 1710037800000007,
         "overlap": 1730597400000000,
     }
+
+
+@pytest.mark.parametrize("mode", ["spark", "reference"])
+@pytest.mark.parametrize("nested", [None, False, True])
+def test_dotted_and_backtick_column_names(spark, mode, nested):
+    """A top-level name holding ``.`` or a backtick is a name, not a path
+    or a quote: both modes encode it, with and without converters (top-level
+    and nested), and the converter reaches the column it names."""
+    df = spark.createDataFrame([(1, "x", 2.5)],
+                               "`a.b` int, a string, `c``d` double")
+    converters = None if nested is None else {"int": lambda c: c + 1,
+                                              "double": lambda c: c * 2}
+    [doc] = [r[0] for r in encode_documents(
+        df, mode=mode, converters=converters,
+        nested_converters=bool(nested)).collect()]
+    shift = 0 if converters is None else 1
+    assert json.loads(doc) == {"a.b": 1 + shift, "a": "x",
+                               "c`d": 2.5 * (1 + shift)}
+    assert list(json.loads(doc)) == ["a.b", "a", "c`d"]

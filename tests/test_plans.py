@@ -320,3 +320,39 @@ def test_observe_metrics_on_write(spark, sf_dir):
         .alias("s")).collect()[0]
     assert got["n_rows"] == exact["n"]
     assert got["sum_price"] == exact["s"]
+
+
+def test_plan_capture_is_per_thread(spark):
+    """Threads capturing different plans at once each get their own: the
+    capture returns the JVM's explain string and never redirects the
+    process-wide stdout."""
+    import sys
+    import threading
+
+    n, rounds = 8, 5
+    dfs = [spark.range(3).selectExpr(f"id AS only_col_{i}") for i in range(n)]
+    start = threading.Barrier(n)
+    got = {}
+
+    def capture(i):
+        start.wait(timeout=60)
+        got[i] = [(formatted_plan(dfs[i]), codegen_plan(dfs[i]))
+                  for _ in range(rounds)]
+
+    stdout = sys.stdout
+    try:
+        threads = [threading.Thread(target=capture, args=(i,))
+                   for i in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.stdout = stdout
+    assert not any(t.is_alive() for t in threads)
+    for i in range(n):
+        for plans in got[i]:
+            for p in plans:
+                names = {f"only_col_{j}" for j in range(n)
+                         if f"only_col_{j}" in p}
+                assert names == {f"only_col_{i}"}, (i, names)

@@ -16,11 +16,9 @@ relative reads — block-manager buildup pollutes late entries).
 from __future__ import annotations
 
 import argparse
-import io
 import os
 import sys
 import time
-from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -35,6 +33,7 @@ def main() -> int:
                     help="write explain('formatted') of the first name here")
     args = ap.parse_args()
 
+    from arangodb_java_parquet_spark.plans import formatted_plan
     from arangodb_java_parquet_spark.queries import QUERIES
     from arangodb_java_parquet_spark.session import get_spark
     spark = get_spark(app_name="isolate_bench")
@@ -53,12 +52,9 @@ def main() -> int:
         print(f"{name}: runs={[round(x, 2) for x in times]} "
               f"warm_best={best:.2f}")
         if args.plan and name == args.names[0]:
-            buf = io.StringIO()
-            with redirect_stdout(buf):
-                fn(spark, args.sf).explain("formatted")
             os.makedirs(os.path.dirname(args.plan), exist_ok=True)
             with open(args.plan, "w") as fh:
-                fh.write(buf.getvalue())
+                fh.write(formatted_plan(fn(spark, args.sf)) + "\n")
             print(f"plan -> {args.plan}")
     return 0
 
