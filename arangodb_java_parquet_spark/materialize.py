@@ -54,11 +54,12 @@ kind        mode="local" (default) mode="reliable" (multi-node)
 ==========  =====================  ==================================
 
 Mode resolution (per call, so tests can flip it): Spark conf
-``spark.graft.materialize`` if set, else env ``SPARK_GRAFT_MATERIALIZE``,
-else "local". ``tests/test_materialize.py`` proves result equality
-between the two modes on a representative iterative entry and a shared
-scan base; PLAN_REPORT.md is generated in "local" mode and is
-byte-identical to the pre-helper plans.
+``spark.graft.materialize`` if set (at deploy time with
+``--conf spark.graft.materialize=reliable``), else "local".
+``tests/test_materialize.py`` proves result equality between the two
+modes on a representative iterative entry and a shared scan base;
+PLAN_REPORT.md is generated in "local" mode and is byte-identical to the
+pre-helper plans.
 
 Chained use reads naturally through ``DataFrame.transform``::
 
@@ -69,8 +70,6 @@ Chained use reads naturally through ``DataFrame.transform``::
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 _MODES = ("local", "reliable")
@@ -79,8 +78,7 @@ _KINDS = ("base", "iter", "scalar", "barrier")
 
 def materialize_mode(spark) -> str:
     """Resolve the session-level materialization mode."""
-    mode = spark.conf.get("spark.graft.materialize", None) \
-        or os.environ.get("SPARK_GRAFT_MATERIALIZE", "local")
+    mode = spark.conf.get("spark.graft.materialize", "local")
     if mode not in _MODES:
         raise ValueError(f"spark.graft.materialize={mode!r}; want {_MODES}")
     return mode

@@ -123,16 +123,3 @@ def ensure_model(spark: SparkSession, root: str, name: str, kind: str,
             else:
                 raise
     return load_model(spark, root, name, expect_kind=kind)
-
-
-def list_models(root: str) -> list[dict]:
-    """Manifests of every model under the store root."""
-    out = []
-    if not os.path.isdir(root):
-        return out
-    for name in sorted(os.listdir(root)):
-        mpath = os.path.join(root, name, "manifest.json")
-        if os.path.isfile(mpath):
-            with open(mpath) as f:
-                out.append(json.load(f))
-    return out

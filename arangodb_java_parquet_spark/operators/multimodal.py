@@ -310,45 +310,6 @@ def decode_wav(payload: bytes) -> dict | None:
             "n_samples": n_vals}
 
 
-AUDIO_DECODE_SCHEMA = ("doc_id long, codec string, sample_rate int, "
-                       "n_frames long, duration_ms long, mean_abs double, "
-                       "peak int, rms double")
-
-
-def decode_audio_stats(df: DataFrame, *, payload_col: str = "payload",
-                       id_col: str = "doc_id") -> DataFrame:
-    """Real-decoder audio leg: binary column in, (codec, rate, duration,
-    amplitude stats) out, via Arrow-batched mapInPandas. mean_abs and rms
-    come from exact integer sums divided/rooted as doubles — both
-    engines' nearest-double of the same rational, so the whole decode
-    round-trip is value-checkable. Unsupported payloads are dropped."""
-    from arangodb_java_parquet_spark.shipping import ensure_package_shipped
-    ensure_package_shipped(df.sparkSession)
-
-    import math
-
-    def decode_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in ("doc_id", "codec", "sample_rate",
-                                    "n_frames", "duration_ms", "mean_abs",
-                                    "peak", "rms")}
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                m = decode_wav(bytes(p))
-                if m is None:
-                    continue
-                rows["doc_id"].append(i)
-                rows["codec"].append(m["codec"])
-                rows["sample_rate"].append(m["sample_rate"])
-                rows["n_frames"].append(m["n_frames"])
-                rows["duration_ms"].append(m["duration_ms"])
-                rows["mean_abs"].append(m["sum_abs"] / m["n_samples"])
-                rows["peak"].append(m["peak"])
-                rows["rms"].append(math.sqrt(m["sum_sq"] / m["n_samples"]))
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(decode_batches, schema=AUDIO_DECODE_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # honest video leg: pure-stdlib AVI container with uncompressed DIB frames
 # ---------------------------------------------------------------------------
@@ -453,71 +414,3 @@ def decode_avi_frames(payload: bytes, every_n: int = 1):
         out.append({"frame_idx": idx, "width": w, "height": h,
                     "sum_r": sr, "sum_g": sg, "sum_b": sb, "n_px": w * h})
     return out
-
-
-FRAME_DECODE_SCHEMA = ("doc_id long, frame_idx int, width int, height int, "
-                       "mean_r double, mean_g double, mean_b double")
-
-
-def decode_video_frames(df: DataFrame, *, every_n: int = 1,
-                        payload_col: str = "payload",
-                        id_col: str = "doc_id") -> DataFrame:
-    """Real-decoder video leg: binary column in, one row per SAMPLED
-    frame out (explode inside the Arrow batch), exact per-frame channel
-    means. Undecodable payloads are dropped."""
-    from arangodb_java_parquet_spark.shipping import ensure_package_shipped
-    ensure_package_shipped(df.sparkSession)
-
-    def decode_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in ("doc_id", "frame_idx", "width",
-                                    "height", "mean_r", "mean_g", "mean_b")}
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                ms = decode_avi_frames(bytes(p), every_n=every_n)
-                if ms is None:
-                    continue
-                for m in ms:
-                    rows["doc_id"].append(i)
-                    rows["frame_idx"].append(m["frame_idx"])
-                    rows["width"].append(m["width"])
-                    rows["height"].append(m["height"])
-                    rows["mean_r"].append(m["sum_r"] / m["n_px"])
-                    rows["mean_g"].append(m["sum_g"] / m["n_px"])
-                    rows["mean_b"].append(m["sum_b"] / m["n_px"])
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(decode_batches, schema=FRAME_DECODE_SCHEMA)
-
-
-IMAGE_DECODE_SCHEMA = ("doc_id long, format string, width int, height int, "
-                       "mean_r double, mean_g double, mean_b double")
-
-
-def decode_image_stats(df: DataFrame, *, payload_col: str = "payload",
-                       id_col: str = "doc_id") -> DataFrame:
-    """Real-decoder image leg: binary column in, (format, dims, per-channel
-    mean) out, via Arrow-batched mapInPandas. Means are exact-int channel
-    sums divided by the pixel count — both engines' nearest-double of the
-    same rational, so the whole decode round-trip is value-checkable.
-    Unsupported payloads are dropped (None from the decoder)."""
-    from arangodb_java_parquet_spark.shipping import ensure_package_shipped
-    ensure_package_shipped(df.sparkSession)
-
-    def decode_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in ("doc_id", "format", "width", "height",
-                                    "mean_r", "mean_g", "mean_b")}
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                m = decode_image(bytes(p))
-                if m is None:
-                    continue
-                rows["doc_id"].append(i)
-                rows["format"].append(m["format"])
-                rows["width"].append(m["width"])
-                rows["height"].append(m["height"])
-                rows["mean_r"].append(m["sum_r"] / m["n_px"])
-                rows["mean_g"].append(m["sum_g"] / m["n_px"])
-                rows["mean_b"].append(m["sum_b"] / m["n_px"])
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(decode_batches, schema=IMAGE_DECODE_SCHEMA)

@@ -153,9 +153,10 @@ def ivf_fit_centroids(corpus: DataFrame, *, id_col: str, vec_col: str,
     SUM(CAST(val AS DECIMAL(30,12)))/COUNT exactly via per-element
     half-up quantization to 1e-12 (shortest-repr decimal, the same
     BigDecimal.valueOf path Spark's float→decimal cast takes) summed as
-    exact int64. ``ivf_fit_centroids_distributed`` keeps the
-    cluster-shaped loop for a widened sample (the 100 TB posture when
-    the sample no longer fits a driver collect).
+    exact Python integers, because an int64 sum wraps silently (2000
+    elements of 5e3 sum past 2^63). ``ivf_fit_centroids_distributed``
+    keeps the cluster-shaped loop for a widened sample (the 100 TB
+    posture when the sample no longer fits a driver collect).
     """
     import numpy as np
 
@@ -164,13 +165,13 @@ def ivf_fit_centroids(corpus: DataFrame, *, id_col: str, vec_col: str,
     X = np.array([[float(v) for v in r["svec"]] for r in rows],
                  dtype="float64")
     # per-element quantization to DECIMAL(30,12), half-up — computed once
-    # (it does not depend on the iteration), summed exactly in int64
-    # (|v|~O(1) => |q| <= ~1e13; 2000-row sums stay far below 2^63)
+    # (it does not depend on the iteration); object dtype keeps Python
+    # ints, so the per-cell sums are exact at any magnitude
     from decimal import ROUND_HALF_UP, Decimal
     one_e12 = Decimal(1).scaleb(-12)
     Q = np.array([[int(Decimal(repr(v)).quantize(one_e12, ROUND_HALF_UP)
                        .scaleb(12)) for v in row] for row in X.tolist()],
-                 dtype="int64")
+                 dtype=object)
     for _ in range(n_iter):
         C = np.asarray(centroids, dtype="float64")
         d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
@@ -742,36 +743,6 @@ def ivfpq_probe(queries: DataFrame, cents: DataFrame, enc: DataFrame,
             .withColumn("rn", F.row_number().over(
                 W.partitionBy("qid").orderBy("adc_dist", "vid")))
             .filter(F.col("rn") <= k))
-
-
-def ivfpq_topk(queries: DataFrame, corpus: DataFrame, *, id_col: str,
-               vec_col: str, k: int, n_probe: int = 4,
-               cell_mod: int = 31, pq_cent_mod: int = 37,
-               n_sub: int = 8, sub_dim: int = 8) -> DataFrame:
-    """IVF-PQ composite index (the FAISS IVFADC architecture, Jégou et
-    al. 2011): coarse inverted-file cells route each query to its
-    ``n_probe`` nearest partitions, and asymmetric PQ distances score
-    only the codes inside those cells — the standard billion-vector ANN
-    design where neither the full corpus nor full vectors are ever
-    touched per query.
-
-    Inline composition of :func:`ivfpq_fit` and :func:`ivfpq_probe` —
-    the lineage-proof form that re-derives the index per run; the
-    fit-once/probe-later split goes through the model store (see
-    queries/ann_stored.py). Per query the work is n_probe/n_cells of the
-    corpus × n_sub O(1) lookups; the cell-routed join is an equi-join on
-    cell, NOT a cross join.
-
-    Output: (qid, vid, adc_dist, rn<=k). Registered rows-only (composite
-    fitted-index semantics); recall vs brute force is pinned in
-    tests/test_similarity.py.
-    """
-    cents, enc, cb = ivfpq_fit(corpus, id_col=id_col, vec_col=vec_col,
-                               cell_mod=cell_mod, pq_cent_mod=pq_cent_mod,
-                               n_sub=n_sub, sub_dim=sub_dim)
-    return ivfpq_probe(queries, cents, enc, cb, id_col=id_col,
-                       vec_col=vec_col, k=k, n_probe=n_probe,
-                       n_sub=n_sub, sub_dim=sub_dim)
 
 
 # Oracle-checked registry entries that deliberately consume the Arrow

@@ -295,40 +295,6 @@ def quantile_sketch_estimate(hist: DataFrame, lo: int | None = None,
     return hit.select("q", est.alias("est_value"))
 
 
-def quantile_sketch_sql(cents_expr: str, src: str, lo: int, hi: int,
-                        quantiles: list[float]) -> str:
-    """DuckDB oracle for hist ∘ estimate, generated from the same
-    constants/arithmetic so the two engines cannot drift."""
-    b = QSK_BINS
-    width = hi - lo + 1
-    qlist = ", ".join(str(q) for q in quantiles)
-    return f"""
-WITH hist AS (
-  SELECT ({cents_expr} - {lo}) * {b} // {width} AS bin, COUNT(*) AS cnt
-  FROM {src} GROUP BY 1
-),
-cum AS (
-  SELECT bin, cnt,
-         SUM(cnt) OVER (ORDER BY bin
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS cum
-  FROM hist
-),
-tgt AS (
-  SELECT q, CAST(ceil(q * CAST(n AS DOUBLE)) AS BIGINT) AS target
-  FROM (SELECT SUM(cnt) AS n FROM hist)
-  CROSS JOIN UNNEST([{qlist}]) AS t(q)
-)
-SELECT tgt.q,
-       round(({lo}.0e0 + CAST(cum.bin AS DOUBLE) * {width}.0e0 / {b}.0e0
-         + (CAST(tgt.target AS DOUBLE) - (CAST(cum.cum AS DOUBLE)
-         - CAST(cum.cnt AS DOUBLE))) / CAST(cum.cnt AS DOUBLE)
-         * ({width}.0e0 / {b}.0e0)) / 100.0e0, 9) AS est_value
-FROM tgt JOIN cum
-  ON cum.cum >= tgt.target AND cum.cum - cum.cnt < tgt.target
-"""
-
-
 # ---------------------------------------------------------------------------
 # GK-style deterministic quantile summary (round 9)
 # ---------------------------------------------------------------------------
@@ -416,7 +382,7 @@ def gk_quantile_summary_sql(val_expr: str, key_expr: str, group_expr: str,
                                        (99, 100))) -> str:
     """ANSI-SQL twin of :func:`gk_quantile_summary` (one shared
     generator, never hand-copied — the same single-source pattern as
-    hll_sql / quantile_sketch_sql)."""
+    hll_sql)."""
     qvals = ", ".join(f"({num}, {den})" for num, den in quantiles)
     return f"""
 WITH gk_src AS (

@@ -179,7 +179,9 @@ def exact_percentiles(df: DataFrame, value_col: str,
         pinned registry-wide by tests/test_percentile_helper.py.
 
     NULL values are excluded (percentile() semantics); ``n_col`` (if
-    given) carries the per-group NON-NULL count. Output: one row per
+    given) carries the per-group NON-NULL count. A group whose values
+    are ALL NULL is dropped from the output, where percentile() emits
+    the group with NULL percentiles. Output: one row per non-empty
     group with *group_cols, [n_col], and ``out_cols`` — UNROUNDED
     doubles, bit-identical to percentile(value_col, p). Rows ranked by
     the DOUBLE cast of the value (exact for float/int inputs; callers

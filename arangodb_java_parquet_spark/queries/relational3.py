@@ -301,8 +301,9 @@ def zorder_cluster_key(spark, sf_dir):
     interleaved key co-locates rows close in BOTH dimensions, so range
     files carry tight min/max stats on each column at once (a
     lexicographic sort only helps the leading column). Pure integer
-    shift/and/or, codegen-friendly; write path in
-    sources/readers.py:write_zordered."""
+    shift/and/or, codegen-friendly; a writer range-partitions and sorts
+    by the key (tests/test_sources.py pins the skipping on both
+    dimensions)."""
     from arangodb_java_parquet_spark.sources.readers import zorder_key
     o = t(spark, sf_dir, "orders")
     return o.select(

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from arangodb_java_parquet_spark.materialize import (
     materialize, materialize_scalar)
 from arangodb_java_parquet_spark.operators.sketches import (
-    CMS_DEPTH, cms_build, cms_pos_sql, cms_probe, hll_estimate,
+    CMS_DEPTH, QSK_BINS, cms_build, cms_pos_sql, cms_probe, hll_estimate,
     hll_registers, hll_registers_sql, hll_sql)
 from arangodb_java_parquet_spark.queries.common import query, t
 
@@ -106,7 +106,6 @@ def cms_token_frequencies(spark, sf_dir):
 
 
 _QSK_QUANTILES = [0.25, 0.5, 0.9, 0.99]
-_QSK_B = 128
 
 _QSK_SQL = f"""
 WITH c AS (
@@ -118,7 +117,7 @@ bounds AS (
   FROM c
 ),
 hist AS (
-  SELECT (c.cents - b.lo) * {_QSK_B} // b.width AS bin, COUNT(*) AS cnt
+  SELECT (c.cents - b.lo) * {QSK_BINS} // b.width AS bin, COUNT(*) AS cnt
   FROM c CROSS JOIN bounds b GROUP BY 1
 ),
 cum AS (
@@ -135,10 +134,10 @@ tgt AS (
 )
 SELECT CAST(tgt.q AS DOUBLE) AS q,
        round((CAST(b.lo AS DOUBLE)
-         + CAST(cum.bin AS DOUBLE) * CAST(b.width AS DOUBLE) / {_QSK_B}.0e0
+         + CAST(cum.bin AS DOUBLE) * CAST(b.width AS DOUBLE) / {QSK_BINS}.0e0
          + (CAST(tgt.target AS DOUBLE) - (CAST(cum.cum AS DOUBLE)
          - CAST(cum.cnt AS DOUBLE))) / CAST(cum.cnt AS DOUBLE)
-         * (CAST(b.width AS DOUBLE) / {_QSK_B}.0e0)) / 100.0e0, 9)
+         * (CAST(b.width AS DOUBLE) / {QSK_BINS}.0e0)) / 100.0e0, 9)
          AS est_value
 FROM tgt
 JOIN cum ON cum.cum >= tgt.target AND cum.cum - cum.cnt < tgt.target

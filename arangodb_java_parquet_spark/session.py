@@ -33,7 +33,10 @@ def get_spark(app_name: str = "arangodb_java_parquet_spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    Env knobs (driver contract): ``SPARK_GRAFT_CPUS`` sets local parallelism.
+    Env knobs (driver contract): ``SPARK_GRAFT_CPUS`` sets local
+    parallelism and the default shuffle partitions (default 32);
+    ``SPARK_GRAFT_DRIVER_MEM`` sets ``spark.driver.memory`` (default
+    ``90g``).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:

@@ -41,7 +41,6 @@ from arangodb_java_parquet_spark.shipping import ensure_package_shipped
 from arangodb_java_parquet_spark.sources.collections import Collection, batched
 
 DEFAULT_BATCH_SIZE = 1000          # ParquetArangoLoader.java:35
-DEFAULT_MAX_PARALLEL_BATCHES = 10  # ParquetArangoLoader.java:36
 
 
 class ParquetLoader:
@@ -113,7 +112,7 @@ class ParquetLoader:
         when Spark retries a task. The sink's CONTENTS stay at-least-once:
         a failed attempt's batches that reached the sink before the failure
         remain there, and the retry writes them again. Exactly-once
-        delivery is ROADMAP direction 4; until then, key-based sinks
+        delivery is ROADMAP direction 5; until then, key-based sinks
         (overwrite mode) dedup on insert, so their stored count stays exact.
 
         Validation lives here (not just in ``load``) because this is the

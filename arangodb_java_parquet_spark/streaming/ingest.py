@@ -7,11 +7,11 @@ collection sink — each micro-batch reuses the exact batch-load path, giving
 the reference's bounded in-flight behavior with checkpointed exactly-once
 progress tracking (which the reference lacks: SURVEY.md §7 hard part 3).
 
-Event-time analytics: watermarked tumbling windows and session windows over
-the ``events`` table schema.
+Event-time analytics: watermarked tumbling windows over the ``events``
+table schema.
 
-Scale posture: watermark bounds state; `session_window` / windowed aggs
-shuffle on (key, window) — the streaming state store partitions by the same
+Scale posture: watermark bounds state; windowed aggs shuffle on
+(key, window) — the streaming state store partitions by the same
 shuffle, so a 1000-executor cluster partitions state horizontally.
 """
 
@@ -249,19 +249,6 @@ def windowed_event_counts(events: DataFrame, *,
                  .alias("sum_value")))
 
 
-def dedup_stream(events: DataFrame, *, key: str = "event_id",
-                 watermark: str = "1 hour") -> DataFrame:
-    """Streaming exactly-once-per-key dedup: ``dropDuplicates`` on the key
-    with a watermark bounding the dedup state (events older than the
-    watermark are expired from the state store — without it, state grows
-    forever; with it, duplicates arriving within the window are dropped).
-
-    The streaming side of the exact-dedup operator (dedup_exact is the
-    batch twin)."""
-    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    return events.withWatermark("ts", watermark).dropDuplicates([key])
-
-
 def stateful_user_counters(events: DataFrame) -> DataFrame:
     """Custom stateful streaming operator via ``applyInPandasWithState``:
     per-user lifetime counters (events seen, value sum) maintained across
@@ -307,63 +294,6 @@ def stateful_user_counters(events: DataFrame) -> DataFrame:
                 timeoutConf="NoTimeout"))
 
 
-def stateful_user_counters_tws(events: DataFrame) -> DataFrame:
-    """The same per-user lifetime counters as
-    :func:`stateful_user_counters`, on the PySpark-4
-    ``transformWithStateInPandas`` API — the successor to
-    ``applyInPandasWithState`` (typed state objects via a handle, multiple
-    named states, timers, TTL). One ValueState holds (n, total_scaled);
-    the exact-decimal accumulation makes output independent of micro-batch
-    boundaries, like the legacy-API twin (see its docstring).
-    """
-    import pandas as pd  # executor-side import
-
-    try:  # the TWS state-server protocol is protobuf-based
-        import google.protobuf  # noqa: F401
-    except ImportError as e:
-        raise RuntimeError(
-            "transformWithStateInPandas requires the protobuf package "
-            "(python<->state-server protocol; not present in this image) — "
-            "pip install protobuf, or use stateful_user_counters "
-            "(applyInPandasWithState), which has no such dependency") from e
-
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    from arangodb_java_parquet_spark.shipping import ensure_package_shipped
-    ensure_package_shipped(events.sparkSession)
-
-    SCALE = 10 ** 8
-
-    class UserTotals(StatefulProcessor):
-        def init(self, handle):
-            self._state = handle.getValueState("totals", "n long, total long")
-
-        def handleInputRows(self, key, rows, timer_values):
-            from decimal import ROUND_HALF_EVEN, Decimal
-            n, total_scaled = (self._state.get() if self._state.exists()
-                               else (0, 0))
-            q = Decimal(1).scaleb(-8)
-            for pdf in rows:
-                n += len(pdf)
-                for v in pdf["value"]:
-                    d = Decimal(repr(float(v))).quantize(q, ROUND_HALF_EVEN)
-                    total_scaled += int(d * SCALE)
-            self._state.update((n, total_scaled))
-            yield pd.DataFrame({"user_id": [key[0]], "n_events": [n],
-                                "sum_value": [float(total_scaled) / SCALE]})
-
-        def close(self):
-            pass
-
-    return (events.groupBy("user_id")
-            .transformWithStateInPandas(
-                statefulProcessor=UserTotals(),
-                outputStructType=(
-                    "user_id long, n_events long, sum_value double"),
-                outputMode="Update",
-                timeMode="None"))
-
-
 def stream_interval_join(left: DataFrame, right: DataFrame, *,
                          left_key: str, right_key: str,
                          left_time: str, right_time: str,
@@ -393,18 +323,6 @@ def stream_interval_join(left: DataFrame, right: DataFrame, *,
             & (F.col(right_time)
                <= F.col(left_time) + F.expr(f"INTERVAL {within}")))
     return left.join(right, cond, how)
-
-
-def session_window_agg(events: DataFrame, *, gap: str = "30 minutes") -> DataFrame:
-    """Session windows (gap-based) per user — streaming-native
-    sessionization; batch equivalent is operators/temporal.sessionize."""
-    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (events
-            .withWatermark("ts", "1 hour")
-            .groupBy(F.session_window("ts", gap).alias("sess"), "user_id")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select("user_id", F.col("sess.start").alias("sess_start"),
-                    F.col("sess.end").alias("sess_end"), "n_events"))
 
 
 def stream_incremental_rollup(spark, path: str, *, schema,

@@ -2,10 +2,12 @@
 the persisted artifact must drive the apply stage to results identical
 to applying straight off the in-session fit."""
 
+import json
+
 import pytest
 
 from arangodb_java_parquet_spark.operators.models import (
-    list_models, load_model, save_model)
+    load_model, save_model)
 
 
 def test_irls_weights_roundtrip_apply_identical(spark, sf_dir, tmp_path):
@@ -62,6 +64,7 @@ def test_manifest_validation(spark, tmp_path):
     save_model(df, str(tmp_path), "m1", "kind_a")
     with pytest.raises(ValueError, match="kind"):
         load_model(spark, str(tmp_path), "m1", expect_kind="kind_b")
-    manifests = list_models(str(tmp_path))
-    assert manifests == [{"name": "m1", "kind": "kind_a",
-                          "columns": ["k", "v"], "partition_by": []}]
+    with open(tmp_path / "m1" / "manifest.json") as f:
+        manifest = json.load(f)
+    assert manifest == {"name": "m1", "kind": "kind_a",
+                        "columns": ["k", "v"], "partition_by": []}

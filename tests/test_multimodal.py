@@ -57,14 +57,13 @@ def test_binary_file_lake_to_features(spark, tmp_path):
     (the decode itself is the documented deterministic stub)."""
     from pyspark.sql import functions as F
 
-    from arangodb_java_parquet_spark.sources.readers import read_binary_files
-
     payloads = {1: b"\x89PNGfakedata-one", 2: b"\xff\xd8JPEGfake-two",
                 3: b"RIFFwebp-fake-three"}
     for i, b in payloads.items():
         (tmp_path / f"img_{i}.bin").write_bytes(b)
 
-    lake = read_binary_files(spark, str(tmp_path), glob="img_*.bin")
+    lake = (spark.read.format("binaryFile")
+            .option("pathGlobFilter", "img_*.bin").load(str(tmp_path)))
     with_ids = lake.select(
         F.regexp_extract("path", r"img_(\d+)\.bin", 1).cast("long")
         .alias("doc_id"),
@@ -79,7 +78,7 @@ def test_binary_file_lake_to_features(spark, tmp_path):
             expected["width"], expected["height"])
 
 
-def test_decode_image_bmp_ppm_pixel_exact(spark):
+def test_decode_image_bmp_ppm_pixel_exact():
     """The pure-stdlib decoder must report exact pixel statistics for
     real BMP (incl. row padding and top-down negative-height variants)
     and P6 PPM (incl. header comments) byte streams, and return None for
@@ -87,7 +86,7 @@ def test_decode_image_bmp_ppm_pixel_exact(spark):
     import struct
 
     from arangodb_java_parquet_spark.operators.multimodal import (
-        decode_image, decode_image_stats, encode_bmp, encode_ppm)
+        decode_image, encode_bmp, encode_ppm)
 
     def rgb(x, y):
         return ((x * 11 + y) % 256, (y * 13) % 256, (x + y * 3) % 256)
@@ -112,15 +111,11 @@ def test_decode_image_bmp_ppm_pixel_exact(spark):
     assert decode_image(b"BM but torn off") is None
     assert decode_image(b"P6\n3 2\n65535\n" + b"\x00" * 18) is None  # maxval
 
-    # the DataFrame operator: drops undecodable rows, exact means
-    payload = encode_ppm(4, 2, rgb)
-    df = spark.createDataFrame(
-        [(1, bytearray(payload)), (2, bytearray(b"junk"))],
-        "doc_id long, payload binary")
-    out = {r.doc_id: r for r in decode_image_stats(df).collect()}
-    assert set(out) == {1}
+    # exact means: channel sum over the pixel count
+    m = decode_image(encode_ppm(4, 2, rgb))
     exp_r = sum(rgb(x, y)[0] for x in range(4) for y in range(2)) / 8.0
-    assert out[1].mean_r == exp_r and out[1].format == "ppm"
+    assert m["sum_r"] / m["n_px"] == exp_r and m["format"] == "ppm"
+    assert decode_image(b"junk") is None
 
 
 def test_decode_image_never_crashes_on_fuzz():
@@ -159,7 +154,7 @@ def test_decode_image_never_crashes_on_fuzz():
     check()
 
 
-def test_decode_wav_sample_exact(spark):
+def test_decode_wav_sample_exact():
     """The pure-stdlib WAV decoder must report exact sample statistics
     for real RIFF/PCM16 byte streams (incl. stereo interleave, extra
     chunks and odd-size chunk padding) and return None for non-WAV or
@@ -167,7 +162,7 @@ def test_decode_wav_sample_exact(spark):
     import struct
 
     from arangodb_java_parquet_spark.operators.multimodal import (
-        decode_audio_stats, decode_wav, encode_wav)
+        decode_wav, encode_wav)
 
     samples = [0, 1, -1, 32767, -32768, 100, -250, 7]
     m = decode_wav(encode_wav(16000, samples))
@@ -202,14 +197,10 @@ def test_decode_wav_sample_exact(spark):
     struct.pack_into("<H", bad, 12 + 8 + 14, 8)
     assert decode_wav(bytes(bad)) is None
 
-    # the DataFrame operator: drops undecodable rows, exact mean/rms
-    df = spark.createDataFrame(
-        [(1, bytearray(encode_wav(16000, samples))), (2, bytearray(b"x"))],
-        "doc_id long, payload binary")
-    out = {r.doc_id: r for r in decode_audio_stats(df).collect()}
-    assert set(out) == {1}
-    assert out[1].mean_abs == sum(abs(s) for s in samples) / len(samples)
-    assert out[1].peak == 32768 and out[1].codec == "pcm_s16le"
+    # exact mean: absolute-sample sum over the sample count
+    assert m["sum_abs"] / m["n_samples"] == \
+        sum(abs(s) for s in samples) / len(samples)
+    assert decode_wav(b"x") is None
 
 
 def test_decode_wav_never_crashes_on_fuzz():
@@ -243,13 +234,13 @@ def test_decode_wav_never_crashes_on_fuzz():
     check()
 
 
-def test_decode_avi_frame_exact(spark):
+def test_decode_avi_frame_exact():
     """The pure-stdlib AVI walker must report exact per-frame pixel
     statistics for real RIFF/AVI uncompressed-DIB byte streams (incl.
     frame sampling and odd-width row padding) and return None for
     non-AVI payloads."""
     from arangodb_java_parquet_spark.operators.multimodal import (
-        decode_avi_frames, decode_video_frames, encode_avi)
+        decode_avi_frames, encode_avi)
 
     def mk(fi):
         return lambda x, y, fi=fi: ((fi * 7 + x * 3 + y) % 256,
@@ -270,15 +261,11 @@ def test_decode_avi_frame_exact(spark):
     assert decode_avi_frames(b"RIFF\x08\x00\x00\x00WAVEfmt ") is None
     assert decode_avi_frames(avi[:-20]) is None  # truncated last frame
 
-    # the DataFrame operator: one row per sampled frame, exact means
-    df = spark.createDataFrame(
-        [(1, bytearray(avi)), (2, bytearray(b"junk"))],
-        "doc_id long, payload binary")
-    out = decode_video_frames(df, every_n=3).collect()
-    assert sorted(r.frame_idx for r in out) == [0, 3, 6]
-    r0 = [r for r in out if r.frame_idx == 0][0]
-    assert r0.mean_r == sum(mk(0)(x, y)[0] for x in range(w)
-                            for y in range(h)) / (w * h)
+    # every_n=3 samples frames 0, 3, 6; exact means per sampled frame
+    ms3 = decode_avi_frames(avi, every_n=3)
+    assert [m["frame_idx"] for m in ms3] == [0, 3, 6]
+    assert ms3[0]["sum_r"] / ms3[0]["n_px"] == sum(
+        mk(0)(x, y)[0] for x in range(w) for y in range(h)) / (w * h)
 
 
 def test_decode_avi_never_crashes_on_fuzz():

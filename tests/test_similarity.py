@@ -216,12 +216,13 @@ def test_ivfpq_recall_vs_bruteforce(spark, sf_dir):
     that chance floor and that results are well-formed (5 per query, no
     self)."""
     from arangodb_java_parquet_spark.operators.similarity import (
-        ivfpq_topk, topk_cosine_bruteforce)
+        ivfpq_fit, ivfpq_probe, topk_cosine_bruteforce)
     from arangodb_java_parquet_spark.queries.common import t
     e = t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 10)
-    got = ivfpq_topk(q, e, id_col="vec_id", vec_col="embedding",
-                     k=5).collect()
+    cents, enc, cb = ivfpq_fit(e, id_col="vec_id", vec_col="embedding")
+    got = ivfpq_probe(q, cents, enc, cb, id_col="vec_id",
+                      vec_col="embedding", k=5).collect()
     exact = topk_cosine_bruteforce(
         q, e, id_col="vec_id", vec_col="embedding", k=5).collect()
     by_q = {}
@@ -370,14 +371,19 @@ def test_ivf_driver_fit_matches_distributed(spark, sf_dir):
     """The r16 driver-side Lloyd fit must be BIT-IDENTICAL to the r15
     distributed loop it replaces (same sample order -> same rng seeds,
     same numpy assignment, decimal(30,12)-exact means) — the stored IVF
-    artifacts and every downstream rows-only probe depend on it."""
+    artifacts and every downstream rows-only probe depend on it. The
+    second input scales the vectors by 1e7: each quantized element then
+    nears 4.9e18, so a per-cell sum of ~31 of them exceeds int64."""
     from arangodb_java_parquet_spark.operators.similarity import (
         ivf_fit_centroids, ivf_fit_centroids_distributed)
     e = t(spark, sf_dir, "embeddings")
-    a = ivf_fit_centroids(e, id_col="vec_id", vec_col="embedding",
-                          n_iter=2)
-    b = ivf_fit_centroids_distributed(e, id_col="vec_id",
-                                      vec_col="embedding", n_iter=2)
-    assert len(a) == len(b) == 16
-    assert [[repr(v) for v in c] for c in a] == \
-        [[repr(v) for v in c] for c in b]
+    scaled = e.select("vec_id", F.transform(
+        "embedding", lambda v: v * 1e7).alias("embedding"))
+    for corpus in (e, scaled):
+        a = ivf_fit_centroids(corpus, id_col="vec_id",
+                              vec_col="embedding", n_iter=2)
+        b = ivf_fit_centroids_distributed(corpus, id_col="vec_id",
+                                          vec_col="embedding", n_iter=2)
+        assert len(a) == len(b) == 16
+        assert [[repr(v) for v in c] for c in a] == \
+            [[repr(v) for v in c] for c in b]

@@ -33,47 +33,3 @@ def test_stateful_counters_match_batch(spark, sf_dir, tmp_path):
                 .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
                 .collect()}
     assert got == expected and len(got) > 0
-
-
-def test_transform_with_state_matches_batch(spark, sf_dir, tmp_path):
-    """transformWithStateInPandas (the PySpark-4 stateful API) produces the
-    same per-user totals as the batch ground truth — or gates cleanly when
-    protobuf (the TWS state-server protocol dependency) is absent."""
-    import pytest
-
-    from arangodb_java_parquet_spark.streaming.ingest import (
-        stateful_user_counters_tws)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (spark.readStream.schema(raw_schema)
-              .option("pathGlobFilter", "events.parquet")
-              .parquet(sf_dir))
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)"))
-
-    try:
-        out = stateful_user_counters_tws(stream)
-    except RuntimeError as e:
-        assert "protobuf" in str(e)
-        pytest.skip(
-            "protobuf not in image (TWS gated cleanly); DEFINITIVE "
-            "blocker re-verified r6 (2026-08-14): DNS resolution fails "
-            "for every host (urllib to maven central and pip's index both "
-            "die with '[Errno -2] Name or service not known'), so neither "
-            "the protobuf wheel nor any jar can be vendored from inside "
-            "the sandbox")
-    q = (out.writeStream.outputMode("update").format("memory")
-         .queryName("tws_out")
-         .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    got = {r.user_id: (r.n_events, round(r.sum_value, 6))
-           for r in spark.table("tws_out").collect()}
-    events = t(spark, sf_dir, "events")
-    expected = {r.user_id: (r.n, round(r.s, 6)) for r in
-                events.groupBy("user_id")
-                .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
-                .collect()}
-    assert got == expected and len(got) > 0

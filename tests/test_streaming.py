@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from arangodb_java_parquet_spark.sources import LocalCollection
 from arangodb_java_parquet_spark.streaming.ingest import (
-    session_window_agg, stream_load_to_collection, windowed_event_counts)
+    stream_load_to_collection, windowed_event_counts)
 
 
 def test_stream_load_to_collection(spark, sf_dir, tmp_path):
@@ -45,33 +45,6 @@ def test_windowed_event_counts_streaming_matches_batch(spark, sf_dir):
     s = {tuple(r[:2]): r[2] for r in
          streamed.select("win_start", "event_type", "n_events").collect()}
     assert b == s and len(b) > 0
-
-
-def test_dedup_stream_drops_replayed_file(spark, sf_dir, tmp_path):
-    """Feed the same events twice (two copies in the watched dir); the
-    watermarked streaming dedup emits each event_id exactly once."""
-    import os
-    from pyspark.sql import functions as F
-    from arangodb_java_parquet_spark.streaming.ingest import dedup_stream
-
-    src = str(tmp_path / "in")
-    os.makedirs(src)
-    shutil.copy(f"{sf_dir}/events.parquet", f"{src}/a.parquet")
-    shutil.copy(f"{sf_dir}/events.parquet", f"{src}/b.parquet")
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{src}/a.parquet").schema
-    from arangodb_java_parquet_spark.streaming.ingest import event_time_ltz
-    stream = event_time_ltz(spark.readStream.schema(schema).parquet(src))
-    q = (dedup_stream(stream).writeStream.outputMode("append")
-         .format("memory").queryName("dedup_out")
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = spark.table("dedup_out")
-    n_distinct = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    assert got.count() == n_distinct  # 2x input, 1x output
-    assert got.select("event_id").distinct().count() == n_distinct
 
 
 def test_stream_static_broadcast_join(spark, sf_dir, tmp_path):
@@ -220,73 +193,6 @@ def test_stream_stream_left_outer_join_emits_unmatched(spark, tmp_path):
     null_row = [r for r in spark.read.parquet(out).collect()
                 if r.c_id == 3][0]
     assert null_row.p_user is None and null_row.p_ts is None
-
-
-def test_session_window_agg_batch(spark, sf_dir):
-    from arangodb_java_parquet_spark.queries.common import t
-    events = t(spark, sf_dir, "events")
-    out = session_window_agg(events, gap="30 minutes")
-    rows = out.collect()
-    assert len(rows) > 0
-    assert all(r.sess_start <= r.sess_end and r.n_events >= 1 for r in rows)
-    # sessions per user don't overlap
-    by_user = {}
-    for r in rows:
-        by_user.setdefault(r.user_id, []).append((r.sess_start, r.sess_end))
-    for spans in by_user.values():
-        spans.sort()
-        for (s1, e1), (s2, _) in zip(spans, spans[1:]):
-            assert e1 <= s2
-
-
-def test_incremental_neardup_across_batches(spark, tmp_path):
-    """Incremental MinHash dedup at ingest: a doc arriving in batch 2 that
-    near-duplicates a batch-1 doc is flagged against the signature store;
-    exact in-batch duplicates are flagged too."""
-    import pyspark.sql.functions as F
-
-    from arangodb_java_parquet_spark.streaming.neardup import (
-        incremental_neardup_stream)
-
-    base = ("spark shuffles data between stages when aggregations "
-            "group by keys across partitions of the cluster " * 3)
-    inbox = tmp_path / "inbox"
-    inbox.mkdir()
-    # batch 1: doc 1 (base) + doc 2 (unrelated); batch 2: doc 3 ~= doc 1
-    spark.createDataFrame(
-        [(1, base), (2, "completely different text about databases and "
-                        "storage engines with columnar layouts " * 3)],
-        ["doc_id", "text"]).coalesce(1).write.parquet(str(inbox / "b1"))
-    spark.createDataFrame(
-        [(3, base + " extra tail tokens"), (4, base)],
-        ["doc_id", "text"]).coalesce(1).write.parquet(str(inbox / "b2"))
-
-    schema = "doc_id long, text string"
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1")
-              .option("recursiveFileLookup", "true")
-              .parquet(str(inbox)))
-    q = incremental_neardup_stream(
-        spark, stream,
-        store_path=str(tmp_path / "store"),
-        dups_path=str(tmp_path / "dups"),
-        checkpoint=str(tmp_path / "ckpt"))
-    q.awaitTermination()
-
-    dups = {(r.new_id, r.existing_id)
-            for r in spark.read.parquet(str(tmp_path / "dups")).collect()}
-    flagged_new = {n for n, _ in dups}
-    # docs 3 and 4 near-duplicate doc 1 (cross-batch via the store, or
-    # in-batch between themselves); doc 2 is never flagged
-    assert 3 in flagged_new or 4 in flagged_new
-    assert (3, 1) in dups or (4, 1) in dups  # cross-batch hit via store
-    assert 2 not in flagged_new
-    assert not any(e == 2 for _, e in dups)
-    # the store accumulated bands for all docs
-    store_ids = {r.doc_id for r in
-                 spark.read.parquet(str(tmp_path / "store"))
-                 .select("doc_id").distinct().collect()}
-    assert store_ids == {1, 2, 3, 4}
 
 
 def test_checkpoint_restart_processes_only_new_files(spark, sf_dir,
