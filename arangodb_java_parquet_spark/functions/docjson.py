@@ -45,6 +45,9 @@ Two modes (SURVEY.md §1.3, §7 "hard parts"):
     - circular references (GenericRecordJsonEncoder.java:55-58) cannot occur
       in Spark data — the guard has no Spark analog.
 
+Type converters (``converters=``) apply to top-level fields only, in both
+modes, as the reference's registry does (GenericRecordJsonEncoder.java:28-32).
+
 Both paths plan entirely in the JVM: the encode adds no Python stage, so a
 loader write is the only one. SQL NULL -> ``null`` and NaN -> ``"NaN"`` at
 every nesting depth.
@@ -64,21 +67,18 @@ DOC_COL = "__doc__"
 
 
 def encode_documents(df: DataFrame, mode: str = "spark",
-                     converters: dict | None = None,
-                     nested_converters: bool = False) -> DataFrame:
+                     converters: dict | None = None) -> DataFrame:
     """Return a single-column (``__doc__`` string) DataFrame of JSON documents.
 
     ``converters`` maps a Spark DataType *simpleString* (e.g. ``"timestamp"``,
     ``"date"``, ``"binary"``, ``"decimal(18,2)"``) to a ``Column -> Column``
     function applied to every top-level field of that type before encoding —
     the Spark analog of the reference's per-LogicalType converter registry
-    (ParquetArangoLoader.java:34,74-76; applied top-level-only by default,
-    matching GenericRecordJsonEncoder.java:28-32).
-    ``nested_converters=True`` recurses into struct/array/map instead — see
-    apply_type_converters for the fidelity-vs-generalization contract.
+    (ParquetArangoLoader.java:34,74-76), top-level-only like
+    GenericRecordJsonEncoder.java:28-32 (see apply_type_converters).
     """
     if converters:
-        df = apply_type_converters(df, converters, nested=nested_converters)
+        df = apply_type_converters(df, converters)
     if mode == "spark":
         return df.select(F.to_json(F.struct("*")).alias(DOC_COL))
     if mode == "reference":
@@ -86,62 +86,28 @@ def encode_documents(df: DataFrame, mode: str = "spark",
     raise ValueError(f"unknown encode mode: {mode!r}")
 
 
-def apply_type_converters(df: DataFrame, converters: dict,
-                          nested: bool = False) -> DataFrame:
+def apply_type_converters(df: DataFrame, converters: dict) -> DataFrame:
     """Apply ``{type_simple_string: Column->Column}`` to matching fields.
 
-    Default ``nested=False`` is TOP-LEVEL-ONLY on purpose: the reference
-    consults its logical-type converter registry per top-level Avro field
-    only (GenericRecordJsonEncoder.java:28-32 via
-    ParquetArangoLoader.java:74-76), so a timestamp buried inside a
-    struct/array/map is serialized RAW even when a timestamp converter is
-    registered — exact parity, property-pinned in
-    tests/test_encoder_properties.py.
-
-    ``nested=True`` is the generalization a Spark user actually wants at
-    scale: the converter recurses through struct fields, array elements
-    and map values (matching on each nested type's simpleString; an
-    exact match on a complex type's own simpleString takes precedence
-    over recursion). Null structs/arrays/maps stay null."""
-    if not nested:
-        cols: list[Column] = []
-        for field in df.schema.fields:
-            fn = converters.get(field.dataType.simpleString())
-            col = _top_col(field.name)
-            cols.append(fn(col).alias(field.name) if fn else col)
-        return df.select(*cols)
-    return df.select(*[
-        _convert_nested(_top_col(f.name), f.dataType, converters)
-        .alias(f.name) for f in df.schema.fields])
+    TOP-LEVEL-ONLY on purpose: the reference consults its logical-type
+    converter registry per top-level Avro field only
+    (GenericRecordJsonEncoder.java:28-32 via ParquetArangoLoader.java:74-76),
+    so a timestamp buried inside a struct/array/map is serialized RAW even
+    when a timestamp converter is registered — exact parity, pinned in
+    tests/test_encoder_properties.py. A field whose own type matches is
+    converted whole, complex types included."""
+    cols: list[Column] = []
+    for field in df.schema.fields:
+        fn = converters.get(field.dataType.simpleString())
+        col = _top_col(field.name)
+        cols.append(fn(col).alias(field.name) if fn else col)
+    return df.select(*cols)
 
 
 def _top_col(name: str) -> Column:
     """A top-level column by its exact name: quoted, so a ``.`` or a
     backtick in the name is not read as a path or a quote."""
     return F.col("`" + name.replace("`", "``") + "`")
-
-
-def _convert_nested(col: Column, dtype, converters: dict) -> Column:
-    """Recursive converter application (the ``nested=True`` mode)."""
-    from pyspark.sql import types as T
-    fn = converters.get(dtype.simpleString())
-    if fn is not None:
-        return fn(col)
-    if isinstance(dtype, T.StructType):
-        rebuilt = F.struct(*[
-            _convert_nested(col.getField(f.name), f.dataType, converters)
-            .alias(f.name) for f in dtype.fields])
-        return F.when(col.isNotNull(), rebuilt)
-    if isinstance(dtype, T.ArrayType):
-        return F.transform(
-            col, lambda x: _convert_nested(x, dtype.elementType, converters))
-    if isinstance(dtype, T.MapType):
-        return F.when(col.isNotNull(), F.map_from_arrays(
-            F.map_keys(col),
-            F.transform(F.map_values(col),
-                        lambda v: _convert_nested(v, dtype.valueType,
-                                                  converters))))
-    return col
 
 
 # ---------------------------------------------------------------------------

@@ -1,9 +1,4 @@
 from arangodb_java_parquet_spark.plans.inspect import (  # noqa: F401
-    codegen_plan,
-    count_exchanges,
     formatted_plan,
-    has_broadcast_join,
-    has_partition_filters,
-    has_pushed_filters,
     is_python_free,
 )

@@ -4,13 +4,17 @@ plan audits before promoting a pipeline to production scale).
 
 SURVEY.md §4: the reference has no plan layer at all; in this engine the
 plan IS the performance contract, so these helpers make the important
-properties assertable: filters reach the scan, dimensions broadcast,
-python stays out of hot paths, partition pruning fires.
+properties assertable — above all that python stays out of hot paths.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+# Plan-operator name fragments of every Python evaluation: python UDFs and
+# UDTFs (``*EvalPython*``) and pandas or Arrow maps (``*InPandas``,
+# ``*InArrow``). tools/plan_report.py counts the same set.
+PYTHON_OPERATORS = ("EvalPython", "InPandas", "InArrow")
 
 
 def _explain(df: DataFrame, mode: str) -> str:
@@ -25,35 +29,9 @@ def formatted_plan(df: DataFrame) -> str:
     return _explain(df, "formatted")
 
 
-def codegen_plan(df: DataFrame) -> str:
-    """Codegen view — AQE's formatted mode hides WholeStageCodegen spans."""
-    return _explain(df, "codegen")
-
-
-def has_pushed_filters(df: DataFrame) -> bool:
-    p = formatted_plan(df)
-    return "PushedFilters: [" in p and "PushedFilters: []" not in p
-
-
-def has_partition_filters(df: DataFrame) -> bool:
-    return "PartitionFilters" in formatted_plan(df)
-
-
-def has_broadcast_join(df: DataFrame) -> bool:
-    p = formatted_plan(df)
-    return "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p
-
-
-def count_exchanges(df: DataFrame) -> int:
-    """Shuffle count in the (pre-AQE) formatted plan — the number to argue
-    down before a 100× scale-up."""
-    return formatted_plan(df).count("Exchange")
-
-
 def is_python_free(df: DataFrame) -> bool:
-    """True when no Python evaluation appears anywhere in the plan (the
-    JVM-only requirement for hot-path queries): no python UDF/UDTF
-    (``*EvalPython*``) and no pandas or Arrow map (``*InPandas``,
-    ``*InArrow``)."""
+    """True when no Python evaluation (``PYTHON_OPERATORS``) appears
+    anywhere in the plan — the JVM-only requirement for hot-path
+    queries."""
     p = formatted_plan(df)
-    return not any(op in p for op in ("EvalPython", "InPandas", "InArrow"))
+    return not any(op in p for op in PYTHON_OPERATORS)

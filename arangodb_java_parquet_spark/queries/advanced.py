@@ -760,7 +760,8 @@ def stream_sink_collection_roundtrip(spark, sf_dir):
     a file stream over the events directory -> foreachBatch into the
     document-collection sink (each micro-batch reuses the exact batch
     loader: JSON encode + partition-parallel batched insert) -> read the
-    collection back through the Python DataSource -> aggregate. The
+    collection back through Spark's JSON scan (``read_collection``) ->
+    aggregate. The
     oracle is plain SQL on the source table, so the whole
     stream-ingest/encode/sink/readback loop is hash-checked — the
     checkpointed exactly-once progress the reference's async path never

@@ -48,16 +48,13 @@ from pyspark.sql import functions as F
 
 from arangodb_java_parquet_spark.operators.similarity import (
     nndescent_knn_graph, topk_cosine_bruteforce)
-from arangodb_java_parquet_spark.queries.common import query, t
+from arangodb_java_parquet_spark.queries.common import SQL_DOT, query, t
 
 _K = 8        # graph out-degree (and reverse-edge cap)
 _INIT_W = 8   # init diversity edges: ids within ±8
 _INIT_BITS = 6  # init bucket edges: 6-bit SRP (axis hyperplanes)
 _ROUNDS = 2   # fixed NN-descent rounds
 _NPROBE = 50  # recall probe queries (vec_id < 50)
-
-_DOT = ("list_sum(list_transform(range(1, len({a})+1),"
-        " i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE))")
 
 # 6-bit SRP bucket, axis hyperplanes, MSB = dim 1 (mirrors
 # operators/similarity.py srp_bucket(vec, 6))
@@ -73,7 +70,7 @@ def _nnd_sql() -> str:
     reuse — the r14 lattice lesson)."""
     parts = [f"""WITH b AS MATERIALIZED (
   SELECT vec_id AS id, embedding AS vec,
-         sqrt({_DOT.format(a='embedding', b='embedding')}) AS nrm,
+         sqrt({SQL_DOT.format(a='embedding', b='embedding')}) AS nrm,
          {_SQL_BKT} AS bkt
   FROM embeddings
 ),
@@ -81,7 +78,7 @@ i0 AS (
   -- OR of the two equi-conditions = the same pair SET as Spark's
   -- union-of-two-equi-joins + distinct
   SELECT a.id AS qid, c.id AS vid,
-         round({_DOT.format(a='a.vec', b='c.vec')}
+         round({SQL_DOT.format(a='a.vec', b='c.vec')}
                / NULLIF(a.nrm * c.nrm, 0), 9) AS cos_sim
   FROM b a JOIN b c
     ON (c.bkt = a.bkt
@@ -122,7 +119,7 @@ cand{r} AS (
 ),
 sc{r} AS (
   SELECT c.qid, c.vid,
-         round({_DOT.format(a='a.vec', b='e.vec')}
+         round({SQL_DOT.format(a='a.vec', b='e.vec')}
                / NULLIF(a.nrm * e.nrm, 0), 9) AS cos_sim
   FROM cand{r} c JOIN b a ON a.id = c.qid JOIN b e ON e.id = c.vid
 ),
@@ -150,7 +147,7 @@ bf AS MATERIALIZED (
     SELECT q.id AS qid, e.id AS vid,
            ROW_NUMBER() OVER (
              PARTITION BY q.id
-             ORDER BY round({_DOT.format(a='q.vec', b='e.vec')}
+             ORDER BY round({SQL_DOT.format(a='q.vec', b='e.vec')}
                             / NULLIF(q.nrm * e.nrm, 0), 9)
                DESC, e.id ASC) AS rn
     FROM b q JOIN b e ON e.id != q.id

@@ -23,7 +23,7 @@ neither side goes through decimal). Reconstruction
 ``mn + (((code + 0.5) * (mx - mn)) / 256)`` uses 0.5 derived as
 CAST(1 AS DOUBLE)/2 (exact binary) and /256 (exact scaling). Squared
 distances accumulate LEFT-TO-RIGHT in double (zip_with+aggregate vs
-list_sum(list_transform) — the proven `_DOT` pairing), rounded to 9
+list_sum(list_transform) — the proven `common.SQL_DOT` pairing), rounded to 9
 before ranking with a vid tiebreak. Degenerate dims (mx == mn) encode
 to 0 and reconstruct to mn on both sides.
 

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from arangodb_java_parquet_spark.materialize import (
     materialize, materialize_iter)
-from arangodb_java_parquet_spark.queries.common import query, t
+from arangodb_java_parquet_spark.queries.common import SQL_DOT, query, t
 
 _GMM_K = 3
 _GMM_ROUNDS = 2
@@ -432,12 +432,8 @@ def cluster_dbscan_grid(spark, sf_dir):
 _FL_CANDS = 30  # candidate pool: vec_id < 30 (serving-shape bound)
 _FL_K = 5       # greedy selections
 
-_FL_DOT = ("list_sum(list_transform(range(1, len({a})+1),"
-           " i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE))")
-
-
 def _fl_sql() -> str:
-    na = f"sqrt({_FL_DOT.format(a='e.embedding', b='e.embedding')})"
+    na = f"sqrt({SQL_DOT.format(a='e.embedding', b='e.embedding')})"
     parts = [f"""WITH uni AS MATERIALIZED (
   SELECT e.vec_id AS i, e.embedding AS v, {na} AS nv FROM embeddings e
 ),
@@ -446,7 +442,7 @@ cand AS MATERIALIZED (
 ),
 sims AS MATERIALIZED (
   SELECT c.c, u.i,
-         ROUND({_FL_DOT.format(a='c.cv', b='u.v')}
+         ROUND({SQL_DOT.format(a='c.cv', b='u.v')}
                / NULLIF(c.nc * u.nv, 0), 9)
            AS s
   FROM uni u CROSS JOIN cand c

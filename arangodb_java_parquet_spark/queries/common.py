@@ -154,6 +154,25 @@ def sql_davg(expr: str, scale: int = 8) -> str:
             f" / COUNT({expr})")
 
 
+# -- vector similarity in oracle SQL ------------------------------------------
+
+# Same left-to-right double accumulation as operators/similarity.dot —
+# NOT list_dot_product (float32 accumulator, diverges at ~1e-8).
+SQL_DOT = ("list_sum(list_transform(range(1, len({a})+1),"
+           " i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE))")
+
+
+def sql_cos(a: str, b: str) -> str:
+    """Cosine of two DOUBLE-list expressions, rounded to 9 places."""
+    d = SQL_DOT.format(a=a, b=b)
+    na = f"sqrt({SQL_DOT.format(a=a, b=a)})"
+    nb = f"sqrt({SQL_DOT.format(a=b, b=b)})"
+    # NULLIF: a zero-norm vector must yield NULL on both engines (Spark
+    # ANSI aborts on /0 where DuckDB returns inf — the divergence class
+    # swept r15); values are unchanged whenever both norms are nonzero
+    return f"round(({d}) / NULLIF(({na}) * ({nb}), 0), 9)"
+
+
 # -- exact distributed percentiles -------------------------------------------
 
 def exact_percentiles(df: DataFrame, value_col: str,

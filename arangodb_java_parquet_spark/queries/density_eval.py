@@ -25,8 +25,7 @@ from pyspark.sql import functions as F
 from arangodb_java_parquet_spark.materialize import materialize
 from arangodb_java_parquet_spark.operators.similarity import (
     dot, norm, srp_bucket)
-from arangodb_java_parquet_spark.queries.common import query, t
-from arangodb_java_parquet_spark.queries.similarity import _sql_cos
+from arangodb_java_parquet_spark.queries.common import query, sql_cos, t
 
 # ---------------------------------------------------------------------------
 # Local Outlier Factor (Breunig et al. 2000)
@@ -60,7 +59,7 @@ cand AS (
 ),
 pairs AS (
   SELECT a.vec_id AS vid, c.vec_id AS nid,
-         1e0 - {_sql_cos('a.embedding', 'c.embedding')} AS dist
+         1e0 - {sql_cos('a.embedding', 'c.embedding')} AS dist
   FROM b a JOIN cand c ON a.bucket = c.bucket AND a.vec_id != c.vec_id
 ),
 knn AS (

@@ -29,24 +29,8 @@ from pyspark.sql import functions as F
 
 from arangodb_java_parquet_spark.operators.similarity import (
     topk_cosine_bruteforce)
-from arangodb_java_parquet_spark.queries.common import (dsum, query,
-                                                        sql_dsum, t)
-
-# Same left-to-right double accumulation as operators/similarity.dot —
-# NOT list_dot_product (float32 accumulator, diverges at ~1e-8).
-_DOT = ("list_sum(list_transform(range(1, len({a})+1),"
-        " i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE))")
-
-
-def _sql_cos(a: str, b: str) -> str:
-    d = _DOT.format(a=a, b=b)
-    na = f"sqrt({_DOT.format(a=a, b=a)})"
-    nb = f"sqrt({_DOT.format(a=b, b=b)})"
-    # NULLIF: a zero-norm vector must yield NULL on both engines (Spark
-    # ANSI aborts on /0 where DuckDB returns inf — the divergence class
-    # swept r15); values are unchanged whenever both norms are nonzero
-    return f"round(({d}) / NULLIF(({na}) * ({nb}), 0), 9)"
-
+from arangodb_java_parquet_spark.queries.common import (
+    dsum, query, sql_cos, sql_dsum, t)
 
 _K = 10  # rank cutoff; 2520 = LCM(1..10) makes precision@r integer-exact
 _PANEL = 32  # fixed query-panel size: eval cost stays O(corpus), not O(n^2)
@@ -67,7 +51,7 @@ qrel AS (
   FROM q LEFT JOIN relcnt ON q.qlabel = relcnt.clabel
 ),
 pairs AS (
-  SELECT q.qid, c.vid, {_sql_cos('q.qvec', 'c.cvec')} AS cos_sim
+  SELECT q.qid, c.vid, {sql_cos('q.qvec', 'c.cvec')} AS cos_sim
   FROM c CROSS JOIN q
   WHERE q.qid <> c.vid
 ),

@@ -34,8 +34,8 @@ from pyspark.sql import functions as F
 from arangodb_java_parquet_spark.materialize import materialize
 from arangodb_java_parquet_spark.operators.similarity import (
     topk_cosine_bruteforce)
-from arangodb_java_parquet_spark.queries.common import dsum, query, t
-from arangodb_java_parquet_spark.queries.evaluation import _sql_cos
+from arangodb_java_parquet_spark.queries.common import (
+    dsum, query, sql_cos, t)
 
 # ---------------------------------------------------------------------------
 # corpus BLEU-2 + ROUGE-1/2 over deterministic candidate/reference pairs
@@ -408,9 +408,9 @@ c AS (
 ),
 pairs AS (
   SELECT q.qid, c.vid,
-         {_sql_cos('q.qvec', 'c.cvec')} AS cf,
-         {_sql_cos('q.qv16', 'c.cv16')} AS c16,
-         {_sql_cos('q.qv32', 'c.cv32')} AS c32
+         {sql_cos('q.qvec', 'c.cvec')} AS cf,
+         {sql_cos('q.qv16', 'c.cv16')} AS c16,
+         {sql_cos('q.qv32', 'c.cv32')} AS c32
   FROM c CROSS JOIN q WHERE q.qid <> c.vid
 ),
 tf AS (
@@ -535,7 +535,7 @@ WITH u AS (SELECT vec_id, embedding FROM embeddings
            WHERE vec_id < {_HUB_N}),
 pairs AS (
   SELECT a.vec_id AS qid, b.vec_id AS vid,
-         {_sql_cos('a.embedding', 'b.embedding')} AS cos_sim
+         {sql_cos('a.embedding', 'b.embedding')} AS cos_sim
   FROM u a JOIN u b ON a.vec_id <> b.vec_id
 ),
 knn AS (
@@ -1269,7 +1269,7 @@ WITH u AS (SELECT vec_id, embedding, label FROM embeddings
            WHERE vec_id < {_AU_N}),
 pairs AS (
   SELECT CASE WHEN a.label = b.label THEN 1 ELSE 0 END AS pos,
-         (2 - 2 * {_sql_cos('a.embedding', 'b.embedding')}) AS sq
+         (2 - 2 * {sql_cos('a.embedding', 'b.embedding')}) AS sq
   FROM u a JOIN u b ON a.vec_id < b.vec_id
 ),
 nv AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_vectors FROM u)

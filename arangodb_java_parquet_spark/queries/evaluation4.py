@@ -42,8 +42,8 @@ from pyspark.sql import functions as F
 
 from arangodb_java_parquet_spark.materialize import materialize
 from arangodb_java_parquet_spark.operators.similarity import dot, norm
-from arangodb_java_parquet_spark.queries.common import dsum, query, t
-from arangodb_java_parquet_spark.queries.similarity import _sql_cos
+from arangodb_java_parquet_spark.queries.common import (
+    dsum, query, sql_cos, t)
 
 _K = 10  # ranking cutoff for nDCG@k / AP@k
 
@@ -56,7 +56,7 @@ c AS (SELECT vec_id AS vid, embedding AS cvec, label AS clab
 scored AS (
   SELECT q.qid, c.vid,
          CASE WHEN c.clab = q.qlab THEN 1 ELSE 0 END AS rel,
-         {_sql_cos('q.qvec', 'c.cvec')} AS cos_sim
+         {sql_cos('q.qvec', 'c.cvec')} AS cos_sim
   FROM c CROSS JOIN q
 ),
 ranked AS (
@@ -499,7 +499,7 @@ c AS (SELECT vec_id AS vid, embedding AS cvec, label AS clab
 ranked AS (
   SELECT q.qid, c.vid, c.clab,
          ROW_NUMBER() OVER (PARTITION BY q.qid
-                            ORDER BY {_sql_cos('q.qvec', 'c.cvec')} DESC,
+                            ORDER BY {sql_cos('q.qvec', 'c.cvec')} DESC,
                                      c.vid) AS rn
   FROM c CROSS JOIN q
 ),

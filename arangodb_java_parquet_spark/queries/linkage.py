@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from arangodb_java_parquet_spark.materialize import (
     materialize, materialize_barrier)
-from arangodb_java_parquet_spark.queries.common import query, t
+from arangodb_java_parquet_spark.queries.common import query, sql_cos, t
 
 # ---------------------------------------------------------------------------
 # blocked sorted-neighborhood dedup (SNM)
@@ -225,20 +225,6 @@ def linkage_fellegi_sunter(spark, sf_dir):
 # cross-language bitext candidate mining
 # ---------------------------------------------------------------------------
 
-_DOT = ("list_sum(list_transform(range(1, len({a})+1),"
-        " i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE))")
-
-
-def _sql_cos(a: str, b: str) -> str:
-    d = _DOT.format(a=a, b=b)
-    na = f"sqrt({_DOT.format(a=a, b=a)})"
-    nb = f"sqrt({_DOT.format(a=b, b=b)})"
-    # NULLIF: a zero-norm vector must yield NULL on both engines (Spark
-    # ANSI aborts on /0 where DuckDB returns inf — the divergence class
-    # swept r15); values are unchanged whenever both norms are nonzero
-    return f"round(({d}) / NULLIF(({na}) * ({nb}), 0), 9)"
-
-
 _BITEXT_MIN_COS = 0.40
 _BITEXT_TOPK = 2
 
@@ -254,7 +240,7 @@ WITH e AS (
 pairs AS (
   SELECT a.doc_id AS doc_a, a.lang AS lang_a,
          b.doc_id AS doc_b, b.lang AS lang_b,
-         {_sql_cos('a.embedding', 'b.embedding')} AS cos_sim
+         {sql_cos('a.embedding', 'b.embedding')} AS cos_sim
   FROM e a JOIN e b
     ON a.bucket = b.bucket AND a.lang < b.lang
 ),

@@ -23,8 +23,8 @@ Twenty-five Sinkhorn rounds from u = v = 1:
 as ONE aggregate() fold over round indices whose 16-element DOUBLE
 accumulator is [u; v] (the snapshot-safe list pattern); inner
 matrix-vector products are list_sum(list_transform(...)) vs
-zip-free F.aggregate sums — the proven left-to-right `_DOT` pairing,
-so every intermediate double is bit-identical across engines and the
+zip-free F.aggregate sums — the proven left-to-right `common.SQL_DOT`
+pairing, so every intermediate double is bit-identical across engines and the
 outputs (transport cost Σ u_i K_ij v_j |i−j|, column-marginal error)
 are emitted UNROUNDED. Every data-dependent denominator is
 NULLIF-guarded (empty bins give exact zeros, never aborts).

@@ -19,26 +19,15 @@ from arangodb_java_parquet_spark.materialize import (
 from arangodb_java_parquet_spark.operators.similarity import (
     cosine, dot, norm, srp_bucket, topk_cosine_bruteforce,
     topk_cosine_lsh)
-from arangodb_java_parquet_spark.queries.common import query, t
-
-_DOT = ("list_sum(list_transform(range(1, len({a})+1),"
-        " i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE))")
-
-def _sql_cos(a: str, b: str) -> str:
-    d = _DOT.format(a=a, b=b)
-    na = f"sqrt({_DOT.format(a=a, b=a)})"
-    nb = f"sqrt({_DOT.format(a=b, b=b)})"
-    # NULLIF: a zero-norm vector must yield NULL on both engines (Spark
-    # ANSI aborts on /0 where DuckDB returns inf — the divergence class
-    # swept r15); values are unchanged whenever both norms are nonzero
-    return f"round(({d}) / NULLIF(({na}) * ({nb}), 0), 9)"
+from arangodb_java_parquet_spark.queries.common import (
+    SQL_DOT, query, sql_cos, t)
 
 
 @query("sim_topk_bruteforce", f"""
 WITH q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 5),
 pairs AS (
   SELECT q.qid, e.vec_id AS vid,
-         {_sql_cos('q.qvec', 'e.embedding')} AS cos_sim
+         {sql_cos('q.qvec', 'e.embedding')} AS cos_sim
   FROM embeddings e CROSS JOIN q
   WHERE q.qid != e.vec_id
 ),
@@ -70,7 +59,7 @@ WITH b AS (
 q AS (SELECT vec_id AS qid, embedding AS qvec, bucket FROM b WHERE vec_id < 20),
 pairs AS (
   SELECT q.qid, e.vec_id AS vid,
-         {_sql_cos('q.qvec', 'e.embedding')} AS cos_sim
+         {sql_cos('q.qvec', 'e.embedding')} AS cos_sim
   FROM b e JOIN q ON e.bucket = q.bucket
   WHERE q.qid != e.vec_id
 ),
@@ -100,9 +89,9 @@ WITH b AS (
   FROM embeddings
 )
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       {_sql_cos('a.embedding', 'b.embedding')} AS cos_sim
+       {sql_cos('a.embedding', 'b.embedding')} AS cos_sim
 FROM b a JOIN b b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-WHERE {_sql_cos('a.embedding', 'b.embedding')} >= 0.4
+WHERE {sql_cos('a.embedding', 'b.embedding')} >= 0.4
 """)
 def emb_near_dup_pairs(spark, sf_dir):
     """Embedding-cosine near-duplicate pairs: SRP-LSH bucket equi-join
@@ -148,7 +137,7 @@ def emb_near_dup_pairs(spark, sf_dir):
 @query("emb_label_stats", f"""
 SELECT label,
        COUNT(*) AS n_vecs,
-       CAST(SUM(CAST(round(sqrt({_DOT.format(a='embedding', b='embedding')}), 6)
+       CAST(SUM(CAST(round(sqrt({SQL_DOT.format(a='embedding', b='embedding')}), 6)
                      AS DECIMAL(30,6))) AS DOUBLE) AS sum_norm,
        CAST(MIN(embedding[1]) AS DOUBLE) AS min_first,
        CAST(MAX(embedding[1]) AS DOUBLE) AS max_first
@@ -238,7 +227,7 @@ probes AS (
 ),
 pairs AS (
   SELECT p.qid, c.vec_id AS vid,
-         {_sql_cos('p.qvec', 'c.embedding')} AS cos_sim
+         {sql_cos('p.qvec', 'c.embedding')} AS cos_sim
   FROM cells c JOIN probes p ON c.cell = p.cell
   WHERE p.qid != c.vec_id
 ),
@@ -307,7 +296,7 @@ assign AS (
 cells AS (SELECT vec_id, embedding, cid AS cell FROM assign WHERE crn = 1),
 pairs AS (
   SELECT b.vec_id AS vec_id, a.cell AS cell,
-         {_sql_cos('a.embedding', 'b.embedding')} AS cos_sim
+         {sql_cos('a.embedding', 'b.embedding')} AS cos_sim
   FROM cells a JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id
 )
 SELECT vec_id, cell, COUNT(*) AS n_dups, MAX(cos_sim) AS max_cos
@@ -557,7 +546,7 @@ def emb_gram_matrix_arrow(spark, sf_dir):
 WITH q AS (SELECT vec_id AS qid, embedding AS qvec
            FROM embeddings WHERE vec_id < 5),
 pairs AS (
-  SELECT e.vec_id, {_sql_cos('q.qvec', 'e.embedding')} AS cos_sim
+  SELECT e.vec_id, {sql_cos('q.qvec', 'e.embedding')} AS cos_sim
   FROM embeddings e CROSS JOIN q
   WHERE e.vec_id >= 5
 )
@@ -734,7 +723,7 @@ q AS (SELECT vec_id AS qid, embedding AS qvec, bucket FROM b
       WHERE vec_id < 20),
 exact_pairs AS (
   SELECT q.qid, e.vec_id AS vid,
-         {_sql_cos('q.qvec', 'e.embedding')} AS cos_sim
+         {sql_cos('q.qvec', 'e.embedding')} AS cos_sim
   FROM embeddings e CROSS JOIN q WHERE q.qid != e.vec_id
 ),
 exact_topk AS (
@@ -746,7 +735,7 @@ exact_topk AS (
 ),
 lsh_pairs AS (
   SELECT q.qid, e.vec_id AS vid,
-         {_sql_cos('q.qvec', 'e.embedding')} AS cos_sim
+         {sql_cos('q.qvec', 'e.embedding')} AS cos_sim
   FROM b e JOIN q ON e.bucket = q.bucket WHERE q.qid != e.vec_id
 ),
 lsh_topk AS (
@@ -797,7 +786,7 @@ WITH b AS (
   FROM embeddings
 ),
 pairs AS (
-  SELECT {_sql_cos('a.embedding', 'b.embedding')} AS cos_sim
+  SELECT {sql_cos('a.embedding', 'b.embedding')} AS cos_sim
   FROM b a JOIN b b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
 )
 SELECT CAST(FLOOR(cos_sim * 10) AS INT) AS cos_decile,
@@ -841,7 +830,7 @@ WITH u AS (SELECT vec_id, embedding FROM embeddings
            WHERE vec_id < {_MKNN_N}),
 pairs AS (
   SELECT a.vec_id AS qid, b.vec_id AS vid,
-         {_sql_cos('a.embedding', 'b.embedding')} AS cos_sim
+         {sql_cos('a.embedding', 'b.embedding')} AS cos_sim
   FROM u a JOIN u b ON a.vec_id <> b.vec_id
 ),
 topk AS (
@@ -1332,7 +1321,7 @@ exact_topk AS (
   SELECT qid, vid, rn FROM (
     SELECT q.qid, e.vec_id AS vid,
            ROW_NUMBER() OVER (PARTITION BY q.qid
-                              ORDER BY {_sql_cos('q.qvec', 'e.embedding')}
+                              ORDER BY {sql_cos('q.qvec', 'e.embedding')}
                                        DESC, e.vec_id) AS rn
     FROM embeddings e CROSS JOIN q WHERE q.qid != e.vec_id) WHERE rn <= 5
 ),
@@ -1340,7 +1329,7 @@ lsh_topk AS (
   SELECT qid, vid, rn FROM (
     SELECT q.qid, e.vec_id AS vid,
            ROW_NUMBER() OVER (PARTITION BY q.qid
-                              ORDER BY {_sql_cos('q.qvec', 'e.embedding')}
+                              ORDER BY {sql_cos('q.qvec', 'e.embedding')}
                                        DESC, e.vec_id) AS rn
     FROM b e JOIN q ON e.bucket = q.bucket WHERE q.qid != e.vec_id)
   WHERE rn <= 5
@@ -1447,7 +1436,7 @@ shortlist AS (
 ),
 rerank AS (
   SELECT s.qid, s.vid,
-         {_sql_cos('q.qvec', 'e.embedding')} AS cos_sim
+         {sql_cos('q.qvec', 'e.embedding')} AS cos_sim
   FROM shortlist s
   JOIN q ON q.qid = s.qid
   JOIN embeddings e ON e.vec_id = s.vid
@@ -1512,7 +1501,7 @@ SELECT qid, vid, vlab, cos_sim, rn FROM (
          ROW_NUMBER() OVER (PARTITION BY qid
                             ORDER BY cos_sim DESC, vid) AS rn
   FROM pairs) WHERE rn <= 5
-""".format(cos=_sql_cos('q.qvec', 'e.embedding')))
+""".format(cos=sql_cos('q.qvec', 'e.embedding')))
 def emb_hard_negatives(spark, sf_dir):
     """HARD-NEGATIVE MINING for contrastive training (DPR/SimCSE-style):
     per anchor, the top-5 most-similar vectors with a DIFFERENT label —
@@ -1631,7 +1620,7 @@ WITH q AS (SELECT embedding AS qv FROM embeddings
            WHERE vec_id = {_MMR_QUERY_VEC}),
 rel AS (
   SELECT e.vec_id AS vid, e.embedding,
-         {_sql_cos('q.qv', 'e.embedding')} AS rel
+         {sql_cos('q.qv', 'e.embedding')} AS rel
   FROM embeddings e CROSS JOIN q
   WHERE e.vec_id != {_MMR_QUERY_VEC}
 ),
@@ -1642,7 +1631,7 @@ short AS (
 ),
 ps AS (
   SELECT a.vid AS va, b.vid AS vb,
-         {_sql_cos('a.embedding', 'b.embedding')} AS sim
+         {sql_cos('a.embedding', 'b.embedding')} AS sim
   FROM short a JOIN short b ON a.vid != b.vid
 ),
 s1 AS (SELECT vid, rel FROM short ORDER BY rel DESC, vid LIMIT 1),
@@ -1784,7 +1773,7 @@ cand AS (
 ),
 pairs AS (
   SELECT a.vec_id AS vid, b.vec_id AS nid,
-         1e0 - {_sql_cos('a.embedding', 'b.embedding')} AS dist
+         1e0 - {sql_cos('a.embedding', 'b.embedding')} AS dist
   FROM b a JOIN cand b ON a.bucket = b.bucket AND a.vec_id != b.vec_id
 ),
 ranked AS (
@@ -2111,7 +2100,7 @@ q AS (SELECT vec_id AS qid, embedding AS qvec, bucket FROM b
       WHERE vec_id < 5),
 pe AS (
   SELECT q.qid, e.vec_id AS vid,
-         {_sql_cos('q.qvec', 'e.embedding')} AS cos_sim
+         {sql_cos('q.qvec', 'e.embedding')} AS cos_sim
   FROM embeddings e CROSS JOIN q
   WHERE q.qid != e.vec_id
 ),
@@ -2125,7 +2114,7 @@ re AS (
 ),
 pl AS (
   SELECT q.qid, e.vec_id AS vid,
-         {_sql_cos('q.qvec', 'e.embedding')} AS cos_sim
+         {sql_cos('q.qvec', 'e.embedding')} AS cos_sim
   FROM b e JOIN q ON e.bucket = q.bucket
   WHERE q.qid != e.vec_id
 ),
@@ -2194,7 +2183,7 @@ def sim_rrf_fusion(spark, sf_dir):
 
 @query("emb_anisotropy_score", f"""
 WITH nv AS (
-  SELECT embedding, sqrt({_DOT.format(a='embedding', b='embedding')}) AS nrm
+  SELECT embedding, sqrt({SQL_DOT.format(a='embedding', b='embedding')}) AS nrm
   FROM embeddings
 ),
 dims AS (

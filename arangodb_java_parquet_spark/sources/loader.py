@@ -62,14 +62,11 @@ class ParquetLoader:
         given type (ParquetArangoLoader.java:74-76)."""
         self.type_converters[type_simple_string] = fn
 
-    # -- read + encode ------------------------------------------------------
+    # -- read ---------------------------------------------------------------
 
     def read(self, path: str) -> DataFrame:
         """Distributed Parquet scan; accepts file, directory, or glob."""
         return self.spark.read.parquet(path)
-
-    def encode(self, df: DataFrame, mode: str = "spark") -> DataFrame:
-        return encode_documents(df, mode=mode, converters=self.type_converters)
 
     # -- load (sync entry point parity) -------------------------------------
 
@@ -131,7 +128,8 @@ class ParquetLoader:
             # round-robin the input rows, not the encoded JSON: the shuffle
             # moves typed rows and the encode runs in the write tasks
             df = df.repartition(max_parallel_batches)
-        docs = self.encode(df, mode=mode)
+        docs = encode_documents(df, mode=mode,
+                                converters=self.type_converters)
 
         # mapInArrow: each write task receives its partition's documents as
         # Arrow record batches, regroups them into exactly

@@ -327,9 +327,7 @@ def test_converters_top_level_only_reference_parity(spark):
     """Reference parity (GenericRecordJsonEncoder.java:28-32 via
     ParquetArangoLoader.java:74-76): the converter registry is consulted
     for TOP-LEVEL fields only — a timestamp inside a struct or array is
-    serialized raw even with a 'timestamp' converter registered. The
-    nested=True generalization converts it; top-level behavior is
-    identical in both modes."""
+    serialized raw even with a 'timestamp' converter registered."""
     import datetime
     import json
 
@@ -346,47 +344,25 @@ def test_converters_top_level_only_reference_parity(spark):
         "arr array<timestamp>, mp map<string,timestamp>")
     conv = {"timestamp": lambda c: F.unix_timestamp(c)}
 
-    flat = apply_type_converters(df, conv)  # default: top-level-only
+    flat = apply_type_converters(df, conv)
     assert dict(flat.dtypes)["top"] == "bigint"
     assert dict(flat.dtypes)["st"] == "struct<inner:timestamp,tag:string>"
     assert dict(flat.dtypes)["arr"] == "array<timestamp>"
+    assert dict(flat.dtypes)["mp"] == "map<string,timestamp>"
 
-    deep = apply_type_converters(df, conv, nested=True)
-    dts = dict(deep.dtypes)
-    assert dts["top"] == "bigint"
-    assert dts["st"] == "struct<inner:bigint,tag:string>"
-    assert dts["arr"] == "array<bigint>"
-    assert dts["mp"] == "map<string,bigint>"
-
-    r1, r2 = deep.orderBy("id").collect()
+    r1, r2 = flat.orderBy("id").collect()
     epoch = int(ts.replace(tzinfo=datetime.timezone.utc).timestamp())
-    assert r1.top == r1.st.inner == r1.arr[0] == r1.mp["k"] == epoch
+    assert r1.top == epoch
+    assert r1.st.inner == r1.arr[0] == r1.mp["k"] == ts
     assert r1.st.tag == "x"
-    # null containers survive the rebuild as nulls, not structs-of-null
+    assert r2.top is None
     assert r2.st is None and r2.arr is None and r2.mp is None
 
-    # both modes agree on top-level conversion inside the encoder API
-    doc_flat = json.loads(encode_documents(
+    # the encoder API converts the top-level field
+    doc = json.loads(encode_documents(
         df.select("id", "top").filter("id = 1"), converters=conv)
         .collect()[0][0])
-    doc_deep = json.loads(encode_documents(
-        df.select("id", "top").filter("id = 1"), converters=conv,
-        nested_converters=True).collect()[0][0])
-    assert doc_flat == doc_deep == {"id": 1, "top": epoch}
-
-
-def test_converters_exact_complex_match_beats_recursion(spark):
-    """An exact simpleString match on a complex type takes precedence
-    over recursing into it (lets a user convert a whole struct/array)."""
-    from pyspark.sql import functions as F
-
-    from arangodb_java_parquet_spark.functions.docjson import (
-        apply_type_converters)
-
-    df = spark.createDataFrame([([1, 2, 3],)], "xs array<bigint>")
-    conv = {"array<bigint>": lambda c: F.size(c)}
-    out = apply_type_converters(df, conv, nested=True)
-    assert out.collect()[0].xs == 3
+    assert doc == {"id": 1, "top": epoch}
 
 
 def test_timestamp_and_date_edges_encode_as_utc_epoch(spark):
@@ -425,18 +401,18 @@ def test_timestamp_and_date_edges_encode_as_utc_epoch(spark):
 
 
 @pytest.mark.parametrize("mode", ["spark", "reference"])
-@pytest.mark.parametrize("nested", [None, False, True])
+@pytest.mark.parametrize("nested", [None, False])
 def test_dotted_and_backtick_column_names(spark, mode, nested):
     """A top-level name holding ``.`` or a backtick is a name, not a path
-    or a quote: both modes encode it, with and without converters (top-level
-    and nested), and the converter reaches the column it names."""
+    or a quote: both modes encode it, without converters (``None``) and
+    with top-level (not nested) converters (``False``), and the converter
+    reaches the column it names."""
     df = spark.createDataFrame([(1, "x", 2.5)],
                                "`a.b` int, a string, `c``d` double")
     converters = None if nested is None else {"int": lambda c: c + 1,
                                               "double": lambda c: c * 2}
     [doc] = [r[0] for r in encode_documents(
-        df, mode=mode, converters=converters,
-        nested_converters=bool(nested)).collect()]
+        df, mode=mode, converters=converters).collect()]
     shift = 0 if converters is None else 1
     assert json.loads(doc) == {"a.b": 1 + shift, "a": "x",
                                "c`d": 2.5 * (1 + shift)}

@@ -10,7 +10,7 @@ from arangodb_java_parquet_spark.queries import QUERIES
 
 
 from arangodb_java_parquet_spark.plans import (  # noqa: E402
-    codegen_plan, formatted_plan, is_python_free)
+    formatted_plan, inspect, is_python_free)
 
 
 def plan(spark, sf_dir, name) -> str:
@@ -69,8 +69,9 @@ def test_jvm_only_hot_paths(spark, sf_dir):
 
 
 def test_wholestage_codegen_coverage(spark, sf_dir):
-    assert "WholeStageCodegen" in codegen_plan(
-        QUERIES["q1_pricing_summary"](spark, sf_dir))
+    # the codegen view: AQE's formatted mode hides WholeStageCodegen spans
+    assert "WholeStageCodegen" in inspect._explain(
+        QUERIES["q1_pricing_summary"](spark, sf_dir), "codegen")
 
 
 def test_broadcast_in_similarity(spark, sf_dir):
@@ -336,7 +337,8 @@ def test_plan_capture_is_per_thread(spark):
 
     def capture(i):
         start.wait(timeout=60)
-        got[i] = [(formatted_plan(dfs[i]), codegen_plan(dfs[i]))
+        got[i] = [(formatted_plan(dfs[i]),
+                   inspect._explain(dfs[i], "codegen"))
                   for _ in range(rounds)]
 
     stdout = sys.stdout

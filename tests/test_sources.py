@@ -71,45 +71,6 @@ def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
     assert pruned.count() == expected
 
 
-def test_python_datasource_collection(spark, sf_dir, nation, tmp_path):
-    """PySpark-4 Python Data Source: read a collection through
-    spark.read.format('ajps_collection') with one partition per part file."""
-    from arangodb_java_parquet_spark.sources.pyds import register
-    col = LocalCollection(str(tmp_path), "nations")
-    ParquetLoader(spark).load(f"{sf_dir}/nation.parquet", col,
-                              overwrite=True, batch_size=5)
-    register(spark)
-    df = (spark.read.format("ajps_collection")
-          .schema(nation.schema)
-          .option("path", col.path).load())
-    assert rows_of(df) == rows_of(nation)
-    # file-parallel: as many input partitions as part files
-    assert df.rdd.getNumPartitions() == len(col._part_files())
-
-
-def test_python_datasource_write(spark, sf_dir, nation, tmp_path):
-    """Write side of the Python Data Source: df.write round-trips through
-    the collection layout, append accumulates, overwrite replaces."""
-    from arangodb_java_parquet_spark.sources.pyds import register
-    register(spark)
-    path = str(tmp_path / "outcol")
-    (nation.write.format("ajps_collection").option("path", path)
-     .mode("append").save())
-    col = LocalCollection(str(tmp_path), "outcol")
-    assert col.count() == 25
-    got = (spark.read.format("ajps_collection").schema(nation.schema)
-           .option("path", path).load())
-    assert rows_of(got) == rows_of(nation)
-    # append accumulates
-    (nation.write.format("ajps_collection").option("path", path)
-     .mode("append").save())
-    assert col.count() == 50
-    # overwrite replaces
-    (nation.limit(5).write.format("ajps_collection").option("path", path)
-     .mode("overwrite").save())
-    assert col.count() == 5
-
-
 def test_compact_collection(spark, sf_dir, nation, tmp_path):
     col = LocalCollection(str(tmp_path), "nations")
     # small batches -> many part files, the small-files problem

@@ -18,6 +18,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from arangodb_java_parquet_spark.plans.inspect import (  # noqa: E402
+    PYTHON_OPERATORS)
 from arangodb_java_parquet_spark.queries import QUERIES  # noqa: E402
 from arangodb_java_parquet_spark.session import get_spark  # noqa: E402
 
@@ -29,7 +31,7 @@ SIGNALS = {
     "bnl_joins": r"BroadcastNestedLoopJoin",
     "cartesian": r"CartesianProduct",
     "take_ordered": r"TakeOrderedAndProject",
-    "python_stages": r"EvalPython|InPandas|InArrow",
+    "python_stages": "|".join(PYTHON_OPERATORS),
     # localCheckpoint truncates the captured plan to an RDD scan, so a
     # nonzero count here means the OTHER columns only describe the plan
     # ABOVE the checkpoint — e.g. the PCA pair reports py=0 while an
