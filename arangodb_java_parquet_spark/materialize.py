@@ -8,11 +8,11 @@ AQE, building the lazy checkpoint's RDD runs every upstream shuffle stage
 as its own job when the query is constructed. Turning AQE off around the
 lazy ``localCheckpoint`` cut perfbench query_iterative's jobs per pass
 from 379 to 236 but did not cut its wall time (19.4 s → 20.9 s per pass,
-in-process A/B of 4 alternating passes each; ROADMAP direction 1a), so
-the stage jobs stay. On a REAL multi-node cluster localCheckpoint stores the
-partitions in executor block managers WITHOUT lineage: lose an executor
-and the job fails instead of recomputing (Spark's documented trade-off;
-see PERF_NOTES.md "Round 13").
+in-process A/B of 4 alternating passes each; ROADMAP "Where the time
+goes"), so the stage jobs stay. On a REAL multi-node cluster
+localCheckpoint stores the partitions in executor block managers
+WITHOUT lineage: lose an executor and the job fails instead of
+recomputing (Spark's documented trade-off; see PERF_NOTES.md "Round 13").
 
 This module turns that hand-off contract into a session-level switch
 (VERDICT r13 #2). Call sites declare WHAT they materialize via
@@ -63,9 +63,9 @@ pre-helper plans.
 
 Chained use reads naturally through ``DataFrame.transform``::
 
-    base = df.select(...).transform(materialize)          # kind="base"
-    state = state.join(...).transform(materialize_iter)   # loop state
-    norm = df.agg(...).transform(materialize_scalar)      # 1-row table
+    base = df.select(...).transform(materialize)              # kind="base"
+    state = state.join(...).transform(materialize, "iter")    # loop state
+    norm = df.agg(...).transform(materialize, "scalar")       # 1-row table
 """
 
 from __future__ import annotations
@@ -113,19 +113,3 @@ def materialize(df: DataFrame, kind: str = "base",
     if kind == "barrier":
         return df.persist(StorageLevel.MEMORY_AND_DISK)
     return df.persist(StorageLevel.MEMORY_AND_DISK_2)
-
-
-def materialize_barrier(df: DataFrame) -> DataFrame:
-    return materialize(df, "barrier")
-
-
-def materialize_iter(df: DataFrame) -> DataFrame:
-    return materialize(df, "iter")
-
-
-def materialize_iter_eager(df: DataFrame) -> DataFrame:
-    return materialize(df, "iter", eager=True)
-
-
-def materialize_scalar(df: DataFrame) -> DataFrame:
-    return materialize(df, "scalar")

@@ -28,8 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from arangodb_java_parquet_spark.materialize import (
-    materialize, materialize_iter, materialize_iter_eager)
+from arangodb_java_parquet_spark.materialize import materialize
 
 
 def decontaminate(train: DataFrame, benchmark: DataFrame, text_col: str,
@@ -146,7 +145,7 @@ def connected_components_bipartite(membership: DataFrame, node_col: str,
     # recomputed once per branch (the same measured-2x trap the per-round
     # checkpoint already guards).
     labels = _min_label_fixpoint(
-        labels, lambda lab: propagate(lab).transform(materialize_iter),
+        labels, lambda lab: propagate(lab).transform(materialize, "iter"),
         node_col, max_iter, "connected_components_bipartite")
     return labels.select(F.col(node_col).alias("node"), "component")
 
@@ -169,7 +168,7 @@ def _min_label_fixpoint(labels: DataFrame, hop, node_col: str,
         labels = (merged.join(lab2, "component")
                   .select(F.col(node_col),
                           F.least("component", "cc").alias("component"))
-                  .transform(materialize_iter_eager))
+                  .transform(materialize, "iter", True))
         cur_sum = labels.agg(F.sum("component")).collect()[0][0]
         if cur_sum == prev_sum:
             return labels
@@ -231,30 +230,13 @@ def pack_sequences(df: DataFrame, id_col: str, tokens_col: str,
             .withColumn("offset_in_seq", F.col("start_offset") % budget))
 
 
-def capped_vocab(counts: DataFrame, key_col: str, cnt_col: str,
-                 min_count: int, max_vocab: int | None) -> DataFrame:
-    """Bound a (key, count) model table BY CONSTRUCTION before broadcast:
-    frequency floor (count >= min_count), then an optional deterministic
-    top-K cap ordered by (count DESC, key ASC — unique tiebreak).
-
-    Why both knobs: min_count's total/min_count pigeonhole bound is only
-    a real bound if min_count is scale-aware (at the default min_count=2
-    it is HALF the corpus token count — not broadcastable at 100 TB).
-    max_vocab is the hard guarantee: the broadcast side is <= max_vocab
-    rows whatever the corpus distribution, and under Zipf the dropped
-    tail carries negligible probability mass. The top-K is a
-    TakeOrdered, no full sort. Keys outside the cap fall to the model's
-    OOV floor — standard head-vocabulary LM behavior."""
-    kept = counts.filter(F.col(cnt_col) >= min_count)
-    if max_vocab is not None:
-        kept = (kept.orderBy(F.desc(cnt_col), F.asc(key_col))
-                .limit(max_vocab))
-    return kept
+# the LM model tables' frequency floor: rarer keys fall to the OOV floor
+MIN_COUNT = 2
+# stupid backoff's discount on the unigram fallback (Brants et al. 2007)
+BACKOFF_ALPHA = 0.4
 
 
 def unigram_logprob(df: DataFrame, text_col: str, id_col: str,
-                    min_count: int = 2,
-                    max_vocab: int | None = None,
                     toks: DataFrame | None = None,
                     vocab: DataFrame | None = None) -> DataFrame:
     """Corpus-LM quality score (CCNet-style): fit a unigram language model
@@ -263,24 +245,18 @@ def unigram_logprob(df: DataFrame, text_col: str, id_col: str,
     gibberish / boilerplate; training pipelines threshold or bucket on it.
 
     Scale: the broadcast side is the FLOORED vocab — only tokens with
-    count >= ``min_count`` carry a fitted log-prob; everything rarer
+    count >= ``MIN_COUNT`` (2) carry a fitted log-prob; everything rarer
     (URLs, typos, code identifiers — the long tail that at 100 TB makes
     the raw distinct-token vocab billions of entries) falls through a
     LEFT join to a single floor constant ln(1/total), which is what CCNet
-    effectively does for OOV. The floored vocab has <= total/min_count
-    entries by pigeonhole and in practice (Zipf) orders of magnitude
-    fewer — at corpus scale set min_count so the head fits the broadcast
-    threshold (e.g. min_count=100 at 1e13 tokens); scores of kept tokens
-    are unchanged by the floor. At the default min_count=2 the floor is
-    VALUE-NEUTRAL (a singleton's fitted logp is exactly ln(1/total)), so
-    the bounded-broadcast plan produces bit-identical scores to the exact
-    model — but note that total/2 is NOT a broadcastable bound, so at
-    real scale also set ``max_vocab``: a hard top-K cap on the model
-    (deterministic count-desc/token-asc TakeOrdered, see
-    :func:`capped_vocab`) that bounds the broadcast to K rows whatever
-    the distribution; capped-out tokens score at the OOV floor, standard
-    head-vocabulary LM behavior. The vocabulary aggregation itself is
-    map-side combinable; corpus tokens are scanned twice but never
+    effectively does for OOV. The floored vocab has <= total/2 entries by
+    pigeonhole and in practice (Zipf) orders of magnitude fewer. The
+    floor is VALUE-NEUTRAL (a singleton's fitted logp is exactly
+    ln(1/total)), so the bounded-broadcast plan produces bit-identical
+    scores to the exact model — but total/2 is NOT a broadcastable bound
+    at 100 TB, where the model needs a higher floor or a top-K cap. The
+    vocabulary aggregation itself
+    is map-side combinable; corpus tokens are scanned twice but never
     shuffled by token.
 
     Determinism: ln() output is rounded to 9 digits per token type, then
@@ -302,7 +278,7 @@ def unigram_logprob(df: DataFrame, text_col: str, id_col: str,
     if vocab is None:
         vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     total = vocab.agg(F.sum("cnt").alias("total"))
-    lp = (capped_vocab(vocab, "tok", "cnt", min_count, max_vocab)
+    lp = (vocab.filter(F.col("cnt") >= MIN_COUNT)
           .crossJoin(F.broadcast(total))
           .select("tok",
                   F.round(F.log(F.col("cnt").cast("double")
@@ -324,17 +300,14 @@ def unigram_logprob(df: DataFrame, text_col: str, id_col: str,
 
 
 def bigram_logprob_backoff(df: DataFrame, text_col: str, id_col: str,
-                           min_count: int = 2,
-                           alpha: float = 0.4,
-                           max_vocab: int | None = None,
                            bigrams: DataFrame | None = None,
                            uni: DataFrame | None = None) -> DataFrame:
     """Bigram language-model quality score with stupid backoff
     (Brants et al. 2007): score every document by the mean log-probability
     of its adjacent token pairs, backing off to the unigram model (scaled
-    by ``alpha``) when the bigram is rarer than ``min_count``.
+    by ``BACKOFF_ALPHA`` = 0.4) when the bigram is rarer than ``MIN_COUNT``.
 
-      P(w2|w1) = cnt2(w1,w2) / cnt1(w1)        if cnt2 >= min_count
+      P(w2|w1) = cnt2(w1,w2) / cnt1(w1)        if cnt2 >= MIN_COUNT
                = alpha * cnt1(w2) / total      else (fitted unigram)
                = alpha * 1 / total             else (OOV floor)
 
@@ -343,11 +316,8 @@ def bigram_logprob_backoff(df: DataFrame, text_col: str, id_col: str,
 
     Scale story mirrors :func:`unigram_logprob`: both model tables are
     frequency-floored BEFORE broadcast, so the broadcast side is the
-    distribution head (<= total/min_count entries by pigeonhole, far fewer
-    under Zipf), never the raw vocabulary — and ``max_vocab`` adds the
-    hard by-construction bound (deterministic top-K per model table via
-    :func:`capped_vocab`; capped-out bigrams back off to the unigram,
-    capped-out unigrams to the floor). The count aggregations are
+    distribution head (<= total/2 entries by pigeonhole, far fewer under
+    Zipf), never the raw vocabulary. The count aggregations are
     map-side combinable, and corpus tokens are never shuffled by token.
     The backoff threshold is not a compromise — stupid backoff is DEFINED
     by trusting only frequent bigrams.
@@ -380,7 +350,7 @@ def bigram_logprob_backoff(df: DataFrame, text_col: str, id_col: str,
     bi = bigrams.groupBy("bg").agg(F.count(F.lit(1)).alias("cnt2"))
 
     w1 = F.element_at(F.split(F.col("bg"), " "), 1)
-    fitted = (capped_vocab(bi, "bg", "cnt2", min_count, max_vocab)
+    fitted = (bi.filter(F.col("cnt2") >= MIN_COUNT)
               .withColumn("w1", w1)
               .join(uni.select(F.col("tok").alias("w1"),
                                F.col("cnt1").alias("cnt1_w1")), "w1")
@@ -388,15 +358,15 @@ def bigram_logprob_backoff(df: DataFrame, text_col: str, id_col: str,
                       F.round(F.log(F.col("cnt2").cast("double")
                                     / F.col("cnt1_w1").cast("double")), 9)
                       .alias("logp2")))
-    back = (capped_vocab(uni, "tok", "cnt1", min_count, max_vocab)
+    back = (uni.filter(F.col("cnt1") >= MIN_COUNT)
             .crossJoin(F.broadcast(total))
             .select(F.col("tok").alias("w2"),
-                    F.round(F.log(F.lit(alpha)
+                    F.round(F.log(F.lit(BACKOFF_ALPHA)
                                   * (F.col("cnt1").cast("double")
                                      / F.col("total").cast("double"))), 9)
                     .alias("logp_bo")))
     floor = total.select(
-        F.round(F.log(F.lit(alpha)
+        F.round(F.log(F.lit(BACKOFF_ALPHA)
                       * (F.lit(1.0) / F.col("total").cast("double"))), 9)
         .alias("floor_logp"))
     scored = (bigrams
@@ -525,5 +495,5 @@ def pagerank_fixed(edges: DataFrame, src: str, dst: str, *,
                       F.round(base + damping
                               * F.coalesce(F.col("s"), F.lit(0.0)), 7)
                       .alias("rank"))
-              .transform(materialize_iter))
+              .transform(materialize, "iter"))
     return pr

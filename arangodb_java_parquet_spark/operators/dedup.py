@@ -29,7 +29,7 @@ NUM_HASHES = 8
 BAND_ROWS = 4
 
 
-def spread(df: DataFrame, target: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition to full parallelism before a CPU-heavy
     per-row explosion (shingling) — but ONLY when the source is actually
     under-parallel.
@@ -46,7 +46,7 @@ def spread(df: DataFrame, target: int | None = None) -> DataFrame:
     no job. Non-file sources (in-memory test frames, streams' static
     sides) report no files and keep the old always-spread behavior, which
     is what their small inputs want."""
-    tgt = target or df.sparkSession.sparkContext.defaultParallelism
+    tgt = df.sparkSession.sparkContext.defaultParallelism
     try:
         if len(df.inputFiles()) >= tgt:
             return df
@@ -55,19 +55,20 @@ def spread(df: DataFrame, target: int | None = None) -> DataFrame:
     return df.repartition(tgt)
 
 
-def symmetric_edges(pairs: DataFrame, a: str = "doc_a", b: str = "doc_b",
-                    src: str = "src", dst: str = "dst") -> DataFrame:
-    """Both directions of an undirected candidate-pair list in ONE pass:
-    explode([(a,b), (b,a)]) per pair row instead of the self-UNION of
-    two projections. The union's branches each re-derive the whole pair
-    lineage (md5/band subtrees never canonicalize to a ReusedExchange),
-    so every graph_* consumer paid the shingle->minhash->band self-join
-    twice; the one-Generate form computes it once (r15). Row SET is
-    identical — only the emit order differs (a,b interleaved instead of
-    concatenated), which no downstream aggregate/join observes."""
+def symmetric_edges(pairs: DataFrame) -> DataFrame:
+    """(src, dst): both directions of an undirected (doc_a, doc_b)
+    candidate-pair list in ONE pass: explode([(a,b), (b,a)]) per pair row
+    instead of the self-UNION of two projections. The union's branches
+    each re-derive the whole pair lineage (md5/band subtrees never
+    canonicalize to a ReusedExchange), so every graph_* consumer paid the
+    shingle->minhash->band self-join twice; the one-Generate form
+    computes it once (r15). Row SET is identical — only the emit order
+    differs (a,b interleaved instead of concatenated), which no
+    downstream aggregate/join observes."""
     e = F.explode(F.array(
-        F.struct(F.col(a).alias(src), F.col(b).alias(dst)),
-        F.struct(F.col(b).alias(src), F.col(a).alias(dst)))).alias("__e")
+        F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+        F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
+    ).alias("__e")
     return pairs.select(e).select("__e.*")
 
 
@@ -104,8 +105,7 @@ def word_ngrams(df: DataFrame, text_col: str, id_col: str,
             .distinct())
 
 
-def minhash_signatures(shingles: DataFrame, id_col: str,
-                       num_hashes: int = NUM_HASHES) -> DataFrame:
+def minhash_signatures(shingles: DataFrame, id_col: str) -> DataFrame:
     """Per-doc MinHash signature:
     h_j = MIN(substring(md5('<j div 4>:' || shingle), 8*(j%4)+1, 8)).
 
@@ -118,12 +118,12 @@ def minhash_signatures(shingles: DataFrame, id_col: str,
     computed once, not once per min-agg. MIN over fixed-width hex strings
     is the min-hash; 32-bit words keep collision probability ~n²/2³³ per
     doc (negligible at realistic shingle counts, and identical in every
-    engine). Output: (id, h0..h{n-1}).
+    engine). Output: (id, h0..h{NUM_HASHES-1}).
 
     Accuracy caveat: the 4 words sliced from ONE digest are functions of
     the same 128-bit value, not 4 independent hash functions — the
     classic MinHash variance bound J(1-J)/k assumes independence, so the
-    effective k here is somewhat below num_hashes. For candidate
+    effective k here is somewhat below NUM_HASHES. For candidate
     BUCKETING (this funnel's use: bands feed an exact verify stage) the
     correlation is harmless; for a standalone Jaccard estimator with
     tight error bars, use one keyed md5 per hash instead. The identical
@@ -131,21 +131,17 @@ def minhash_signatures(shingles: DataFrame, id_col: str,
     helper (queries/text_pipeline.py:minhash_sig_cte_sql), never
     hand-copied.
     """
-    if num_hashes % 4:
-        raise ValueError("num_hashes must be a multiple of 4 "
-                         "(4 hash words per md5 digest)")
-    n_md5 = num_hashes // 4
+    n_md5 = NUM_HASHES // 4
     hashed = shingles.select(
         F.col(id_col),
         *[F.md5(F.concat(F.lit(f"{p}:"), F.col("shingle"))).alias(f"m{p}")
           for p in range(n_md5)])
     aggs = [F.min(F.substring(F.col(f"m{j // 4}"), 8 * (j % 4) + 1, 8))
-            .alias(f"h{j}") for j in range(num_hashes)]
+            .alias(f"h{j}") for j in range(NUM_HASHES)]
     return hashed.groupBy(id_col).agg(*aggs)
 
 
 def lsh_bands(sigs: DataFrame, id_col: str,
-              num_hashes: int = NUM_HASHES,
               band_rows: int = BAND_ROWS) -> DataFrame:
     """Explode MinHash signatures into LSH band-bucket memberships:
     (id, band_idx, band_hash). Docs sharing a (band_idx, band_hash) bucket
@@ -154,7 +150,7 @@ def lsh_bands(sigs: DataFrame, id_col: str,
     bipartite doc×bucket graph (curation.connected_components_bipartite —
     the scale path, since a k-doc bucket costs O(k) there vs O(k²) pairs).
     """
-    n_bands = num_hashes // band_rows
+    n_bands = NUM_HASHES // band_rows
     bands = F.array(*[
         F.md5(F.concat_ws("|", *[F.col(f"h{b * band_rows + r}")
                                  for r in range(band_rows)]))
@@ -165,7 +161,6 @@ def lsh_bands(sigs: DataFrame, id_col: str,
 
 
 def lsh_candidate_pairs(sigs: DataFrame, id_col: str,
-                        num_hashes: int = NUM_HASHES,
                         band_rows: int = BAND_ROWS) -> DataFrame:
     """LSH banding: docs sharing any band of their signature are candidate
     near-duplicate pairs. Output: (doc_a, doc_b) with doc_a < doc_b.
@@ -176,7 +171,7 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str,
     materialization every one of the ~20 consumers re-computes
     signatures once PER JOIN SIDE (measured as the
     graph_degree_distribution 10-exchange plan, VERDICT r10 #4)."""
-    banded = (lsh_bands(sigs, id_col, num_hashes, band_rows)
+    banded = (lsh_bands(sigs, id_col, band_rows)
               .transform(materialize))
     a = banded.alias("a")
     b = banded.alias("b")
@@ -189,8 +184,6 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str,
 
 
 def lsh_candidate_pairs_capped(sigs: DataFrame, id_col: str,
-                               num_hashes: int = NUM_HASHES,
-                               band_rows: int = BAND_ROWS,
                                max_bucket: int = 32) -> DataFrame:
     """Skew-hardened LSH banding: giant buckets (the K-clique blowup a
     duplicate-heavy corpus creates — r5 SCALE_PROBE measured a 1.35 time
@@ -212,7 +205,7 @@ def lsh_candidate_pairs_capped(sigs: DataFrame, id_col: str,
     via their hub, not directly. Shape: the window ranking is one shuffle
     on the bucket key with O(k log k) per-bucket work — the worst bucket
     costs sort time, never join-explosion time."""
-    banded = lsh_bands(sigs, id_col, num_hashes, band_rows)
+    banded = lsh_bands(sigs, id_col)
     from pyspark.sql import Window as W
     w = W.partitionBy("band_idx", "band_hash").orderBy(id_col)
     # ranked feeds three legs (head self-join sides + tail/min) — lazy
@@ -347,21 +340,22 @@ def containment_pairs(shingles_a: DataFrame, id_col: str,
 # -- portable Bloom filter as relational operators --------------------------
 
 BLOOM_WORD_BITS = 62  # max shift 61: DuckDB raises on 1<<63 overflow
+BLOOM_BITS = 3968  # 64 words
+BLOOM_K = 4  # bit positions per key
 
 
-def bloom_build(keys: DataFrame, key_col: str, m_bits: int = 3968,
-                k: int = 4) -> DataFrame:
+def bloom_build(keys: DataFrame, key_col: str) -> DataFrame:
     """Build a Bloom filter AS A DATAFRAME — (word_idx, word) bitmap rows
     via md5-derived bit positions and a bit_or aggregation.
 
     Unlike Spark's internal bloom_filter_agg (not exposed to SQL/DataFrame
     users), this sketch is built from portable expressions, so the whole
     build+probe pipeline is value-checkable cross-engine, and the bitmap
-    lives in ``m_bits/62`` rows that broadcast to any probe site. The
-    build is one combinable aggregation over keys × k positions; at scale
-    that's a map-side bit_or into at most 64 rows per partition.
+    lives in ``BLOOM_BITS/62`` rows that broadcast to any probe site. The
+    build is one combinable aggregation over keys × BLOOM_K positions; at
+    scale that's a map-side bit_or into at most 64 rows per partition.
 
-    Position j for key x = first 32 bits of md5('<j>:' || x) mod m_bits;
+    Position j for key x = first 32 bits of md5('<j>:' || x) mod BLOOM_BITS;
     words hold 62 usable bits (shift counts stay <= 61 — DuckDB errors on
     1<<63 and Java would silently wrap).
     """
@@ -369,8 +363,8 @@ def bloom_build(keys: DataFrame, key_col: str, m_bits: int = 3968,
         F.explode(F.array(*[
             (F.conv(F.substring(F.md5(F.concat(F.lit(f"{j}:"),
                                                F.col(key_col))), 1, 8),
-                    16, 10).cast("long") % m_bits)
-            for j in range(k)])).alias("p"))
+                    16, 10).cast("long") % BLOOM_BITS)
+            for j in range(BLOOM_K)])).alias("p"))
     return (pos_rows
             .select(F.expr(f"CAST(p div {BLOOM_WORD_BITS} AS INT)")
                     .alias("word_idx"),
@@ -379,17 +373,17 @@ def bloom_build(keys: DataFrame, key_col: str, m_bits: int = 3968,
             .groupBy("word_idx").agg(F.bit_or("bit").alias("word")))
 
 
-def bloom_probe(df: DataFrame, key_col: str, bloom: DataFrame,
-                m_bits: int = 3968, k: int = 4) -> DataFrame:
+def bloom_probe(df: DataFrame, key_col: str, bloom: DataFrame) -> DataFrame:
     """Probe a bloom_build bitmap: adds boolean ``maybe_dup`` — true iff
-    ALL k bit positions of the key are set (no false negatives; false
+    ALL BLOOM_K bit positions of the key are set (no false negatives; false
     positives at the standard (1-e^{-kn/m})^k rate).
 
-    Each row probes k positions against the BROADCAST word table (a left
-    join on word_idx; an unset word means bit absent); bool_and folds the
-    k hits back to one row per input row keyed by a per-row unique id —
+    Each row probes BLOOM_K positions against the BROADCAST word table (a
+    left join on word_idx; an unset word means bit absent); bool_and folds
+    the BLOOM_K hits back to one row per input row keyed by a per-row
+    unique id —
     duplicate input rows therefore stay duplicated in the output (the
-    id is assigned BEFORE the explode, so all k probe rows of one input
+    id is assigned BEFORE the explode, so all BLOOM_K probe rows of one input
     row carry the same id within the producing task)."""
     reserved = {"_probe_rid", "_probe_p", "_widx", "_bit", "_hit",
                 "word_idx", "word"}
@@ -404,8 +398,8 @@ def bloom_probe(df: DataFrame, key_col: str, bloom: DataFrame,
         F.explode(F.array(*[
             (F.conv(F.substring(F.md5(F.concat(F.lit(f"{j}:"),
                                                F.col(key_col))), 1, 8),
-                    16, 10).cast("long") % m_bits)
-            for j in range(k)])))
+                    16, 10).cast("long") % BLOOM_BITS)
+            for j in range(BLOOM_K)])))
     probe = (probe
              .withColumn("_widx",
                          F.expr(f"CAST(_probe_p div {BLOOM_WORD_BITS}"
@@ -453,8 +447,7 @@ def positional_window_fps(docs: DataFrame, text_col: str = "text",
 
 
 def exact_substring_spans(docs: DataFrame, text_col: str = "text",
-                          id_col: str = "doc_id", k: int = 50,
-                          min_occurrences: int = 2) -> DataFrame:
+                          id_col: str = "doc_id", k: int = 50) -> DataFrame:
     """Corpus-level EXACT-SUBSTRING duplicate spans (ExactSubstr, Lee et
     al. 2022, "Deduplicating Training Data Makes Language Models Better")
     — LSH-INDEPENDENT, unlike the candidate-bounded span evidence in
@@ -465,8 +458,8 @@ def exact_substring_spans(docs: DataFrame, text_col: str = "text",
     distributed re-expression: fingerprint every positional k-token
     window (the suffix array's sort-by-prefix becomes a shuffle on the
     window fingerprint — Spark's sort/hash exchange IS the scalable
-    analog of suffix sorting), keep fingerprints with >= min_occurrences
-    locations corpus-wide, and merge each document's duplicated window
+    analog of suffix sorting), keep fingerprints with >= 2 locations
+    corpus-wide, and merge each document's duplicated window
     positions into maximal spans (consecutive-position runs via the
     pos - row_number() trick). A maximal span of W consecutive duplicated
     windows covers W + k - 1 tokens, every k-token substring of which
@@ -506,7 +499,7 @@ def exact_substring_spans(docs: DataFrame, text_col: str = "text",
     grams = positional_window_fps(docs, text_col, id_col, k)
     dup = (grams.groupBy("gh")
            .agg(F.count(F.lit(1)).alias("n_occ"))
-           .filter(F.col("n_occ") >= min_occurrences))
+           .filter(F.col("n_occ") >= 2))
     pos = grams.join(dup.select("gh"), "gh")
     runs = pos.select(
         id_col, "pos",

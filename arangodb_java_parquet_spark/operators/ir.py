@@ -31,20 +31,22 @@ def _tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
                      F.explode(F.split(F.col(text_col), " ")).alias("tok"))
 
 
-def _round_dsum(term: Column, scale: int = 9) -> Column:
-    """Round a per-row float contribution then exact-decimal sum — the
-    engine-portable form of a float SUM (order-insensitive)."""
-    return (F.sum(F.round(term, scale).cast(f"decimal(30,{scale})"))
-            .cast("double"))
+def _round_dsum(term: Column) -> Column:
+    """Round a per-row float contribution to 9 digits then exact-decimal
+    sum — the engine-portable form of a float SUM (order-insensitive)."""
+    return F.sum(F.round(term, 9).cast("decimal(30,9)")).cast("double")
+
+
+# BM25's standard term-saturation and length-normalization constants
+K1, B = 1.2, 0.75
 
 
 def bm25_scores(docs: DataFrame, text_col: str, id_col: str,
-                query_terms: list[str], k1: float = 1.2,
-                b: float = 0.75) -> DataFrame:
+                query_terms: list[str]) -> DataFrame:
     """BM25 document scores for a fixed bag of query terms.
 
     score(d) = sum over t in query of
-        idf(t) * tf * (k1+1) / (tf + k1 * (1 - b + b * dl/avgdl))
+        idf(t) * tf * (K1+1) / (tf + K1 * (1 - B + B * dl/avgdl))
     with the standard Robertson/Sparck-Jones idf
         idf(t) = ln(1 + (N - df + 0.5) / (df + 0.5)).
 
@@ -71,8 +73,8 @@ def bm25_scores(docs: DataFrame, text_col: str, id_col: str,
     idf = F.log(F.lit(1.0)
                 + (F.lit(float(n_docs)) - F.col("df") + 0.5)
                 / (F.col("df") + 0.5))
-    contrib = (F.col("idf") * F.col("tf") * (k1 + 1.0)
-               / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / avgdl)))
+    contrib = (F.col("idf") * F.col("tf") * (K1 + 1.0)
+               / (F.col("tf") + K1 * (1.0 - B + B * F.col("dl") / avgdl)))
     return (tf.join(F.broadcast(df_t.select("tok", idf.alias("idf"))), "tok")
             .join(dl, id_col)
             .groupBy(id_col, "dl")

@@ -36,16 +36,16 @@ IMAGE_META_SCHEMA = ("doc_id long, n_bytes long, format string, "
                      "width int, height int, phash string")
 
 
-def attach_binary_payload(df: DataFrame, text_col: str = "text",
-                          id_col: str = "doc_id") -> DataFrame:
+def attach_binary_payload(df: DataFrame) -> DataFrame:
     """Build an opaque binary payload column + modality metadata struct from
-    a text corpus (the test stand-in for real image bytes)."""
+    a (doc_id, text) corpus (the test stand-in for real image bytes)."""
     return df.select(
-        F.col(id_col),
-        F.encode(F.col(text_col), "UTF-8").alias("payload"),
+        F.col("doc_id"),
+        F.encode(F.col("text"), "UTF-8").alias("payload"),
         F.struct(
             F.lit("image/fake").alias("mime"),
-            F.octet_length(F.encode(F.col(text_col), "UTF-8")).alias("n_bytes"),
+            F.octet_length(F.encode(F.col("text"), "UTF-8"))
+            .alias("n_bytes"),
         ).alias("meta"))
 
 
@@ -66,19 +66,19 @@ def decode_image_stub(payload: bytes) -> dict:
     }
 
 
-def extract_image_features(df: DataFrame, *, payload_col: str = "payload",
-                           id_col: str = "doc_id") -> DataFrame:
-    """Decode + feature-extract binary payloads via mapInPandas (Arrow
-    batches, vectorized transfer; per-row python only inside the batch)."""
+def extract_image_features(df: DataFrame) -> DataFrame:
+    """Decode + feature-extract the (doc_id, payload) binary payloads via
+    mapInPandas (Arrow batches, vectorized transfer; per-row python only
+    inside the batch)."""
     from arangodb_java_parquet_spark.shipping import ensure_package_shipped
     ensure_package_shipped(df.sparkSession)
 
     def decode_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            metas = [decode_image_stub(bytes(p)) for p in pdf[payload_col]]
+            metas = [decode_image_stub(bytes(p)) for p in pdf["payload"]]
             yield pd.DataFrame({
-                "doc_id": pdf[id_col].values,
-                "n_bytes": [len(bytes(p)) for p in pdf[payload_col]],
+                "doc_id": pdf["doc_id"].values,
+                "n_bytes": [len(bytes(p)) for p in pdf["payload"]],
                 "format": [m["format"] for m in metas],
                 "width": [m["width"] for m in metas],
                 "height": [m["height"] for m in metas],
@@ -88,10 +88,9 @@ def extract_image_features(df: DataFrame, *, payload_col: str = "payload",
     return df.mapInPandas(decode_batches, schema=IMAGE_META_SCHEMA)
 
 
-def frame_sample_stub(df: DataFrame, *, every_n: int = 10,
-                      payload_col: str = "payload",
-                      id_col: str = "doc_id") -> DataFrame:
-    """Video frame-sampling plumbing: one output row per sampled frame.
+def frame_sample_stub(df: DataFrame, *, every_n: int = 10) -> DataFrame:
+    """Video frame-sampling plumbing: one output row per sampled frame of
+    each (doc_id, payload) row.
 
     The frame decode is faked (frame index + payload hash); the explode
     pattern, schema, and per-partition batching are the real contract a
@@ -103,7 +102,7 @@ def frame_sample_stub(df: DataFrame, *, every_n: int = 10,
     def sample_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             ids, idxs, hashes = [], [], []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
+            for i, p in zip(pdf["doc_id"], pdf["payload"]):
                 data = bytes(p)
                 n_frames = max(len(data) // 100, 1)
                 for fi in range(0, n_frames, every_n):

@@ -15,12 +15,11 @@ from arangodb_java_parquet_spark.materialize import materialize
 
 
 def scd2_merge(dim: DataFrame, updates: DataFrame, *, key: str,
-               attrs: list[str], eff_col: str = "eff_date",
-               vfrom: str = "valid_from", vto: str = "valid_to") -> DataFrame:
+               attrs: list[str]) -> DataFrame:
     """Apply a batch of updates to an SCD2 history table.
 
     ``dim``: (key, attrs..., valid_from, valid_to) — NULL valid_to marks
-    the current row per key. ``updates``: (key, attrs..., eff_col), at
+    the current row per key. ``updates``: (key, attrs..., eff_date), at
     most one row per key.
 
     Semantics (standard type-2):
@@ -35,9 +34,9 @@ def scd2_merge(dim: DataFrame, updates: DataFrame, *, key: str,
     (broadcast the updates side when it is small); the unions are
     partition-local. No window, no collect.
     """
-    out_cols = [key, *attrs, vfrom, vto]
-    hist = dim.filter(F.col(vto).isNotNull()).select(*out_cols)
-    cur = dim.filter(F.col(vto).isNull())
+    out_cols = [key, *attrs, "valid_from", "valid_to"]
+    hist = dim.filter(F.col("valid_to").isNotNull()).select(*out_cols)
+    cur = dim.filter(F.col("valid_to").isNull())
 
     c = cur.alias("c")
     u = updates.alias("u")
@@ -57,18 +56,18 @@ def scd2_merge(dim: DataFrame, updates: DataFrame, *, key: str,
                           | (matched & ~changed))
             .select(F.col(f"c.{key}").alias(key),
                     *[F.col(f"c.{a}").alias(a) for a in attrs],
-                    F.col(f"c.{vfrom}").alias(vfrom),
-                    F.col(f"c.{vto}").alias(vto)))
+                    F.col("c.valid_from").alias("valid_from"),
+                    F.col("c.valid_to").alias("valid_to")))
     closed = (joined.filter(matched & changed)
               .select(F.col(f"c.{key}").alias(key),
                       *[F.col(f"c.{a}").alias(a) for a in attrs],
-                      F.col(f"c.{vfrom}").alias(vfrom),
-                      F.col(f"u.{eff_col}").alias(vto)))
+                      F.col("c.valid_from").alias("valid_from"),
+                      F.col("u.eff_date").alias("valid_to")))
     opened = (joined.filter((matched & changed)
                             | F.col(f"c.{key}").isNull())
               .select(F.col(f"u.{key}").alias(key),
                       *[F.col(f"u.{a}").alias(a) for a in attrs],
-                      F.col(f"u.{eff_col}").alias(vfrom),
-                      F.lit(None).cast(cur.schema[vto].dataType)
-                      .alias(vto)))
+                      F.col("u.eff_date").alias("valid_from"),
+                      F.lit(None).cast(cur.schema["valid_to"].dataType)
+                      .alias("valid_to")))
     return hist.unionByName(keep).unionByName(closed).unionByName(opened)

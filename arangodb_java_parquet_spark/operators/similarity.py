@@ -49,8 +49,7 @@ def cosine(a: Column, b: Column) -> Column:
 
 
 def topk_cosine_bruteforce(queries: DataFrame, corpus: DataFrame, *,
-                           id_col: str, vec_col: str, k: int,
-                           corpus_partitions: int | None = None) -> DataFrame:
+                           id_col: str, vec_col: str, k: int) -> DataFrame:
     """Exact top-k: broadcast the (small) query set against the corpus.
 
     Output: (qid, vid, cos_sim) with cos_sim rounded to 9 decimals and
@@ -63,22 +62,16 @@ def topk_cosine_bruteforce(queries: DataFrame, corpus: DataFrame, *,
     19.8 s for 300x300 pairs). cos = dot/(norm_q*norm_c) is the same
     expression tree, so values are bit-identical either way.
 
-    ``corpus_partitions``: pair scoring parallelism follows the CORPUS
-    side's partitioning (the query side is broadcast). A corpus read
-    from a single small file runs the whole O(|Q|x|C|) projection in
-    ONE task; setting this repartitions the corpus first (a shuffle of
-    just (id, vec)). Leave None at scale — a real corpus already has
-    many partitions and an extra full-corpus shuffle is the bigger cost
-    (and at harness scale the exchange overhead measured larger than the
-    single-task saving)."""
+    Pair scoring parallelism follows the CORPUS side's partitioning (the
+    query side is broadcast): a real corpus already has many partitions,
+    and at harness scale a repartition's exchange overhead measured
+    larger than the single-task saving."""
     q = (queries.select(F.col(id_col).alias("qid"),
                         F.col(vec_col).alias("qvec"))
          .withColumn("qnrm", norm(F.col("qvec"))))
-    c = corpus.select(F.col(id_col).alias("vid"),
-                      F.col(vec_col).alias("cvec"))
-    if corpus_partitions:
-        c = c.repartition(corpus_partitions)
-    c = c.withColumn("cnrm", norm(F.col("cvec")))
+    c = (corpus.select(F.col(id_col).alias("vid"),
+                       F.col(vec_col).alias("cvec"))
+         .withColumn("cnrm", norm(F.col("cvec"))))
     pairs = (c.crossJoin(F.broadcast(q))
              .filter(F.col("qid") != F.col("vid"))
              .select("qid", "vid",
@@ -105,13 +98,17 @@ def srp_bucket(vec: Column, n_bits: int = 4) -> Column:
     return out
 
 
+# the IVF index: IVF_CELLS Lloyd centroids seeded by RandomState(IVF_SEED),
+# and each query probes its IVF_PROBES nearest cells
+IVF_CELLS, IVF_PROBES, IVF_SEED = 16, 4, 42
+
+
 def ivf_fit_centroids(corpus: DataFrame, *, id_col: str, vec_col: str,
-                      n_centroids: int = 16, n_iter: int = 3,
-                      seed: int = 42) -> list:
+                      n_iter: int = 3) -> list:
     """FIT phase of the Lloyd-fitted IVF index: k-means-lite centroids
     over a bounded deterministic seed sample (see :func:`ivf_topk_cosine`
     for the full design rationale). Returns the centroid list — exactly
-    the n_centroids × dim floats every probe broadcasts, and the artifact
+    the IVF_CELLS × dim floats every probe broadcasts, and the artifact
     the model store persists (queries/ann_stored.py) so daily probe jobs
     skip the fit.
 
@@ -123,15 +120,15 @@ def ivf_fit_centroids(corpus: DataFrame, *, id_col: str, vec_col: str,
     also shifts with layout). Each of the ``n_iter`` fixed iterations assigns
     cells via the broadcast-argmin expression (assign_cells — the same
     operator the corpus-scale assignment uses) and recomputes centroids
-    with groupBy(cell, dim) decimal-exact means; only the n_centroids ×
+    with groupBy(cell, dim) decimal-exact means; only the IVF_CELLS ×
     dim SCALAR averages ever reach the driver (seed-vector ids are the
     one other collect — 2000 longs). No vector collect anywhere, so the
     fit itself is cluster-shaped: widen the sample and the same plan
     runs. At 100 TB cell assignment/probing remain fully distributed (a
-    broadcast of n_centroids × dim floats and one shuffle-free
+    broadcast of IVF_CELLS × dim floats and one shuffle-free
     filter-join).
 
-    Recall/speed trade: n_probe/n_centroids of the corpus is scanned per
+    Recall/speed trade: IVF_PROBES/IVF_CELLS of the corpus is scanned per
     query instead of all of it.
 
     r16 (VERDICT r15 #4): the Lloyd loop over the BOUNDED sample runs
@@ -161,7 +158,7 @@ def ivf_fit_centroids(corpus: DataFrame, *, id_col: str, vec_col: str,
     import numpy as np
 
     rows = _ivf_sample(corpus, id_col=id_col, vec_col=vec_col).collect()
-    centroids, _ = _ivf_seeds(rows, n_centroids, seed)
+    centroids = _ivf_seeds(rows)
     X = np.array([[float(v) for v in r["svec"]] for r in rows],
                  dtype="float64")
     # per-element quantization to DECIMAL(30,12), half-up — computed once
@@ -194,33 +191,32 @@ def _ivf_sample(corpus: DataFrame, *, id_col: str, vec_col: str):
             .orderBy("sid").limit(2000).repartition(8, "sid"))
 
 
-def _ivf_seeds(rows, n_centroids: int, seed: int):
+def _ivf_seed_ids(ids: list) -> set:
+    """The sample ids whose vectors seed the Lloyd loop."""
     import numpy as np
-    ids = [r["sid"] for r in rows]
-    rng = np.random.RandomState(seed)
-    chosen = {ids[i] for i in rng.choice(
-        len(ids), size=min(n_centroids, len(ids)), replace=False)}
-    centroids = [[float(v) for v in r["svec"]]
-                 for r in sorted((r for r in rows if r["sid"] in chosen),
-                                 key=lambda r: r["sid"])]
-    return centroids, len(centroids[0])
+    rng = np.random.RandomState(IVF_SEED)
+    return {ids[i] for i in rng.choice(
+        len(ids), size=min(IVF_CELLS, len(ids)), replace=False)}
+
+
+def _ivf_seeds(rows) -> list:
+    chosen = _ivf_seed_ids([r["sid"] for r in rows])
+    return [[float(v) for v in r["svec"]]
+            for r in sorted((r for r in rows if r["sid"] in chosen),
+                            key=lambda r: r["sid"])]
 
 
 def ivf_fit_centroids_distributed(corpus: DataFrame, *, id_col: str,
-                                  vec_col: str, n_centroids: int = 16,
-                                  n_iter: int = 3, seed: int = 42) -> list:
+                                  vec_col: str, n_iter: int = 3) -> list:
     """The r15 cluster-shaped Lloyd loop (one distributed job per
     iteration: Arrow-kernel assignment + posexplode + narrow decimal-mean
-    groupBy; only n_centroids × dim scalars reach the driver per round).
+    groupBy; only IVF_CELLS × dim scalars reach the driver per round).
     Kept as the widened-sample path and as the equality pin's reference:
     ivf_fit_centroids (driver-side, default) must reproduce it
     bit-for-bit on the bounded sample."""
     sample = _ivf_sample(corpus, id_col=id_col, vec_col=vec_col).cache()
-    ids = [r["sid"] for r in sample.select("sid").collect()]
-    import numpy as np
-    rng = np.random.RandomState(seed)
-    chosen = {ids[i] for i in rng.choice(
-        len(ids), size=min(n_centroids, len(ids)), replace=False)}
+    chosen = _ivf_seed_ids([r["sid"] for r in
+                            sample.select("sid").collect()])
     centroids = [[float(v) for v in r["svec"]] for r in
                  sample.filter(F.col("sid").isin(list(chosen)))
                  .orderBy("sid").collect()]
@@ -248,10 +244,9 @@ def ivf_fit_centroids_distributed(corpus: DataFrame, *, id_col: str,
 
 
 def ivf_probe(queries: DataFrame, corpus: DataFrame, centroids: list, *,
-              id_col: str, vec_col: str, k: int,
-              n_probe: int = 4) -> DataFrame:
+              id_col: str, vec_col: str, k: int) -> DataFrame:
     """PROBE phase of the Lloyd-fitted IVF index: assign corpus vectors
-    to their nearest centroid, route each query to its ``n_probe``
+    to their nearest centroid, route each query to its ``IVF_PROBES``
     nearest cells, exact cosine within the probed cells only.
     ``centroids`` is the fitted list (inline from
     :func:`ivf_fit_centroids` or reloaded from the model store) — it
@@ -275,7 +270,7 @@ def ivf_probe(queries: DataFrame, corpus: DataFrame, centroids: list, *,
 
     q = (queries.select(F.col(id_col).alias("qid"),
                         F.col(vec_col).alias("qvec"),
-                        F.explode(nearest_cells(F.col(vec_col), n_probe))
+                        F.explode(nearest_cells(F.col(vec_col), IVF_PROBES))
                         .alias("cell"))
          .withColumn("qnrm", norm(F.col("qvec"))))
     c = (corpus.select(F.col(id_col).alias("vid"),
@@ -301,44 +296,39 @@ def ivf_probe(queries: DataFrame, corpus: DataFrame, centroids: list, *,
 
 def ivf_topk_cosine(queries: DataFrame, corpus: DataFrame, *,
                     id_col: str, vec_col: str, k: int,
-                    n_centroids: int = 16, n_probe: int = 4,
-                    n_iter: int = 3, seed: int = 42) -> DataFrame:
+                    n_iter: int = 3) -> DataFrame:
     """IVF (inverted-file) approximate top-k: k-means-lite centroids
     partition the corpus into cells; each query probes only its
-    ``n_probe`` nearest cells. Inline composition of
+    ``IVF_PROBES`` nearest cells. Inline composition of
     :func:`ivf_fit_centroids` + :func:`ivf_probe`; the
     fit-once/probe-later split goes through the model store
     (queries/ann_stored.py).
 
-    Recall/speed trade: n_probe/n_centroids of the corpus is scanned per
+    Recall/speed trade: IVF_PROBES/IVF_CELLS of the corpus is scanned per
     query instead of all of it.
     """
     centroids = ivf_fit_centroids(corpus, id_col=id_col, vec_col=vec_col,
-                                  n_centroids=n_centroids, n_iter=n_iter,
-                                  seed=seed)
+                                  n_iter=n_iter)
     return ivf_probe(queries, corpus, centroids, id_col=id_col,
-                     vec_col=vec_col, k=k, n_probe=n_probe)
+                     vec_col=vec_col, k=k)
 
 
 def topk_cosine_lsh(queries: DataFrame, corpus: DataFrame, *,
                     id_col: str, vec_col: str, k: int,
-                    n_bits: int = 4,
-                    corpus_partitions: int | None = None) -> DataFrame:
+                    n_bits: int = 4) -> DataFrame:
     """Approximate top-k: equi-join on the SRP bucket, then exact cosine
     within the bucket. Replaces the O(|Q|·|C|) cross product with
     O(|Q|·|C| / 2^n_bits) expected comparisons and a shuffle on bucket id.
-    Norms per side below the join, single dot per pair, optional corpus
-    repartition for single-file corpora (see topk_cosine_bruteforce)."""
+    Norms per side below the join, single dot per pair (see
+    topk_cosine_bruteforce)."""
     q = (queries.select(F.col(id_col).alias("qid"),
                         F.col(vec_col).alias("qvec"),
                         srp_bucket(F.col(vec_col), n_bits).alias("bucket"))
          .withColumn("qnrm", norm(F.col("qvec"))))
-    c = corpus.select(F.col(id_col).alias("vid"),
-                      F.col(vec_col).alias("cvec"),
-                      srp_bucket(F.col(vec_col), n_bits).alias("bucket"))
-    if corpus_partitions:
-        c = c.repartition(corpus_partitions)
-    c = c.withColumn("cnrm", norm(F.col("cvec")))
+    c = (corpus.select(F.col(id_col).alias("vid"),
+                       F.col(vec_col).alias("cvec"),
+                       srp_bucket(F.col(vec_col), n_bits).alias("bucket"))
+         .withColumn("cnrm", norm(F.col("cvec"))))
     pairs = (c.join(F.broadcast(q), "bucket")
              .filter(F.col("qid") != F.col("vid"))
              .select("qid", "vid",
@@ -447,53 +437,57 @@ def semdedup_prune(emb: DataFrame, *, id_col: str, vec_col: str,
     # duplicated-evaluation class). kind="barrier": single consumer, so
     # reliable mode must not 2x-replicate the full pre-threshold pair
     # set (ADVICE r15).
-    from arangodb_java_parquet_spark.materialize import materialize_barrier
+    from arangodb_java_parquet_spark.materialize import materialize
     return (a.join(b, (F.col("a.cell") == F.col("b.cell"))
                    & (F.col(f"a.{id_col}") < F.col("b.__idb")))
             .select(F.col("b.__idb").alias(id_col),
                     F.col("a.cell").alias("cell"),
                     cos.alias("cos_sim"))
-            .transform(materialize_barrier)
+            .transform(materialize, "barrier")
             .filter(F.col("cos_sim") >= tau)
             .groupBy(id_col, "cell")
             .agg(F.count(F.lit(1)).alias("n_dups"),
                  F.max("cos_sim").alias("max_cos")))
 
 
-def pq_codebook(emb: DataFrame, *, id_col: str, vec_col: str,
-                cent_mod: int) -> DataFrame:
+def pq_codebook(emb: DataFrame, *, id_col: str, vec_col: str) -> DataFrame:
     """1-row DataFrame holding the sorted codeword array for product
-    quantization: array_sort(collect_list(struct(cid, cvec))) — the sort
-    makes the array order deterministic (collect_list order is not)."""
-    return (emb.filter(F.col(id_col) % cent_mod == 0)
+    quantization, every 37th vector by id:
+    array_sort(collect_list(struct(cid, cvec))) — the sort makes the
+    array order deterministic (collect_list order is not)."""
+    return (emb.filter(F.col(id_col) % 37 == 0)
             .select(F.col(id_col).alias("cid"),
                     F.col(vec_col).alias("cvec"))
             .agg(F.array_sort(F.collect_list(F.struct("cid", "cvec")))
                  .alias("__cb")))
 
 
-def _sub_d2(vec: Column, cvec: Column, s: int, sub_dim: int) -> Column:
+# product quantization splits a 64-float vector into PQ_SUBS subvectors
+# of PQ_SUB_DIM floats each
+PQ_SUBS, PQ_SUB_DIM = 8, 8
+
+
+def _sub_d2(vec: Column, cvec: Column, s: int) -> Column:
     """Rounded squared-L2 between subvectors s of two full vectors."""
-    return centroid_d2(F.slice(vec, s * sub_dim + 1, sub_dim),
-                       F.slice(cvec, s * sub_dim + 1, sub_dim))
+    return centroid_d2(F.slice(vec, s * PQ_SUB_DIM + 1, PQ_SUB_DIM),
+                       F.slice(cvec, s * PQ_SUB_DIM + 1, PQ_SUB_DIM))
 
 
 def pq_encode(emb: DataFrame, *, id_col: str, vec_col: str,
-              n_sub: int = 8, sub_dim: int = 8,
-              cent_mod: int = 37, emit: str = "cid",
+              emit: str = "cid",
               impl: str = "jvm",
               cb_from: DataFrame | None = None) -> DataFrame:
     """Product quantization encode (Jégou et al. 2011, the FAISS PQ
-    scheme): split each vector into ``n_sub`` subvectors and store, per
+    scheme): split each vector into ``PQ_SUBS`` subvectors and store, per
     subspace, only the id of the nearest codeword — compressing a
-    64-float embedding to n_sub small ints, the representation that lets
+    64-float embedding to PQ_SUBS small ints, the representation that lets
     billion-vector indexes fit in memory.
 
     Codewords here are the sub-slices of a deterministic rule subset
-    (every ``cent_mod``-th vector), so encoding is fully value-checkable
-    against a SQL oracle; a fitted variant would train per-subspace
-    k-means with the identical plan. The codebook is a broadcast scalar
-    array; per-row argmin per subspace is a pure expression
+    (:func:`pq_codebook`: every 37th vector), so encoding is fully
+    value-checkable against a SQL oracle; a fitted variant would train
+    per-subspace k-means with the identical plan. The codebook is a
+    broadcast scalar array; per-row argmin per subspace is a pure expression
     (array_min over (d2, cid) structs) — no joins, no shuffle, and the
     encode stage scales linearly with the corpus.
 
@@ -515,7 +509,7 @@ def pq_encode(emb: DataFrame, *, id_col: str, vec_col: str,
     mapInPandas — identical codes (pinned by
     tests/test_similarity.py::test_pq_encode_arrow_matches_jvm), ~10×
     faster, and the per-batch working set is bounded by a row-chunked
-    (rows × codewords × sub_dim) distance block regardless of corpus
+    (rows × codewords × PQ_SUB_DIM) distance block regardless of corpus
     size. Both paths broadcast the codebook and scale linearly with zero
     shuffles.
 
@@ -529,10 +523,10 @@ def pq_encode(emb: DataFrame, *, id_col: str, vec_col: str,
     Output: (id, vec, pq_code | pq_pos).
     """
     cb = pq_codebook(cb_from if cb_from is not None else emb,
-                     id_col=id_col, vec_col=vec_col, cent_mod=cent_mod)
+                     id_col=id_col, vec_col=vec_col)
     if impl == "arrow":
         return _pq_encode_arrow(emb, cb, id_col=id_col, vec_col=vec_col,
-                                n_sub=n_sub, sub_dim=sub_dim, emit=emit)
+                                emit=emit)
 
     # NB: factory fn, not a `lambda c, s=s` default-arg closure — a
     # two-parameter PySpark HOF lambda means (element, index); here the
@@ -542,29 +536,28 @@ def pq_encode(emb: DataFrame, *, id_col: str, vec_col: str,
     def best_expr(s: int) -> Column:
         return F.array_min(F.transform(
             F.col("__cb"), lambda c, i: F.struct(
-                _sub_d2(F.col(vec_col), c["cvec"], s, sub_dim)
+                _sub_d2(F.col(vec_col), c["cvec"], s)
                 .alias("d2"),
                 c["cid"].alias("cid"),
                 i.alias("pos"))))
 
     if emit == "cid":
         codes = [F.coalesce(best_expr(s)["cid"], F.lit(-1))
-                 for s in range(n_sub)]
+                 for s in range(PQ_SUBS)]
         out = F.array(*codes).alias("pq_code")
     elif emit == "struct":
         out = F.array(*[best_expr(s)
-                        for s in range(n_sub)]).alias("pq_best")
+                        for s in range(PQ_SUBS)]).alias("pq_best")
     else:
         codes = [F.coalesce(best_expr(s)["pos"], F.lit(-1))
-                 for s in range(n_sub)]
+                 for s in range(PQ_SUBS)]
         out = F.array(*codes).alias("pq_pos")
     return (emb.crossJoin(F.broadcast(cb))
             .select(F.col(id_col), F.col(vec_col), out))
 
 
 def _pq_encode_arrow(emb: DataFrame, cb: DataFrame, *, id_col: str,
-                     vec_col: str, n_sub: int, sub_dim: int,
-                     emit: str) -> DataFrame:
+                     vec_col: str, emit: str) -> DataFrame:
     """Vectorized PQ encode: numpy argmin per subspace over Arrow batches.
 
     Mirrors the JVM expression bit-for-bit on real data: per-subspace d2
@@ -579,7 +572,7 @@ def _pq_encode_arrow(emb: DataFrame, cb: DataFrame, *, id_col: str,
     The codebook is collected once on the driver (bounded: real PQ uses
     ≤256 codewords/subspace) and ships inside the closure; distances are
     computed in row-chunks of 1024 so executor memory stays
-    O(1024 × codewords × sub_dim) at any corpus size.
+    O(1024 × codewords × PQ_SUB_DIM) at any corpus size.
     """
     import numpy as np
 
@@ -604,14 +597,14 @@ def _pq_encode_arrow(emb: DataFrame, cb: DataFrame, *, id_col: str,
                 continue
             X = np.array([np.asarray(v, dtype="float64")
                           for v in pdf[vec_col]])
-            codes = np.empty((len(X), n_sub), dtype="int64")
+            codes = np.empty((len(X), PQ_SUBS), dtype="int64")
             for lo in range(0, len(X), 1024):
                 Xc = X[lo:lo + 1024]
-                for s in range(n_sub):
-                    sq = (Xc[:, None, s * sub_dim:(s + 1) * sub_dim]
-                          - C[None, :, s * sub_dim:(s + 1) * sub_dim]) ** 2
+                for s in range(PQ_SUBS):
+                    sl = slice(s * PQ_SUB_DIM, (s + 1) * PQ_SUB_DIM)
+                    sq = (Xc[:, None, sl] - C[None, :, sl]) ** 2
                     acc = sq[:, :, 0]
-                    for j in range(1, sub_dim):
+                    for j in range(1, PQ_SUB_DIM):
                         acc = acc + sq[:, :, j]
                     pos = np.round(acc, 9).argmin(axis=1)
                     codes[lo:lo + len(Xc), s] = (cids[pos] if emit == "cid"
@@ -624,16 +617,15 @@ def _pq_encode_arrow(emb: DataFrame, cb: DataFrame, *, id_col: str,
 
 
 def pq_adc_topk(queries: DataFrame, encoded: DataFrame, cb: DataFrame, *,
-                id_col: str, vec_col: str, k: int,
-                n_sub: int = 8, sub_dim: int = 8) -> DataFrame:
+                id_col: str, vec_col: str, k: int) -> DataFrame:
     """Asymmetric-distance top-k over PQ codes, the FAISS ADC scheme:
     approximate dist(q, x) = sum_s d2(q_s, codeword(code_s(x))).
 
     Per-QUERY lookup tables, the trick that makes ADC fast: each query
     row precomputes, per subspace, the d2 to EVERY codeword (an array
     aligned with codebook position) BEFORE meeting the corpus — a few
-    rows times n_sub * |codebook| work. The corpus side then carries only
-    (id, pq_pos) and each pair costs n_sub O(1) element_at lookups plus
+    rows times PQ_SUBS * |codebook| work. The corpus side then carries only
+    (id, pq_pos) and each pair costs PQ_SUBS O(1) element_at lookups plus
     decimal adds; no embeddings are read or decoded on the corpus scan,
     which is the entire point of PQ at billion-vector scale.
 
@@ -647,20 +639,20 @@ def pq_adc_topk(queries: DataFrame, encoded: DataFrame, cb: DataFrame, *,
     def lut_expr(s: int) -> Column:
         return F.transform(
             F.col("__cb"),
-            lambda c: _sub_d2(F.col("qvec"), c["cvec"], s, sub_dim)
+            lambda c: _sub_d2(F.col("qvec"), c["cvec"], s)
             .cast("decimal(20,9)"))
 
     q = (queries.select(F.col(id_col).alias("qid"),
                         F.col(vec_col).alias("qvec"))
          .crossJoin(F.broadcast(cb))
          .select("qid", *[lut_expr(s).alias(f"__lut{s}")
-                          for s in range(n_sub)]))
+                          for s in range(PQ_SUBS)]))
     pairs = (encoded.select(F.col(id_col).alias("vid"), "pq_pos")
              .crossJoin(F.broadcast(q))
              .filter(F.col("qid") != F.col("vid")))
     terms = [F.element_at(F.col(f"__lut{s}"),
                           F.col("pq_pos").getItem(s) + 1)
-             for s in range(n_sub)]
+             for s in range(PQ_SUBS)]
     adc = sum(terms[1:], terms[0]).cast("double")
     ranked = (pairs.select("qid", "vid", adc.alias("adc_dist"))
               .withColumn("rn", F.row_number().over(
@@ -669,41 +661,36 @@ def pq_adc_topk(queries: DataFrame, encoded: DataFrame, cb: DataFrame, *,
     return ranked
 
 
-def ivfpq_fit(corpus: DataFrame, *, id_col: str, vec_col: str,
-              cell_mod: int = 31, pq_cent_mod: int = 37,
-              n_sub: int = 8, sub_dim: int = 8) -> "tuple":
+def ivfpq_fit(corpus: DataFrame, *, id_col: str, vec_col: str) -> "tuple":
     """FIT phase of the IVF-PQ index: coarse centroids (rule: every
-    ``cell_mod``-th vector), the cell-routed PQ-encoded corpus, and the
-    PQ codebook. Returns plain DataFrames — exactly the three artifacts
-    a production pipeline persists once (operators/models.py) and probes
-    daily; the parquet round-trip is exact (float32 lists, int arrays),
-    so a stored index probes bit-identically to the inline composition
-    (pinned by tests/test_similarity.py).
+    31st vector), the cell-routed PQ-encoded corpus, and the PQ codebook
+    (every 37th vector, :func:`pq_codebook`). Returns plain DataFrames —
+    exactly the three artifacts a production pipeline persists once
+    (operators/models.py) and probes daily; the parquet round-trip is
+    exact (float32 lists, int arrays), so a stored index probes
+    bit-identically to the inline composition (pinned by
+    tests/test_similarity.py).
 
     Returns ``(cents, enc, cb)``: (cid, cvec) / (vid, pq_pos, cell) /
     the 1-row codebook.
     """
-    cents = (corpus.filter(F.col(id_col) % cell_mod == 0)
+    cents = (corpus.filter(F.col(id_col) % 31 == 0)
              .select(F.col(id_col).alias("cid"),
                      F.col(vec_col).alias("cvec")))
     cells = assign_cells(corpus, cents, id_col=id_col, vec_col=vec_col) \
         .select(F.col(id_col), F.col("cell"))
-    enc = (pq_encode(corpus, id_col=id_col, vec_col=vec_col,
-                     n_sub=n_sub, sub_dim=sub_dim, cent_mod=pq_cent_mod,
-                     emit="pos")
+    enc = (pq_encode(corpus, id_col=id_col, vec_col=vec_col, emit="pos")
            .select(F.col(id_col).alias("vid"), "pq_pos")
            .join(cells.withColumnRenamed(id_col, "vid"), "vid"))
-    cb = pq_codebook(corpus, id_col=id_col, vec_col=vec_col,
-                     cent_mod=pq_cent_mod)
+    cb = pq_codebook(corpus, id_col=id_col, vec_col=vec_col)
     return cents, enc, cb
 
 
 def ivfpq_probe(queries: DataFrame, cents: DataFrame, enc: DataFrame,
-                cb: DataFrame, *, id_col: str, vec_col: str, k: int,
-                n_probe: int = 4, n_sub: int = 8,
-                sub_dim: int = 8) -> DataFrame:
+                cb: DataFrame, *, id_col: str, vec_col: str,
+                k: int) -> DataFrame:
     """PROBE phase of the IVF-PQ index: route each query to its
-    ``n_probe`` nearest coarse cells, build per-query subspace LUTs
+    ``IVF_PROBES`` nearest coarse cells, build per-query subspace LUTs
     against the broadcast codebook, and ADC-score only the probed cells'
     codes. This is the recurring per-batch cost of a fitted index — the
     corpus artifacts (``cents``/``enc``/``cb``) arrive as DataFrames,
@@ -712,13 +699,13 @@ def ivfpq_probe(queries: DataFrame, cents: DataFrame, enc: DataFrame,
 
     Output: (qid, vid, adc_dist, rn<=k).
     """
-    # probe list: top-n_probe cells per query by coarse d2
+    # probe list: top-IVF_PROBES cells per query by coarse d2
     cents_arr, scored = centroid_scores(cents, "qvec")
     q_base = queries.select(F.col(id_col).alias("qid"),
                             F.col(vec_col).alias("qvec"))
     probes = (q_base.crossJoin(F.broadcast(cents_arr))
               .select("qid", "qvec",
-                      F.explode(F.slice(F.array_sort(scored), 1, n_probe))
+                      F.explode(F.slice(F.array_sort(scored), 1, IVF_PROBES))
                       .alias("pr"))
               .select("qid", "qvec", F.col("pr.cid").alias("cell")))
 
@@ -726,18 +713,18 @@ def ivfpq_probe(queries: DataFrame, cents: DataFrame, enc: DataFrame,
     def lut_expr(s: int):
         return F.transform(
             F.col("__cb"),
-            lambda c: _sub_d2(F.col("qvec"), c["cvec"], s, sub_dim)
+            lambda c: _sub_d2(F.col("qvec"), c["cvec"], s)
             .cast("decimal(20,9)"))
 
     q_lut = (probes.crossJoin(F.broadcast(cb))
              .select("qid", "cell",
                      *[lut_expr(s).alias(f"__lut{s}")
-                       for s in range(n_sub)]))
+                       for s in range(PQ_SUBS)]))
     pairs = (enc.join(F.broadcast(q_lut), "cell")
              .filter(F.col("qid") != F.col("vid")))
     terms = [F.element_at(F.col(f"__lut{s}"),
                           F.col("pq_pos").getItem(s) + 1)
-             for s in range(n_sub)]
+             for s in range(PQ_SUBS)]
     adc = sum(terms[1:], terms[0]).cast("double")
     return (pairs.select("qid", "vid", adc.alias("adc_dist"))
             .withColumn("rn", F.row_number().over(
@@ -887,8 +874,7 @@ def nndescent_knn_graph(vectors: DataFrame, *, id_col: str, vec_col: str,
     pair work stays linear (the emb_near_dup_pairs fixed-bits
     disclosure); the per-round cost is linear in n by construction.
     """
-    from arangodb_java_parquet_spark.materialize import (
-        materialize, materialize_iter)
+    from arangodb_java_parquet_spark.materialize import materialize
     base = materialize(
         vectors.select(F.col(id_col).alias("id"),
                        F.col(vec_col).alias("vec"))
@@ -940,7 +926,7 @@ def nndescent_knn_graph(vectors: DataFrame, *, id_col: str, vec_col: str,
                                 F.col("qid").alias("vid"),
                                 F.col("cos_sim")))).alias("__e"))
                    .select("__e.*"))
-    knn = materialize_iter(topk(init_scored))
+    knn = materialize(topk(init_scored), "iter")
     out = [knn.select(F.lit(0).alias("stage"),
                       "qid", "vid", "cos_sim", "rn")]
     for r in range(rounds):
@@ -951,7 +937,7 @@ def nndescent_knn_graph(vectors: DataFrame, *, id_col: str, vec_col: str,
                .withColumn("rrn", F.row_number().over(rev_w))
                .filter(F.col("rrn") <= k)
                .select("qid", "vid", "cos_sim"))
-        und = materialize_iter(fwd.unionByName(rev))
+        und = materialize(fwd.unionByName(rev), "iter")
         cand = (und.select(F.col("qid").alias("a"),
                            F.col("vid").alias("m"))
                 .join(und.select(F.col("qid").alias("m"),
@@ -961,9 +947,10 @@ def nndescent_knn_graph(vectors: DataFrame, *, id_col: str, vec_col: str,
                 .distinct()
                 .join(fwd.select("qid", "vid"), ["qid", "vid"],
                       "left_anti"))
-        knn = materialize_iter(
+        knn = materialize(
             topk(score(cand).unionByName(fwd)).select(
-                "qid", "vid", "cos_sim", "rn"))
+                "qid", "vid", "cos_sim", "rn"),
+            "iter")
         out.append(knn.select(F.lit(r + 1).alias("stage"),
                               "qid", "vid", "cos_sim", "rn"))
     if stages:

@@ -299,10 +299,14 @@ def quantile_sketch_estimate(hist: DataFrame, lo: int | None = None,
 # GK-style deterministic quantile summary (round 9)
 # ---------------------------------------------------------------------------
 
+# the GK summary keeps every GK_S-th value of each of GK_SHARDS shards and
+# answers GK_QUANTILES, each an integer ratio (num, den)
+GK_S, GK_SHARDS = 64, 4
+GK_QUANTILES = ((1, 2), (9, 10), (99, 100))
+
+
 def gk_quantile_summary(df: DataFrame, val_col: str, key_col: str,
-                        group_col: str, *, s: int = 64,
-                        shards: int = 4,
-                        quantiles=((1, 2), (9, 10), (99, 100))) -> DataFrame:
+                        group_col: str) -> DataFrame:
     """Greenwald-Khanna-STYLE mergeable quantile summary, made fully
     deterministic so Spark and an ANSI-SQL oracle agree to the bit
     (unlike approx_percentile, whose GK/KLL internals are engine-private
@@ -310,14 +314,14 @@ def gk_quantile_summary(df: DataFrame, val_col: str, key_col: str,
 
     The classic GK summary keeps tuples (v, g, delta) where g is the gap
     in rank to the previous kept tuple. Streaming GK is insertion-order
-    dependent; the deterministic variant keeps, per shard, every s-th
-    element of the TOTALLY ORDERED data (order by value with a unique
-    key tiebreak) plus the shard maximum — exactly the summary GK's
-    compress phase converges to, with delta = 0 and per-shard rank error
-    <= s. Shard summaries MERGE by interleaving tuples in value order
-    and cumulative-summing g (the GK merge); merged rank error is
-    <= shards * s. A quantile query returns the first tuple whose
-    cumulative g reaches ceil(q * n).
+    dependent; the deterministic variant keeps, per shard (key mod
+    GK_SHARDS), every GK_S-th element of the TOTALLY ORDERED data (order
+    by value with a unique key tiebreak) plus the shard maximum —
+    exactly the summary GK's compress phase converges to, with delta = 0
+    and per-shard rank error <= GK_S. Shard summaries MERGE by
+    interleaving tuples in value order and cumulative-summing g (the GK
+    merge); merged rank error is <= GK_SHARDS * GK_S. A quantile query
+    returns the first tuple whose cumulative g reaches ceil(q * n).
 
     Determinism notes: quantiles are INTEGER ratios (num, den) — never
     float literals, which DuckDB parses as DECIMAL; targets use integer
@@ -325,11 +329,12 @@ def gk_quantile_summary(df: DataFrame, val_col: str, key_col: str,
     integer SUM promotes to HUGEINT); the estimate is a raw data value,
     no arithmetic.
 
-    Scale (100 TB): each shard's summary is ~n_shard/s tuples built by
-    one per-(group, shard) window; the merge is a window over
-    groups x (shards * n/s) summary tuples — the corpus never re-sorts
-    globally. With shards = executor partitions this is the standard
-    distributed-GK topology; s trades summary size for rank error.
+    Scale (100 TB): each shard's summary is ~n_shard/GK_S tuples built
+    by one per-(group, shard) window; the merge is a window over
+    groups x (GK_SHARDS * n/GK_S) summary tuples — the corpus never
+    re-sorts globally. With shards = executor partitions this is the
+    standard distributed-GK topology; GK_S trades summary size for rank
+    error.
 
     Output: (group_col, q, est_value, n_total, n_summary).
     """
@@ -338,12 +343,12 @@ def gk_quantile_summary(df: DataFrame, val_col: str, key_col: str,
     src = df.select(F.col(group_col).alias("p"),
                     F.col(val_col).alias("v"),
                     F.col(key_col).alias("k"),
-                    (F.col(key_col) % shards).alias("shard"))
+                    (F.col(key_col) % GK_SHARDS).alias("shard"))
     w_rn = W.partitionBy("p", "shard").orderBy("v", "k")
     w_n = W.partitionBy("p", "shard")
     rn = (src.withColumn("rn", F.row_number().over(w_rn))
           .withColumn("n_shard", F.count(F.lit(1)).over(w_n)))
-    kept = rn.filter((F.col("rn") % s == 0)
+    kept = rn.filter((F.col("rn") % GK_S == 0)
                      | (F.col("rn") == F.col("n_shard")))
     w_g = W.partitionBy("p", "shard").orderBy("rn")
     wg = kept.withColumn(
@@ -358,7 +363,7 @@ def gk_quantile_summary(df: DataFrame, val_col: str, key_col: str,
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_summary")))
     qdf = F.explode(F.array(*[
         F.struct(F.lit(num).alias("num"), F.lit(den).alias("den"))
-        for num, den in quantiles])).alias("qq")
+        for num, den in GK_QUANTILES])).alias("qq")
     tgt = (tot.select("p", "n_total", qdf)
            .select("p", "n_total", F.col("qq.num").alias("num"),
                    F.col("qq.den").alias("den"))
@@ -377,17 +382,15 @@ def gk_quantile_summary(df: DataFrame, val_col: str, key_col: str,
 
 
 def gk_quantile_summary_sql(val_expr: str, key_expr: str, group_expr: str,
-                            src: str, *, s: int = 64, shards: int = 4,
-                            quantiles=((1, 2), (9, 10),
-                                       (99, 100))) -> str:
+                            src: str) -> str:
     """ANSI-SQL twin of :func:`gk_quantile_summary` (one shared
     generator, never hand-copied — the same single-source pattern as
     hll_sql)."""
-    qvals = ", ".join(f"({num}, {den})" for num, den in quantiles)
+    qvals = ", ".join(f"({num}, {den})" for num, den in GK_QUANTILES)
     return f"""
 WITH gk_src AS (
   SELECT {group_expr} AS p, {val_expr} AS v, {key_expr} AS k,
-         {key_expr} % {shards} AS shard
+         {key_expr} % {GK_SHARDS} AS shard
   FROM {src}
 ),
 gk_rn AS (
@@ -398,7 +401,7 @@ gk_rn AS (
 ),
 gk_kept AS (
   SELECT p, shard, v, k, rn FROM gk_rn
-  WHERE rn % {s} = 0 OR rn = n_shard
+  WHERE rn % {GK_S} = 0 OR rn = n_shard
 ),
 gk_wg AS (
   SELECT p, shard, v, k, rn,

@@ -474,10 +474,6 @@ def stream_etl_clean(spark, sf_dir):
     return drain(out, "append")
 
 
-_B3 = _BYTE.format(p1=7, p2=8)
-_B4 = _BYTE.format(p1=9, p2=10)
-_B5 = _BYTE.format(p1=11, p2=12)
-
 # real-decoder round trip: fixture WAVs are generated from doc_id by a
 # fixed integer sample formula, so the EXPECTED stats of the real decode
 # are closed-form SQL — the oracle checks actual RIFF/PCM byte parsing

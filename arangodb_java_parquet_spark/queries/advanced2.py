@@ -10,8 +10,7 @@ import os
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from arangodb_java_parquet_spark.materialize import (
-    materialize, materialize_iter)
+from arangodb_java_parquet_spark.materialize import materialize
 from arangodb_java_parquet_spark.queries.common import (drain, query,
                                                         raw_table,
                                                         scratch_dir, t)
@@ -203,7 +202,7 @@ def _pca_gram_and_v(spark, sf_dir):
              .groupBy("i")
              .agg(F.sum(F.round(F.col("g") * F.col("v"), 9)
                         .cast("decimal(30,9)")).cast("double").alias("w"))
-             .transform(materialize_iter))
+             .transform(materialize, "iter"))
         nrm = w.agg(F.max(F.abs(F.col("w"))).alias("nrm"))
         v = (w.crossJoin(F.broadcast(nrm))
              .select(F.col("i").alias("j"),

@@ -777,7 +777,6 @@ def emb_zca_whitening_2d(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 _SPOT_DF_CAP = 50      # drop signatures present in more docs (stop-sigs)
-_SPOT_MIN_J = 0.3      # emit pairs at or above this signature Jaccard
 
 
 @query("dedup_spotsigs", f"""

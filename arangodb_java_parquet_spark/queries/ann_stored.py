@@ -37,8 +37,7 @@ def _pq_artifacts(spark, sf_dir):
     cb = ensure_model(
         spark, root, "pq_codebook_37", "pq_codebook",
         lambda: pq_codebook(t(spark, sf_dir, "embeddings"),
-                            id_col="vec_id", vec_col="embedding",
-                            cent_mod=37))
+                            id_col="vec_id", vec_col="embedding"))
     enc = ensure_model(
         spark, root, "pq_codes_pos", "pq_codes",
         lambda: pq_encode(t(spark, sf_dir, "embeddings"),
@@ -145,7 +144,7 @@ def sim_index_incremental_append(spark, sf_dir):
     Critical correctness property, value-checked end to end: new codes
     MUST come from the ORIGINAL codebook (re-fitting on base+batch
     would silently re-quantize history) — here the rule codebook
-    (cent_mod subset of immutable ids) is derivation-stable by
+    (every-37th-id subset of immutable ids) is derivation-stable by
     construction, so the batch encode reproduces the stored codebook
     exactly; the oracle recomputes all codes from scratch with that
     codebook, so a hash match proves the stored base codes + fresh

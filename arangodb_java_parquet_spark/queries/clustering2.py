@@ -28,8 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from arangodb_java_parquet_spark.materialize import (
-    materialize, materialize_iter)
+from arangodb_java_parquet_spark.materialize import materialize
 from arangodb_java_parquet_spark.queries.common import SQL_DOT, query, t
 
 _GMM_K = 3
@@ -193,7 +192,7 @@ def gmm_em_diag_2d(spark, sf_dir):
             .select("j", (F.lit(1.0) / _GMM_K).alias("w"),
                     F.col("x1").alias("m1"), F.col("x2").alias("m2"),
                     "v1", "v2")
-            .transform(materialize_iter))
+            .transform(materialize, "iter"))
     two_pi = 2 * 3.141592653589793  # = 2*pi() in DuckDB (same double)
     for _ in range(_GMM_ROUNDS):
         # mirror the oracle's NULLIF(GREATEST(v,0),0) clamp (ADVICE r14):
@@ -247,7 +246,7 @@ def gmm_em_diag_2d(spark, sf_dir):
                              - (F.col("srx2") / srn)
                              * (F.col("srx2") / srn), 9) + 0.0)
                     .alias("v2"))
-                .transform(materialize_iter))
+                .transform(materialize, "iter"))
     return comp.select(
         F.col("j").alias("component"), F.col("w").alias("weight"),
         (F.round("m1", 9) + 0.0).alias("m1"),
@@ -520,14 +519,14 @@ def coreset_facility_location(spark, sf_dir):
                      F.greatest(F.col("s") - F.col("cov"), F.lit(0.0)), 9)
                      .cast("decimal(20,9)")).cast("double").alias("gain")))
         sel = (gains.orderBy(F.desc("gain"), F.asc("c")).limit(1)
-               .transform(materialize_iter))
+               .transform(materialize, "iter"))
         selected = sel.select("c") if selected is None else \
             selected.unionByName(sel.select("c"))
         ssel = sims.join(sel.select("c"), "c").select(
             "i", F.col("s").alias("ssel"))
         cov = (cov.join(ssel, "i")
                .select("i", F.greatest("cov", "ssel").alias("cov"))
-               .transform(materialize_iter))
+               .transform(materialize, "iter"))
         obj = cov.agg(F.sum(F.col("cov").cast("decimal(20,9)"))
                       .cast("double").alias("objective"))
         out.append(sel.crossJoin(F.broadcast(obj)).select(

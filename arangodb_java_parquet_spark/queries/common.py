@@ -22,9 +22,7 @@ from pyspark.sql import functions as F
 # checkpoint/persist) — see arangodb_java_parquet_spark/materialize.py.
 # Re-exported here because nearly every query module already imports
 # from queries.common.
-from arangodb_java_parquet_spark.materialize import (  # noqa: F401
-    materialize, materialize_iter, materialize_iter_eager,
-    materialize_scalar)
+from arangodb_java_parquet_spark.materialize import materialize  # noqa: F401
 from arangodb_java_parquet_spark.streaming.ingest import event_time_ltz
 
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
@@ -139,18 +137,18 @@ def dsum(col: Column | str, scale: int = 8) -> Column:
     return F.sum(c.cast(f"decimal(30,{scale})")).cast("double")
 
 
-def davg(col: Column | str, scale: int = 8) -> Column:
+def davg(col: Column | str) -> Column:
     """Deterministic average: exact decimal sum cast to double, / count."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(f"decimal(30,{scale})")).cast("double") / F.count(c)
+    return F.sum(c.cast("decimal(30,8)")).cast("double") / F.count(c)
 
 
 def sql_dsum(expr: str, scale: int = 8) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(30,{scale}))) AS DOUBLE)"
 
 
-def sql_davg(expr: str, scale: int = 8) -> str:
-    return (f"CAST(SUM(CAST({expr} AS DECIMAL(30,{scale}))) AS DOUBLE)"
+def sql_davg(expr: str) -> str:
+    return (f"CAST(SUM(CAST({expr} AS DECIMAL(30,8))) AS DOUBLE)"
             f" / COUNT({expr})")
 
 
@@ -177,8 +175,7 @@ def sql_cos(a: str, b: str) -> str:
 
 def exact_percentiles(df: DataFrame, value_col: str,
                       fractions: list[float], out_cols: list[str],
-                      group_cols: tuple[str, ...] = (),
-                      n_col: str | None = None) -> DataFrame:
+                      group_cols: tuple[str, ...] = ()) -> DataFrame:
     """Exact percentile(value_col, p) for several fractions in ONE fully
     distributed ranked pass — the scale-safe replacement for Spark's
     percentile() aggregate, whose ObjectHashAggregate buffers an
@@ -197,11 +194,10 @@ def exact_percentiles(df: DataFrame, value_col: str,
         percentile()/quantile_cont in the r15 theil_sen rewrite, here
         pinned registry-wide by tests/test_percentile_helper.py.
 
-    NULL values are excluded (percentile() semantics); ``n_col`` (if
-    given) carries the per-group NON-NULL count. A group whose values
-    are ALL NULL is dropped from the output, where percentile() emits
-    the group with NULL percentiles. Output: one row per non-empty
-    group with *group_cols, [n_col], and ``out_cols`` — UNROUNDED
+    NULL values are excluded (percentile() semantics). A group whose
+    values are ALL NULL is dropped from the output, where percentile()
+    emits the group with NULL percentiles. Output: one row per non-empty
+    group with *group_cols and ``out_cols`` — UNROUNDED
     doubles, bit-identical to percentile(value_col, p). Rows ranked by
     the DOUBLE cast of the value (exact for float/int inputs; callers
     here pass doubles).
@@ -255,5 +251,4 @@ def exact_percentiles(df: DataFrame, value_col: str,
             .otherwise((ahigher.cast("double") - apos) * F.col(f"__lk{i}")
                        + (apos - alower.cast("double")) * F.col(f"__hk{i}"))
             .alias(name))
-    keep = ([F.col("__n").alias(n_col)] if n_col else [])
-    return agg.select(*gcols, *keep, *outs)
+    return agg.select(*gcols, *outs)

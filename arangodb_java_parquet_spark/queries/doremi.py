@@ -42,8 +42,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from arangodb_java_parquet_spark.materialize import (
-    materialize, materialize_iter)
+from arangodb_java_parquet_spark.materialize import materialize
 from arangodb_java_parquet_spark.queries.common import query, t
 
 _ETA_NUM, _ETA_DEN = 2, 1   # EG step size η = 2
@@ -200,8 +199,8 @@ def mixture_doremi_fit(spark, sf_dir):
         # 159 exchanges / 96 checkpoint readbacks of 20-row data —
         # review r15). Values unchanged; each round's plan is now a
         # constant-size block over the previous round's scan.
-        b = materialize_iter(cur.withColumn(
-            "b", F.round(F.col(prev_col) * F.col("boost"), 9)))
+        b = materialize(cur.withColumn(
+            "b", F.round(F.col(prev_col) * F.col("boost"), 9)), "iter")
         z = b.agg(F.sum(F.col("b").cast("decimal(20,9)")).cast("double")
                   .alias("z"))
         cur = (b.crossJoin(F.broadcast(z))

@@ -24,8 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from arangodb_java_parquet_spark.materialize import (
-    materialize, materialize_iter)
+from arangodb_java_parquet_spark.materialize import materialize
 from arangodb_java_parquet_spark.operators.dedup import (
     char_shingles, lsh_candidate_pairs_capped, minhash_signatures)
 from arangodb_java_parquet_spark.queries.common import query, t
@@ -122,7 +121,7 @@ def graph_hits_scores(spark, sf_dir):
         h = (hr.select(
                 "c", F.round(F.col("h") / F.max("h").over(wmax), 9)
                 .alias("h"))
-             .transform(materialize_iter))
+             .transform(materialize, "iter"))
         ar = (edges.join(h, "c")
               .groupBy("s")
               .agg(F.sum(F.round(F.col("h"), 9).cast("decimal(30,9)"))
@@ -130,7 +129,7 @@ def graph_hits_scores(spark, sf_dir):
         a = (ar.select(
                 "s", F.round(F.col("a") / F.max("a").over(wmax), 9)
                 .alias("a"))
-             .transform(materialize_iter))
+             .transform(materialize, "iter"))
     hubs = h.select(F.lit("hub").alias("role"),
                     F.col("c").alias("node"), F.col("h").alias("score"))
     auths = a.select(F.lit("authority").alias("role"),

@@ -57,11 +57,6 @@ _L = {
     "b1l": "round(ln(CAST(8 AS DOUBLE)/10), 9)",
 }
 
-# emission log-prob as arithmetic in the 0/1 observation (no branch):
-# e_j(o) = o*b_jh + (1-o)*b_jl — products with exact 0/1 doubles.
-_E0 = "(o * {b0h} + (1 - o) * {b0l})".format(**_L)
-_E1 = "(o * {b1h} + (1 - o) * {b1l})".format(**_L)
-
 _VITERBI_SQL = f"""WITH ev AS (
   SELECT user_id, ts, event_id, value FROM events
   WHERE user_id < {_MAXU}

@@ -1247,10 +1247,10 @@ def quality_kneser_ney_logprob(spark, sf_dir):
     the per-doc mean is an exact decimal sum over one IEEE division.
 
     Scale: counts are map-side combinable, keyed by bigram/context/word
-    (corpus text never shuffles); at 100 TB the three model tables get
-    the same frequency-floor + capped-vocab treatment as
-    quality_bigram_logprob (operators/curation.capped_vocab) — the KN
-    interpolation already defines what truncated mass falls back to.
+    (corpus text never shuffles); at 100 TB the three model tables would
+    need the frequency floor of quality_bigram_logprob
+    (operators/curation.MIN_COUNT) — the KN interpolation already
+    defines what truncated mass falls back to.
     Consumes the STORED corpus bigram table (_lm_bigrams_stored, shared
     with the stupid-backoff entry): both of this entry's bigram legs
     start from a parquet scan, the corpus is never re-exploded."""

@@ -18,8 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from arangodb_java_parquet_spark.materialize import (
-    materialize, materialize_barrier)
+from arangodb_java_parquet_spark.materialize import materialize
 from arangodb_java_parquet_spark.queries.common import query, sql_cos, t
 
 # ---------------------------------------------------------------------------
@@ -301,7 +300,7 @@ def bitext_mining_candidates(spark, sf_dir):
                      F.col("c.doc_id_b").alias("doc_b"),
                      F.col("c.lang_b").alias("lang_b"),
                      cos.alias("cos_sim"))
-             .transform(materialize_barrier)
+             .transform(materialize, "barrier")
              .filter(F.col("cos_sim") >= _BITEXT_MIN_COS))
     w = W.partitionBy("doc_a").orderBy(F.desc("cos_sim"), "doc_b")
     return (pairs.withColumn("rn", F.row_number().over(w))

@@ -45,8 +45,7 @@ from pyspark.sql import functions as F
 
 from arangodb_java_parquet_spark.operators.curation import (
     connected_components)
-from arangodb_java_parquet_spark.queries.common import (
-    materialize, materialize_iter, query, t)
+from arangodb_java_parquet_spark.queries.common import materialize, query, t
 
 _MAXV = 300
 _ROUNDS = 12
@@ -189,15 +188,16 @@ def graph_mst_boruvka(spark, sf_dir):
                   .distinct())
         chosen = materialize(chosen)
         sel = chosen.select("va", "vb", "w")
-        mst = sel if mst is None else materialize_iter(
-            mst.unionByName(sel).distinct())
+        mst = sel if mst is None else materialize(
+            mst.unionByName(sel).distinct(), "iter")
         compmap = connected_components(
             chosen.select("la", "lb"), a_col="la", b_col="lb")
-        lab = materialize_iter(
+        lab = materialize(
             lab.join(compmap.withColumnRenamed("node", "label"),
                      "label", "left")
             .select("node",
-                    F.coalesce("component", "label").alias("label")))
+                    F.coalesce("component", "label").alias("label")),
+            "iter")
     # global forest invariants
     if mst is None:
         mst = edges.filter(F.lit(False)).select("va", "vb", "w")

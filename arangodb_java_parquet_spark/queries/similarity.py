@@ -14,8 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from arangodb_java_parquet_spark.materialize import (
-    materialize, materialize_barrier, materialize_iter)
+from arangodb_java_parquet_spark.materialize import materialize
 from arangodb_java_parquet_spark.operators.similarity import (
     cosine, dot, norm, srp_bucket, topk_cosine_bruteforce,
     topk_cosine_lsh)
@@ -130,7 +129,7 @@ def emb_near_dup_pairs(spark, sf_dir):
             .select(F.col("a.vec_id").alias("vec_a"),
                     F.col("c.vec_id_b").alias("vec_b"),
                     cos.alias("cos_sim"))
-            .transform(materialize_barrier)
+            .transform(materialize, "barrier")
             .filter(F.col("cos_sim") >= 0.4))
 
 
@@ -345,8 +344,7 @@ def _pq_fit_shared(spark, sf_dir):
                           emit="struct")
                 .select("vec_id", "pq_best")
                 .transform(materialize))
-        cb = (pq_codebook(e, id_col="vec_id", vec_col="embedding",
-                          cent_mod=37)
+        cb = (pq_codebook(e, id_col="vec_id", vec_col="embedding")
               .transform(materialize))
         hit = (best, cb)
         _PQ_FIT_CACHE[key] = hit
@@ -488,7 +486,7 @@ def sim_topk_pq_adc_arrow(spark, sf_dir):
     e = t(spark, sf_dir, "embeddings")
     enc = pq_encode(e, id_col="vec_id", vec_col="embedding",
                     emit="pos", impl="arrow").select("vec_id", "pq_pos")
-    cb = pq_codebook(e, id_col="vec_id", vec_col="embedding", cent_mod=37)
+    cb = pq_codebook(e, id_col="vec_id", vec_col="embedding")
     return pq_adc_topk(e.filter(F.col("vec_id") < 5), enc, cb,
                        id_col="vec_id", vec_col="embedding", k=5)
 
@@ -2031,7 +2029,7 @@ def coreset_kcenter_greedy(spark, sf_dir):
     Scale: each round is ONE corpus scan cross-joined with the <=K-row
     broadcast center table, a combinable per-point MIN, and a
     TakeOrdered(1) — no driver collect of anything but the plan. The
-    center table is materialize_iter()-truncated every round:
+    center table is materialize(..., "iter")-truncated every round:
     s_r references s_{r-1} twice (carry + candidate pool), so without
     truncation the logical plan doubles per round (2^K leaf scans by
     round 8 — Catalyst analysis, not execution, becomes the bottleneck);
@@ -2064,7 +2062,7 @@ def coreset_kcenter_greedy(spark, sf_dir):
                 .select(F.col("vec_id").alias("sel_id"),
                         F.col("x").alias("sx"), F.col("y").alias("sy"),
                         F.lit(r).alias("ord")))
-        s = s.unionByName(pick).transform(materialize_iter)
+        s = s.unionByName(pick).transform(materialize, "iter")
 
     asg = (pts.crossJoin(F.broadcast(s))
            .withColumn("dd", dd_expr())

@@ -10,8 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from arangodb_java_parquet_spark.materialize import (
-    materialize, materialize_scalar)
+from arangodb_java_parquet_spark.materialize import materialize
 from arangodb_java_parquet_spark.operators.sketches import (
     CMS_DEPTH, QSK_BINS, cms_build, cms_pos_sql, cms_probe, hll_estimate,
     hll_registers, hll_registers_sql, hll_sql)
@@ -172,9 +171,9 @@ def agg_quantile_sketch_portable(spark, sf_dir):
     # is flat either way at sf0.1 — the scans are the right thing to cut
     # at scale)
     bounds = (quantile_sketch_bounds(o, cents)
-              .transform(materialize_scalar))
+              .transform(materialize, "scalar"))
     hist = (quantile_sketch_hist(o, cents, bounds=bounds)
-            .transform(materialize_scalar))
+            .transform(materialize, "scalar"))
     return quantile_sketch_estimate(hist, quantiles=_QSK_QUANTILES,
                                     bounds=bounds)
 

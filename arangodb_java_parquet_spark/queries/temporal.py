@@ -396,7 +396,6 @@ def window_session_native(spark, sf_dir):
 
 _HOUR_US = 3_600_000_000
 _TOL_US = 6 * _HOUR_US          # match window: +/- 6 hours
-_BIN_US = 2 * _TOL_US           # bin width = window span -> <= 2 bins/row
 
 
 @query("join_range_binned", f"""

@@ -12,9 +12,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from arangodb_java_parquet_spark.operators.dedup import (
-    char_shingles, jaccard_pairs, lsh_candidate_pairs, minhash_signatures,
-    simhash_signatures, word_ngrams)
-from arangodb_java_parquet_spark.materialize import materialize_barrier
+    NUM_HASHES, char_shingles, jaccard_pairs, lsh_candidate_pairs,
+    minhash_signatures, simhash_signatures, word_ngrams)
+from arangodb_java_parquet_spark.materialize import materialize
 from arangodb_java_parquet_spark.queries.common import query, t
 
 # ---------------------------------------------------------------------------
@@ -53,7 +53,7 @@ def dedup_fingerprint(spark, sf_dir):
                  F.count(F.lit(1)).alias("n_copies")))
 
 
-def minhash_sig_cte_sql(num_hashes: int = 8) -> str:
+def minhash_sig_cte_sql() -> str:
     """The ``hashed``/``sigs`` CTE pair deriving the MinHash signature
     table from a preceding ``shingles(doc_id, shingle)`` CTE — the ONE
     source of truth for the md5-word substring layout. Every oracle that
@@ -63,14 +63,12 @@ def minhash_sig_cte_sql(num_hashes: int = 8) -> str:
     operators/dedup.py:minhash_signatures exactly: hash word j =
     MIN(substring(md5('<j div 4>:' || shingle), 8*(j%4)+1, 8)); see that
     docstring for the intra-digest word-correlation caveat."""
-    if num_hashes % 4:
-        raise ValueError("num_hashes must be a multiple of 4")
-    n_md5 = num_hashes // 4
+    n_md5 = NUM_HASHES // 4
     m_cols = ", ".join(f"md5('{p}:' || shingle) AS m{p}"
                        for p in range(n_md5))
     sig_cols = ",\n         ".join(
         f"MIN(substring(m{j // 4}, {8 * (j % 4) + 1}, 8)) AS h{j}"
-        for j in range(num_hashes))
+        for j in range(NUM_HASHES))
     return (f"""hashed AS (
   SELECT doc_id, {m_cols}
   FROM shingles
@@ -703,7 +701,7 @@ def dedup_fuzzy_levenshtein(spark, sf_dir):
     scored = (pairs.join(da, "doc_a").join(db, "doc_b")
               .select("doc_a", "doc_b",
                       F.levenshtein("__ta", "__tb").alias("edit_dist"))
-              .transform(materialize_barrier))
+              .transform(materialize, "barrier"))
     return (scored.filter(F.col("edit_dist") <= 40)
             .select("doc_a", "doc_b", "edit_dist"))
 

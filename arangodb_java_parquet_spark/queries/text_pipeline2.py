@@ -746,8 +746,7 @@ def dedup_lsh_tuning_curve(spark, sf_dir):
         "doc_id").transform(materialize)
     rows = None
     for label, band_rows in (("1x8", 8), ("2x4", 4), ("4x2", 2)):
-        pairs = lsh_candidate_pairs(sigs, "doc_id", num_hashes=8,
-                                    band_rows=band_rows)
+        pairs = lsh_candidate_pairs(sigs, "doc_id", band_rows=band_rows)
         one = pairs.agg(F.count(F.lit(1)).alias("n_candidate_pairs")) \
             .select(F.lit(label).alias("config"), "n_candidate_pairs")
         rows = one if rows is None else rows.unionAll(one)
@@ -1227,7 +1226,6 @@ def corpus_diversity_minhash(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 # RE2-portable (no lookaround); identical classes in Java regex and DuckDB.
-_CODE_SYMS = r"[{}();=<>\[\]]"
 _CODE_KWS = (r"\b(def|class|return|import|function|var|const|void|"
              r"int|public|static|if|else|for|while)\b")
 

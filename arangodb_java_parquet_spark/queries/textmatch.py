@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from arangodb_java_parquet_spark.materialize import materialize, materialize_iter_eager
+from arangodb_java_parquet_spark.materialize import materialize
 from arangodb_java_parquet_spark.operators.dedup import (
     char_shingles, lsh_candidate_pairs, minhash_signatures, spread)
 from arangodb_java_parquet_spark.queries.common import query, t
@@ -336,7 +336,7 @@ def _bpe_fit(spark, sf_dir):
         "doc_id", F.posexplode(F.split("text", " ")).alias("i", "tok"))
     learned = []
     for step in range(1, _BPE_STEPS + 1):
-        state = state.transform(materialize_iter_eager)
+        state = state.transform(materialize, "iter", True)
         pairs = state.withColumn(
             "nxt", F.lead("tok").over(
                 W.partitionBy("doc_id").orderBy("i")))
@@ -584,8 +584,8 @@ def nb_classifier_confusion(spark, sf_dir):
     exact decimal sums of those per-type constants; unseen (token,
     class) pairs hit the smoothing floor via LEFT-join + COALESCE (and
     carry the class's floor constant, not a global one). Scale: the
-    model is |vocab|×|classes| rows (bounded by the same max_vocab story
-    as the LM scores — broadcast side), the held corpus explodes once,
+    model is |vocab|×|classes| rows (the broadcast side, as in the LM
+    scores), the held corpus explodes once,
     and the class fan-out is |classes|. On this label-free word-salad
     corpus the matrix is near-chance BY CONSTRUCTION; the machinery is
     what's value-checked."""

@@ -14,8 +14,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from arangodb_java_parquet_spark.operators.dedup import symmetric_edges
-from arangodb_java_parquet_spark.materialize import (
-    materialize, materialize_iter)
+from arangodb_java_parquet_spark.materialize import materialize
 from arangodb_java_parquet_spark.queries.common import (
     dsum, query, sql_dsum, t)
 
@@ -1508,7 +1507,7 @@ def graph_kcore_2core(spark, sf_dir):
         keep = deg.filter(F.col("deg") >= 2).select("src")
         edges = (edges.join(keep, "src")
                  .join(keep.withColumnRenamed("src", "dst"), "dst")
-                 .select("src", "dst").transform(materialize_iter))
+                 .select("src", "dst").transform(materialize, "iter"))
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     return (deg.filter(F.col("deg") >= 2)
             .select(F.col("src").alias("doc_id"),
@@ -2258,7 +2257,7 @@ def graph_eigenvector_centrality(spark, sf_dir):
              .groupBy(F.col("src").alias("node"))
              .agg(F.sum(F.round(F.col("v"), 9).cast("decimal(30,9)"))
                   .cast("double").alias("w"))
-             .transform(materialize_iter))  # normalizer + next iter
+             .transform(materialize, "iter"))  # normalizer + next iter
         m = w.agg(F.max(F.abs(F.col("w"))).alias("m"))
         v = (w.crossJoin(F.broadcast(m))
              .select("node", F.round(F.col("w") / F.col("m"), 9)
@@ -2466,5 +2465,5 @@ def graph_katz_centrality(spark, sf_dir):
              .groupBy(F.col("src").alias("node"))
              .agg((1 + F.sum(F.round(F.col("x"), 9).cast("decimal(30,9)"))
                    .cast("double") / 8).alias("x"))
-             .transform(materialize_iter))
+             .transform(materialize, "iter"))
     return x.select("node", (F.col("x") - 1).alias("katz"))

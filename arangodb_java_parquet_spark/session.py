@@ -19,6 +19,12 @@ and ~7 MB (figures in CHANGES.md). The conf is static and fixed when a
 JVM first compiles; executor JVMs read it from the session conf that
 Spark propagates with every SQL job, so a cluster's executors, which
 thrash the same way, get the same size.
+
+``spark.driver.memory`` defaults to 3/8 of the host's physical memory. A
+fixed 90g let a full oracle-harness run grow the driver JVM to ~10 GB of
+RSS on a 16 GB host and lose it part-way; 3/8 of 16 GB is the 6 GB that
+run completes with, and the rest stays for the Python driver, DuckDB and
+the Python workers.
 """
 
 from __future__ import annotations
@@ -28,31 +34,28 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(app_name: str = "arangodb_java_parquet_spark",
-              master: str | None = None,
-              shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "arangodb_java_parquet_spark") -> SparkSession:
     """Build (or reuse) a SparkSession.
 
     Env knobs (driver contract): ``SPARK_GRAFT_CPUS`` sets local
     parallelism and the default shuffle partitions (default 32);
     ``SPARK_GRAFT_DRIVER_MEM`` sets ``spark.driver.memory`` (default
-    ``90g``).
+    3/8 of physical memory).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if master is None:
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                                f"{phys_mb * 3 // 8}m")
 
     builder = (
         SparkSession.builder
-        .master(master)
+        .master(f"local[{cpus}]")
         .appName(app_name)
         # AQE: runtime coalescing, join-strategy switching, skew-join splitting.
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         # Generated-class cache sized to the iterative working set: at
         # Spark's 100 a warm query_iterative pass recompiled ~650 classes,
         # at 1024 it compiles 10-63 (module docstring).
@@ -65,7 +68,7 @@ def get_spark(app_name: str = "arangodb_java_parquet_spark",
         # Keep stdout clean for one-line-JSON consumers (bench driver tails
         # the last few KB of output; progress bars would eat that buffer).
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
+        .config("spark.driver.memory", driver_mem)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

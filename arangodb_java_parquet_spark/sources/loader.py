@@ -46,16 +46,16 @@ DEFAULT_BATCH_SIZE = 1000          # ParquetArangoLoader.java:35
 class ParquetLoader:
     """Load Parquet data into a document collection.
 
-    ``type_converters`` maps a Spark DataType simple-string (``"timestamp"``,
-    ``"date"``, ``"binary"``, ``"decimal(10,2)"``, ...) to a
-    ``Column -> Column`` function — the Spark analog of the reference's
-    per-Avro-LogicalType converter registry
-    (ParquetArangoLoader.java:34,56-58,74-76).
+    ``type_converters``, filled by :meth:`add_type_converter`, maps a Spark
+    DataType simple-string (``"timestamp"``, ``"date"``, ``"binary"``,
+    ``"decimal(10,2)"``, ...) to a ``Column -> Column`` function — the
+    Spark analog of the reference's per-Avro-LogicalType converter
+    registry (ParquetArangoLoader.java:34,56-58,74-76).
     """
 
-    def __init__(self, spark: SparkSession, type_converters: dict | None = None):
+    def __init__(self, spark: SparkSession):
         self.spark = spark
-        self.type_converters = dict(type_converters or {})
+        self.type_converters = {}
 
     def add_type_converter(self, type_simple_string: str, fn) -> None:
         """Register ``fn: Column -> Column`` for all top-level fields of the
@@ -109,8 +109,8 @@ class ParquetLoader:
         when Spark retries a task. The sink's CONTENTS stay at-least-once:
         a failed attempt's batches that reached the sink before the failure
         remain there, and the retry writes them again. Exactly-once
-        delivery is ROADMAP direction 5; until then, key-based sinks
-        (overwrite mode) dedup on insert, so their stored count stays exact.
+        delivery is the ROADMAP direction "Exactly-once loader under task
+        retry and stream replay".
 
         Validation lives here (not just in ``load``) because this is the
         public API the streaming ``foreachBatch`` path calls directly —

@@ -140,10 +140,10 @@ def stream_load_to_collection(spark: SparkSession, path: str,
                               collection: Collection, *,
                               schema, checkpoint_dir: str,
                               batch_size: int = 1000,
-                              mode: str = "spark",
                               trigger_once: bool = True):
     """Continuously load parquet files appearing under ``path`` into a
-    document collection (streaming generalization of ParquetLoader.load).
+    document collection (streaming generalization of ParquetLoader.load,
+    in its default ``spark`` encode mode).
 
     Returns the started StreamingQuery; caller stops it (or uses
     ``trigger_once`` for a drain-and-stop run).
@@ -154,8 +154,7 @@ def stream_load_to_collection(spark: SparkSession, path: str,
     stream = (spark.readStream.schema(schema).parquet(path))
 
     def sink_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        loader.load_dataframe(batch_df, collection, batch_size=batch_size,
-                              mode=mode)
+        loader.load_dataframe(batch_df, collection, batch_size=batch_size)
 
     writer = (stream.writeStream
               .option("checkpointLocation", checkpoint_dir)
@@ -166,20 +165,18 @@ def stream_load_to_collection(spark: SparkSession, path: str,
 
 
 def stream_upsert_keyed(spark: SparkSession, path: str, *, schema,
-                        state_dir: str, checkpoint_dir: str,
-                        key: str = "user_id",
-                        order_cols: tuple = ("ts", "event_id")):
-    """Streaming MERGE/upsert into a keyed parquet table (the Delta-style
-    ``MERGE WHEN MATCHED UPDATE`` loop, built from primitives): each
-    micro-batch reduces to its newest row per key, merges it
-    last-write-wins against the accumulated state table, and atomically
-    swaps the state directory (write to ``.new``, rename over) — the
-    self-overwrite-safe pattern for a table that is both read and
-    replaced per batch.
+                        state_dir: str, checkpoint_dir: str):
+    """Streaming MERGE/upsert into a parquet table keyed by ``user_id``
+    (the Delta-style ``MERGE WHEN MATCHED UPDATE`` loop, built from
+    primitives): each micro-batch reduces to its newest row per key by
+    (ts, event_id), merges it last-write-wins against the accumulated
+    state table, and atomically swaps the state directory (write to
+    ``.new``, rename over) — the self-overwrite-safe pattern for a table
+    that is both read and replaced per batch.
 
     IDEMPOTENT under redelivery by construction: last-write-wins on
-    (order_cols desc) makes reprocessing a batch a no-op, which is the
-    property an at-least-once source needs (the drive in
+    (ts desc, event_id desc) makes reprocessing a batch a no-op, which is
+    the property an at-least-once source needs (the drive in
     queries/advanced2.py feeds the same file twice through two
     micro-batches and still matches the one-copy oracle).
 
@@ -192,12 +189,11 @@ def stream_upsert_keyed(spark: SparkSession, path: str, *, schema,
 
     from pyspark.sql import Window as W
 
-    order_desc = [F.desc(c) for c in order_cols]
-
     def latest_per_key(df: DataFrame) -> DataFrame:
         return (df.withColumn(
             "__rn", F.row_number().over(
-                W.partitionBy(key).orderBy(*order_desc)))
+                W.partitionBy("user_id").orderBy(F.desc("ts"),
+                                                 F.desc("event_id"))))
             .filter(F.col("__rn") == 1).drop("__rn"))
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -219,29 +215,29 @@ def stream_upsert_keyed(spark: SparkSession, path: str, *, schema,
             .trigger(availableNow=True).start())
 
 
-def event_time_ltz(events: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Normalize an event-time column to TIMESTAMP (LTZ) — the only type
-    watermarks accept. Handles both testdata generations: legacy
+def event_time_ltz(events: DataFrame) -> DataFrame:
+    """Normalize the event-time column ``ts`` to TIMESTAMP (LTZ) — the only
+    type watermarks accept. Handles both testdata generations: legacy
     TIMESTAMP(NANOS) read as long (nanosAsLong) converts via integer-exact
     micros; TIMESTAMP_NTZ reads cast losslessly under a pinned-UTC session.
     """
-    if dict(events.dtypes).get(ts_col) == "bigint":
+    if dict(events.dtypes).get("ts") == "bigint":
         events = events.withColumn(
-            ts_col, F.expr(f"timestamp_micros({ts_col} div 1000)"))
-    return events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+            "ts", F.expr("timestamp_micros(ts div 1000)"))
+    return events.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def windowed_event_counts(events: DataFrame, *,
-                          window: str = "5 minutes",
-                          watermark: str = "10 minutes") -> DataFrame:
-    """Watermarked tumbling-window counts per event_type; works on both a
-    streaming and a batch events DataFrame (same plan, incremental vs full).
+                          window: str = "5 minutes") -> DataFrame:
+    """Tumbling-window counts per event_type under a 10-minute watermark;
+    works on both a streaming and a batch events DataFrame (same plan,
+    incremental vs full).
     """
     # watermarks need TIMESTAMP (LTZ); NTZ inputs cast losslessly under the
     # pinned-UTC session
     events = events.withColumn("ts", F.col("ts").cast("timestamp"))
     return (events
-            .withWatermark("ts", watermark)
+            .withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", window).start.alias("win_start"),
                      "event_type")
             .agg(F.count(F.lit(1)).alias("n_events"),

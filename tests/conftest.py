@@ -15,7 +15,8 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_DIR", "/root/testdata/sf0.01")
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    s = get_spark(app_name="tests", shuffle_partitions=8)
+    s = get_spark(app_name="tests")
+    s.conf.set("spark.sql.shuffle.partitions", "8")
     yield s
 
 

@@ -127,9 +127,11 @@ def test_unigram_logprob_small_corpus(spark):
     import math
     # corpus: "a a b" + "b c" -> counts a=2 b=2 c=1, total=5
     df = spark.createDataFrame([(1, "a a b"), (2, "b c")], ["id", "txt"])
-    # min_count=1: exact unigram model, no flooring
     got = {r["id"]: r for r in
-           unigram_logprob(df, "txt", "id", min_count=1).collect()}
+           unigram_logprob(df, "txt", "id").collect()}
+    # the count>=2 floor is VALUE-NEUTRAL: the singleton c scores the
+    # floor ln(1/total), which is its exact fitted logp, so scores match
+    # the exact unigram model while the broadcast vocab drops the tail
     lp = {t: round(math.log(c / 5), 9) for t, c in
           {"a": 2, "b": 2, "c": 1}.items()}
     assert got[1]["n_tokens"] == 3
@@ -137,18 +139,6 @@ def test_unigram_logprob_small_corpus(spark):
         round((2 * lp["a"] + lp["b"]) / 3, 9), abs=1e-9)
     assert got[2]["avg_logprob"] == pytest.approx(
         round((lp["b"] + lp["c"]) / 2, 9), abs=1e-9)
-    # default min_count=2 is VALUE-NEUTRAL: a singleton's fitted logp is
-    # exactly the floor ln(1/total), so scores match the exact model while
-    # the broadcast vocab drops the long tail
-    floored = {r["id"]: r["avg_logprob"] for r in
-               unigram_logprob(df, "txt", "id").collect()}
-    assert floored == {i: got[i]["avg_logprob"] for i in (1, 2)}
-    # min_count=3 actually floors the cnt=2 head tokens too
-    fl = round(math.log(1 / 5), 9)
-    hard = {r["id"]: r["avg_logprob"] for r in
-            unigram_logprob(df, "txt", "id", min_count=3).collect()}
-    assert hard[1] == pytest.approx(fl, abs=1e-9)
-    assert hard[2] == pytest.approx(fl, abs=1e-9)
 
 
 def test_cap_per_group_deterministic_and_bounded(spark):
@@ -385,49 +375,6 @@ def test_bloom_probe_preserves_duplicate_rows_and_guards_columns(spark):
     clash = spark.createDataFrame([("a", 1)], ["k", "word_idx"])
     with pytest.raises(ValueError, match="reserved"):
         bloom_probe(clash, "k", bloom_build(ref, "k"))
-
-
-def test_lm_model_broadcast_bounded_by_max_vocab(spark):
-    """max_vocab must bound the LM model tables BY CONSTRUCTION on a
-    heavy-tail (Zipf-ish) vocabulary — the broadcast-side row count is
-    <= max_vocab whatever the distribution — with the cap deterministic
-    (count desc, token asc) and capped-out tokens scoring at the floor."""
-    from arangodb_java_parquet_spark.operators.curation import (
-        capped_vocab, unigram_logprob)
-
-    # Zipf-ish corpus: token t_k appears ~N/k times; many singletons.
-    rows = []
-    doc = 0
-    for k in range(1, 40):
-        for _ in range(max(200 // k, 1)):
-            rows.append((doc, f"t{k:02d} t{k:02d} t01"))
-            doc += 1
-    for s in range(300):  # long singleton tail
-        rows.append((doc, f"rare{s:04d}"))
-        doc += 1
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-
-    toks = df.selectExpr("explode(split(text, ' ')) AS tok")
-    counts = toks.groupBy("tok").count().withColumnRenamed("count", "cnt")
-    for cap in (5, 17):
-        model = capped_vocab(counts, "tok", "cnt", min_count=1,
-                             max_vocab=cap)
-        got = model.collect()
-        assert len(got) <= cap
-        # deterministic: exactly the count-desc, token-asc head
-        ordered = sorted(((r["cnt"], r["tok"]) for r in counts.collect()),
-                         key=lambda x: (-x[0], x[1]))[:cap]
-        assert sorted((r["cnt"], r["tok"]) for r in got) == sorted(ordered)
-
-    # behavior: a doc made only of capped-out tokens scores the OOV floor
-    scored = {r["doc_id"]: r["avg_logprob"] for r in
-              unigram_logprob(df, "text", "doc_id", min_count=1,
-                              max_vocab=3).collect()}
-    import math
-    total = toks.count()
-    floor = round(math.log(1.0 / total), 9)
-    rare_doc = doc - 1  # last singleton doc
-    assert abs(scored[rare_doc] - floor) < 1e-9
 
 
 def test_substring_span_diagonal_runs(spark):

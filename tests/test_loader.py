@@ -300,10 +300,13 @@ def _install_fake_arango(monkeypatch, state):
     mod = types.ModuleType("arango")
 
     class ArangoClient:
+        logins = []
+
         def __init__(self, hosts):
             self.hosts = hosts
 
         def db(self, database, username, password):
+            self.logins.append((self.hosts, database, username, password))
             return _FakeDb(state)
 
     mod.ArangoClient = ArangoClient
@@ -326,6 +329,25 @@ def test_arango_sink_pickles_without_connection(monkeypatch):
     assert (clone.name, clone.url) == ("docs", "http://example:8529")
     # and the clone reconnects lazily on first use
     assert clone.exists()
+
+
+def test_arango_sink_logs_in_with_its_credentials(monkeypatch):
+    """A server with authentication is reached with the sink's own
+    database, user and password, also by a pickled copy reconnecting in
+    an executor."""
+    import pickle
+    import sys
+
+    from arangodb_java_parquet_spark.sources.collections import (
+        ArangoCollectionSink)
+    _install_fake_arango(monkeypatch, {})
+    sink = ArangoCollectionSink("docs", url="http://db:8529",
+                                database="mydb", username="loader",
+                                password="s3cret")
+    sink.create()
+    pickle.loads(pickle.dumps(sink)).exists()
+    login = ("http://db:8529", "mydb", "loader", "s3cret")
+    assert sys.modules["arango"].ArangoClient.logins == [login, login]
 
 
 def test_arango_sink_import_bulk_batches(monkeypatch):

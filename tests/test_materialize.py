@@ -40,7 +40,7 @@ def _run_in_mode(spark, name, mode):
 
 
 # Representative entries per the PERF_NOTES entry classes:
-#  - emb_pca_power_iteration: iterative loop state (materialize_iter in
+#  - emb_pca_power_iteration: iterative loop state (kind "iter" in
 #    the 3-round power iteration) on top of a shared gram base.
 #  - timeseries_sample_entropy: shared scan base (the lead-lagged idx
 #    projection feeds both sides of the pair join) + scalar tolerance.

@@ -2,6 +2,7 @@
 only show in what the JVM does (how often it compiles) or under concurrent
 callers."""
 
+import os
 import sys
 import threading
 import time
@@ -34,6 +35,17 @@ def test_codegen_cache_holds_a_repeated_working_set(spark):
     second = sweep()
     assert first >= n
     assert second <= 0.05 * first, (first, second)
+
+
+def test_driver_heap_fits_the_host(spark):
+    """The shared test session's driver heap fits in the host's physical
+    memory (by default it is sized from it): a larger heap lets the JVM
+    grow until the machine, not the garbage collector, stops it."""
+    mem = spark.sparkContext.getConf().get("spark.driver.memory")
+    heap = spark._jvm.org.apache.spark.network.util.JavaUtils \
+        .byteStringAsBytes(mem)
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert 0 < heap <= phys, (mem, phys)
 
 
 class _StubContext:

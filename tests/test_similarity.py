@@ -21,12 +21,12 @@ def test_ivf_recall_vs_bruteforce(spark, sf_dir):
     exact = _topk_sets(topk_cosine_bruteforce(
         q, e, id_col="vec_id", vec_col="embedding", k=5))
     approx = _topk_sets(ivf_topk_cosine(
-        q, e, id_col="vec_id", vec_col="embedding", k=5,
-        n_centroids=8, n_probe=4))
+        q, e, id_col="vec_id", vec_col="embedding", k=5))
     hits = sum(len(exact[k] & approx.get(k, set())) for k in exact)
     total = sum(len(v) for v in exact.values())
     recall = hits / total
-    # probing half the cells of random data should recover a majority
+    # probing 4 of the 16 cells of random data recovers about half of the
+    # exact top-k (0.52 here; the fit and the data are deterministic)
     assert recall >= 0.5, f"IVF recall too low: {recall:.2f}"
 
 
@@ -120,7 +120,7 @@ def test_pq_adc_approximates_exact_l2_ranking(spark, sf_dir):
     q = e.filter(F.col("vec_id") < 10)
     enc = pq_encode(e, id_col="vec_id", vec_col="embedding",
                     emit="pos").select("vec_id", "pq_pos")
-    cb = pq_codebook(e, id_col="vec_id", vec_col="embedding", cent_mod=37)
+    cb = pq_codebook(e, id_col="vec_id", vec_col="embedding")
     approx = _topk_sets(pq_adc_topk(q, enc, cb, id_col="vec_id",
                                     vec_col="embedding", k=5))
     # exact L2 top-5 via brute force
@@ -171,7 +171,7 @@ def test_pq_adc_arrow_matches_jvm(spark, sf_dir):
         pq_adc_topk, pq_codebook, pq_encode)
     e = t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
-    cb = pq_codebook(e, id_col="vec_id", vec_col="embedding", cent_mod=37)
+    cb = pq_codebook(e, id_col="vec_id", vec_col="embedding")
     out = []
     for impl in ("jvm", "arrow"):
         enc = pq_encode(e, id_col="vec_id", vec_col="embedding",
