@@ -450,9 +450,14 @@ def redact_pii(col) -> dict[str, "F.Column"]:
     return {"redacted": red, "n_emails": n_emails, "n_phones": n_phones}
 
 
+# the damping factor of pagerank_fixed
+PAGERANK_DAMPING = 0.85
+
+
 def pagerank_fixed(edges: DataFrame, src: str, dst: str, *,
-                   iterations: int = 5, damping: float = 0.85) -> DataFrame:
-    """Fixed-iteration PageRank, engine-portably deterministic: per-edge
+                   iterations: int = 5) -> DataFrame:
+    """Fixed-iteration PageRank (damping PAGERANK_DAMPING),
+    engine-portably deterministic: per-edge
     contributions are rounded to 7 digits and summed as EXACT decimals
     (unordered SUM cannot drift), and each new rank is re-rounded — so a
     SQL oracle unrolling the same ``iterations`` steps matches
@@ -481,7 +486,7 @@ def pagerank_fixed(edges: DataFrame, src: str, dst: str, *,
     edges_deg = (edges.join(outdeg.withColumnRenamed("node", src), src)
                  .transform(materialize))
     pr = nodes.withColumn("rank", F.lit(1.0))
-    base = F.lit(1.0 - damping)
+    base = F.lit(1.0 - PAGERANK_DAMPING)
     for _ in range(iterations):
         contrib = (edges_deg
                    .join(pr.withColumnRenamed("node", src), src)
@@ -492,7 +497,7 @@ def pagerank_fixed(edges: DataFrame, src: str, dst: str, *,
             F.sum("c").cast("double").alias("s"))
         pr = (nodes.join(summed, "node", "left")
               .select("node",
-                      F.round(base + damping
+                      F.round(base + PAGERANK_DAMPING
                               * F.coalesce(F.col("s"), F.lit(0.0)), 7)
                       .alias("rank"))
               .transform(materialize, "iter"))

@@ -27,6 +27,9 @@ NUM_HASHES = 8
 # (measured: 1.1M candidate pairs from 5k docs at sf0.1) — the classic LSH
 # tuning trade; verify-stage Jaccard (jaccard_pairs) recovers recall.
 BAND_ROWS = 4
+# shingle width of char_shingles, in characters, and n of word_ngrams
+SHINGLE_K = 5
+NGRAM_N = 3
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -72,25 +75,27 @@ def symmetric_edges(pairs: DataFrame) -> DataFrame:
     return pairs.select(e).select("__e.*")
 
 
-def char_shingles(df: DataFrame, text_col: str, id_col: str,
-                  k: int = 5, distinct: bool = True) -> DataFrame:
-    """k-char shingles per document: (id, shingle).
+def char_shingles(df: DataFrame, distinct: bool = False) -> DataFrame:
+    """SHINGLE_K-char shingles per document of a ``documents``-shaped
+    frame (doc_id, text): (doc_id, shingle).
 
-    ``distinct=False`` skips the dedup shuffle — correct for downstream
-    MIN/MAX aggregations (duplicate-insensitive), which saves shuffling the
-    widest intermediate (the exploded shingle rows) entirely.
+    By default shingles repeat within a document: no dedup shuffle —
+    correct for downstream MIN/MAX aggregations (duplicate-insensitive),
+    which saves shuffling the widest intermediate (the exploded shingle
+    rows) entirely. ``distinct=True`` dedups them, for set measures
+    (Jaccard counts).
     """
     shingle_list = F.expr(
-        f"transform(sequence(1, greatest(length({text_col})-{k - 1}, 1)),"
-        f" i -> substring({text_col}, i, {k}))")
+        f"transform(sequence(1, greatest(length(text)-{SHINGLE_K - 1}, 1)),"
+        f" i -> substring(text, i, {SHINGLE_K}))")
     out = (spread(df)
-           .select(F.col(id_col), F.explode(shingle_list).alias("shingle")))
+           .select(F.col("doc_id"), F.explode(shingle_list).alias("shingle")))
     return out.distinct() if distinct else out
 
 
-def word_ngrams(df: DataFrame, text_col: str, id_col: str,
-                n: int = 3, do_spread: bool = True) -> DataFrame:
-    """Distinct word n-grams per document: (id, shingle).
+def word_ngrams(df: DataFrame, do_spread: bool = True) -> DataFrame:
+    """Distinct word NGRAM_N-grams per document of a ``documents``-shaped
+    frame (doc_id, text): (doc_id, shingle).
 
     ``do_spread=False`` skips the pre-explosion repartition — right when the
     caller already bounded the universe to a few hundred docs (the verify
@@ -98,14 +103,15 @@ def word_ngrams(df: DataFrame, text_col: str, id_col: str,
     parallelism buys.
     """
     grams = F.expr(
-        f"transform(sequence(1, greatest(size(split({text_col}, ' ')) - {n - 1}, 1)),"
-        f" i -> array_join(slice(split({text_col}, ' '), i, {n}), ' '))")
+        f"transform(sequence(1, greatest(size(split(text, ' '))"
+        f" - {NGRAM_N - 1}, 1)),"
+        f" i -> array_join(slice(split(text, ' '), i, {NGRAM_N}), ' '))")
     src = spread(df) if do_spread else df
-    return (src.select(F.col(id_col), F.explode(grams).alias("shingle"))
+    return (src.select(F.col("doc_id"), F.explode(grams).alias("shingle"))
             .distinct())
 
 
-def minhash_signatures(shingles: DataFrame, id_col: str) -> DataFrame:
+def minhash_signatures(shingles: DataFrame) -> DataFrame:
     """Per-doc MinHash signature:
     h_j = MIN(substring(md5('<j div 4>:' || shingle), 8*(j%4)+1, 8)).
 
@@ -118,7 +124,7 @@ def minhash_signatures(shingles: DataFrame, id_col: str) -> DataFrame:
     computed once, not once per min-agg. MIN over fixed-width hex strings
     is the min-hash; 32-bit words keep collision probability ~n²/2³³ per
     doc (negligible at realistic shingle counts, and identical in every
-    engine). Output: (id, h0..h{NUM_HASHES-1}).
+    engine). Output: (doc_id, h0..h{NUM_HASHES-1}).
 
     Accuracy caveat: the 4 words sliced from ONE digest are functions of
     the same 128-bit value, not 4 independent hash functions — the
@@ -126,26 +132,28 @@ def minhash_signatures(shingles: DataFrame, id_col: str) -> DataFrame:
     effective k here is somewhat below NUM_HASHES. For candidate
     BUCKETING (this funnel's use: bands feed an exact verify stage) the
     correlation is harmless; for a standalone Jaccard estimator with
-    tight error bars, use one keyed md5 per hash instead. The identical
-    substring layout on the oracle side is generated by ONE shared
-    helper (queries/text_pipeline.py:minhash_sig_cte_sql), never
-    hand-copied.
+    tight error bars, use one keyed md5 per hash instead. The oracle
+    side's identical layouts come from ONE shared module, never
+    hand-copied: the substring layout from
+    queries/text_pipeline.py:minhash_sig_cte_sql, the bands from
+    lsh_bands_cte_sql, the candidate pairs from lsh_pairs_cte_sql and
+    capped_pairs_cte_sql; the SRP buckets of operators/similarity come
+    from queries/common.py:srp_bucket_sql.
     """
     n_md5 = NUM_HASHES // 4
     hashed = shingles.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.md5(F.concat(F.lit(f"{p}:"), F.col("shingle"))).alias(f"m{p}")
           for p in range(n_md5)])
     aggs = [F.min(F.substring(F.col(f"m{j // 4}"), 8 * (j % 4) + 1, 8))
             .alias(f"h{j}") for j in range(NUM_HASHES)]
-    return hashed.groupBy(id_col).agg(*aggs)
+    return hashed.groupBy("doc_id").agg(*aggs)
 
 
-def lsh_bands(sigs: DataFrame, id_col: str,
-              band_rows: int = BAND_ROWS) -> DataFrame:
+def lsh_bands(sigs: DataFrame, band_rows: int = BAND_ROWS) -> DataFrame:
     """Explode MinHash signatures into LSH band-bucket memberships:
-    (id, band_idx, band_hash). Docs sharing a (band_idx, band_hash) bucket
-    are near-duplicate candidates; downstream consumers either enumerate
+    (doc_id, band_idx, band_hash). Docs sharing a (band_idx, band_hash)
+    bucket are near-duplicate candidates; downstream consumers either enumerate
     pairs (lsh_candidate_pairs) or propagate labels directly over the
     bipartite doc×bucket graph (curation.connected_components_bipartite —
     the scale path, since a k-doc bucket costs O(k) there vs O(k²) pairs).
@@ -156,11 +164,11 @@ def lsh_bands(sigs: DataFrame, id_col: str,
                                  for r in range(band_rows)]))
         for b in range(n_bands)])
     return sigs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(bands).alias("band_idx", "band_hash"))
 
 
-def lsh_candidate_pairs(sigs: DataFrame, id_col: str,
+def lsh_candidate_pairs(sigs: DataFrame,
                         band_rows: int = BAND_ROWS) -> DataFrame:
     """LSH banding: docs sharing any band of their signature are candidate
     near-duplicate pairs. Output: (doc_a, doc_b) with doc_a < doc_b.
@@ -171,19 +179,19 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str,
     materialization every one of the ~20 consumers re-computes
     signatures once PER JOIN SIDE (measured as the
     graph_degree_distribution 10-exchange plan, VERDICT r10 #4)."""
-    banded = (lsh_bands(sigs, id_col, band_rows)
+    banded = (lsh_bands(sigs, band_rows)
               .transform(materialize))
     a = banded.alias("a")
     b = banded.alias("b")
     return (a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
                    & (F.col("a.band_hash") == F.col("b.band_hash"))
-                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-            .select(F.col(f"a.{id_col}").alias("doc_a"),
-                    F.col(f"b.{id_col}").alias("doc_b"))
+                   & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .select(F.col("a.doc_id").alias("doc_a"),
+                    F.col("b.doc_id").alias("doc_b"))
             .distinct())
 
 
-def lsh_candidate_pairs_capped(sigs: DataFrame, id_col: str,
+def lsh_candidate_pairs_capped(sigs: DataFrame,
                                max_bucket: int = 32) -> DataFrame:
     """Skew-hardened LSH banding: giant buckets (the K-clique blowup a
     duplicate-heavy corpus creates — r5 SCALE_PROBE measured a 1.35 time
@@ -205,9 +213,9 @@ def lsh_candidate_pairs_capped(sigs: DataFrame, id_col: str,
     via their hub, not directly. Shape: the window ranking is one shuffle
     on the bucket key with O(k log k) per-bucket work — the worst bucket
     costs sort time, never join-explosion time."""
-    banded = lsh_bands(sigs, id_col)
+    banded = lsh_bands(sigs)
     from pyspark.sql import Window as W
-    w = W.partitionBy("band_idx", "band_hash").orderBy(id_col)
+    w = W.partitionBy("band_idx", "band_hash").orderBy("doc_id")
     # ranked feeds three legs (head self-join sides + tail/min) — lazy
     # checkpoint so the banding lineage materializes once
     ranked = banded.withColumn("rk", F.row_number().over(w)) \
@@ -216,14 +224,14 @@ def lsh_candidate_pairs_capped(sigs: DataFrame, id_col: str,
     a, b = head.alias("a"), head.alias("b")
     full = (a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
                    & (F.col("a.band_hash") == F.col("b.band_hash"))
-                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-            .select(F.col(f"a.{id_col}").alias("doc_a"),
-                    F.col(f"b.{id_col}").alias("doc_b")))
+                   & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .select(F.col("a.doc_id").alias("doc_a"),
+                    F.col("b.doc_id").alias("doc_b")))
     mins = (ranked.filter(F.col("rk") == 1)
             .select("band_idx", "band_hash",
-                    F.col(id_col).alias("doc_a")))
+                    F.col("doc_id").alias("doc_a")))
     star = (ranked.filter(F.col("rk") > max_bucket)
-            .select("band_idx", "band_hash", F.col(id_col).alias("doc_b"))
+            .select("band_idx", "band_hash", F.col("doc_id").alias("doc_b"))
             .join(mins, ["band_idx", "band_hash"])
             .select("doc_a", "doc_b"))
     return full.unionByName(star).distinct()
@@ -267,20 +275,16 @@ def simhash_signatures(df: DataFrame, text_col: str, id_col: str,
 
 
 def jaccard_pairs(shingles_a: DataFrame, id_col: str,
-                  threshold: float = 0.0, *,
-                  bounded: bool = False) -> DataFrame:
+                  threshold: float = 0.0) -> DataFrame:
     """Exact pairwise Jaccard similarity over distinct shingles.
 
     Self-join on shingle then count — O(sum of postings²) so callers must
-    pre-filter the candidate universe (LSH or an id range); this is the
-    verify stage of the dedup funnel, not the discovery stage.
+    pre-filter the candidate universe (LSH or an id range) to a
+    broadcastable size; this is the verify stage of the dedup funnel,
+    not the discovery stage. The per-doc shingle counts are broadcast: on
+    an UNBOUNDED corpus that table is corpus-sized, so the pre-filter is
+    part of the contract.
     Output: (doc_a, doc_b, n_common, n_a, n_b, jaccard).
-
-    ``bounded=True`` asserts the caller pre-filtered the universe to a
-    broadcastable size and forces broadcast joins for the per-doc shingle
-    counts. The default lets the planner decide: a per-doc count table on
-    an UNBOUNDED corpus is corpus-sized, and an unconditional hint there
-    would build a giant broadcast relation on every executor.
     """
     counts = shingles_a.groupBy(id_col).agg(F.count("*").alias("n_sh"))
     a = shingles_a.alias("a")
@@ -294,9 +298,7 @@ def jaccard_pairs(shingles_a: DataFrame, id_col: str,
                        F.col("n_sh").alias("n_a"))
     cb = counts.select(F.col(id_col).alias("doc_b"),
                        F.col("n_sh").alias("n_b"))
-    if bounded:
-        ca, cb = F.broadcast(ca), F.broadcast(cb)
-    out = (inter.join(ca, "doc_a").join(cb, "doc_b")
+    out = (inter.join(F.broadcast(ca), "doc_a").join(F.broadcast(cb), "doc_b")
            .withColumn("jaccard",
                        F.col("n_common")
                        / (F.col("n_a") + F.col("n_b") - F.col("n_common"))))
@@ -304,15 +306,15 @@ def jaccard_pairs(shingles_a: DataFrame, id_col: str,
 
 
 def containment_pairs(shingles_a: DataFrame, id_col: str,
-                      threshold: float = 0.0, *,
-                      bounded: bool = False) -> DataFrame:
+                      threshold: float) -> DataFrame:
     """Asymmetric set containment C(A,B) = |A∩B| / |A| over distinct
     shingles — the template/boilerplate detector: a short page embedded
     verbatim in a longer one scores near 1.0 on containment while its
     Jaccard stays low.
 
     Same universe contract as :func:`jaccard_pairs` (callers pre-filter via
-    LSH or an id range; ``bounded=True`` broadcasts the per-doc counts).
+    LSH or an id range to a broadcastable size; the per-doc counts are
+    broadcast).
     Output: (doc_a, doc_b, n_common, n_a, n_b, cont_a, cont_b) filtered to
     GREATEST(cont_a, cont_b) >= threshold. Both directions come from one
     intersection count, integer-divided — engine-exact, no rounding needed.
@@ -329,9 +331,7 @@ def containment_pairs(shingles_a: DataFrame, id_col: str,
                        F.col("n_sh").alias("n_a"))
     cb = counts.select(F.col(id_col).alias("doc_b"),
                        F.col("n_sh").alias("n_b"))
-    if bounded:
-        ca, cb = F.broadcast(ca), F.broadcast(cb)
-    out = (inter.join(ca, "doc_a").join(cb, "doc_b")
+    out = (inter.join(F.broadcast(ca), "doc_a").join(F.broadcast(cb), "doc_b")
            .withColumn("cont_a", F.col("n_common") / F.col("n_a"))
            .withColumn("cont_b", F.col("n_common") / F.col("n_b")))
     return out.filter(F.greatest("cont_a", "cont_b") >= threshold)
@@ -418,8 +418,7 @@ def bloom_probe(df: DataFrame, key_col: str, bloom: DataFrame) -> DataFrame:
             .drop("_probe_rid"))
 
 
-def positional_window_fps(docs: DataFrame, text_col: str = "text",
-                          id_col: str = "doc_id", k: int = 50) -> DataFrame:
+def positional_window_fps(docs: DataFrame, k: int = 50) -> DataFrame:
     """(id, pos, gh): md5 fingerprint of every positional k-token window
     (1-based pos), the compact row the ExactSubstr family shuffles instead
     of the documents themselves.
@@ -435,19 +434,18 @@ def positional_window_fps(docs: DataFrame, text_col: str = "text",
     ``emb_anisotropy_score`` pattern); each window then costs one O(k)
     array slice.
     """
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     base = (docs.filter(F.size(toks) >= k)
-            .select(id_col, toks.alias("_toks"))
+            .select("doc_id", toks.alias("_toks"))
             .transform(materialize))
     win_fps = F.expr(
         f"transform(sequence(1, size(_toks) - {k} + 1),"
         f" i -> md5(array_join(slice(_toks, i, {k}), ' ')))")
-    return (base.select(id_col, F.posexplode(win_fps).alias("p0", "gh"))
-            .select(id_col, (F.col("p0") + 1).alias("pos"), "gh"))
+    return (base.select("doc_id", F.posexplode(win_fps).alias("p0", "gh"))
+            .select("doc_id", (F.col("p0") + 1).alias("pos"), "gh"))
 
 
-def exact_substring_spans(docs: DataFrame, text_col: str = "text",
-                          id_col: str = "doc_id", k: int = 50) -> DataFrame:
+def exact_substring_spans(docs: DataFrame, k: int = 50) -> DataFrame:
     """Corpus-level EXACT-SUBSTRING duplicate spans (ExactSubstr, Lee et
     al. 2022, "Deduplicating Training Data Makes Language Models Better")
     — LSH-INDEPENDENT, unlike the candidate-bounded span evidence in
@@ -466,7 +464,7 @@ def exact_substring_spans(docs: DataFrame, text_col: str = "text",
     occurs elsewhere — the exact removal unit ExactSubstr deletes.
 
     Returns one row per maximal duplicated span:
-    (id_col, span_start, span_end, span_tokens, n_dup_windows), token
+    (doc_id, span_start, span_end, span_tokens, n_dup_windows), token
     positions 1-based inclusive.
 
     Scale (100 TB): rows are (id, pos, md5) window fingerprints — O(total
@@ -496,16 +494,16 @@ def exact_substring_spans(docs: DataFrame, text_col: str = "text",
     """
     from pyspark.sql import Window as W
 
-    grams = positional_window_fps(docs, text_col, id_col, k)
+    grams = positional_window_fps(docs, k)
     dup = (grams.groupBy("gh")
            .agg(F.count(F.lit(1)).alias("n_occ"))
            .filter(F.col("n_occ") >= 2))
     pos = grams.join(dup.select("gh"), "gh")
     runs = pos.select(
-        id_col, "pos",
+        "doc_id", "pos",
         (F.col("pos") - F.row_number().over(
-            W.partitionBy(id_col).orderBy("pos"))).alias("grp"))
-    return (runs.groupBy(id_col, "grp")
+            W.partitionBy("doc_id").orderBy("pos"))).alias("grp"))
+    return (runs.groupBy("doc_id", "grp")
             .agg(F.min("pos").cast("bigint").alias("span_start"),
                  (F.max("pos") + F.lit(k - 1)).cast("bigint")
                  .alias("span_end"),
@@ -515,9 +513,7 @@ def exact_substring_spans(docs: DataFrame, text_col: str = "text",
             .drop("grp"))
 
 
-def exact_substring_removal(docs: DataFrame, text_col: str = "text",
-                            id_col: str = "doc_id",
-                            k: int = 50) -> DataFrame:
+def exact_substring_removal(docs: DataFrame, k: int = 50) -> DataFrame:
     """ExactSubstr REMOVAL accounting (the deletion step of Lee et al.
     2022): every k-token window occurrence except the corpus-wide
     CANONICAL one (first by (id, pos) within its fingerprint) is
@@ -529,7 +525,7 @@ def exact_substring_removal(docs: DataFrame, text_col: str = "text",
     canonical choice deterministic in any engine and any partitioning.
 
     Returns one row per AFFECTED document:
-    (id_col, n_tokens, tokens_removed, tokens_kept, keep_ratio).
+    (doc_id, n_tokens, tokens_removed, tokens_kept, keep_ratio).
 
     Scale: same O(total tokens) fingerprint rows as
     exact_substring_spans. The canonical occurrence is found with
@@ -542,16 +538,16 @@ def exact_substring_removal(docs: DataFrame, text_col: str = "text",
     per-document windows (runs, islands). Nothing is all-pairs;
     document text shuffles only in the final affected-docs-only join.
     """
-    isl = _removal_islands(docs, text_col, id_col, k)
-    merged = (isl.groupBy(id_col, "island_id")
+    isl = _removal_islands(docs, k)
+    merged = (isl.groupBy("doc_id", "island_id")
               .agg((F.max("e") - F.min("s") + 1).alias("removed_len")))
-    per_doc = (merged.groupBy(id_col)
+    per_doc = (merged.groupBy("doc_id")
                .agg(F.sum("removed_len").cast("bigint")
                     .alias("tokens_removed")))
-    n_toks = F.size(F.split(F.col(text_col), " ")).cast("bigint")
+    n_toks = F.size(F.split(F.col("text"), " ")).cast("bigint")
     return (per_doc
-            .join(docs.select(id_col, n_toks.alias("n_tokens")), id_col)
-            .select(id_col, "n_tokens", "tokens_removed",
+            .join(docs.select("doc_id", n_toks.alias("n_tokens")), "doc_id")
+            .select("doc_id", "n_tokens", "tokens_removed",
                     (F.col("n_tokens") - F.col("tokens_removed"))
                     .cast("bigint").alias("tokens_kept"),
                     ((F.col("n_tokens") - F.col("tokens_removed"))
@@ -559,51 +555,49 @@ def exact_substring_removal(docs: DataFrame, text_col: str = "text",
                     .alias("keep_ratio")))
 
 
-def _removal_islands(docs: DataFrame, text_col: str, id_col: str,
-                     k: int) -> DataFrame:
+def _removal_islands(docs: DataFrame, k: int) -> DataFrame:
     """Shared deletion geometry for the ExactSubstr removal/apply pair:
-    (id_col, island_id, s, e) token-overlap islands of removable
+    (doc_id, island_id, s, e) token-overlap islands of removable
     (non-canonical) window positions, 1-based inclusive."""
     from pyspark.sql import Window as W
 
-    grams = positional_window_fps(docs, text_col, id_col, k)
+    grams = positional_window_fps(docs, k)
     canon_doc = (grams.groupBy("gh")
-                 .agg(F.min(id_col).alias("cdoc"),
+                 .agg(F.min("doc_id").alias("cdoc"),
                       F.count(F.lit(1)).alias("n_occ"))
                  .filter(F.col("n_occ") >= 2).drop("n_occ")
                  .withColumnRenamed("gh", "cgh"))
     canon = (grams.join(canon_doc,
                         (F.col("gh") == F.col("cgh"))
-                        & (F.col(id_col) == F.col("cdoc")))
+                        & (F.col("doc_id") == F.col("cdoc")))
              .groupBy("cgh")
              .agg(F.min("cdoc").alias("cdoc"),
                   F.min("pos").alias("cpos")))
     rem = (grams.join(canon, F.col("gh") == F.col("cgh"))
-           .filter(~((F.col(id_col) == F.col("cdoc"))
+           .filter(~((F.col("doc_id") == F.col("cdoc"))
                      & (F.col("pos") == F.col("cpos"))))
-           .select(id_col, "pos"))
+           .select("doc_id", "pos"))
     runs = rem.select(
-        id_col, "pos",
+        "doc_id", "pos",
         (F.col("pos") - F.row_number().over(
-            W.partitionBy(id_col).orderBy("pos"))).alias("grp"))
-    spans = (runs.groupBy(id_col, "grp")
+            W.partitionBy("doc_id").orderBy("pos"))).alias("grp"))
+    spans = (runs.groupBy("doc_id", "grp")
              .agg(F.min("pos").alias("s"),
                   (F.max("pos") + F.lit(k - 1)).alias("e"))
              .drop("grp"))
-    w_prev = (W.partitionBy(id_col).orderBy("s")
+    w_prev = (W.partitionBy("doc_id").orderBy("s")
               .rowsBetween(W.unboundedPreceding, -1))
-    w_run = (W.partitionBy(id_col).orderBy("s")
+    w_run = (W.partitionBy("doc_id").orderBy("s")
              .rowsBetween(W.unboundedPreceding, W.currentRow))
     return (spans.withColumn("pme", F.max("e").over(w_prev))
             .withColumn("island_id", F.sum(
                 F.when(F.col("pme").isNull()
                        | (F.col("s") > F.col("pme")), 1)
                 .otherwise(0)).over(w_run))
-            .select(id_col, "island_id", "s", "e"))
+            .select("doc_id", "island_id", "s", "e"))
 
 
-def exact_substring_apply(docs: DataFrame, text_col: str = "text",
-                          id_col: str = "doc_id", k: int = 50) -> DataFrame:
+def exact_substring_apply(docs: DataFrame, k: int = 50) -> DataFrame:
     """The APPLY step of ExactSubstr dedup (Lee et al. 2022): emit the
     CLEANED corpus — every document's text with its removable islands
     (keep-first canonical semantics, identical geometry to
@@ -613,7 +607,7 @@ def exact_substring_apply(docs: DataFrame, text_col: str = "text",
 
     Returns one row per INPUT document (unaffected documents pass
     through verbatim):
-    (id_col, n_tokens, tokens_kept, cleaned_text). ``tokens_kept``
+    (doc_id, n_tokens, tokens_kept, cleaned_text). ``tokens_kept``
     reconciles exactly with exact_substring_removal's per-document
     accounting; a fully-duplicated non-canonical document yields
     tokens_kept = 0 and cleaned_text = ''.
@@ -625,30 +619,29 @@ def exact_substring_apply(docs: DataFrame, text_col: str = "text",
     the kept tokens); the (tokens, islands) projection is materialized
     below the final projection so the filter HOF evaluates once per
     document even though two output columns consume it."""
-    isl = _removal_islands(docs, text_col, id_col, k)
-    isl_per_doc = (isl.groupBy(id_col)
+    isl = _removal_islands(docs, k)
+    isl_per_doc = (isl.groupBy("doc_id")
                    .agg(F.sort_array(F.collect_list(F.struct(
                        F.col("s").cast("bigint").alias("s"),
                        F.col("e").cast("bigint").alias("e"))))
                         .alias("_isl")))
     empty = "CAST(array() AS array<struct<s:bigint,e:bigint>>)"
-    base = (docs.select(id_col, F.split(F.col(text_col), " ").alias("_toks"))
-            .join(isl_per_doc, id_col, "left")
-            .select(id_col, "_toks",
+    base = (docs.select("doc_id", F.split(F.col("text"), " ").alias("_toks"))
+            .join(isl_per_doc, "doc_id", "left")
+            .select("doc_id", "_toks",
                     F.expr(f"coalesce(_isl, {empty})").alias("_isl")))
     kept = (base.select(
-        id_col, F.size("_toks").cast("bigint").alias("n_tokens"),
+        "doc_id", F.size("_toks").cast("bigint").alias("n_tokens"),
         F.expr("filter(_toks, (x, i) -> NOT exists(_isl,"
                " r -> r.s <= i + 1 AND i + 1 <= r.e))").alias("_kept"))
         .transform(materialize))
     return kept.select(
-        id_col, "n_tokens",
+        "doc_id", "n_tokens",
         F.size("_kept").cast("bigint").alias("tokens_kept"),
         F.array_join("_kept", " ").alias("cleaned_text"))
 
 
-def winnowing_fingerprints(docs: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id", k: int = 5,
+def winnowing_fingerprints(docs: DataFrame, k: int = 5,
                            w: int = 4) -> DataFrame:
     """WINNOWING document fingerprints (Schleimer, Wilkerson & Aiken,
     SIGMOD 2003 — the MOSS algorithm): hash every k-token gram, slide a
@@ -661,7 +654,7 @@ def winnowing_fingerprints(docs: DataFrame, text_col: str = "text",
     ExactSubstr (every window) and MinHash (global sketch, no
     positions).
 
-    Returns (id_col, fp_pos, fp): distinct selected fingerprints,
+    Returns (doc_id, fp_pos, fp): distinct selected fingerprints,
     fp_pos the 1-based token position of the selected gram.
 
     Cross-engine determinism: the window argmin is computed as a plain
@@ -689,19 +682,19 @@ def winnowing_fingerprints(docs: DataFrame, text_col: str = "text",
     """
     from pyspark.sql import Window as W
 
-    grams = (positional_window_fps(docs, text_col, id_col, k)
+    grams = (positional_window_fps(docs, k)
              .filter(F.col("pos") < 10 ** 8))
     enc = F.concat(
         F.col("gh"),
         F.lpad((F.lit(99999999) - F.col("pos")).cast("string"), 8, "0"))
-    frame = (W.partitionBy(id_col).orderBy("pos").rowsBetween(0, w - 1))
-    whole = W.partitionBy(id_col)
+    frame = (W.partitionBy("doc_id").orderBy("pos").rowsBetween(0, w - 1))
+    whole = W.partitionBy("doc_id")
     return (grams
             .withColumn("_enc", enc)
             .withColumn("_ng", F.count(F.lit(1)).over(whole))
             .withColumn("_sel", F.min("_enc").over(frame))
             .filter(F.col("pos") <= F.col("_ng") - w + 1)
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
                     (F.lit(99999999)
                      - F.substring("_sel", 33, 8).cast("int"))
                     .cast("bigint").alias("fp_pos"),

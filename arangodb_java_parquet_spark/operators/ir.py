@@ -81,15 +81,18 @@ def bm25_scores(docs: DataFrame, text_col: str, id_col: str,
             .agg(_round_dsum(contrib).alias("score")))
 
 
-def inverted_index(docs: DataFrame, text_col: str, id_col: str,
-                   posting_cap: int = 10) -> DataFrame:
+# doc ids kept per posting list of inverted_index
+POSTING_CAP = 10
+
+
+def inverted_index(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Inverted index: per token, document frequency, collection frequency,
-    and a sorted, CAPPED posting list (first ``posting_cap`` doc ids).
+    and a sorted, CAPPED posting list (first POSTING_CAP doc ids).
 
     df/cf are plain combinable aggregations over (tok, id) — they scale.
     The posting list is capped BEFORE collect_list via a two-phase
     row_number over the pre-aggregated (tok, id) pairs — the window input
-    is one row per distinct (tok, doc), and only ``posting_cap`` survivors
+    is one row per distinct (tok, doc), and only POSTING_CAP survivors
     per token reach collect_list, so no hot-token array ever exceeds the
     cap. Output: (tok, df, cf, postings).
     """
@@ -101,7 +104,7 @@ def inverted_index(docs: DataFrame, text_col: str, id_col: str,
         F.sum("tf").alias("cf"))
     w = Window.partitionBy("tok").orderBy(id_col)
     capped = (per_doc.withColumn("rn", F.row_number().over(w))
-              .filter(F.col("rn") <= posting_cap))
+              .filter(F.col("rn") <= POSTING_CAP))
     postings = capped.groupBy("tok").agg(
         F.sort_array(F.collect_list(id_col)).alias("postings"))
     return stats.join(postings, "tok")

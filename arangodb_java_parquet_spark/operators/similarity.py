@@ -85,7 +85,11 @@ def topk_cosine_bruteforce(queries: DataFrame, corpus: DataFrame, *,
             .select("qid", "vid", "cos_sim", "rn"))
 
 
-def srp_bucket(vec: Column, n_bits: int = 4) -> Column:
+# the SRP bucket width of topk_cosine_lsh and the bucketed oracles
+SRP_BITS = 4
+
+
+def srp_bucket(vec: Column, n_bits: int) -> Column:
     """Sign-random-projection LSH bucket id using the first ``n_bits``
     coordinate axes as (deterministic, engine-portable) hyperplanes:
     bit_i = 1 if vec[i] > 0. Real deployments draw random hyperplanes; axes
@@ -296,7 +300,7 @@ def ivf_probe(queries: DataFrame, corpus: DataFrame, centroids: list, *,
 
 def ivf_topk_cosine(queries: DataFrame, corpus: DataFrame, *,
                     id_col: str, vec_col: str, k: int,
-                    n_iter: int = 3) -> DataFrame:
+                    n_iter: int) -> DataFrame:
     """IVF (inverted-file) approximate top-k: k-means-lite centroids
     partition the corpus into cells; each query probes only its
     ``IVF_PROBES`` nearest cells. Inline composition of
@@ -315,10 +319,11 @@ def ivf_topk_cosine(queries: DataFrame, corpus: DataFrame, *,
 
 def topk_cosine_lsh(queries: DataFrame, corpus: DataFrame, *,
                     id_col: str, vec_col: str, k: int,
-                    n_bits: int = 4) -> DataFrame:
-    """Approximate top-k: equi-join on the SRP bucket, then exact cosine
-    within the bucket. Replaces the O(|Q|·|C|) cross product with
-    O(|Q|·|C| / 2^n_bits) expected comparisons and a shuffle on bucket id.
+                    n_bits: int = SRP_BITS) -> DataFrame:
+    """Approximate top-k: equi-join on the ``n_bits``-bit SRP bucket, then
+    exact cosine within the bucket. Replaces the O(|Q|·|C|) cross product
+    with O(|Q|·|C| / 2^n_bits) expected comparisons and a shuffle on
+    bucket id.
     Norms per side below the join, single dot per pair (see
     topk_cosine_bruteforce)."""
     q = (queries.select(F.col(id_col).alias("qid"),
@@ -765,10 +770,13 @@ ARROW_PQ_CONSUMERS = frozenset({
 })
 
 
-def gram_matrix_arrow(emb: DataFrame, *, vec_col: str = "embedding",
-                      dim: int = 64, scale: int = 8) -> DataFrame:
-    """Distributed Gram matrix G = Σ v·vᵀ (upper triangle, 1-based i<=j),
-    Arrow production path.
+# decimals each gram_matrix_arrow product is rounded to
+GRAM_SCALE = 8
+
+
+def gram_matrix_arrow(emb: DataFrame, *, dim: int = 64) -> DataFrame:
+    """Distributed Gram matrix G = Σ v·vᵀ (upper triangle, 1-based i<=j)
+    of the ``embedding`` column, Arrow production path.
 
     The JVM formulation (queries/similarity.py:emb_gram_matrix) explodes
     d²/2 rows PER VECTOR through the aggregator — fine at d=64, a
@@ -780,27 +788,27 @@ def gram_matrix_arrow(emb: DataFrame, *, vec_col: str = "embedding",
     ~8M rows once, not per vector.
 
     Determinism (mirrors the JVM decimal path bit-for-bit): each
-    per-element product is rounded to ``scale`` decimals and accumulated
+    per-element product is rounded to GRAM_SCALE decimals and accumulated
     as an exact scaled int64 — the numpy analog of
     SUM(CAST(prod AS DECIMAL(30,8))) — then the final bigint sum divides
-    by 10^scale (both the decimal→double cast and this division return
+    by 10^GRAM_SCALE (both the decimal→double cast and this division return
     the nearest double to the same exact rational). The only theoretical
-    divergence is a product landing exactly half-way at the (scale+1)-th
+    divergence is a product landing exactly half-way at the (GRAM_SCALE+1)-th
     decimal (np.round half-even vs Java HALF_UP) — unobservable on
     float-derived products; tests/test_similarity.py::
     test_gram_matrix_arrow_matches_jvm pins equality empirically, same
     pattern as the PQ arrow twin.
 
-    int64 headroom: |v_i| ≤ O(1) ⇒ scaled products ≤ ~10^scale; the
+    int64 headroom: |v_i| ≤ O(1) ⇒ scaled products ≤ ~10^GRAM_SCALE; the
     per-partition partial stays far below 2^63 up to ~10^10 rows per
-    partition at scale=8.
+    partition at GRAM_SCALE=8.
     """
     import numpy as np
 
     from arangodb_java_parquet_spark.shipping import ensure_package_shipped
     ensure_package_shipped(emb.sparkSession)
 
-    mul = float(10 ** scale)
+    mul = float(10 ** GRAM_SCALE)
 
     def partial_gram(batches):
         import pandas as pd
@@ -811,7 +819,7 @@ def gram_matrix_arrow(emb: DataFrame, *, vec_col: str = "embedding",
                 continue
             seen = True
             X = np.array([np.asarray(v, dtype="float64")
-                          for v in pdf[vec_col]])
+                          for v in pdf["embedding"]])
             # row-chunks bound the (chunk × d × d) product tensor to a few
             # MB at any batch size
             for lo in range(0, len(X), 256):
@@ -824,7 +832,7 @@ def gram_matrix_arrow(emb: DataFrame, *, vec_col: str = "embedding",
                                 "j": (iu[1] + 1).astype("int64"),
                                 "sg": acc[iu]})
 
-    part = emb.select(vec_col).mapInPandas(
+    part = emb.select("embedding").mapInPandas(
         partial_gram, schema="i bigint, j bigint, sg bigint")
     return (part.groupBy("i", "j")
             .agg((F.sum("sg") / F.lit(mul)).alias("g")))

@@ -22,15 +22,19 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def salted_agg(df: DataFrame, key: str, salt_src: str, aggs: dict,
-               n_salts: int = 16) -> DataFrame:
-    """Two-stage salted aggregation.
+# salts of salted_agg's first stage
+AGG_SALTS = 16
+
+
+def salted_agg(df: DataFrame, key: str, salt_src: str,
+               aggs: dict) -> DataFrame:
+    """Two-stage salted aggregation over AGG_SALTS salts.
 
     ``aggs`` maps output column name -> (stage1_agg_fn, stage2_merge_fn),
     each a ``Column -> Column`` (e.g. count then sum of partial counts).
     ``salt_src`` is any row-level column whose hash spreads rows uniformly.
     """
-    salt = (F.abs(F.hash(F.col(salt_src))) % n_salts).alias("__salt")
+    salt = (F.abs(F.hash(F.col(salt_src))) % AGG_SALTS).alias("__salt")
     stage1 = (df.withColumn("__salt", salt)
               .groupBy(key, "__salt")
               .agg(*[fn1(F.col(c_in)).alias(f"__p_{out}")

@@ -13,11 +13,11 @@ from pyspark.sql import functions as F
 
 def asof_join(left: DataFrame, right: DataFrame, *,
               on: str, left_time: str, right_time: str,
-              value_cols: list[str],
-              right_on: str | None = None,
+              value_cols: list[str], right_on: str,
               direction: str = "backward",
               tolerance_seconds: float | None = None) -> DataFrame:
-    """As-of join, matched on ``on``; for each left row take
+    """As-of join, left ``on`` matched to right ``right_on``; for each
+    left row take
 
     * ``direction="backward"`` — the most recent right row with
       ``right_time <= left_time``;
@@ -54,7 +54,6 @@ def asof_join(left: DataFrame, right: DataFrame, *,
     """
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"unknown as-of direction: {direction!r}")
-    right_on = right_on or on
     right = right.filter(F.col(right_on).isNotNull()
                          & F.col(right_time).isNotNull())
 
@@ -147,14 +146,14 @@ def asof_join(left: DataFrame, right: DataFrame, *,
 
 
 def sessionize(df: DataFrame, *, key: str, time: str,
-               gap: Column, tiebreak: list[str] | None = None) -> DataFrame:
+               gap: Column, tiebreak: list[str]) -> DataFrame:
     """Assign session ids: a new session starts when the gap to the previous
     event of the same key exceeds ``gap`` (seconds).
 
     lag + cumulative sum of boundary flags — one shuffle on ``key``.
     ``tiebreak`` columns make ordering total when timestamps can collide.
     """
-    w = W.partitionBy(key).orderBy(time, *(tiebreak or []))
+    w = W.partitionBy(key).orderBy(time, *tiebreak)
 
     def epoch_s(c: Column) -> Column:
         # TIMESTAMP_NTZ can't cast straight to double; go through micros

@@ -261,8 +261,7 @@ def stream_windowed_counts(spark, sf_dir):
     the complete-mode output must equal the batch aggregation — counts plus
     exact-decimal sums make that bit-stable.
     """
-    agg = windowed_event_counts(stream_table(spark, sf_dir, "events"),
-                                window="1 hour")
+    agg = windowed_event_counts(stream_table(spark, sf_dir, "events"))
     return drain(agg, "complete")
 
 
@@ -784,8 +783,7 @@ def stream_sink_collection_roundtrip(spark, sf_dir):
     col = LocalCollection(root, "events_stream")
     q = stream_load_to_collection(
         spark, stream_dir, col, schema=raw.schema,
-        checkpoint_dir=f"{root}/ckpt", batch_size=5000,
-        trigger_once=True)
+        checkpoint_dir=f"{root}/ckpt", batch_size=5000)
     q.awaitTermination()
     back_schema = T.StructType([f for f in raw.schema
                                 if f.name in ("event_id", "user_id",

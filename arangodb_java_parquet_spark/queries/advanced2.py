@@ -184,7 +184,7 @@ def _pca_gram_and_v(spark, sf_dir):
     from arangodb_java_parquet_spark.operators.similarity import (
         gram_matrix_arrow)
     e = t(spark, sf_dir, "embeddings")
-    tri = gram_matrix_arrow(e, vec_col="embedding", dim=64, scale=8)
+    tri = gram_matrix_arrow(e, dim=64)
     # the full (mirrored) Gram feeds all three matvec iterations —
     # materialize once (non-canonicalizing mapInPandas lineage)
     g = (tri.unionByName(
@@ -310,7 +310,7 @@ def stream_stream_left_outer_join(spark, sf_dir):
     joined = (stream_interval_join(
         sides[0], sides[1], left_key="c_user", right_key="p_user",
         left_time="c_ts", right_time="p_ts",
-        within="30 minutes", how="left_outer")
+        how="left_outer")
         .select(F.col("c_user").alias("user_id"),
                 F.col("c_id").alias("click_id"),
                 F.col("p_id").alias("purchase_id"),

@@ -207,9 +207,8 @@ def graph_adamic_adar(spark, sf_dir):
     from arangodb_java_parquet_spark.operators.dedup import (
         char_shingles, lsh_candidate_pairs_capped, minhash_signatures)
     d = t(spark, sf_dir, "documents")
-    sh = char_shingles(d, "text", "doc_id", k=5, distinct=False)
-    cand = (lsh_candidate_pairs_capped(
-                minhash_signatures(sh, "doc_id"), "doc_id", max_bucket=32)
+    sh = char_shingles(d)
+    cand = (lsh_candidate_pairs_capped(minhash_signatures(sh), max_bucket=32)
             .transform(materialize))  # feeds edges + the anti-join
     edges = (symmetric_edges(cand))
     deg = edges.groupBy(F.col("src").alias("node")) \
@@ -308,7 +307,7 @@ def emb_linear_cka(spark, sf_dir):
         gram_matrix_arrow)
     emb = t(spark, sf_dir, "embeddings")
     d2 = 2 * _CKA_D
-    tri = gram_matrix_arrow(emb, vec_col="embedding", dim=d2, scale=8)
+    tri = gram_matrix_arrow(emb, dim=d2)
     nn = emb.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     idx = F.explode(F.sequence(F.lit(1), F.lit(d2))).alias("i")
     mu = (emb.select(idx, F.col("embedding").alias("e"))

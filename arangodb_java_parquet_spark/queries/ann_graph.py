@@ -48,20 +48,14 @@ from pyspark.sql import functions as F
 
 from arangodb_java_parquet_spark.operators.similarity import (
     nndescent_knn_graph, topk_cosine_bruteforce)
-from arangodb_java_parquet_spark.queries.common import SQL_DOT, query, t
+from arangodb_java_parquet_spark.queries.common import (
+    SQL_DOT, query, srp_bucket_sql, t)
 
 _K = 8        # graph out-degree (and reverse-edge cap)
 _INIT_W = 8   # init diversity edges: ids within ±8
 _INIT_BITS = 6  # init bucket edges: 6-bit SRP (axis hyperplanes)
 _ROUNDS = 2   # fixed NN-descent rounds
 _NPROBE = 50  # recall probe queries (vec_id < 50)
-
-# 6-bit SRP bucket, axis hyperplanes, MSB = dim 1 (mirrors
-# operators/similarity.py srp_bucket(vec, 6))
-_SQL_BKT = "(" + " + ".join(
-    f"(CASE WHEN embedding[{i + 1}] > 0 THEN 1 ELSE 0 END) * "
-    f"{1 << (_INIT_BITS - 1 - i)}"
-    for i in range(_INIT_BITS)) + ")"
 
 
 def _nnd_sql() -> str:
@@ -71,7 +65,7 @@ def _nnd_sql() -> str:
     parts = [f"""WITH b AS MATERIALIZED (
   SELECT vec_id AS id, embedding AS vec,
          sqrt({SQL_DOT.format(a='embedding', b='embedding')}) AS nrm,
-         {_SQL_BKT} AS bkt
+         {srp_bucket_sql(_INIT_BITS)} AS bkt
   FROM embeddings
 ),
 i0 AS (

@@ -171,6 +171,17 @@ def sql_cos(a: str, b: str) -> str:
     return f"round(({d}) / NULLIF(({na}) * ({nb}), 0), 9)"
 
 
+def srp_bucket_sql(n_bits: int, vec: str = "embedding") -> str:
+    """The SRP bucket of a DOUBLE-list expression: the oracle twin of
+    operators/similarity.srp_bucket, bit i (1-based vec[i] > 0) weighted
+    2^(n_bits - i), the first axis the most significant. The ONE source
+    of the bucket SQL; the CASE sum is never hand-copied."""
+    bits = [f"(CASE WHEN {vec}[{i + 1}] > 0 THEN 1 ELSE 0 END)"
+            + (f" * {1 << (n_bits - 1 - i)}" if i < n_bits - 1 else "")
+            for i in range(n_bits)]
+    return "(" + " +\n          ".join(bits) + ")"
+
+
 # -- exact distributed percentiles -------------------------------------------
 
 def exact_percentiles(df: DataFrame, value_col: str,

@@ -23,7 +23,8 @@ from arangodb_java_parquet_spark.operators.dedup import (
     char_shingles, lsh_bands, lsh_candidate_pairs,
     minhash_signatures, symmetric_edges, word_ngrams)
 from arangodb_java_parquet_spark.queries.common import query, t
-from arangodb_java_parquet_spark.queries.text_pipeline import _MINHASH_SIG_SQL
+from arangodb_java_parquet_spark.queries.text_pipeline import (
+    _MINHASH_SIG_SQL, lsh_pairs_cte_sql)
 
 
 def _must_replace(base: str, old: str, new: str, count: int = -1) -> str:
@@ -83,19 +84,8 @@ def decontaminate_benchmark_overlap(spark, sf_dir):
 # duplicate-cluster resolution (connected components over LSH pairs)
 # ---------------------------------------------------------------------------
 
-_CLUSTER_SQL = _must_replace(_MINHASH_SIG_SQL, "WITH ", "WITH RECURSIVE ", 1) + """
-, bands AS (
-  SELECT doc_id, 0 AS band_idx,
-         md5(h0 || '|' || h1 || '|' || h2 || '|' || h3) AS band_hash FROM sigs
-  UNION ALL SELECT doc_id, 1,
-         md5(h4 || '|' || h5 || '|' || h6 || '|' || h7) FROM sigs
-),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-),
+_CLUSTER_SQL = (_must_replace(_MINHASH_SIG_SQL, "WITH ", "WITH RECURSIVE ", 1)
+    + lsh_pairs_cte_sql("pairs") + """,
 edges AS (
   SELECT doc_a AS src, doc_b AS dst FROM pairs
   UNION SELECT doc_b, doc_a FROM pairs
@@ -106,7 +96,7 @@ reach(src, dst) AS (
   SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
 )
 SELECT src AS node, MIN(dst) AS component FROM reach GROUP BY src
-"""
+""")
 
 
 def _components_lineage(spark, sf_dir):
@@ -115,8 +105,8 @@ def _components_lineage(spark, sf_dir):
     propagation is over the doc×bucket BIPARTITE graph (a k-doc bucket
     costs O(k) per round, never O(k²) pairs)."""
     d = t(spark, sf_dir, "documents")
-    sh = char_shingles(d, "text", "doc_id", k=5, distinct=False)
-    bands = lsh_bands(minhash_signatures(sh, "doc_id"), "doc_id")
+    sh = char_shingles(d)
+    bands = lsh_bands(minhash_signatures(sh))
     return connected_components_bipartite(
         bands, "doc_id", ["band_idx", "band_hash"])
 
@@ -656,19 +646,8 @@ def mixture_source_weights(spark, sf_dir):
 # the full dedup funnel, end to end
 # ---------------------------------------------------------------------------
 
-_FUNNEL_SQL = _must_replace(_MINHASH_SIG_SQL, "WITH ", "WITH RECURSIVE ", 1) + """
-, bands AS (
-  SELECT doc_id, 0 AS band_idx,
-         md5(h0 || '|' || h1 || '|' || h2 || '|' || h3) AS band_hash FROM sigs
-  UNION ALL SELECT doc_id, 1,
-         md5(h4 || '|' || h5 || '|' || h6 || '|' || h7) FROM sigs
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-),
+_FUNNEL_SQL = (_must_replace(_MINHASH_SIG_SQL, "WITH ", "WITH RECURSIVE ", 1)
+    + lsh_pairs_cte_sql("cand") + """,
 grams AS (
   SELECT DISTINCT doc_id,
          md5(array_to_string((string_split(text, ' '))[i : i + 2], ' '))
@@ -706,7 +685,7 @@ dropped AS (
 )
 SELECT doc_id FROM documents
 WHERE doc_id NOT IN (SELECT doc_id FROM dropped)
-"""
+""")
 
 
 @query("dedup_funnel_survivors", _FUNNEL_SQL)
@@ -721,13 +700,13 @@ def dedup_funnel_survivors(spark, sf_dir):
     entry proves the composition. Every shuffle in the funnel moves
     (md5, id) pairs only."""
     d = t(spark, sf_dir, "documents")
-    sh = char_shingles(d, "text", "doc_id", k=5, distinct=False)
-    cand = lsh_candidate_pairs(minhash_signatures(sh, "doc_id"), "doc_id")
+    sh = char_shingles(d)
+    cand = lsh_candidate_pairs(minhash_signatures(sh))
     # grams feeds THREE consumers (counts, both verify-join sides) over
     # the full corpus: spread the explode (this is not the bounded-
     # universe case do_spread=False exists for) and materialize once
     # (r15: 6.15 s -> see OPTIMIZATION_r15.md)
-    grams = (word_ngrams(d, "text", "doc_id", n=3)
+    grams = (word_ngrams(d)
              .select("doc_id", F.md5("shingle").alias("gh")).distinct()
              .transform(materialize))
     counts = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
@@ -751,14 +730,9 @@ def dedup_funnel_survivors(spark, sf_dir):
     return d.join(dropped, "doc_id", "left_anti").select("doc_id")
 
 
-_PAGERANK_TAIL = ', cand AS (\n  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b\n  FROM bands a JOIN bands b\n    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash\n   AND a.doc_id < b.doc_id\n),\nedges AS (\n  SELECT doc_a AS src, doc_b AS dst FROM cand\n  UNION ALL SELECT doc_b, doc_a FROM cand\n),\nnodes AS (SELECT DISTINCT src AS node FROM edges),\noutdeg AS (SELECT src AS node, COUNT(*) AS outdeg FROM edges GROUP BY src),\npr0 AS (SELECT node, 1.0::DOUBLE AS rank FROM nodes),\npr1 AS (\n  SELECT n.node,\n         round(0.15 + 0.85 * COALESCE(s.s, 0.0), 7) AS rank\n  FROM nodes n LEFT JOIN (\n    SELECT e.dst AS node,\n           CAST(SUM(CAST(round(p.rank / o.outdeg, 7) AS DECIMAL(20,7)))\n                AS DOUBLE) AS s\n    FROM edges e\n    JOIN pr0 p ON p.node = e.src\n    JOIN outdeg o ON o.node = e.src\n    GROUP BY e.dst) s ON s.node = n.node\n),\npr2 AS (\n  SELECT n.node,\n         round(0.15 + 0.85 * COALESCE(s.s, 0.0), 7) AS rank\n  FROM nodes n LEFT JOIN (\n    SELECT e.dst AS node,\n           CAST(SUM(CAST(round(p.rank / o.outdeg, 7) AS DECIMAL(20,7)))\n                AS DOUBLE) AS s\n    FROM edges e\n    JOIN pr1 p ON p.node = e.src\n    JOIN outdeg o ON o.node = e.src\n    GROUP BY e.dst) s ON s.node = n.node\n),\npr3 AS (\n  SELECT n.node,\n         round(0.15 + 0.85 * COALESCE(s.s, 0.0), 7) AS rank\n  FROM nodes n LEFT JOIN (\n    SELECT e.dst AS node,\n           CAST(SUM(CAST(round(p.rank / o.outdeg, 7) AS DECIMAL(20,7)))\n                AS DOUBLE) AS s\n    FROM edges e\n    JOIN pr2 p ON p.node = e.src\n    JOIN outdeg o ON o.node = e.src\n    GROUP BY e.dst) s ON s.node = n.node\n),\npr4 AS (\n  SELECT n.node,\n         round(0.15 + 0.85 * COALESCE(s.s, 0.0), 7) AS rank\n  FROM nodes n LEFT JOIN (\n    SELECT e.dst AS node,\n           CAST(SUM(CAST(round(p.rank / o.outdeg, 7) AS DECIMAL(20,7)))\n                AS DOUBLE) AS s\n    FROM edges e\n    JOIN pr3 p ON p.node = e.src\n    JOIN outdeg o ON o.node = e.src\n    GROUP BY e.dst) s ON s.node = n.node\n),\npr5 AS (\n  SELECT n.node,\n         round(0.15 + 0.85 * COALESCE(s.s, 0.0), 7) AS rank\n  FROM nodes n LEFT JOIN (\n    SELECT e.dst AS node,\n           CAST(SUM(CAST(round(p.rank / o.outdeg, 7) AS DECIMAL(20,7)))\n                AS DOUBLE) AS s\n    FROM edges e\n    JOIN pr4 p ON p.node = e.src\n    JOIN outdeg o ON o.node = e.src\n    GROUP BY e.dst) s ON s.node = n.node\n)\nSELECT node AS doc_id, rank FROM pr5\n'
-_PAGERANK_SQL = (_MINHASH_SIG_SQL + """
-, bands AS (
-  SELECT doc_id, 0 AS band_idx,
-         md5(h0 || '|' || h1 || '|' || h2 || '|' || h3) AS band_hash FROM sigs
-  UNION ALL SELECT doc_id, 1,
-         md5(h4 || '|' || h5 || '|' || h6 || '|' || h7) FROM sigs
-)""" + _PAGERANK_TAIL)
+_PAGERANK_TAIL = ',\nedges AS (\n  SELECT doc_a AS src, doc_b AS dst FROM cand\n  UNION ALL SELECT doc_b, doc_a FROM cand\n),\nnodes AS (SELECT DISTINCT src AS node FROM edges),\noutdeg AS (SELECT src AS node, COUNT(*) AS outdeg FROM edges GROUP BY src),\npr0 AS (SELECT node, 1.0::DOUBLE AS rank FROM nodes),\npr1 AS (\n  SELECT n.node,\n         round(0.15 + 0.85 * COALESCE(s.s, 0.0), 7) AS rank\n  FROM nodes n LEFT JOIN (\n    SELECT e.dst AS node,\n           CAST(SUM(CAST(round(p.rank / o.outdeg, 7) AS DECIMAL(20,7)))\n                AS DOUBLE) AS s\n    FROM edges e\n    JOIN pr0 p ON p.node = e.src\n    JOIN outdeg o ON o.node = e.src\n    GROUP BY e.dst) s ON s.node = n.node\n),\npr2 AS (\n  SELECT n.node,\n         round(0.15 + 0.85 * COALESCE(s.s, 0.0), 7) AS rank\n  FROM nodes n LEFT JOIN (\n    SELECT e.dst AS node,\n           CAST(SUM(CAST(round(p.rank / o.outdeg, 7) AS DECIMAL(20,7)))\n                AS DOUBLE) AS s\n    FROM edges e\n    JOIN pr1 p ON p.node = e.src\n    JOIN outdeg o ON o.node = e.src\n    GROUP BY e.dst) s ON s.node = n.node\n),\npr3 AS (\n  SELECT n.node,\n         round(0.15 + 0.85 * COALESCE(s.s, 0.0), 7) AS rank\n  FROM nodes n LEFT JOIN (\n    SELECT e.dst AS node,\n           CAST(SUM(CAST(round(p.rank / o.outdeg, 7) AS DECIMAL(20,7)))\n                AS DOUBLE) AS s\n    FROM edges e\n    JOIN pr2 p ON p.node = e.src\n    JOIN outdeg o ON o.node = e.src\n    GROUP BY e.dst) s ON s.node = n.node\n),\npr4 AS (\n  SELECT n.node,\n         round(0.15 + 0.85 * COALESCE(s.s, 0.0), 7) AS rank\n  FROM nodes n LEFT JOIN (\n    SELECT e.dst AS node,\n           CAST(SUM(CAST(round(p.rank / o.outdeg, 7) AS DECIMAL(20,7)))\n                AS DOUBLE) AS s\n    FROM edges e\n    JOIN pr3 p ON p.node = e.src\n    JOIN outdeg o ON o.node = e.src\n    GROUP BY e.dst) s ON s.node = n.node\n),\npr5 AS (\n  SELECT n.node,\n         round(0.15 + 0.85 * COALESCE(s.s, 0.0), 7) AS rank\n  FROM nodes n LEFT JOIN (\n    SELECT e.dst AS node,\n           CAST(SUM(CAST(round(p.rank / o.outdeg, 7) AS DECIMAL(20,7)))\n                AS DOUBLE) AS s\n    FROM edges e\n    JOIN pr4 p ON p.node = e.src\n    JOIN outdeg o ON o.node = e.src\n    GROUP BY e.dst) s ON s.node = n.node\n)\nSELECT node AS doc_id, rank FROM pr5\n'
+_PAGERANK_SQL = (_MINHASH_SIG_SQL + lsh_pairs_cte_sql("cand")
+                 + _PAGERANK_TAIL)
 
 
 @query("graph_pagerank_simdocs", _PAGERANK_SQL)
@@ -771,10 +745,10 @@ def graph_pagerank_simdocs(spark, sf_dir):
     one join + one combinable aggregation on the dst key — the textbook
     distributed PageRank step, O(edges) per round at any scale."""
     d = t(spark, sf_dir, "documents")
-    sh = char_shingles(d, "text", "doc_id", k=5, distinct=False)
-    cand = lsh_candidate_pairs(minhash_signatures(sh, "doc_id"), "doc_id")
+    sh = char_shingles(d)
+    cand = lsh_candidate_pairs(minhash_signatures(sh))
     edges = (symmetric_edges(cand))
-    pr = pagerank_fixed(edges, "src", "dst", iterations=5, damping=0.85)
+    pr = pagerank_fixed(edges, "src", "dst", iterations=5)
     return pr.select(F.col("node").alias("doc_id"), "rank")
 
 

@@ -24,8 +24,9 @@ from pyspark.sql import functions as F
 
 from arangodb_java_parquet_spark.materialize import materialize
 from arangodb_java_parquet_spark.operators.similarity import (
-    dot, norm, srp_bucket)
-from arangodb_java_parquet_spark.queries.common import query, sql_cos, t
+    SRP_BITS, dot, norm, srp_bucket)
+from arangodb_java_parquet_spark.queries.common import (
+    query, sql_cos, srp_bucket_sql, t)
 
 # ---------------------------------------------------------------------------
 # Local Outlier Factor (Breunig et al. 2000)
@@ -44,10 +45,7 @@ _LOF_EPS_DEN = 1 << 20
 _LOF_SQL = f"""
 WITH b AS (
   SELECT vec_id, embedding,
-         ((CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END) * 8 +
-          (CASE WHEN embedding[2] > 0 THEN 1 ELSE 0 END) * 4 +
-          (CASE WHEN embedding[3] > 0 THEN 1 ELSE 0 END) * 2 +
-          (CASE WHEN embedding[4] > 0 THEN 1 ELSE 0 END)) AS bucket
+         {srp_bucket_sql(SRP_BITS)} AS bucket
   FROM embeddings
 ),
 cand AS (
@@ -121,7 +119,7 @@ def emb_lof_outliers(spark, sf_dir):
     neighborhood (HAVING COUNT = k, identically on both engines)."""
     e = t(spark, sf_dir, "embeddings")
     b = (e.select("vec_id", "embedding",
-                  srp_bucket(F.col("embedding"), 4).alias("bucket"))
+                  srp_bucket(F.col("embedding"), SRP_BITS).alias("bucket"))
          .withColumn("nrm", norm(F.col("embedding"))))
     wc = W.partitionBy("bucket").orderBy("vec_id")
     cand = (b.withColumn("crn", F.row_number().over(wc))

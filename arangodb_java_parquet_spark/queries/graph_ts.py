@@ -181,9 +181,8 @@ def graph_local_clustering(spark, sf_dir):
     integers, lcc an exact-rational double division. The capped graph
     is the r12 default for pre-dedup diagnostics (SKEW_PROBE.md)."""
     d = t(spark, sf_dir, "documents")
-    sh = char_shingles(d, "text", "doc_id", k=5, distinct=False)
-    e = (lsh_candidate_pairs_capped(minhash_signatures(sh, "doc_id"),
-                                    "doc_id", max_bucket=32)
+    sh = char_shingles(d)
+    e = (lsh_candidate_pairs_capped(minhash_signatures(sh), max_bucket=32)
          .select("doc_a", "doc_b").transform(materialize))
     deg = (e.select(F.col("doc_a").alias("node"))
            .unionAll(e.select("doc_b"))

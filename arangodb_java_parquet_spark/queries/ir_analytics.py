@@ -19,7 +19,8 @@ from arangodb_java_parquet_spark.operators.dedup import (
 from arangodb_java_parquet_spark.operators.ir import (
     bm25_scores, inverted_index, source_kl_divergence, token_entropy)
 from arangodb_java_parquet_spark.queries.common import query, t
-from arangodb_java_parquet_spark.queries.text_pipeline import _MINHASH_SIG_SQL
+from arangodb_java_parquet_spark.queries.text_pipeline import (
+    _MINHASH_SIG_SQL, lsh_pairs_cte_sql)
 
 _BM25_TERMS = ("spark", "query", "table")
 _BM25_TERMS_SQL = ", ".join(f"'{x}'" for x in _BM25_TERMS)
@@ -94,7 +95,7 @@ def ir_inverted_index(spark, sf_dir):
     comma-joined: the external driver's pandas canonicalizer cannot hash
     top-level ARRAY columns (registry-wide guard in tests/test_registry.py)."""
     d = t(spark, sf_dir, "documents")
-    idx = inverted_index(d, "text", "doc_id", posting_cap=10)
+    idx = inverted_index(d, "text", "doc_id")
     return idx.select(
         "tok", "df", "cf",
         F.array_join(F.col("postings").cast("array<string>"), ",")
@@ -185,8 +186,8 @@ def dedup_containment(spark, sf_dir):
     universe (operators/dedup.py:containment_pairs) — catches short
     documents embedded in longer ones that Jaccard misses."""
     d = t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    grams = word_ngrams(d, "text", "doc_id", n=3, do_spread=False)
-    return containment_pairs(grams, "doc_id", threshold=0.08, bounded=True)
+    grams = word_ngrams(d, do_spread=False)
+    return containment_pairs(grams, "doc_id", threshold=0.08)
 
 
 def _lm_bigrams_stored(spark, sf_dir):
@@ -289,19 +290,8 @@ def quality_bigram_logprob(spark, sf_dir):
         uni=_lm_unigrams_stored(spark, sf_dir))
 
 
-@query("dedup_minhash_jaccard_estimate", _MINHASH_SIG_SQL + """
-, bands AS (
-  SELECT doc_id, 0 AS band_idx,
-         md5(h0 || '|' || h1 || '|' || h2 || '|' || h3) AS band_hash FROM sigs
-  UNION ALL SELECT doc_id, 1,
-         md5(h4 || '|' || h5 || '|' || h6 || '|' || h7) FROM sigs
-),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-)
+@query("dedup_minhash_jaccard_estimate",
+       _MINHASH_SIG_SQL + lsh_pairs_cte_sql("pairs") + """
 SELECT p.doc_a, p.doc_b,
        ((CASE WHEN sa.h0 = sb.h0 THEN 1 ELSE 0 END)
       + (CASE WHEN sa.h1 = sb.h1 THEN 1 ELSE 0 END)
@@ -330,10 +320,8 @@ def dedup_minhash_jaccard_estimate(spark, sf_dir):
     # materialize once: pairs, sa and sb otherwise re-derive the full
     # shingle+minhash lineage per consumer (non-canonicalizing md5/HOF
     # subtrees -> no ReusedExchange; the r15 3-pass fix)
-    sigs = minhash_signatures(
-        char_shingles(d, "text", "doc_id", k=5, distinct=False),
-        "doc_id").transform(materialize)
-    pairs = lsh_candidate_pairs(sigs, "doc_id")
+    sigs = minhash_signatures(char_shingles(d)).transform(materialize)
+    pairs = lsh_candidate_pairs(sigs)
     sa = sigs.select([F.col("doc_id").alias("doc_a")]
                      + [F.col(f"h{j}").alias(f"a{j}") for j in range(8)])
     sb = sigs.select([F.col("doc_id").alias("doc_b")]
@@ -1522,19 +1510,8 @@ _BBIT_SQL_FULL = " + ".join(
     f"(CASE WHEN sa.h{j} = sb.h{j} THEN 1 ELSE 0 END)" for j in range(8))
 
 
-@query("dedup_minhash_bbit", _MINHASH_SIG_SQL + f"""
-, bands AS (
-  SELECT doc_id, 0 AS band_idx,
-         md5(h0 || '|' || h1 || '|' || h2 || '|' || h3) AS band_hash FROM sigs
-  UNION ALL SELECT doc_id, 1,
-         md5(h4 || '|' || h5 || '|' || h6 || '|' || h7) FROM sigs
-),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-)
+@query("dedup_minhash_bbit",
+       _MINHASH_SIG_SQL + lsh_pairs_cte_sql("pairs") + f"""
 SELECT p.doc_a, p.doc_b,
        CAST({_BBIT_SQL_BITS_A} AS BIGINT) AS agree_bits,
        (2 * ({_BBIT_SQL_BITS_A}) - 8) / CAST(8 AS DOUBLE)
@@ -1566,10 +1543,8 @@ def dedup_minhash_bbit(spark, sf_dir):
     # materialize once: pairs, sa and sb otherwise re-derive the full
     # shingle+minhash lineage per consumer (non-canonicalizing md5/HOF
     # subtrees -> no ReusedExchange; the r15 3-pass fix)
-    sigs = minhash_signatures(
-        char_shingles(d, "text", "doc_id", k=5, distinct=False),
-        "doc_id").transform(materialize)
-    pairs = lsh_candidate_pairs(sigs, "doc_id")
+    sigs = minhash_signatures(char_shingles(d)).transform(materialize)
+    pairs = lsh_candidate_pairs(sigs)
     sa = sigs.select([F.col("doc_id").alias("doc_a")]
                      + [F.col(f"h{j}").alias(f"a{j}") for j in range(8)])
     sb = sigs.select([F.col("doc_id").alias("doc_b")]
@@ -2061,19 +2036,7 @@ def _lsh_p_sql(r: int, b: int) -> str:
 
 
 def _lsh_planner_sql() -> str:
-    est_cte = """
-, bands AS (
-  SELECT doc_id, 0 AS band_idx,
-         md5(h0 || '|' || h1 || '|' || h2 || '|' || h3) AS band_hash FROM sigs
-  UNION ALL SELECT doc_id, 1,
-         md5(h4 || '|' || h5 || '|' || h6 || '|' || h7) FROM sigs
-),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-),
+    est_cte = lsh_pairs_cte_sql("pairs") + """,
 est AS (
   SELECT ((CASE WHEN sa.h0 = sb.h0 THEN 1 ELSE 0 END)
         + (CASE WHEN sa.h1 = sb.h1 THEN 1 ELSE 0 END)
@@ -2140,10 +2103,8 @@ def dedup_lsh_param_planner(spark, sf_dir):
     # materialize once: pairs, sa and sb otherwise re-derive the full
     # shingle+minhash lineage per consumer (non-canonicalizing md5/HOF
     # subtrees -> no ReusedExchange; the r15 3-pass fix)
-    sigs = minhash_signatures(
-        char_shingles(d, "text", "doc_id", k=5, distinct=False),
-        "doc_id").transform(materialize)
-    pairs = lsh_candidate_pairs(sigs, "doc_id")
+    sigs = minhash_signatures(char_shingles(d)).transform(materialize)
+    pairs = lsh_candidate_pairs(sigs)
     sa = sigs.select([F.col("doc_id").alias("doc_a")]
                      + [F.col(f"h{j}").alias(f"a{j}") for j in range(8)])
     sb = sigs.select([F.col("doc_id").alias("doc_b")]

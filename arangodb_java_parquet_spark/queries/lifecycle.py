@@ -19,7 +19,7 @@ from arangodb_java_parquet_spark.operators.dedup import (
     minhash_signatures)
 from arangodb_java_parquet_spark.queries.common import query, t
 from arangodb_java_parquet_spark.queries.text_pipeline import (
-    _MINHASH_SIG_SQL, capped_pairs_cte_sql)
+    _MINHASH_SIG_SQL, capped_pairs_cte_sql, lsh_pairs_cte_sql)
 
 
 # ---------------------------------------------------------------------------
@@ -248,14 +248,13 @@ def graph_triangle_count(spark, sf_dir):
     operators/dedup.lsh_candidate_pairs for post-dedup corpora. Oracle
     mirrors the capped construction (capped_pairs_cte_sql)."""
     d = t(spark, sf_dir, "documents")
-    sh = char_shingles(d, "text", "doc_id", k=5, distinct=False)
+    sh = char_shingles(d)
     # the edge list feeds FOUR consumers (three join aliases + the edge
     # count): materialize it once — lambda-HOF subtrees in the minhash
     # lineage don't canonicalize, so without this the whole
     # shingle->minhash->LSH derivation re-runs per alias (21 exchanges
     # measured).
-    e = (lsh_candidate_pairs_capped(minhash_signatures(sh, "doc_id"),
-                                    "doc_id", max_bucket=32)
+    e = (lsh_candidate_pairs_capped(minhash_signatures(sh), max_bucket=32)
          .select("doc_a", "doc_b").transform(materialize))
     ab, bc, ac = e.alias("ab"), e.alias("bc"), e.alias("ac")
     tri = (ab.join(bc, F.col("bc.doc_a") == F.col("ab.doc_b"))
@@ -352,19 +351,8 @@ def order_interarrival_stats(spark, sf_dir):
                  .alias("median_gap_days")))
 
 
-@query("graph_degree_distribution", _MINHASH_SIG_SQL + """
-, bands AS (
-  SELECT doc_id, 0 AS band_idx,
-         md5(h0 || '|' || h1 || '|' || h2 || '|' || h3) AS band_hash FROM sigs
-  UNION ALL SELECT doc_id, 1,
-         md5(h4 || '|' || h5 || '|' || h6 || '|' || h7) FROM sigs
-),
-e AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-),
+@query("graph_degree_distribution",
+       _MINHASH_SIG_SQL + lsh_pairs_cte_sql("e") + """,
 deg AS (
   SELECT node, COUNT(*) AS degree
   FROM (SELECT doc_a AS node FROM e UNION ALL SELECT doc_b FROM e)
@@ -383,9 +371,7 @@ def graph_degree_distribution(spark, sf_dir):
     from arangodb_java_parquet_spark.operators.dedup import (
         char_shingles, lsh_candidate_pairs, minhash_signatures)
     d = t(spark, sf_dir, "documents")
-    e = lsh_candidate_pairs(minhash_signatures(
-        char_shingles(d, "text", "doc_id", k=5, distinct=False),
-        "doc_id"), "doc_id")
+    e = lsh_candidate_pairs(minhash_signatures(char_shingles(d)))
     nodes = (e.select(F.col("doc_a").alias("node"))
              .unionAll(e.select(F.col("doc_b").alias("node"))))
     deg = nodes.groupBy("node").agg(F.count(F.lit(1)).alias("degree"))
@@ -545,19 +531,8 @@ def user_longest_streak(spark, sf_dir):
 # global clustering coefficient (round 9c)
 # ---------------------------------------------------------------------------
 
-@query("graph_clustering_coefficient", _MINHASH_SIG_SQL + """
-, bands AS (
-  SELECT doc_id, 0 AS band_idx,
-         md5(h0 || '|' || h1 || '|' || h2 || '|' || h3) AS band_hash FROM sigs
-  UNION ALL SELECT doc_id, 1,
-         md5(h4 || '|' || h5 || '|' || h6 || '|' || h7) FROM sigs
-),
-e AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-),
+@query("graph_clustering_coefficient",
+       _MINHASH_SIG_SQL + lsh_pairs_cte_sql("e") + """,
 tri AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_triangles
   FROM e ab
@@ -596,8 +571,8 @@ def graph_clustering_coefficient(spark, sf_dir):
     graph_label_propagation lesson). All counts integer; the
     coefficient is one IEEE division."""
     d = t(spark, sf_dir, "documents")
-    sh = char_shingles(d, "text", "doc_id", k=5, distinct=False)
-    e = (lsh_candidate_pairs(minhash_signatures(sh, "doc_id"), "doc_id")
+    sh = char_shingles(d)
+    e = (lsh_candidate_pairs(minhash_signatures(sh))
          .select("doc_a", "doc_b")
          .transform(materialize))
     ab, bc, ac = e.alias("ab"), e.alias("bc"), e.alias("ac")

@@ -19,7 +19,9 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from arangodb_java_parquet_spark.materialize import materialize
-from arangodb_java_parquet_spark.queries.common import query, sql_cos, t
+from arangodb_java_parquet_spark.operators.similarity import SRP_BITS
+from arangodb_java_parquet_spark.queries.common import (
+    query, sql_cos, srp_bucket_sql, t)
 
 # ---------------------------------------------------------------------------
 # blocked sorted-neighborhood dedup (SNM)
@@ -230,10 +232,7 @@ _BITEXT_TOPK = 2
 _BITEXT_SQL = f"""
 WITH e AS (
   SELECT d.doc_id, d.lang, emb.embedding,
-         ((CASE WHEN emb.embedding[1] > 0 THEN 1 ELSE 0 END) * 8 +
-          (CASE WHEN emb.embedding[2] > 0 THEN 1 ELSE 0 END) * 4 +
-          (CASE WHEN emb.embedding[3] > 0 THEN 1 ELSE 0 END) * 2 +
-          (CASE WHEN emb.embedding[4] > 0 THEN 1 ELSE 0 END)) AS bucket
+         {srp_bucket_sql(SRP_BITS, 'emb.embedding')} AS bucket
   FROM documents d JOIN embeddings emb ON emb.vec_id = d.doc_id
 ),
 pairs AS (
@@ -275,7 +274,8 @@ def bitext_mining_candidates(spark, sf_dir):
         dot, norm, srp_bucket)
     # materialize: b feeds both self-join sides (the doc⋈embedding join +
     # srp/norm HOFs re-derive per side otherwise — non-canonicalizing) — r15
-    b = (joined.withColumn("bucket", srp_bucket(F.col("embedding"), 4))
+    b = (joined
+         .withColumn("bucket", srp_bucket(F.col("embedding"), SRP_BITS))
          .withColumn("nrm", norm(F.col("embedding")))
          .transform(materialize))
     a = b.alias("a")

@@ -45,7 +45,10 @@ from pyspark.sql import functions as F
 
 from arangodb_java_parquet_spark.operators.curation import (
     connected_components)
-from arangodb_java_parquet_spark.queries.common import materialize, query, t
+from arangodb_java_parquet_spark.operators.similarity import (
+    SRP_BITS, srp_bucket)
+from arangodb_java_parquet_spark.queries.common import (
+    materialize, query, srp_bucket_sql, t)
 
 _MAXV = 300
 _ROUNDS = 12
@@ -53,11 +56,6 @@ _ROUNDS = 12
 _D2 = ("round(list_sum(list_transform(range(1, len({a}) + 1),"
        " i -> ({a}[i]::DOUBLE - {b}[i]::DOUBLE)"
        " * ({a}[i]::DOUBLE - {b}[i]::DOUBLE))), 9)")
-
-_BUCKET = ("((CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END) * 8 +"
-           " (CASE WHEN embedding[2] > 0 THEN 1 ELSE 0 END) * 4 +"
-           " (CASE WHEN embedding[3] > 0 THEN 1 ELSE 0 END) * 2 +"
-           " (CASE WHEN embedding[4] > 0 THEN 1 ELSE 0 END))")
 
 _KRUSKAL_STEP = """CASE
   WHEN acc[2 + CAST(x[1] AS INTEGER)] = acc[2 + CAST(x[2] AS INTEGER)]
@@ -72,7 +70,7 @@ _KRUSKAL_STEP = """CASE
 END"""
 
 _MST_SQL = f"""WITH verts AS (
-  SELECT vec_id, embedding, {_BUCKET} AS bucket,
+  SELECT vec_id, embedding, {srp_bucket_sql(SRP_BITS)} AS bucket,
          CAST(ROW_NUMBER() OVER (ORDER BY vec_id) AS INTEGER) AS idx
   FROM embeddings WHERE vec_id < {_MAXV}
 ),
@@ -136,11 +134,7 @@ def graph_mst_boruvka(spark, sf_dir):
     e = t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _MAXV)
     verts = e.select(
         F.col("vec_id").alias("vid"),
-        (F.when(F.element_at("embedding", 1) > 0, 8).otherwise(0)
-         + F.when(F.element_at("embedding", 2) > 0, 4).otherwise(0)
-         + F.when(F.element_at("embedding", 3) > 0, 2).otherwise(0)
-         + F.when(F.element_at("embedding", 4) > 0, 1).otherwise(0))
-        .alias("bucket"),
+        srp_bucket(F.col("embedding"), SRP_BITS).alias("bucket"),
         F.col("embedding"))
     a = verts.select(F.col("vid").alias("va"),
                      F.col("bucket").alias("ba"),

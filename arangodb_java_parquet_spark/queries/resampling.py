@@ -171,9 +171,8 @@ def graph_powerlaw_alpha(spark, sf_dir):
     from arangodb_java_parquet_spark.operators.dedup import (
         char_shingles, lsh_candidate_pairs_capped, minhash_signatures)
     d = t(spark, sf_dir, "documents")
-    sh = char_shingles(d, "text", "doc_id", k=5, distinct=False)
-    e = (lsh_candidate_pairs_capped(minhash_signatures(sh, "doc_id"),
-                                    "doc_id", max_bucket=32)
+    sh = char_shingles(d)
+    e = (lsh_candidate_pairs_capped(minhash_signatures(sh), max_bucket=32)
          .select("doc_a", "doc_b").transform(materialize))
     deg = (e.select(F.col("doc_a").alias("node"))
            .unionAll(e.select("doc_b"))

@@ -178,20 +178,8 @@ def dedup_incremental_batch(spark, sf_dir):
 
 def _lp_sql() -> str:
     from arangodb_java_parquet_spark.queries.text_pipeline import (
-        _MINHASH_SIG_SQL)
-    return _MINHASH_SIG_SQL + """
-, bands AS (
-  SELECT doc_id, 0 AS band_idx,
-         md5(h0 || '|' || h1 || '|' || h2 || '|' || h3) AS band_hash FROM sigs
-  UNION ALL SELECT doc_id, 1,
-         md5(h4 || '|' || h5 || '|' || h6 || '|' || h7) FROM sigs
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-),
+        _MINHASH_SIG_SQL, lsh_pairs_cte_sql)
+    return _MINHASH_SIG_SQL + lsh_pairs_cte_sql("cand") + """,
 edges AS (
   SELECT doc_a AS src, doc_b AS dst FROM cand
   UNION ALL SELECT doc_b, doc_a FROM cand
@@ -235,8 +223,8 @@ def graph_link_prediction_jaccard(spark, sf_dir):
     from arangodb_java_parquet_spark.operators.dedup import (
         char_shingles, lsh_candidate_pairs, minhash_signatures)
     d = t(spark, sf_dir, "documents")
-    sh = char_shingles(d, "text", "doc_id", k=5, distinct=False)
-    cand = (lsh_candidate_pairs(minhash_signatures(sh, "doc_id"), "doc_id")
+    sh = char_shingles(d)
+    cand = (lsh_candidate_pairs(minhash_signatures(sh))
             .transform(materialize))  # feeds edges + the anti-join
     edges = (symmetric_edges(cand))
     deg = edges.groupBy(F.col("src").alias("node")) \
@@ -507,20 +495,8 @@ _QB_MIN_CHARS = 200
 
 def _bias_sql() -> str:
     from arangodb_java_parquet_spark.queries.text_pipeline import (
-        _MINHASH_SIG_SQL)
-    return _MINHASH_SIG_SQL + f"""
-, bands AS (
-  SELECT doc_id, 0 AS band_idx,
-         md5(h0 || '|' || h1 || '|' || h2 || '|' || h3) AS band_hash FROM sigs
-  UNION ALL SELECT doc_id, 1,
-         md5(h4 || '|' || h5 || '|' || h6 || '|' || h7) FROM sigs
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-),
+        _MINHASH_SIG_SQL, lsh_pairs_cte_sql)
+    return _MINHASH_SIG_SQL + lsh_pairs_cte_sql("cand") + f""",
 flags AS (
   SELECT d.doc_id,
          d.n_chars >= {_QB_MIN_CHARS} AS passes_quality,
@@ -573,12 +549,12 @@ def curation_bias_audit(spark, sf_dir):
     from arangodb_java_parquet_spark.operators.dedup import (
         char_shingles, lsh_candidate_pairs, minhash_signatures)
     d = t(spark, sf_dir, "documents")
-    sh = char_shingles(d, "text", "doc_id", k=5, distinct=False)
+    sh = char_shingles(d)
     # lazy-checkpoint the signatures so the band self-join shares one
     # materialization instead of re-deriving the non-canonicalizing
     # minhash lineage per side (r5 VERDICT #4)
-    sigs = minhash_signatures(sh, "doc_id").transform(materialize)
-    cand = lsh_candidate_pairs(sigs, "doc_id")
+    sigs = minhash_signatures(sh).transform(materialize)
+    cand = lsh_candidate_pairs(sigs)
     dropped = cand.select(F.col("doc_b").alias("doc_id")).distinct()
     flags = (d.select(
         "doc_id", (F.col("n_chars") >= _QB_MIN_CHARS)

@@ -16,10 +16,10 @@ from pyspark.sql import functions as F
 
 from arangodb_java_parquet_spark.materialize import materialize
 from arangodb_java_parquet_spark.operators.similarity import (
-    cosine, dot, norm, srp_bucket, topk_cosine_bruteforce,
+    SRP_BITS, cosine, dot, norm, srp_bucket, topk_cosine_bruteforce,
     topk_cosine_lsh)
 from arangodb_java_parquet_spark.queries.common import (
-    SQL_DOT, query, sql_cos, t)
+    SQL_DOT, query, sql_cos, srp_bucket_sql, t)
 
 
 @query("sim_topk_bruteforce", f"""
@@ -49,10 +49,7 @@ def sim_topk_bruteforce(spark, sf_dir):
 @query("sim_topk_lsh_bucketed", f"""
 WITH b AS (
   SELECT vec_id, embedding,
-         ((CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END) * 8 +
-          (CASE WHEN embedding[2] > 0 THEN 1 ELSE 0 END) * 4 +
-          (CASE WHEN embedding[3] > 0 THEN 1 ELSE 0 END) * 2 +
-          (CASE WHEN embedding[4] > 0 THEN 1 ELSE 0 END)) AS bucket
+         {srp_bucket_sql(SRP_BITS)} AS bucket
   FROM embeddings
 ),
 q AS (SELECT vec_id AS qid, embedding AS qvec, bucket FROM b WHERE vec_id < 20),
@@ -75,16 +72,13 @@ def sim_topk_lsh_bucketed(spark, sf_dir):
     e = t(spark, sf_dir, "embeddings")
     return topk_cosine_lsh(
         e.filter(F.col("vec_id") < 20), e, id_col="vec_id",
-        vec_col="embedding", k=5, n_bits=4)
+        vec_col="embedding", k=5)
 
 
 @query("emb_near_dup_pairs", f"""
 WITH b AS (
   SELECT vec_id, embedding,
-         ((CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END) * 8 +
-          (CASE WHEN embedding[2] > 0 THEN 1 ELSE 0 END) * 4 +
-          (CASE WHEN embedding[3] > 0 THEN 1 ELSE 0 END) * 2 +
-          (CASE WHEN embedding[4] > 0 THEN 1 ELSE 0 END)) AS bucket
+         {srp_bucket_sql(SRP_BITS)} AS bucket
   FROM embeddings
 )
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
@@ -109,7 +103,7 @@ def emb_near_dup_pairs(spark, sf_dir):
     # norms below the self-join (see topk_cosine_bruteforce): the in-bucket
     # pair projection is ONE dot, not the 3-HOF cosine re-expanded per pair
     b = (e.select("vec_id", "embedding",
-                  srp_bucket(F.col("embedding"), 4).alias("bucket"))
+                  srp_bucket(F.col("embedding"), SRP_BITS).alias("bucket"))
          .withColumn("nrm", norm(F.col("embedding"))))
     a = b.alias("a")
     c = (b.withColumnRenamed("vec_id", "vec_id_b")
@@ -158,11 +152,8 @@ def emb_label_stats(spark, sf_dir):
                  .alias("max_first")))
 
 
-@query("emb_bucket_histogram", """
-SELECT ((CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END) * 8 +
-        (CASE WHEN embedding[2] > 0 THEN 1 ELSE 0 END) * 4 +
-        (CASE WHEN embedding[3] > 0 THEN 1 ELSE 0 END) * 2 +
-        (CASE WHEN embedding[4] > 0 THEN 1 ELSE 0 END)) AS bucket,
+@query("emb_bucket_histogram", f"""
+SELECT {srp_bucket_sql(SRP_BITS)} AS bucket,
        COUNT(*) AS n_vecs
 FROM embeddings
 GROUP BY 1
@@ -171,7 +162,7 @@ def emb_bucket_histogram(spark, sf_dir):
     """SRP bucket occupancy histogram — the skew diagnostic you run before
     trusting an LSH join at scale."""
     e = t(spark, sf_dir, "embeddings")
-    return (e.groupBy(srp_bucket(F.col("embedding"), 4).alias("bucket"))
+    return (e.groupBy(srp_bucket(F.col("embedding"), SRP_BITS).alias("bucket"))
             .agg(F.count(F.lit(1)).alias("n_vecs")))
 
 
@@ -537,7 +528,7 @@ def emb_gram_matrix_arrow(spark, sf_dir):
     from arangodb_java_parquet_spark.operators.similarity import (
         gram_matrix_arrow)
     e = t(spark, sf_dir, "embeddings")
-    return gram_matrix_arrow(e, vec_col="embedding", dim=64)
+    return gram_matrix_arrow(e, dim=64)
 
 
 @query("decontaminate_semantic", f"""
@@ -711,10 +702,7 @@ def emb_label_separability(spark, sf_dir):
 @query("sim_recall_at_k", f"""
 WITH b AS (
   SELECT vec_id, embedding,
-         ((CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END) * 8 +
-          (CASE WHEN embedding[2] > 0 THEN 1 ELSE 0 END) * 4 +
-          (CASE WHEN embedding[3] > 0 THEN 1 ELSE 0 END) * 2 +
-          (CASE WHEN embedding[4] > 0 THEN 1 ELSE 0 END)) AS bucket
+         {srp_bucket_sql(SRP_BITS)} AS bucket
   FROM embeddings
 ),
 q AS (SELECT vec_id AS qid, embedding AS qvec, bucket FROM b
@@ -764,7 +752,7 @@ def sim_recall_at_k(spark, sf_dir):
                                    vec_col="embedding", k=5) \
         .select("qid", "vid")
     lsh = topk_cosine_lsh(q, e, id_col="vec_id", vec_col="embedding",
-                          k=5, n_bits=4).select(
+                          k=5).select(
         F.col("qid").alias("l_qid"), F.col("vid").alias("l_vid"))
     joined = exact.join(
         lsh, (F.col("qid") == F.col("l_qid"))
@@ -777,10 +765,7 @@ def sim_recall_at_k(spark, sf_dir):
 @query("emb_cosine_calibration", f"""
 WITH b AS (
   SELECT vec_id, embedding,
-         ((CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END) * 8 +
-          (CASE WHEN embedding[2] > 0 THEN 1 ELSE 0 END) * 4 +
-          (CASE WHEN embedding[3] > 0 THEN 1 ELSE 0 END) * 2 +
-          (CASE WHEN embedding[4] > 0 THEN 1 ELSE 0 END)) AS bucket
+         {srp_bucket_sql(SRP_BITS)} AS bucket
   FROM embeddings
 ),
 pairs AS (
@@ -802,7 +787,7 @@ def emb_cosine_calibration(spark, sf_dir):
     e = t(spark, sf_dir, "embeddings")
     # norms below the self-join: one dot per in-bucket pair
     b = (e.select("vec_id", "embedding",
-                  srp_bucket(F.col("embedding"), 4).alias("bucket"))
+                  srp_bucket(F.col("embedding"), SRP_BITS).alias("bucket"))
          .withColumn("nrm", norm(F.col("embedding"))))
     a2 = b.select(F.col("vec_id").alias("vid_b"),
                   F.col("embedding").alias("emb_b"),
@@ -1307,10 +1292,7 @@ _RBO_TERMS = " + ".join(
 @query("sim_rbo_vs_exact", f"""
 WITH b AS (
   SELECT vec_id, embedding,
-         ((CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END) * 8 +
-          (CASE WHEN embedding[2] > 0 THEN 1 ELSE 0 END) * 4 +
-          (CASE WHEN embedding[3] > 0 THEN 1 ELSE 0 END) * 2 +
-          (CASE WHEN embedding[4] > 0 THEN 1 ELSE 0 END)) AS bucket
+         {srp_bucket_sql(SRP_BITS)} AS bucket
   FROM embeddings
 ),
 q AS (SELECT vec_id AS qid, embedding AS qvec, bucket FROM b
@@ -1362,7 +1344,7 @@ def sim_rbo_vs_exact(spark, sf_dir):
                                    vec_col="embedding", k=5) \
         .select("qid", "vid", F.col("rn").alias("arn"))
     lsh = topk_cosine_lsh(q, e, id_col="vec_id", vec_col="embedding",
-                          k=5, n_bits=4) \
+                          k=5) \
         .select(F.col("qid").alias("l_qid"), F.col("vid").alias("l_vid"),
                 F.col("rn").alias("brn"))
     j = exact.join(lsh, (F.col("qid") == F.col("l_qid"))
@@ -1756,10 +1738,7 @@ _KNNO_CAND = 64
 _KNNO_SQL = f"""
 WITH b AS (
   SELECT vec_id, embedding,
-         ((CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END) * 8 +
-          (CASE WHEN embedding[2] > 0 THEN 1 ELSE 0 END) * 4 +
-          (CASE WHEN embedding[3] > 0 THEN 1 ELSE 0 END) * 2 +
-          (CASE WHEN embedding[4] > 0 THEN 1 ELSE 0 END)) AS bucket
+         {srp_bucket_sql(SRP_BITS)} AS bucket
   FROM embeddings
 ),
 cand AS (
@@ -1815,7 +1794,7 @@ def emb_knn_outlier_score(spark, sf_dir):
     TakeOrdered (orderBy+limit), not an unpartitioned window."""
     e = t(spark, sf_dir, "embeddings")
     b = (e.select("vec_id", "embedding",
-                  srp_bucket(F.col("embedding"), 4).alias("bucket"))
+                  srp_bucket(F.col("embedding"), SRP_BITS).alias("bucket"))
          .withColumn("nrm", norm(F.col("embedding"))))
     wc = Window.partitionBy("bucket").orderBy("vec_id")
     cand = (b.withColumn("crn", F.row_number().over(wc))
@@ -2088,10 +2067,7 @@ _RRF_OUT_K = 10
 _RRF_SQL = f"""
 WITH b AS (
   SELECT vec_id, embedding,
-         ((CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END) * 8 +
-          (CASE WHEN embedding[2] > 0 THEN 1 ELSE 0 END) * 4 +
-          (CASE WHEN embedding[3] > 0 THEN 1 ELSE 0 END) * 2 +
-          (CASE WHEN embedding[4] > 0 THEN 1 ELSE 0 END)) AS bucket
+         {srp_bucket_sql(SRP_BITS)} AS bucket
   FROM embeddings
 ),
 q AS (SELECT vec_id AS qid, embedding AS qvec, bucket FROM b
@@ -2161,7 +2137,7 @@ def sim_rrf_fusion(spark, sf_dir):
                                  vec_col="embedding", k=_RRF_RUN_K)
           .select("qid", "vid", F.col("rn").alias("ra")))
     rb = (topk_cosine_lsh(q, e, id_col="vec_id", vec_col="embedding",
-                          k=_RRF_RUN_K, n_bits=4)
+                          k=_RRF_RUN_K)
           .select("qid", "vid", F.col("rn").alias("rb")))
     contrib_a = F.expr(f"CAST(1000000000 AS BIGINT) DIV ({_RRF_C} + ra)")
     contrib_b = F.expr(f"CAST(1000000000 AS BIGINT) DIV ({_RRF_C} + rb)")

@@ -205,7 +205,7 @@ def agg_salted_skew(spark, sf_dir):
     e = t(spark, sf_dir, "events")
     dec = "decimal(30,8)"
     return salted_agg(
-        e, key="event_type", salt_src="event_id", n_salts=16,
+        e, key="event_type", salt_src="event_id",
         aggs={
             "n_events": ("event_id", F.count, F.sum),
             "sum_value": ("value",

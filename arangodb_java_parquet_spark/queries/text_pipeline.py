@@ -12,8 +12,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from arangodb_java_parquet_spark.operators.dedup import (
-    NUM_HASHES, char_shingles, jaccard_pairs, lsh_candidate_pairs,
-    minhash_signatures, simhash_signatures, word_ngrams)
+    BAND_ROWS, NUM_HASHES, SHINGLE_K, char_shingles, jaccard_pairs,
+    lsh_candidate_pairs, minhash_signatures, simhash_signatures, word_ngrams)
 from arangodb_java_parquet_spark.materialize import materialize
 from arangodb_java_parquet_spark.queries.common import query, t
 
@@ -80,11 +80,11 @@ sigs AS (
 )""")
 
 
-MINHASH_SHINGLES_CTE = """WITH shingles AS (
+MINHASH_SHINGLES_CTE = f"""WITH shingles AS (
   SELECT DISTINCT doc_id, shingle
   FROM (SELECT doc_id,
-               UNNEST(list_transform(range(1, greatest(length(text)-4, 1)+1),
-                                     i -> text[i:i+4])) AS shingle
+               UNNEST(list_transform(range(1, greatest(length(text)-{SHINGLE_K - 1}, 1)+1),
+                                     i -> text[i:i+{SHINGLE_K - 1}])) AS shingle
         FROM documents)
 ),
 """
@@ -92,25 +92,56 @@ MINHASH_SHINGLES_CTE = """WITH shingles AS (
 _MINHASH_SIG_SQL = MINHASH_SHINGLES_CTE + minhash_sig_cte_sql() + "\n"
 
 
-def capped_pairs_cte_sql(cap: int = 32, out: str = "cand") -> str:
+def lsh_bands_cte_sql(band_rows: int = BAND_ROWS, name: str = "bands") -> str:
+    """The ``name`` CTE of LSH band-bucket memberships (doc_id, band_idx,
+    band_hash) over a preceding ``sigs`` CTE — the ONE source of truth
+    for the banding layout on the oracle side, built from
+    operators/dedup's NUM_HASHES and ``band_rows`` exactly as
+    operators/dedup.lsh_bands builds its Spark array: band b hashes
+    md5(h{b*rows} || '|' || ... ) over its ``band_rows`` signature
+    words."""
+    hashes = [" || '|' || ".join(f"h{b * band_rows + r}"
+                                 for r in range(band_rows))
+              for b in range(NUM_HASHES // band_rows)]
+    selects = [f"SELECT doc_id, 0 AS band_idx,\n"
+               f"         md5({hashes[0]}) AS band_hash FROM sigs",
+               *(f"UNION ALL SELECT doc_id, {b},\n         md5({h}) FROM sigs"
+                 for b, h in enumerate(hashes[1:], 1))]
+    return f"{name} AS (\n  " + "\n  ".join(selects) + "\n)"
+
+
+def lsh_pairs_cte_sql(out: str) -> str:
+    """SQL CTE chain for the uncapped LSH candidate pairs — the oracle
+    mirror of operators/dedup.lsh_candidate_pairs: the ``bands`` CTE
+    (:func:`lsh_bands_cte_sql`) and its bucket self-join, the pair CTE
+    named ``out`` with DISTINCT (doc_a, doc_b), doc_a < doc_b. Appends
+    to a query that already has ``sigs`` (from _MINHASH_SIG_SQL)."""
+    return f"""
+, {lsh_bands_cte_sql()},
+{out} AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM bands a JOIN bands b
+    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
+   AND a.doc_id < b.doc_id
+)"""
+
+
+def capped_pairs_cte_sql(cap: int, out: str) -> str:
     """SQL CTE chain for the SKEW-CAPPED LSH candidate pairs — the exact
-    oracle mirror of operators/dedup.lsh_candidate_pairs_capped: per
-    (band_idx, band_hash) bucket, all-pairs among the first ``cap``
-    members (by doc_id) plus star edges from the bucket min to every
-    member beyond the cap. Appends to a query that already has ``sigs``
-    (from _MINHASH_SIG_SQL); emits the pair CTE named ``out`` with
+    oracle mirror of operators/dedup.lsh_candidate_pairs_capped: the
+    ``bands`` CTE (:func:`lsh_bands_cte_sql`, the same fragment the
+    uncapped :func:`lsh_pairs_cte_sql` uses), then per (band_idx,
+    band_hash) bucket, all-pairs among the first ``cap`` members (by
+    doc_id) plus star edges from the bucket min to every member beyond
+    the cap. Appends to a query that already has ``sigs`` (from
+    _MINHASH_SIG_SQL); emits the pair CTE named ``out`` with
     (doc_a, doc_b), doc_a < doc_b. The capped graph preserves per-bucket
     connectivity, and is the DEFAULT input for the pre-dedup graph
     diagnostics (triangles, Adamic-Adar) whose cost grows with clique
     size on duplicate-heavy corpora (SKEW_PROBE.md: uncapped triangle
     exponent 2.14 adversarial vs 0.78 capped)."""
     return f"""
-, bands AS (
-  SELECT doc_id, 0 AS band_idx,
-         md5(h0 || '|' || h1 || '|' || h2 || '|' || h3) AS band_hash FROM sigs
-  UNION ALL SELECT doc_id, 1,
-         md5(h4 || '|' || h5 || '|' || h6 || '|' || h7) FROM sigs
-),
+, {lsh_bands_cte_sql()},
 ranked AS (
   SELECT doc_id, band_idx, band_hash,
          ROW_NUMBER() OVER (PARTITION BY band_idx, band_hash
@@ -133,26 +164,16 @@ ranked AS (
   )
 )"""
 
-@query("dedup_minhash_lsh", _MINHASH_SIG_SQL + """
-, bands AS (
-  SELECT doc_id, 0 AS band_idx,
-         md5(h0 || '|' || h1 || '|' || h2 || '|' || h3) AS band_hash FROM sigs
-  UNION ALL SELECT doc_id, 1,
-         md5(h4 || '|' || h5 || '|' || h6 || '|' || h7) FROM sigs
-)
-SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-FROM bands a JOIN bands b
-  ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
- AND a.doc_id < b.doc_id
+
+@query("dedup_minhash_lsh", _MINHASH_SIG_SQL + lsh_pairs_cte_sql("pairs") + """
+SELECT doc_a, doc_b FROM pairs
 """)
 def dedup_minhash_lsh(spark, sf_dir):
     """MinHash(8 hashes) + LSH(2 bands × 4 rows) near-duplicate candidate
     pairs over 5-char shingles. See operators/dedup.py for the scale story
     (signatures collapse docs before any join)."""
     d = t(spark, sf_dir, "documents")
-    sh = char_shingles(d, "text", "doc_id", k=5, distinct=False)
-    sigs = minhash_signatures(sh, "doc_id")
-    return lsh_candidate_pairs(sigs, "doc_id")
+    return lsh_candidate_pairs(minhash_signatures(char_shingles(d)))
 
 
 @query("dedup_minhash_signatures", _MINHASH_SIG_SQL + """
@@ -162,8 +183,7 @@ def dedup_minhash_signatures(spark, sf_dir):
     """The MinHash signature table itself (verifies the sketch, not just the
     pair output)."""
     d = t(spark, sf_dir, "documents")
-    return minhash_signatures(
-        char_shingles(d, "text", "doc_id", k=5, distinct=False), "doc_id")
+    return minhash_signatures(char_shingles(d))
 
 
 @query("dedup_ngram_jaccard", """
@@ -196,8 +216,8 @@ def dedup_ngram_jaccard(spark, sf_dir):
     verify stage whose oracle comparison matches on zero rows proves
     nothing (zero-row audit)."""
     d = t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    grams = word_ngrams(d, "text", "doc_id", n=3, do_spread=False)
-    return jaccard_pairs(grams, "doc_id", threshold=0.02, bounded=True)
+    grams = word_ngrams(d, do_spread=False)
+    return jaccard_pairs(grams, "doc_id", threshold=0.02)
 
 
 _SIMHASH_BITS = 16
@@ -655,19 +675,8 @@ def dedup_simhash_hamming2(spark, sf_dir):
             .distinct())
 
 
-@query("dedup_fuzzy_levenshtein", _MINHASH_SIG_SQL + """
-, bands AS (
-  SELECT doc_id, 0 AS band_idx,
-         md5(h0 || '|' || h1 || '|' || h2 || '|' || h3) AS band_hash FROM sigs
-  UNION ALL SELECT doc_id, 1,
-         md5(h4 || '|' || h5 || '|' || h6 || '|' || h7) FROM sigs
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-)
+@query("dedup_fuzzy_levenshtein",
+       _MINHASH_SIG_SQL + lsh_pairs_cte_sql("cand") + """
 SELECT doc_a, doc_b,
        levenshtein(left(da.text, 80), left(db.text, 80)) AS edit_dist
 FROM cand
@@ -684,8 +693,8 @@ def dedup_fuzzy_levenshtein(spark, sf_dir):
     bounds the cost per pair. Both engines evaluate their native
     levenshtein (identical unit-cost DP definition)."""
     d = t(spark, sf_dir, "documents")
-    sh = char_shingles(d, "text", "doc_id", k=5, distinct=False)
-    pairs = lsh_candidate_pairs(minhash_signatures(sh, "doc_id"), "doc_id")
+    sh = char_shingles(d)
+    pairs = lsh_candidate_pairs(minhash_signatures(sh))
     da = d.select(F.col("doc_id").alias("doc_a"),
                   F.expr("left(text, 80)").alias("__ta"))
     db = d.select(F.col("doc_id").alias("doc_b"),

@@ -17,9 +17,11 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from arangodb_java_parquet_spark.materialize import materialize
-from arangodb_java_parquet_spark.operators.dedup import spread
+from arangodb_java_parquet_spark.operators.dedup import (
+    NUM_HASHES, SHINGLE_K, spread)
 from arangodb_java_parquet_spark.queries.common import query, t
 from arangodb_java_parquet_spark.queries.text_pipeline import (
+    capped_pairs_cte_sql, lsh_bands_cte_sql, lsh_pairs_cte_sql,
     minhash_sig_cte_sql)
 
 # ---------------------------------------------------------------------------
@@ -280,8 +282,8 @@ _PR_SQL = f"""
 WITH shingles AS (
   SELECT DISTINCT doc_id, shingle
   FROM (SELECT doc_id,
-               UNNEST(list_transform(range(1, greatest(length(text)-4, 1)+1),
-                                     i -> text[i:i+4])) AS shingle
+               UNNEST(list_transform(range(1, greatest(length(text)-{SHINGLE_K - 1}, 1)+1),
+                                     i -> text[i:i+{SHINGLE_K - 1}])) AS shingle
         FROM documents WHERE doc_id < {_PR_UNIVERSE})),
 counts AS (SELECT doc_id, COUNT(*) AS n_sh FROM shingles GROUP BY doc_id),
 truth AS (
@@ -293,17 +295,7 @@ truth AS (
   JOIN counts ca ON ca.doc_id = i.doc_a
   JOIN counts cb ON cb.doc_id = i.doc_b
   WHERE i.n_common::DOUBLE / (ca.n_sh + cb.n_sh - i.n_common) >= {_PR_TAU}),
-{minhash_sig_cte_sql()},
-bands AS (
-  SELECT doc_id, 0 AS band_idx,
-         md5(h0 || '|' || h1 || '|' || h2 || '|' || h3) AS band_hash FROM sigs
-  UNION ALL SELECT doc_id, 1,
-         md5(h4 || '|' || h5 || '|' || h6 || '|' || h7) FROM sigs),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id),
+{minhash_sig_cte_sql()}{lsh_pairs_cte_sql("cand")},
 joined AS (
   SELECT COALESCE(t.doc_a, c.doc_a) AS doc_a,
          CASE WHEN t.doc_a IS NOT NULL THEN 1 ELSE 0 END AS is_truth,
@@ -342,13 +334,13 @@ def dedup_lsh_precision_recall(spark, sf_dir):
         minhash_signatures)
     d = (t(spark, sf_dir, "documents")
          .filter(F.col("doc_id") < _PR_UNIVERSE))
-    sh = (char_shingles(d, "text", "doc_id", k=5, distinct=True)
+    sh = (char_shingles(d, distinct=True)
           .transform(materialize))
     truth = (jaccard_pairs(sh.select("doc_id", "shingle"), "doc_id",
-                           threshold=_PR_TAU, bounded=True)
+                           threshold=_PR_TAU)
              .select("doc_a", "doc_b"))
-    sigs = minhash_signatures(sh, "doc_id")
-    cand = lsh_candidate_pairs(sigs, "doc_id").select("doc_a", "doc_b")
+    sigs = minhash_signatures(sh)
+    cand = lsh_candidate_pairs(sigs).select("doc_a", "doc_b")
     joined = (truth.withColumn("is_truth", F.lit(1))
               .join(cand.withColumn("is_cand", F.lit(1)),
                     ["doc_a", "doc_b"], "full_outer")
@@ -372,19 +364,7 @@ def dedup_lsh_precision_recall(spark, sf_dir):
 from arangodb_java_parquet_spark.queries.text_pipeline import (  # noqa: E402
     _MINHASH_SIG_SQL, _SIMHASH_SQL)
 
-_ENSEMBLE_SQL = _MINHASH_SIG_SQL + f"""
-, bands AS (
-  SELECT doc_id, 0 AS band_idx,
-         md5(h0 || '|' || h1 || '|' || h2 || '|' || h3) AS band_hash FROM sigs
-  UNION ALL SELECT doc_id, 1,
-         md5(h4 || '|' || h5 || '|' || h6 || '|' || h7) FROM sigs
-),
-minhash_pairs AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-),
+_ENSEMBLE_SQL = _MINHASH_SIG_SQL + lsh_pairs_cte_sql("minhash_pairs") + f""",
 ssigs AS ({_SIMHASH_SQL}),
 simhash_pairs AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -423,10 +403,7 @@ def dedup_ensemble_votes(spark, sf_dir):
         char_shingles, lsh_candidate_pairs, minhash_signatures,
         simhash_signatures)
     d = t(spark, sf_dir, "documents")
-    mh = lsh_candidate_pairs(
-        minhash_signatures(
-            char_shingles(d, "text", "doc_id", k=5, distinct=False),
-            "doc_id"), "doc_id") \
+    mh = lsh_candidate_pairs(minhash_signatures(char_shingles(d))) \
         .select("doc_a", "doc_b", F.lit("minhash").alias("detector"))
     # the simhash lineage (spread + token explode + 16 vote aggregates)
     # is consumed by BOTH sides of the fingerprint self-join and never
@@ -635,43 +612,15 @@ def text_novelty_rate(spark, sf_dir):
 
 _LSH_CAP = 4
 
-_LSH_CAPPED_SQL = _MINHASH_SIG_SQL + f"""
-, bands AS (
-  SELECT doc_id, 0 AS band_idx,
-         md5(h0 || '|' || h1 || '|' || h2 || '|' || h3) AS band_hash FROM sigs
-  UNION ALL SELECT doc_id, 1,
-         md5(h4 || '|' || h5 || '|' || h6 || '|' || h7) FROM sigs
-),
-ranked AS (
-  SELECT doc_id, band_idx, band_hash,
-         ROW_NUMBER() OVER (PARTITION BY band_idx, band_hash
-                            ORDER BY doc_id) AS rk
-  FROM bands
-),
-full_pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM ranked a JOIN ranked b
-    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-  WHERE a.rk <= {_LSH_CAP} AND b.rk <= {_LSH_CAP}
-),
-star AS (
-  SELECT m.doc_id AS doc_a, t.doc_id AS doc_b
-  FROM ranked t JOIN ranked m
-    ON m.band_idx = t.band_idx AND m.band_hash = t.band_hash AND m.rk = 1
-  WHERE t.rk > {_LSH_CAP}
-)
-SELECT doc_a, doc_b FROM full_pairs
-UNION
-SELECT doc_a, doc_b FROM star
-"""
+_LSH_CAPPED_SQL = (_MINHASH_SIG_SQL + capped_pairs_cte_sql(_LSH_CAP, "pairs")
+                   + "\nSELECT doc_a, doc_b FROM pairs\n")
 
 
 @query("dedup_lsh_capped_pairs", _LSH_CAPPED_SQL)
 def dedup_lsh_capped_pairs(spark, sf_dir):
     """SKEW-HARDENED LSH candidate pairs
     (operators/dedup.py:lsh_candidate_pairs_capped): per-bucket pair
-    enumeration is capped at {cap} members (all-pairs within the cap,
+    enumeration is capped at _LSH_CAP = 4 members (all-pairs within the cap,
     star edges to the bucket min beyond it) so a duplicate-heavy
     corpus's K-clique buckets cost O(k) instead of O(k²) — the defense
     the r5 scale probe showed AQE alone doesn't give (1.35 time
@@ -683,31 +632,13 @@ def dedup_lsh_capped_pairs(spark, sf_dir):
     from arangodb_java_parquet_spark.operators.dedup import (
         char_shingles, lsh_candidate_pairs_capped, minhash_signatures)
     d = t(spark, sf_dir, "documents")
-    sigs = minhash_signatures(
-        char_shingles(d, "text", "doc_id", k=5, distinct=False), "doc_id")
-    return lsh_candidate_pairs_capped(sigs, "doc_id",
-                                      max_bucket=_LSH_CAP)
+    sigs = minhash_signatures(char_shingles(d))
+    return lsh_candidate_pairs_capped(sigs, max_bucket=_LSH_CAP)
 
 
-_LSH_TUNING_SQL = _MINHASH_SIG_SQL + """
-, b1 AS (
-  SELECT doc_id, 0 AS band_idx,
-         md5(h0||'|'||h1||'|'||h2||'|'||h3||'|'||h4||'|'||h5||'|'||h6||'|'||h7)
-           AS band_hash
-  FROM sigs
-),
-b2 AS (
-  SELECT doc_id, 0 AS band_idx,
-         md5(h0 || '|' || h1 || '|' || h2 || '|' || h3) AS band_hash FROM sigs
-  UNION ALL SELECT doc_id, 1,
-         md5(h4 || '|' || h5 || '|' || h6 || '|' || h7) FROM sigs
-),
-b4 AS (
-  SELECT doc_id, 0 AS band_idx, md5(h0 || '|' || h1) AS band_hash FROM sigs
-  UNION ALL SELECT doc_id, 1, md5(h2 || '|' || h3) FROM sigs
-  UNION ALL SELECT doc_id, 2, md5(h4 || '|' || h5) FROM sigs
-  UNION ALL SELECT doc_id, 3, md5(h6 || '|' || h7) FROM sigs
-),
+_LSH_TUNING_SQL = _MINHASH_SIG_SQL + "".join(
+    f"\n, {lsh_bands_cte_sql(rows, f'b{NUM_HASHES // rows}')}"
+    for rows in (8, 4, 2)) + """,
 p1 AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        FROM b1 a JOIN b1 b ON a.band_idx = b.band_idx
         AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
@@ -741,12 +672,10 @@ def dedup_lsh_tuning_curve(spark, sf_dir):
     # lambda-HOF subtrees that don't canonicalize, so without the (lazy)
     # checkpoint each of the 3 settings' self-joins re-derives it — six
     # shingle+minhash passes where one suffices (r5 VERDICT #4)
-    sigs = minhash_signatures(
-        char_shingles(d, "text", "doc_id", k=5, distinct=False),
-        "doc_id").transform(materialize)
+    sigs = minhash_signatures(char_shingles(d)).transform(materialize)
     rows = None
     for label, band_rows in (("1x8", 8), ("2x4", 4), ("4x2", 2)):
-        pairs = lsh_candidate_pairs(sigs, "doc_id", band_rows=band_rows)
+        pairs = lsh_candidate_pairs(sigs, band_rows=band_rows)
         one = pairs.agg(F.count(F.lit(1)).alias("n_candidate_pairs")) \
             .select(F.lit(label).alias("config"), "n_candidate_pairs")
         rows = one if rows is None else rows.unionAll(one)
@@ -774,17 +703,15 @@ def dedup_minhash_merge_proof(spark, sf_dir):
         minhash_signatures, spread)
     d = spread(t(spark, sf_dir, "documents"))
     shingle_list = F.expr(
-        "transform(sequence(1, greatest(length(text)-4, 1)),"
-        " i -> struct(i AS pos, substring(text, i, 5) AS shingle))")
+        f"transform(sequence(1, greatest(length(text)-{SHINGLE_K - 1}, 1)),"
+        f" i -> struct(i AS pos, substring(text, i, {SHINGLE_K}) AS shingle))")
     sh = d.select("doc_id", F.explode(shingle_list).alias("s")) \
         .select("doc_id", F.col("s.pos").alias("pos"),
                 F.col("s.shingle").alias("shingle"))
     half_a = minhash_signatures(
-        sh.filter(F.col("pos") % 2 == 0).select("doc_id", "shingle"),
-        "doc_id")
+        sh.filter(F.col("pos") % 2 == 0).select("doc_id", "shingle"))
     half_b = minhash_signatures(
-        sh.filter(F.col("pos") % 2 == 1).select("doc_id", "shingle"),
-        "doc_id")
+        sh.filter(F.col("pos") % 2 == 1).select("doc_id", "shingle"))
     hb = half_b.select([F.col("doc_id").alias("doc_id_b")]
                        + [F.col(f"h{j}").alias(f"b{j}") for j in range(8)])
     merged = half_a.join(
@@ -934,12 +861,7 @@ _INC_MH_SPLIT = 400
 def _inc_minhash_sql() -> str:
     # corpus/band CTEs parameterized over the same minhash prelude
     return _MINHASH_SIG_SQL + f"""
-, bands AS (
-  SELECT doc_id, 0 AS band_idx,
-         md5(h0 || '|' || h1 || '|' || h2 || '|' || h3) AS band_hash FROM sigs
-  UNION ALL SELECT doc_id, 1,
-         md5(h4 || '|' || h5 || '|' || h6 || '|' || h7) FROM sigs
-),
+, {lsh_bands_cte_sql()},
 corpus AS (SELECT doc_id, band_idx, band_hash FROM bands
            WHERE doc_id < {_INC_MH_SPLIT}),
 batch AS (SELECT doc_id, band_idx, band_hash FROM bands
@@ -972,16 +894,12 @@ def dedup_incremental_minhash_stored(spark, sf_dir):
 
     def fit():
         corpus = d.filter(F.col("doc_id") < _INC_MH_SPLIT)
-        return lsh_bands(minhash_signatures(
-            char_shingles(corpus, "text", "doc_id", k=5, distinct=False),
-            "doc_id"), "doc_id")
+        return lsh_bands(minhash_signatures(char_shingles(corpus)))
 
     store = ensure_model(spark, store_root_for(sf_dir, "documents"),
                          "minhash_band_index", "lsh_bands", fit)
     batch = d.filter(F.col("doc_id") >= _INC_MH_SPLIT)
-    bb = lsh_bands(minhash_signatures(
-        char_shingles(batch, "text", "doc_id", k=5, distinct=False),
-        "doc_id"), "doc_id")
+    bb = lsh_bands(minhash_signatures(char_shingles(batch)))
     return (bb.select(F.col("doc_id").alias("batch_doc"),
                       "band_idx", "band_hash")
             .join(store.select(F.col("doc_id").alias("corpus_doc"),
@@ -1196,8 +1114,8 @@ def corpus_diversity_minhash(spark, sf_dir):
     from arangodb_java_parquet_spark.operators.dedup import (
         char_shingles, minhash_signatures)
     d = t(spark, sf_dir, "documents")
-    sh = char_shingles(d, "text", "doc_id", k=5, distinct=False)
-    sigs = minhash_signatures(sh, "doc_id").transform(materialize)
+    sh = char_shingles(d)
+    sigs = minhash_signatures(sh).transform(materialize)
     # doc count as a LAZY broadcast scalar (was an eager sigs.count()
     # job at construction time — r15); n*(n-1) is exact in double far
     # past any harness corpus size, identical to the old literal pair

@@ -21,26 +21,15 @@ from arangodb_java_parquet_spark.materialize import materialize
 from arangodb_java_parquet_spark.operators.dedup import (
     char_shingles, lsh_candidate_pairs, minhash_signatures, spread)
 from arangodb_java_parquet_spark.queries.common import query, t
-from arangodb_java_parquet_spark.queries.text_pipeline import _MINHASH_SIG_SQL
+from arangodb_java_parquet_spark.queries.text_pipeline import (
+    _MINHASH_SIG_SQL, lsh_pairs_cte_sql)
 
 # ---------------------------------------------------------------------------
 # longest shared token run per candidate pair (Lee et al. 2022-style exact
 # substring dedup, bounded to the LSH candidate set)
 # ---------------------------------------------------------------------------
 
-_SPAN_SQL = _MINHASH_SIG_SQL + """
-, bands AS (
-  SELECT doc_id, 0 AS band_idx,
-         md5(h0 || '|' || h1 || '|' || h2 || '|' || h3) AS band_hash FROM sigs
-  UNION ALL SELECT doc_id, 1,
-         md5(h4 || '|' || h5 || '|' || h6 || '|' || h7) FROM sigs
-),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-),
+_SPAN_SQL = _MINHASH_SIG_SQL + lsh_pairs_cte_sql("pairs") + """,
 grams AS (
   SELECT doc_id, i AS pos,
          md5(array_to_string((string_split(text, ' '))[i:i+2], ' ')) AS gh
@@ -84,8 +73,8 @@ def dedup_substring_span(spark, sf_dir):
     join is bounded by the candidate set; gram rows are (id, pos, md5) —
     documents themselves never shuffle."""
     d = t(spark, sf_dir, "documents")
-    sh = char_shingles(d, "text", "doc_id", k=5, distinct=False)
-    cand = lsh_candidate_pairs(minhash_signatures(sh, "doc_id"), "doc_id")
+    sh = char_shingles(d)
+    cand = lsh_candidate_pairs(minhash_signatures(sh))
 
     toks = F.split("text", " ")
     gram_arr = F.expr(
@@ -1292,7 +1281,7 @@ def dedup_exactsubstr_spans(spark, sf_dir):
     from arangodb_java_parquet_spark.operators.dedup import (
         exact_substring_spans)
     d = t(spark, sf_dir, "documents")
-    return exact_substring_spans(d, "text", "doc_id", k=_XSUB_K)
+    return exact_substring_spans(d, k=_XSUB_K)
 
 
 _XSUB_STATS_SQL = _XSUB_SPANS_SQL.replace(
@@ -1321,7 +1310,7 @@ def dedup_exactsubstr_stats(spark, sf_dir):
     from arangodb_java_parquet_spark.operators.dedup import (
         exact_substring_spans)
     d = t(spark, sf_dir, "documents")
-    spans = exact_substring_spans(d, "text", "doc_id", k=_XSUB_K)
+    spans = exact_substring_spans(d, k=_XSUB_K)
     return (spans.join(d.select("doc_id", "source"), "doc_id")
             .groupBy("source")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_spans"),
@@ -1404,7 +1393,7 @@ def dedup_exactsubstr_removal(spark, sf_dir):
     from arangodb_java_parquet_spark.operators.dedup import (
         exact_substring_removal)
     d = t(spark, sf_dir, "documents")
-    return exact_substring_removal(d, "text", "doc_id", k=_XSUB_K)
+    return exact_substring_removal(d, k=_XSUB_K)
 
 
 # ---------------------------------------------------------------------------
@@ -1466,7 +1455,7 @@ def dedup_winnowing_density(spark, sf_dir):
     from arangodb_java_parquet_spark.operators.dedup import (
         winnowing_fingerprints)
     d = t(spark, sf_dir, "documents")
-    fps = winnowing_fingerprints(d, "text", "doc_id", k=_WIN_K, w=_WIN_W)
+    fps = winnowing_fingerprints(d, k=_WIN_K, w=_WIN_W)
     grams_per_doc = (F.size(F.split(F.col("text"), " "))
                      - F.lit(_WIN_K - 1)).cast("bigint")
     ng = (d.filter(F.size(F.split(F.col("text"), " ")) >= _WIN_K)
@@ -1511,7 +1500,7 @@ def dedup_winnowing_matches(spark, sf_dir):
     from arangodb_java_parquet_spark.operators.dedup import (
         winnowing_fingerprints)
     d = t(spark, sf_dir, "documents")
-    dfp = (winnowing_fingerprints(d, "text", "doc_id", k=_WIN_K, w=_WIN_W)
+    dfp = (winnowing_fingerprints(d, k=_WIN_K, w=_WIN_W)
            .select("doc_id", "fp").distinct()
            .transform(materialize))  # feeds df-cap + both join sides
     live = (dfp.groupBy("fp").agg(F.count(F.lit(1)).alias("df"))
@@ -1597,7 +1586,7 @@ def dedup_exactsubstr_apply(spark, sf_dir):
     from arangodb_java_parquet_spark.operators.dedup import (
         exact_substring_apply)
     d = t(spark, sf_dir, "documents")
-    return exact_substring_apply(d, "text", "doc_id", k=_XSUB_K)
+    return exact_substring_apply(d, k=_XSUB_K)
 
 
 _XSUB_SPLIT = 400
@@ -1656,13 +1645,13 @@ def dedup_exactsubstr_incremental(spark, sf_dir):
 
     def fit():
         corpus = d.filter(F.col("doc_id") < _XSUB_SPLIT)
-        return (positional_window_fps(corpus, "text", "doc_id", _XSUB_K)
+        return (positional_window_fps(corpus, _XSUB_K)
                 .select("gh").distinct())
 
     store = ensure_model(spark, store_root_for(sf_dir, "documents"),
                          "exactsubstr_fp_index", "window_fps", fit)
     batch = d.filter(F.col("doc_id") >= _XSUB_SPLIT)
-    hits = (positional_window_fps(batch, "text", "doc_id", _XSUB_K)
+    hits = (positional_window_fps(batch, _XSUB_K)
             .join(store, "gh"))
     runs = hits.select(
         "doc_id", "pos",
@@ -1852,7 +1841,7 @@ def dedup_weighted_jaccard(spark, sf_dir):
     """
     d = t(spark, sf_dir, "documents").filter(F.col("doc_id") < _WJ_DOCS)
     from arangodb_java_parquet_spark.operators.dedup import word_ngrams
-    grams = word_ngrams(d, "text", "doc_id", n=3, do_spread=False)
+    grams = word_ngrams(d, do_spread=False)
     # bounded-universe doc count as a LAZY broadcast scalar (was an
     # eager d.count() job at construction time — r15)
     nd = d.agg(F.count(F.lit(1)).alias("__nd"))
@@ -1928,15 +1917,13 @@ def dedup_winnowing_incremental(spark, sf_dir):
 
     def fit():
         corpus = d.filter(F.col("doc_id") < _WIN_SPLIT)
-        return (winnowing_fingerprints(corpus, "text", "doc_id",
-                                       k=_WIN_K, w=_WIN_W)
+        return (winnowing_fingerprints(corpus, k=_WIN_K, w=_WIN_W)
                 .select("fp").distinct())
 
     store = ensure_model(spark, store_root_for(sf_dir, "documents"),
                          "winnowing_fp_index", "window_fps", fit)
     batch = d.filter(F.col("doc_id") >= _WIN_SPLIT)
-    bfp = (winnowing_fingerprints(batch, "text", "doc_id",
-                                  k=_WIN_K, w=_WIN_W)
+    bfp = (winnowing_fingerprints(batch, k=_WIN_K, w=_WIN_W)
            .select("doc_id", "fp").distinct())
     hit = bfp.join(store.select(F.col("fp").alias("sfp")),
                    bfp.fp == F.col("sfp"), "left")

@@ -618,20 +618,8 @@ _LPA_ROUNDS = 2
 
 def _lpa_sql() -> str:
     from arangodb_java_parquet_spark.queries.text_pipeline import (
-        _MINHASH_SIG_SQL)
-    parts = [_MINHASH_SIG_SQL + """
-, bands AS (
-  SELECT doc_id, 0 AS band_idx,
-         md5(h0 || '|' || h1 || '|' || h2 || '|' || h3) AS band_hash FROM sigs
-  UNION ALL SELECT doc_id, 1,
-         md5(h4 || '|' || h5 || '|' || h6 || '|' || h7) FROM sigs
-),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-),
+        _MINHASH_SIG_SQL, lsh_pairs_cte_sql)
+    parts = [_MINHASH_SIG_SQL + lsh_pairs_cte_sql("pairs") + """,
 edges AS (
   SELECT doc_a AS src, doc_b AS dst FROM pairs
   UNION ALL SELECT doc_b, doc_a FROM pairs
@@ -666,8 +654,8 @@ def _lpa_labels(spark, sf_dir):
     from arangodb_java_parquet_spark.operators.dedup import (
         char_shingles, lsh_candidate_pairs, minhash_signatures)
     d = t(spark, sf_dir, "documents")
-    sh = char_shingles(d, "text", "doc_id", k=5, distinct=False)
-    cand = lsh_candidate_pairs(minhash_signatures(sh, "doc_id"), "doc_id")
+    sh = char_shingles(d)
+    cand = lsh_candidate_pairs(minhash_signatures(sh))
     # the edge table feeds the seed labels AND every round's vote join;
     # lambda-HOF minhash subtrees don't canonicalize (no ReusedExchange),
     # so without a checkpoint the whole shingle->minhash->LSH lineage is
@@ -936,20 +924,8 @@ def seq_pattern_support(spark, sf_dir):
 
 def _graph_base_sql() -> str:
     from arangodb_java_parquet_spark.queries.text_pipeline import (
-        _MINHASH_SIG_SQL)
-    return _MINHASH_SIG_SQL + """
-, bands AS (
-  SELECT doc_id, 0 AS band_idx,
-         md5(h0 || '|' || h1 || '|' || h2 || '|' || h3) AS band_hash FROM sigs
-  UNION ALL SELECT doc_id, 1,
-         md5(h4 || '|' || h5 || '|' || h6 || '|' || h7) FROM sigs
-),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-),
+        _MINHASH_SIG_SQL, lsh_pairs_cte_sql)
+    return _MINHASH_SIG_SQL + lsh_pairs_cte_sql("pairs") + """,
 edges AS (
   SELECT doc_a AS src, doc_b AS dst FROM pairs
   UNION ALL SELECT doc_b, doc_a FROM pairs
@@ -983,8 +959,7 @@ def graph_two_hop_reach(spark, sf_dir):
     # without this the whole lineage re-derives per consumer (29/28
     # exchanges measured).
     cand = lsh_candidate_pairs(minhash_signatures(
-        char_shingles(d, "text", "doc_id", k=5, distinct=False),
-        "doc_id"), "doc_id").transform(materialize)
+        char_shingles(d))).transform(materialize)
     edges = (symmetric_edges(cand))
     e2 = edges.select(F.col("src").alias("mid"),
                       F.col("dst").alias("reached"))
@@ -1040,8 +1015,7 @@ def graph_assortativity(spark, sf_dir):
     # without this the whole lineage re-derives per consumer (29/28
     # exchanges measured).
     cand = lsh_candidate_pairs(minhash_signatures(
-        char_shingles(d, "text", "doc_id", k=5, distinct=False),
-        "doc_id"), "doc_id").transform(materialize)
+        char_shingles(d))).transform(materialize)
     edges = (symmetric_edges(cand))
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     dp = (edges
@@ -1103,8 +1077,7 @@ def graph_harmonic_centrality(spark, sf_dir):
         char_shingles, lsh_candidate_pairs, minhash_signatures)
     d = t(spark, sf_dir, "documents")
     cand = lsh_candidate_pairs(minhash_signatures(
-        char_shingles(d, "text", "doc_id", k=5, distinct=False),
-        "doc_id"), "doc_id").transform(materialize)
+        char_shingles(d))).transform(materialize)
     edges = (symmetric_edges(cand)
              .transform(materialize))  # deg + both hop legs + union
     deg = (edges.groupBy("src")
@@ -1498,8 +1471,7 @@ def graph_kcore_2core(spark, sf_dir):
     # without this the whole lineage re-derives per consumer (29/28
     # exchanges measured).
     cand = lsh_candidate_pairs(minhash_signatures(
-        char_shingles(d, "text", "doc_id", k=5, distinct=False),
-        "doc_id"), "doc_id").transform(materialize)
+        char_shingles(d))).transform(materialize)
     edges = (symmetric_edges(cand)
              .transform(materialize))
     for _ in range(2):
@@ -1614,8 +1586,7 @@ def graph_edge_triangle_support(spark, sf_dir):
     # without this the whole lineage re-derives per consumer (29/28
     # exchanges measured).
     cand = lsh_candidate_pairs(minhash_signatures(
-        char_shingles(d, "text", "doc_id", k=5, distinct=False),
-        "doc_id"), "doc_id").transform(materialize)
+        char_shingles(d))).transform(materialize)
     edges = (symmetric_edges(cand)
              .transform(materialize))
     ua = edges.select(F.col("src").alias("doc_a"),
@@ -1921,8 +1892,7 @@ def graph_rich_club_coefficient(spark, sf_dir):
         char_shingles, lsh_candidate_pairs, minhash_signatures)
     d = t(spark, sf_dir, "documents")
     cand = lsh_candidate_pairs(minhash_signatures(
-        char_shingles(d, "text", "doc_id", k=5, distinct=False),
-        "doc_id"), "doc_id").transform(materialize)
+        char_shingles(d))).transform(materialize)
     edges = (symmetric_edges(cand)
              .transform(materialize))  # deg + edge sweep
     deg = (edges.groupBy("src")
@@ -2245,9 +2215,8 @@ def graph_eigenvector_centrality(spark, sf_dir):
     from arangodb_java_parquet_spark.operators.dedup import (
         char_shingles, lsh_candidate_pairs_capped, minhash_signatures)
     d = t(spark, sf_dir, "documents")
-    sh = char_shingles(d, "text", "doc_id", k=5, distinct=False)
-    cand = lsh_candidate_pairs_capped(
-        minhash_signatures(sh, "doc_id"), "doc_id", max_bucket=32)
+    sh = char_shingles(d)
+    cand = lsh_candidate_pairs_capped(minhash_signatures(sh), max_bucket=32)
     edges = (symmetric_edges(cand)
              .transform(materialize))  # feeds every iteration
     v = (edges.select(F.col("src").alias("node")).distinct()
@@ -2453,9 +2422,8 @@ def graph_katz_centrality(spark, sf_dir):
     from arangodb_java_parquet_spark.operators.dedup import (
         char_shingles, lsh_candidate_pairs_capped, minhash_signatures)
     d = t(spark, sf_dir, "documents")
-    sh = char_shingles(d, "text", "doc_id", k=5, distinct=False)
-    cand = lsh_candidate_pairs_capped(
-        minhash_signatures(sh, "doc_id"), "doc_id", max_bucket=32)
+    sh = char_shingles(d)
+    cand = lsh_candidate_pairs_capped(minhash_signatures(sh), max_bucket=32)
     edges = (symmetric_edges(cand)
              .transform(materialize))  # feeds every iteration
     x = (edges.select(F.col("src").alias("node")).distinct()

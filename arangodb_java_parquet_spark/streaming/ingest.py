@@ -139,14 +139,13 @@ def ordered_file_stream(spark: SparkSession, path: str, schema) -> DataFrame:
 def stream_load_to_collection(spark: SparkSession, path: str,
                               collection: Collection, *,
                               schema, checkpoint_dir: str,
-                              batch_size: int = 1000,
-                              trigger_once: bool = True):
-    """Continuously load parquet files appearing under ``path`` into a
-    document collection (streaming generalization of ParquetLoader.load,
-    in its default ``spark`` encode mode).
+                              batch_size: int = 1000):
+    """Load the parquet files under ``path`` into a document collection
+    (streaming generalization of ParquetLoader.load, in its default
+    ``spark`` encode mode).
 
-    Returns the started StreamingQuery; caller stops it (or uses
-    ``trigger_once`` for a drain-and-stop run).
+    Returns the started StreamingQuery, an availableNow drain: it loads
+    every file present when it starts, then stops.
     """
     loader = ParquetLoader(spark)
     collection.ensure()
@@ -156,12 +155,11 @@ def stream_load_to_collection(spark: SparkSession, path: str,
     def sink_batch(batch_df: DataFrame, epoch_id: int) -> None:
         loader.load_dataframe(batch_df, collection, batch_size=batch_size)
 
-    writer = (stream.writeStream
-              .option("checkpointLocation", checkpoint_dir)
-              .foreachBatch(sink_batch))
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (stream.writeStream
+            .option("checkpointLocation", checkpoint_dir)
+            .foreachBatch(sink_batch)
+            .trigger(availableNow=True)
+            .start())
 
 
 def stream_upsert_keyed(spark: SparkSession, path: str, *, schema,
@@ -227,9 +225,13 @@ def event_time_ltz(events: DataFrame) -> DataFrame:
     return events.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def windowed_event_counts(events: DataFrame, *,
-                          window: str = "5 minutes") -> DataFrame:
-    """Tumbling-window counts per event_type under a 10-minute watermark;
+# the tumbling window of windowed_event_counts
+EVENT_WINDOW = "1 hour"
+
+
+def windowed_event_counts(events: DataFrame) -> DataFrame:
+    """EVENT_WINDOW tumbling-window counts per event_type under a
+    10-minute watermark;
     works on both a streaming and a batch events DataFrame (same plan,
     incremental vs full).
     """
@@ -238,7 +240,7 @@ def windowed_event_counts(events: DataFrame, *,
     events = events.withColumn("ts", F.col("ts").cast("timestamp"))
     return (events
             .withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", window).start.alias("win_start"),
+            .groupBy(F.window("ts", EVENT_WINDOW).start.alias("win_start"),
                      "event_type")
             .agg(F.count(F.lit(1)).alias("n_events"),
                  F.sum(F.col("value").cast("decimal(30,8)")).cast("double")
@@ -290,13 +292,16 @@ def stateful_user_counters(events: DataFrame) -> DataFrame:
                 timeoutConf="NoTimeout"))
 
 
+# the event-time interval of stream_interval_join
+JOIN_WITHIN = "30 minutes"
+
+
 def stream_interval_join(left: DataFrame, right: DataFrame, *,
                          left_key: str, right_key: str,
                          left_time: str, right_time: str,
-                         within: str = "30 minutes",
-                         how: str = "inner") -> DataFrame:
+                         how: str) -> DataFrame:
     """Stream-stream join on a key with a bounded event-time interval:
-    right rows within ``[left_time, left_time + within]``.
+    right rows within ``[left_time, left_time + JOIN_WITHIN]``.
 
     Both inputs must already carry watermarks (callers own the delay
     choice); the time-range condition is what lets Spark bound join state
@@ -317,7 +322,7 @@ def stream_interval_join(left: DataFrame, right: DataFrame, *,
     cond = ((F.col(left_key) == F.col(right_key))
             & (F.col(right_time) >= F.col(left_time))
             & (F.col(right_time)
-               <= F.col(left_time) + F.expr(f"INTERVAL {within}")))
+               <= F.col(left_time) + F.expr(f"INTERVAL {JOIN_WITHIN}")))
     return left.join(right, cond, how)
 
 

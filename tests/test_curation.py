@@ -619,10 +619,9 @@ def test_capped_lsh_preserves_cluster_connectivity(spark, sf_dir):
     from arangodb_java_parquet_spark.queries.common import t
 
     d = t(spark, sf_dir, "documents")
-    sigs = minhash_signatures(
-        char_shingles(d, "text", "doc_id", k=5, distinct=False), "doc_id")
-    full = lsh_candidate_pairs(sigs, "doc_id")
-    capped = lsh_candidate_pairs_capped(sigs, "doc_id", max_bucket=2)
+    sigs = minhash_signatures(char_shingles(d))
+    full = lsh_candidate_pairs(sigs)
+    capped = lsh_candidate_pairs_capped(sigs, max_bucket=2)
     n_full, n_capped = full.count(), capped.count()
     assert n_capped <= n_full
     comp_full = sorted(

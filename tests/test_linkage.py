@@ -163,9 +163,7 @@ def test_diversity_matches_exact_collision_mass(spark, sf_dir):
     from arangodb_java_parquet_spark.operators.dedup import (
         char_shingles, minhash_signatures)
     d = t(spark, sf_dir, "documents")
-    sigs = minhash_signatures(
-        char_shingles(d, "text", "doc_id", k=5, distinct=False),
-        "doc_id").collect()
+    sigs = minhash_signatures(char_shingles(d)).collect()
     out = {r.hash_idx: r for r in
            QUERIES["corpus_diversity_minhash"](spark, sf_dir).collect()}
     n = len(sigs)

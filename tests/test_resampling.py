@@ -43,9 +43,9 @@ def test_powerlaw_alpha_matches_python(spark, sf_dir):
     from arangodb_java_parquet_spark.operators.dedup import (
         char_shingles, lsh_candidate_pairs_capped, minhash_signatures)
     d = t(spark, sf_dir, "documents")
-    sh = char_shingles(d, "text", "doc_id", k=5, distinct=False)
+    sh = char_shingles(d)
     e = [(r["doc_a"], r["doc_b"]) for r in lsh_candidate_pairs_capped(
-        minhash_signatures(sh, "doc_id"), "doc_id",
+        minhash_signatures(sh),
         max_bucket=32).select("doc_a", "doc_b").collect()]
     deg = Counter()
     for a, b in e:

@@ -231,10 +231,7 @@ def test_eigenvector_centrality_normalized(spark, sf_dir):
         char_shingles, lsh_candidate_pairs_capped, minhash_signatures)
     d = t(spark, sf_dir, "documents")
     cand = lsh_candidate_pairs_capped(
-        minhash_signatures(
-            char_shingles(d, "text", "doc_id", k=5, distinct=False),
-            "doc_id"),
-        "doc_id", max_bucket=32).collect()
+        minhash_signatures(char_shingles(d)), max_bucket=32).collect()
     nodes = {r["doc_a"] for r in cand} | {r["doc_b"] for r in cand}
     assert {r["node"] for r in rows} == nodes
 

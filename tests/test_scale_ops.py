@@ -66,9 +66,9 @@ def test_link_prediction_scores_are_nonedges(spark, sf_dir):
     if not preds:
         pytest.skip("no two-hop non-edges at this sf")
     d = t(spark, sf_dir, "documents")
-    sh = char_shingles(d, "text", "doc_id", k=5, distinct=False)
+    sh = char_shingles(d)
     cand = {(r.doc_a, r.doc_b) for r in lsh_candidate_pairs(
-        minhash_signatures(sh, "doc_id"), "doc_id").collect()}
+        minhash_signatures(sh)).collect()}
     for r in preds:
         assert (r.doc_a, r.doc_b) not in cand  # predicted, not existing
         assert 0.0 < r.jaccard_score <= 1.0

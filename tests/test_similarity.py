@@ -21,7 +21,7 @@ def test_ivf_recall_vs_bruteforce(spark, sf_dir):
     exact = _topk_sets(topk_cosine_bruteforce(
         q, e, id_col="vec_id", vec_col="embedding", k=5))
     approx = _topk_sets(ivf_topk_cosine(
-        q, e, id_col="vec_id", vec_col="embedding", k=5))
+        q, e, id_col="vec_id", vec_col="embedding", k=5, n_iter=3))
     hits = sum(len(exact[k] & approx.get(k, set())) for k in exact)
     total = sum(len(v) for v in exact.values())
     recall = hits / total
@@ -34,9 +34,11 @@ def test_ivf_deterministic(spark, sf_dir):
     e = t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
     a = sorted(tuple(r) for r in ivf_topk_cosine(
-        q, e, id_col="vec_id", vec_col="embedding", k=5).collect())
+        q, e, id_col="vec_id", vec_col="embedding", k=5,
+        n_iter=3).collect())
     b = sorted(tuple(r) for r in ivf_topk_cosine(
-        q, e, id_col="vec_id", vec_col="embedding", k=5).collect())
+        q, e, id_col="vec_id", vec_col="embedding", k=5,
+        n_iter=3).collect())
     assert a == b
 
 

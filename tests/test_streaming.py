@@ -36,7 +36,7 @@ def test_stream_load_to_collection(spark, sf_dir, tmp_path):
 def test_windowed_event_counts_streaming_matches_batch(spark, sf_dir):
     from arangodb_java_parquet_spark.queries.common import t
     events = t(spark, sf_dir, "events")
-    batch = windowed_event_counts(events, window="1 hour")
+    batch = windowed_event_counts(events)
 
     from arangodb_java_parquet_spark.queries import QUERIES
     streamed = QUERIES["stream_windowed_counts"](spark, sf_dir)
@@ -168,7 +168,7 @@ def test_stream_stream_left_outer_join_emits_unmatched(spark, tmp_path):
         joined = stream_interval_join(
             clicks, purchases, left_key="c_user", right_key="p_user",
             left_time="c_ts", right_time="p_ts",
-            within="30 minutes", how="left_outer")
+            how="left_outer")
         q = (joined.writeStream.outputMode("append").format("parquet")
              .option("path", out).option("checkpointLocation", ck)
              .trigger(availableNow=True).start())

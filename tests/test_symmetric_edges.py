@@ -44,10 +44,7 @@ def test_symmetric_edges_on_lsh_candidates(spark, sf_dir):
     from arangodb_java_parquet_spark.queries.common import t
 
     d = t(spark, sf_dir, "documents")
-    cand = lsh_candidate_pairs(
-        minhash_signatures(
-            char_shingles(d, "text", "doc_id", k=5, distinct=False),
-        "doc_id"), "doc_id")
+    cand = lsh_candidate_pairs(minhash_signatures(char_shingles(d)))
     got = symmetric_edges(cand)
     want = _union_form(cand)
     assert got.exceptAll(want).count() == 0

@@ -31,6 +31,29 @@ def test_only_common_reads_driver_tables():
     assert all(pat in common for pat in FORBIDDEN)
 
 
+# a band hash over MinHash signature columns, and an SRP bucket's CASE sum
+LAYOUTS = ("md5(h0", "embedding[1] > 0 THEN")
+
+
+def test_lsh_layouts_are_spelled_once():
+    """The LSH band layout and the SRP bucket are decisions of
+    operators/dedup and operators/similarity. On the oracle side each is
+    built from their constants by one helper (queries/text_pipeline.py:
+    lsh_bands_cte_sql, lsh_pairs_cte_sql, capped_pairs_cte_sql;
+    queries/common.py: srp_bucket_sql), so no file under queries/ spells
+    one out."""
+    from arangodb_java_parquet_spark.queries import common, text_pipeline
+    offenders = [f"{p.relative_to(QUERIES)}: {pat}"
+                 for p in sorted(QUERIES.rglob("*.py"))
+                 for pat in LAYOUTS if pat in p.read_text()]
+    assert not offenders, offenders
+    # the patterns match what the helpers build
+    built = (text_pipeline.lsh_pairs_cte_sql("pairs")
+             + text_pipeline.capped_pairs_cte_sql(4, "pairs")
+             + common.srp_bucket_sql(4))
+    assert all(pat in built for pat in LAYOUTS)
+
+
 ROOT = QUERIES.parent.parent
 CORE = QUERIES.parent
 # core names that only a test reaches, on purpose, with the reason
@@ -48,6 +71,36 @@ TEST_ONLY = {
 # defaulted parameters that only a test sets, on purpose: (function,
 # parameter) -> (the test that sets it, why it needs another value)
 TEST_SET = {
+    ("decode_avi_frames", "every_n"): (
+        "tests/test_multimodal.py::test_decode_avi_frame_exact",
+        "samples a second stride (every_n=3) of the same AVI"),
+    ("frame_sample_stub", "every_n"): (
+        "tests/test_multimodal.py::test_frame_sample_explodes",
+        "checks the sampled frame indices at every_n=2"),
+    ("hash_sample", "stratum_col"): (
+        "tests/test_curation.py::"
+        "test_hash_sample_deterministic_and_rate_monotone",
+        "holds the unstratified single-rate rule that the per-stratum "
+        "rates build on"),
+    ("pagerank_fixed", "iterations"): (
+        "tests/test_curation.py::test_pagerank_fixed_star_graph_exact",
+        "checks two hand-computed iterations on a star graph"),
+    ("salted_join", "n_salts"): (
+        "tests/test_scd_skew.py::test_salted_join_spreads_hot_key",
+        "fans a hot key out over 4 salts, a count the test checks by hand"),
+    **{("semdedup_prune", p): (
+        "tests/test_curation.py::"
+        "test_semdedup_prune_drops_higher_id_near_dup",
+        "puts a three-vector frame in one cell (cent_mod=3) and prunes "
+        "only the near-identical pair (tau=0.9)")
+       for p in ("cent_mod", "tau")},
+    ("topk_cosine_lsh", "n_bits"): (
+        "tests/test_similarity.py::test_lsh_recall_vs_bruteforce",
+        "measures recall at 2 bits, where the buckets of the 64-dim test "
+        "vectors hold enough true neighbours to bound it"),
+    ("zorder_key", "n_bits"): (
+        "tests/test_sources.py::test_write_zordered_skips_on_both_dims",
+        "interleaves two 6-bit dimensions for a small Z-ordered layout"),
     ("cap_per_group", "n_salts"): (
         "tests/test_curation.py::test_cap_per_group_mega_group_is_salted",
         "holds the salted default to the unsalted n_salts=1 formulation"),
@@ -67,11 +120,18 @@ TEST_SET = {
         "holds the lazy bounds frame to the literal-bounds arithmetic")
        for fn in ("quantile_sketch_hist", "quantile_sketch_estimate")
        for bound in ("lo", "hi")},
-    **{("ArangoCollectionSink.__init__", cred): (
+    **{("ArangoCollectionSink.__init__", conn): (
         "tests/test_loader.py::test_arango_sink_logs_in_with_its_credentials",
-        "credentials are a deployment setting: a server with "
-        "authentication needs the loader's own")
-       for cred in ("username", "password")},
+        "the server address, database and credentials are a deployment "
+        "setting: a real server needs the loader's own")
+       for conn in ("url", "database", "username", "password")},
+}
+# defaulted parameters that mirror the reference's public load API, and
+# so keep the setting it offers: (function, parameter) -> why
+MIRRORS_REFERENCE = {
+    ("stream_load_to_collection", "batch_size"):
+        "the batchSize of ParquetArangoLoader.java, the one tuning setting "
+        "of the reference's load API, which ParquetLoader.load keeps too",
 }
 DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
@@ -287,17 +347,36 @@ def _defaulted(fn, bound):
     return pos[bound:], set(dflt) - set(pos[:bound])
 
 
+# an argument that is not one literal value, and an omitted one
+_VARIES, _DEFAULT = object(), object()
+
+
+def _literal(node, consts=None):
+    """The repr of a literal expression's value (a name bound to a
+    literal in ``consts`` counts), else ``_VARIES``."""
+    if isinstance(node, ast.Name) and node.id in (consts or {}):
+        return consts[node.id]
+    try:
+        return repr(ast.literal_eval(node))
+    except (ValueError, TypeError, SyntaxError):
+        return _VARIES
+
+
 def test_every_defaulted_parameter_is_set():
     """Every defaulted parameter of a package function (top-level, or a
-    method of a top-level class) is set by some call in a non-test file:
-    a keyword, a positional argument at its place, or a ``*``/``**``
-    spread. A parameter that no such call sets has one value in use, so
-    it is a constant with a setting around it. Calls count through
-    import aliases and package re-exports, ``module.name`` reads, class
-    instantiation (``__init__``) and ``df.transform(fn, ...)``; a method
-    counts as called by any ``x.name(...)`` of its name. Parameters that
-    only a test sets must be listed, with the test and its reason, in
-    ``TEST_SET``."""
+    method of a top-level class) takes two or more values in the calls
+    of non-test files: a parameter is set by a keyword, a positional
+    argument at its place, or a ``*``/``**`` spread, and a call that
+    omits it gives it its default. A parameter whose every such call
+    gives it one literal value (the default counts when it is a
+    literal) has one value in use, so it is a constant with a setting
+    around it. Calls count through import aliases and package
+    re-exports, ``module.name`` reads, class instantiation (``__init__``)
+    and ``df.transform(fn, ...)``; a method counts as called by any
+    ``x.name(...)`` of its name. Parameters that only a test sets to
+    another value must be listed, with the test and its reason, in
+    ``TEST_SET``; a parameter that mirrors the reference's public load
+    API is listed, with that reason, in ``MIRRORS_REFERENCE``."""
     pkg = _package()
     funcs, methods = {}, {}  # key -> (node, positional slots bound)
     for mod, defs in pkg.defs.items():
@@ -323,7 +402,8 @@ def test_every_defaulted_parameter_is_set():
             return [k for k in [(mod, f"{name}.__init__")] if k in funcs]
         return [found]
 
-    setp = {}
+    # (key, parameter) -> the values its non-test calls give it
+    values = {}
     for p, tree in pkg.trees.items():
         for n in ast.walk(tree):
             if not isinstance(n, ast.Call):
@@ -338,23 +418,116 @@ def test_every_defaulted_parameter_is_set():
                           for k in callees(p, n.args[0])]
             for k, args in calls:
                 fn, bound = funcs[k]
-                pos, _ = _defaulted(fn, bound)
-                got = setp.setdefault(k, set())
+                pos, dflt = _defaulted(fn, bound)
+                given = {}
                 for i, arg in enumerate(args):
                     if isinstance(arg, ast.Starred):
-                        got.update(pos[i:])
+                        given.update(dict.fromkeys(pos[i:], _VARIES))
                         break
-                    got.update(pos[i:i + 1])
+                    given.update(zip(pos[i:i + 1], [_literal(arg)]))
                 for kw in n.keywords:
-                    got.update([kw.arg] if kw.arg else
-                               _defaulted(fn, bound)[1])
-    unset = {(k[1], d) for k, (fn, bound) in funcs.items()
-             for d in _defaulted(fn, bound)[1] - setp.get(k, set())}
-    stray = sorted(f"{n}({d}=)" for n, d in unset - set(TEST_SET))
+                    given.update({kw.arg: _literal(kw.value)} if kw.arg
+                                 else dict.fromkeys(dflt, _VARIES))
+                for d in dflt:
+                    values.setdefault((k, d), []).append(
+                        given.get(d, _DEFAULT))
+    # each module's top-level names bound to a literal, for defaults
+    consts = {_module(p): {t.id: v for s in tree.body
+                           if isinstance(s, ast.Assign)
+                           for t in s.targets if isinstance(t, ast.Name)
+                           if (v := _literal(s.value)) is not _VARIES}
+              for p, tree in pkg.trees.items() if p.is_relative_to(CORE)}
+    flagged = set()
+    for k, (fn, bound) in funcs.items():
+        a = fn.args
+        defaults = dict(zip([x.arg for x in a.posonlyargs + a.args][
+            ::-1], a.defaults[::-1]))
+        defaults.update((x.arg, d) for x, d in zip(a.kwonlyargs,
+                                                   a.kw_defaults) if d)
+        for d in _defaulted(fn, bound)[1]:
+            # a default that is no literal still is one value
+            dflt = _literal(defaults[d], consts[k[0]])
+            if dflt is _VARIES:
+                dflt = ast.dump(defaults[d])
+            got = {dflt if v is _DEFAULT else v
+                   for v in values.get((k, d), [_DEFAULT])}
+            if len(got) == 1 and _VARIES not in got:
+                flagged.add((k[1], d))
+    stray = sorted(f"{n}({d}=)" for n, d in
+                   flagged - set(TEST_SET) - set(MIRRORS_REFERENCE))
     assert not stray, stray
-    # an entry whose parameter is gone, or now set by the program, leaves
-    # the list; each names a test that exists
-    assert set(TEST_SET) <= unset, set(TEST_SET) - unset
+    # an entry whose parameter is gone, or now given two values by the
+    # program, leaves the list; each names a test that exists
+    listed = set(TEST_SET) | set(MIRRORS_REFERENCE)
+    assert listed <= flagged, listed - flagged
     for test, _ in TEST_SET.values():
         file, _, name = test.partition("::")
         assert f"def {name}(" in (ROOT / file).read_text(), test
+
+
+def _bind_errors(fn, bound, args, keywords):
+    """How a call with ``args``/``keywords`` fails to bind to ``fn``'s
+    signature, its first ``bound`` positional slots filled by the call
+    itself: unknown or repeated keywords, extra positional arguments,
+    missing required arguments. A ``*``/``**`` spread hides what it
+    fills, so only what the call spells out is checked."""
+    a = fn.args
+    names = [x.arg for x in a.posonlyargs + a.args]
+    pos = names[bound:]
+    posonly = {x.arg for x in a.posonlyargs}
+    required = set(names[:len(names) - len(a.defaults)][bound:]) | {
+        x.arg for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is None}
+    starred = any(isinstance(x, ast.Starred) for x in args)
+    spread = any(k.arg is None for k in keywords)
+    n = sum(not isinstance(x, ast.Starred) for x in args)
+    errors = []
+    if n > len(pos) and not a.vararg:
+        errors.append(f"{n} positional arguments for {len(pos)}")
+    given = set(pos[:n])
+    for k in keywords:
+        if k.arg is None:
+            continue
+        if k.arg in given:
+            errors.append(f"{k.arg}= given twice")
+        elif ((k.arg in posonly or k.arg not in pos + [
+                x.arg for x in a.kwonlyargs]) and not a.kwarg):
+            errors.append(f"unknown keyword {k.arg}=")
+        given.add(k.arg)
+    if not (starred or spread) and required - given:
+        errors.append(f"missing {sorted(required - given)}")
+    return errors
+
+
+def test_calls_bind_to_their_signatures():
+    """Every call of a package function or class that a non-test file
+    makes (the package, the registry, tools, examples, bench.py,
+    perfbench/), resolved as the guards above resolve names, binds to
+    the signature it calls: no unknown keyword, no extra positional
+    argument, no missing required argument. ``df.transform(fn, ...)``
+    counts as ``fn(df, ...)`` with the same keywords. Tools and examples
+    run only by hand, so a stale keyword there fails nowhere else."""
+    pkg = _package()
+    stale = []
+    for p, tree in pkg.trees.items():
+        for n in ast.walk(tree):
+            if not isinstance(n, ast.Call):
+                continue
+            calls = [(n.func, n.args)]
+            if (isinstance(n.func, ast.Attribute) and n.args
+                    and n.func.attr == "transform"):
+                calls.append((n.args[0], [None, *n.args[1:]]))
+            for func, args in calls:
+                found = pkg.target(p, func)
+                if found is None:
+                    continue
+                mod, name = found
+                fn, bound = pkg.defs[mod][name], 0
+                if isinstance(fn, ast.ClassDef):
+                    fn = next((f for f in fn.body if isinstance(f, FUNCS)
+                               and f.name == "__init__"), None)
+                    bound = 1
+                if fn is None:
+                    continue
+                stale += [f"{p.relative_to(ROOT)}:{n.lineno} {name}: {e}"
+                          for e in _bind_errors(fn, bound, args, n.keywords)]
+    assert not stale, stale

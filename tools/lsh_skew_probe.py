@@ -66,13 +66,11 @@ def main() -> int:
             path = os.path.join(work, f"docs_x{f}")
             replica_docs(spark, args.base, f, path)
             d = spark.read.parquet(path)
-            sigs = minhash_signatures(
-                char_shingles(d, "text", "doc_id", k=5, distinct=False),
-                "doc_id")
+            sigs = minhash_signatures(char_shingles(d))
             for variant, fn in (
-                    ("uncapped", lambda s: lsh_candidate_pairs(s, "doc_id")),
+                    ("uncapped", lambda s: lsh_candidate_pairs(s)),
                     ("capped", lambda s: lsh_candidate_pairs_capped(
-                        s, "doc_id", max_bucket=32))):
+                        s, max_bucket=32))):
                 best, cnt = None, None
                 for _ in range(2):
                     t0 = time.time()
@@ -107,10 +105,10 @@ def main() -> int:
             # (graph_clustering_coefficient / graph_modularity_lpa).
             for variant, fn in (
                     ("triangles_uncapped",
-                     lambda s2: lsh_candidate_pairs(s2, "doc_id")),
+                     lambda s2: lsh_candidate_pairs(s2)),
                     ("triangles_capped",
                      lambda s2: lsh_candidate_pairs_capped(
-                         s2, "doc_id", max_bucket=32))):
+                         s2, max_bucket=32))):
                 e = (fn(sigs).select("doc_a", "doc_b")
                      .localCheckpoint(eager=False))
                 ab, bc, ac = e.alias("ab"), e.alias("bc"), e.alias("ac")
